@@ -1,21 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import scala.util.control.NonFatal
+
+import graft.tools.Runner
 
 /** Benchmark main (driver contract): one JSON line with per-query and
   * total wall seconds over SPARK_GRAFT_SF_DIR.
   *
-  * - Results are sunk through the `noop` data source so every computed
-  *   column is fully evaluated — `.count()` would let Catalyst prune
-  *   unreferenced projections (e.g. the p-value expression) out of the
-  *   timed plan entirely.
-  * - A warm-up pass (session init + a small scan/agg) runs before timing
-  *   so the first query doesn't carry JVM + session start-up.
-  * - Per-query output row counts ride along via `observe` (a
-  *   CollectMetrics node over the rows already flowing to the sink — no
-  *   second execution), so a silently-empty result is visible in the
-  *   JSON ("rows") instead of reading as a fast success.
+  * - Each query is timed through [[Runner.timed]]: noop sink, cache
+  *   cleared per run, output row count observed ("rows" in the JSON), so
+  *   a silently-empty result is visible instead of reading as a fast
+  *   success.
+  * - A warm-up pass ([[Runner.warmUp]]) runs before timing so the first
+  *   query doesn't carry JVM + session start-up.
   * - A query that throws is reported in "failed" and EXCLUDED from the
   *   total, rather than its near-zero exception-path elapsed time
   *   deflating the headline number.
@@ -35,84 +32,37 @@ object Bench {
   private val headline =
     SparkEntry.queries.keys.toSeq.sortBy(n => (queryNumber(n), n))
 
+  // Best-of-3 per query: later runs amortize one-time codegen / JIT and
+  // shield the recorded number from transient host noise (a contended
+  // recording once masqueraded as a 2x regression). Protocol note:
+  // rounds 1-5 recorded best-of-2 — the "runs" field in the JSON marks
+  // which protocol a snapshot used, so cross-round deltas near the
+  // noise floor should be read against same-runs recordings.
+  private val runsPerQuery = 3
+
   def main(args: Array[String]): Unit = {
-    // Builder-local iteration only (the driver sets neither): restrict
-    // the headline set to a comma-separated subset.
+    // Restrict the headline set to a comma-separated subset
+    // (tools/bench_ab.sh uses it; unset, the whole catalog is timed).
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .map(_.split(",").map(_.trim).toSet)
-    // Builder-local shard mode, "i/N" (i in 1..N): run only the i-th
-    // contiguous slice of the (query-number-ordered) catalog in THIS
-    // JVM. Per-query numbers inside the 401-query JVM drift under
-    // neighbor pressure (heap shape, code cache, GC history — the
-    // q258 round-8 episode); running the catalog as N fresh-JVM shards
-    // isolates code changes from in-process environment when chasing a
-    // round-over-round delta. Totals across shards are additive.
-    val shard: Option[(Int, Int)] =
-      sys.env.get("SPARK_GRAFT_BENCH_SHARD").map { s =>
-        val parsed = s.split("/").map(_.trim) match {
-          case Array(i, n) => (i.toIntOption, n.toIntOption)
-          case _           => (None, None)
-        }
-        parsed match {
-          case (Some(i), Some(n)) if n >= 1 && i >= 1 && i <= n => (i, n)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_BENCH_SHARD must be i/N with 1 <= i <= N, got '$s'")
-        }
-      }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
-    // Warm-up: session, codegen, parquet footer reads.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save()
+    Runner.warmUp(spark, sfDir)
 
-    // Best-of-3 per query: later runs amortize one-time codegen / JIT and
-    // shield the recorded number from transient host noise (a contended
-    // recording once masqueraded as a 2x regression). Protocol note:
-    // rounds 1-5 recorded best-of-2 — the "runs" field in the JSON marks
-    // which protocol a snapshot used, so cross-round deltas near the
-    // noise floor should be read against same-runs recordings.
-    val runsPerQuery =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val queries = SparkEntry.queries
-    val sharded = shard match {
-      case None => headline
-      case Some((i, n)) =>
-        val per = (headline.size + n - 1) / n
-        headline.slice((i - 1) * per, math.min(i * per, headline.size))
-    }
     val results: Seq[(String, Either[String, (Double, Long)])] =
-      sharded.filter(n => only.forall(_.contains(n))).map { name =>
+      headline.filter(n => only.forall(_.contains(n))).map { name =>
         // headline is derived from the same map, so lookup cannot miss
         val fn = queries(name)
         try {
-          var rows = 0L
-          val times = (1 to runsPerQuery).map { i =>
-            // operators may persist internal multi-consumer frames; clear
-            // between runs so no query is timed against another's cache
-            spark.catalog.clearCache()
-            val obs = Observation(s"$name-$i")
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
-              .write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
-            rows = obs.get("rows").asInstanceOf[Long]
-            dt
+          val runs = (1 to runsPerQuery).map { i =>
+            Runner.timed(spark, s"$name-$i")(fn(spark, sfDir))
           }
-          name -> Right((times.min, rows))
+          name -> Right((runs.map(_._1).min, runs.last._2))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             name -> Left(e.getClass.getSimpleName)
         }
@@ -131,7 +81,7 @@ object Bench {
     val load = try {
       scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString("[", ",", "]")
-    } catch { case _: Throwable => "[]" }
+    } catch { case NonFatal(_) => "[]" }
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rows":$rows,"failed":$fails,"loadavg":$load,"runs":$runsPerQuery,"sf":"$sfDir"}"""
     // The driver captures only the TAIL (~2.3 KB) of stdout; a 428-query
@@ -141,17 +91,14 @@ object Bench {
     // AND written to bench_full.json in the working directory, (2) the
     // LAST stdout line is a compact fixed-size summary — total seconds,
     // query count, failures, load — that always fits the tail capture
-    // whole and parses on its own.
+    // whole, parses on its own, and is marked "summary":true.
     println(full)
     try {
-      val fname = shard.map { case (i, n) =>
-        s"bench_full_shard_${i}_of_$n.json" }.getOrElse("bench_full.json")
-      val p = java.nio.file.Paths.get(fname)
-      java.nio.file.Files.write(p,
+      java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${ok.size},"failed":$fails,"loadavg":$load,"runs":$runsPerQuery,"sf":"$sfDir"}""")
+      s"""{"metric":"total","summary":true,"value":$total,"unit":"sec","n":${ok.size},"failed":$fails,"loadavg":$load,"runs":$runsPerQuery,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -45,4 +45,18 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     shufflePartitions.fold(b)(n => b.config("spark.sql.shuffle.partitions", n))
   }
+
+  /** The session every entry main runs on: [[builder]] with one shuffle
+    * partition per core, on `local[cpus]`, UI off, log level WARN.
+    * Mains needing a further static conf (a scheduler mode, a cluster
+    * master) start from [[builder]] instead; runtime confs go through
+    * `spark.conf.set` on the returned session. */
+  def local(cpus: Int): SparkSession = {
+    val spark = builder(Some(cpus))
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,23 +14,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Naive parquet timestamps read as TimestampType (UTC), not NTZ —
-      // matches GraftSession and keeps unix_micros/unix_millis applicable.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // DuckDB-oracle parity: x/0 -> null, junk casts -> null (the library
-      // itself is ANSI-safe; this pins query-level division semantics).
-      // SPARK_GRAFT_ANSI=true runs the identical catalog under ANSI mode —
-      // the full-catalog ANSI sweep; every query must still pass.
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // GraftSession's ANSI-off is the DuckDB-oracle contract: x/0 -> null,
+    // junk casts -> null. SPARK_GRAFT_ANSI=true runs the identical
+    // catalog under ANSI mode — the full-catalog ANSI sweep; every query
+    // must still pass.
+    sys.env.get("SPARK_GRAFT_ANSI").foreach(spark.conf.set("spark.sql.ansi.enabled", _))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -36,7 +27,7 @@ object Verify {
       spark.catalog.clearCache()   // operator-internal persists: per-query
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -18,10 +18,11 @@ object CatalogSqlTvf {
     Tables.load(s, dir, name)
 
   /** Sessionization invoked as `SELECT ... FROM graft_sessions(...)`.
-    * The imperative register() is used because the driver's Verify
-    * session is built without extensions; a GraftSession gets the TVFs
-    * at build (GraftExtensionsSpec pins that path). Registration is
-    * idempotent (createOrReplaceTempFunction). */
+    * The imperative register() keeps the query runnable on a session
+    * built without the extensions; a GraftSession already has the TVFs
+    * at build (GraftExtensionsSpec pins that path, TableFunctionsSpec
+    * the imperative one). Registration is idempotent
+    * (createOrReplaceTempFunction). */
   private val q284 = Q("q284_sql_tvf_sessions",
     (s, dir) => {
       graft.sql.TableFunctions.register(s)

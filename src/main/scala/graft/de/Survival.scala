@@ -580,7 +580,7 @@ object Survival {
     // step reuses ONE codegen source (the Janino cache keys on
     // generated Java text; an inlined constant changed per step
     // forced a recompile of every step stage — measured in
-    // tools/CodegenProbe).
+    // artifacts/r15opt/codegen_probe.log, pinned by ParamSpec).
     def ui(beta: Double): (Double, Double) = {
       val w = col("__n") * exp(graft.util.Param.scalar(beta) * col("__x"))
       val byT = cellsIt

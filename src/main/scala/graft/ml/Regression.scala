@@ -81,7 +81,7 @@ object Regression {
       // step coefficients as codegen-cache-friendly parameter
       // constants instead of fresh literals, so every step reuses ONE
       // codegen source and Janino compiles only step 1 (util.Param /
-      // ScalarParam; measured in tools/CodegenProbe)
+      // ScalarParam; artifacts/r15opt/codegen_probe.log, ParamSpec)
       val eta = graft.util.Param.scalar(beta(0)) +
         graft.util.Param.scalar(beta(1)) * col("__x1") +
         graft.util.Param.scalar(beta(2)) * col("__x2")

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -51,7 +53,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     val out =
       try Some(body)
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           failures += name -> e
           None
       }

@@ -3,9 +3,11 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.GraftSession
 import graft.catalog.{Catalog, SignedZero}
 
 /** One-pass catalog inventory (builder tool, not driver contract):
@@ -32,14 +34,7 @@ object CatalogInventory {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -72,7 +67,7 @@ object CatalogInventory {
       val df =
         try q.run(spark, sfDir)
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             println(s"CONSTRUCT-FAIL ${q.name}: ${e.getMessage}")
             spark.stop(); sys.exit(1)
         }

@@ -2,9 +2,12 @@ package graft.tools
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.catalog.Catalog
 
 /** Round-14 concurrent-session gate: every bench, sweep, and gate runs
@@ -44,13 +47,9 @@ object ConcurrentGate {
     val names = (baseTimes.toSeq.sortBy(-_._2).take(topN).map(_._1) ++
       sharedStateTargets).distinct.filter(Catalog.queries.contains)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(Some(cpus)).master(s"local[$cpus]")
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -80,7 +79,7 @@ object ConcurrentGate {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"pool$t")
           new scala.util.Random(t).shuffle(names).foreach { n =>
             val r = try Right(digest(qs(n)(spark, sfDir)))
-            catch { case e: Throwable => Left(e) }
+            catch { case NonFatal(e) => Left(e) }
             results.put((t, n), r)
           }
         }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.catalog.Catalog
 
 /** Plan audit: prints the formatted physical plan of selected catalog
@@ -20,17 +19,10 @@ import graft.catalog.Catalog
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    // session conf MIRRORS Bench/Verify (ansi off, UTC, 32-ish shuffle
-    // partitions scaled down) — auditing plans under a different conf
-    // would show different cast/divide variants than the ones benched
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session Bench and Verify run on — auditing plans under a
+    // different conf would show different cast/divide variants than
+    // the ones benched
+    val spark = GraftSession.local(4)
     val names = if (args.nonEmpty) args.toSeq else audited
     val qs = Catalog.queries
     names.foreach { n =>

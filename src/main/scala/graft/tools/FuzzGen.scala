@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Seeded differential-fuzz table generator (round-10 verdict task 6).
   *
@@ -210,13 +212,7 @@ object FuzzGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: FuzzGen <seed> <srcDir> <outDir>")
     val (seed, src, out) = (args(0).toLong, args(1), args(2))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     tables.foreach { t =>
       perturb(t, spark.read.parquet(s"$src/$t.parquet"), seed)
         .coalesce(1)

@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.catalog.Catalog
 
 /** Optimization-round measurement harness (opt guide §1): run named
@@ -19,11 +19,13 @@ import graft.catalog.Catalog
   * (plans/r14/<query>_<tag>.txt) when one is given.
   *
   * Usage: ProfileQuery <outDirOrNONE> <tag> <q1,q2,...>
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32),
-  *      SPARK_GRAFT_PROFILE_RUNS (default 2; stage table is from the
-  *      LAST run so one-time codegen noise is amortized away).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
+  * Each query runs twice; the stage table is from the LAST run so
+  * one-time codegen noise is amortized away.
   */
 object ProfileQuery {
+
+  private val runs = 2
 
   private final case class StageAgg(
       var name: String = "",
@@ -42,17 +44,7 @@ object ProfileQuery {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
     var collecting = false
@@ -77,10 +69,7 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warm-up mirrors Bench
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save()
+    Runner.warmUp(spark, sfDir)
 
     val qs = Catalog.queries
     names.foreach { name =>
@@ -88,14 +77,10 @@ object ProfileQuery {
         sys.error(s"unknown query '$name'"))
       var elapsed = 0.0
       (1 to runs).foreach { i =>
-        spark.catalog.clearCache()
         stages.clear()
         collecting = true
         spark.sparkContext.setJobDescription(s"$name run $i")
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = (System.nanoTime() - t0) / 1e9
+        elapsed = Runner.timed(spark, s"$name-$i")(fn(spark, sfDir))._1
         // listener events are posted asynchronously; give the bus a
         // moment to drain before reading (listenerBus is private[spark])
         Thread.sleep(300)

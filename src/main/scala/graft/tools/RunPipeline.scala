@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
 
 /** CLI entry for the full nine-stage pipeline.
@@ -13,13 +12,9 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: RunPipeline <matrix> <mapping.csv> <outDir> [ensembl.csv] [opentargets.json]")
-    val spark = SparkSession.builder()
+    // SPARK_MASTER is a deployment address (a cluster, or a wider local[N])
+    val spark = GraftSession.builder(Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt))
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.catalog.Catalog
 
 /** The per-round large-scale gate, as one repeatable main (SCALE.md
@@ -11,9 +10,9 @@ import graft.catalog.Catalog
   *     [[ScaleUpGen]] conventions — regenerate with that tool when the
   *     generator changes),
   *  2. reads a bench_full_r*.json per-query timing record,
-  *  3. runs the top-N most expensive queries once at the sf1 dir
-  *     (warm-up + best-of-2 per query, noop sink, cache cleared
-  *     between queries — the Bench discipline),
+  *  3. runs the top-N most expensive queries at the sf1 dir through
+  *     [[Runner.timed]] (warm-up + best-of-2 per query — the plan the
+  *     bench record timed),
   *  4. prints the markdown factor table for SCALE.md, flagging any
   *     query whose wall factor exceeds the data factor (super-linear —
   *     the q107 class this gate exists to catch).
@@ -35,28 +34,12 @@ object ScaleGate {
     println(s"sf1 gate: top-$topN of ${baseTimes.size} queries from " +
       s"$benchJson at $sf1Dir")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(s"$sf1Dir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Runner.warmUp(spark, sf1Dir)
 
     val qs = Catalog.queries
     val rows = top.map { case (name, base) =>
-      val run = () => {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        qs(name)(spark, sf1Dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val run = () => Runner.timed(spark, name)(qs(name)(spark, sf1Dir))._1
       run() // warm-up
       val t = math.min(run(), run())
       (name, base, t, t / base)
@@ -90,19 +73,21 @@ object ScaleGate {
   val densityExempt: Map[String, String] = Map(
     "q152_dbscan" -> ("fixed-ε DBSCAN on the fixed coordinate domain: " +
       "10x points = 10x per-cell occupancy, and ε-pair volume is " +
-      "occupancy-quadratic by semantics. The constant-density smoke " +
-      "(LlmScaleSmoke dbscan, area ∝ n) is the 100-TB analogy and " +
-      "holds linear; on genuinely denser data the knobs are ε/minPts " +
-      "(see SCALE.md)"),
+      "occupancy-quadratic by semantics. The constant-density row " +
+      "(dbscan, area ∝ n) is the 100-TB analogy and holds linear; on " +
+      "genuinely denser data the knobs are ε/minPts (SCALE.md " +
+      "\"Round-10 sf1 gate (10x the bench grain, one decade up)\")"),
     "q32_embedding_dedup" -> ("planesPerTable pinned at 4 so the " +
       "DuckDB oracle can replay the exact hyperplane signs; bucket " +
       "occupancy then grows with the corpus and pair volume is " +
       "occupancy-quadratic. The operator's documented contract scales " +
-      "planes with log(corpus) — the constant-occupancy smoke " +
-      "(LlmScaleSmoke embedding_dedup, planes ∝ log n) holds linear"),
+      "planes with log(corpus) — with it followed (planes ∝ log n) " +
+      "the constant-occupancy row holds linear (SCALE.md \"sf1 gate " +
+      "deepening: top-80 + the q32 parameterization finding\")"),
     "q223_fellegi_sunter" -> ("the entry blocks on NATURAL keys " +
       "(nation × mktsegment = 125 blocks), so occupancy grows with the " +
       "data and pair volume is occupancy-quadratic — a property of the " +
       "block-key choice, not the operator; production blocking keeps " +
-      "block count ∝ entities (LlmScaleSmoke fellegi_sunter, linear)"))
+      "block count ∝ entities, and that row holds linear (SCALE.md " +
+      "\"Full-catalog sf1 gate (all 404 queries) and the q308 fix\")"))
 }

@@ -3,8 +3,7 @@ package graft.tools
 import java.io.{BufferedWriter, FileWriter}
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
 
 /** End-to-end smoke at the REFERENCE's true data scale: a synthetic GEO
@@ -79,15 +78,7 @@ object ScaleSmoke {
     val genT = (System.nanoTime() - t0) / 1e9
 
     // --- full pipeline run ---
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val t1 = System.nanoTime()
     val result = new DrugTargetPipeline(spark,

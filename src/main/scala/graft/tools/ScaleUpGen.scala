@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** sf1 slice generator (builder tool, not driver contract): scales the
   * read-only sf0.1 testdata 10× by unioning key-shifted copies, so the
@@ -63,14 +65,7 @@ object ScaleUpGen {
       s"mode must be '', 'skew' or 'textskew', got '$mode'")
     val skew = mode == "skew"
     val textSkew = mode == "textskew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def t(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.catalog.Catalog
 
 /** Round-12 skew gate: both measured decades (sf0.1→sf1→sf10) used
@@ -66,29 +65,13 @@ object SkewGate {
       s"(top-$topN of $bj + ${skewTargets.size} skew targets) " +
       s"on $uniformDir vs $skewDir")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // JVM/codegen warm-up on both dirs
-    Seq(uniformDir, skewDir).foreach { d =>
-      spark.read.parquet(s"$d/lineitem.parquet")
-        .groupBy("l_returnflag").count()
-        .write.format("noop").mode("overwrite").save()
-    }
+    Seq(uniformDir, skewDir).foreach(Runner.warmUp(spark, _))
 
     val qs = Catalog.queries
-    def time(name: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      qs(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(name: String, dir: String): Double =
+      Runner.timed(spark, name)(qs(name)(spark, dir))._1
     // interleaved best-of-2: U S U S per query, one warm-up pair
     val rows = names.map { name =>
       time(name, uniformDir); time(name, skewDir) // warm-up pair

@@ -1,20 +1,12 @@
 // Driven via: sbt "runMain graft.tools.SmokeEntry"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 object SmokeEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = graft.SparkEntry.entry(spark)
+    val spark = GraftSession.local(4)
+    val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"ENTRY_ROWS=${rows.length}")
     df.show(5, truncate = false)

@@ -14,9 +14,10 @@ import org.apache.spark.sql.graft.{ColumnBridge, ScalarParam}
   * was unique and the Janino class cache (keyed on source text)
   * missed every step — on a small/cached frame the dominant fixed
   * cost of an iteration was Janino compilation, not data (measured:
-  * tools/CodegenProbe, 12-step 9-sum aggregate over a cached
+  * `artifacts/r15opt/codegen_probe.log`, 9-sum aggregate over a cached
   * sf0.1-sized frame — literal steps pay 2 codegen compilations per
-  * step; [[scalar]] steps compile on step 1 only).
+  * step; [[scalar]] steps compile on step 1 only; pinned by
+  * `ParamSpec` "scalar steps reuse one codegen source").
   *
   * [[scalar]] wraps the value in [[ScalarParam]], a non-foldable leaf
   * expression whose codegen reads the constant from the `references`

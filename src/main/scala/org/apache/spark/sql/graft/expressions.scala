@@ -677,7 +677,8 @@ case class DictScrub(child: Expression, dict: Seq[String], mask: String)
   * generated code every step and the Janino class cache hits after
   * step 1. A plain `lit(beta)` changes the source text each step and
   * forces a full recompile of every step stage (measured in
-  * tools/CodegenProbe: 2 compiles/step -> 0 after step 1).
+  * `artifacts/r15opt/codegen_probe.log`: 2 compiles/step -> 0 after
+  * step 1; pinned by `graft.util.ParamSpec`).
   *
   * Runtime cost: one boxed-Double read per codegen'd evaluation —
   * hoisted like any other expression; plan shape, partitioning and

@@ -76,12 +76,7 @@ object GoldenGen {
     val dest = Paths.get(args(0))
     Files.createDirectories(dest)
     writeMediumFixture(Paths.get("src/test/resources"))
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-golden")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     // direct filesystem paths: Test/runMain loads resources from the
     // packaged test jar, whose jar!-URLs Spark's file source can't read
     def res(n: String) = s"src/test/resources/$n"

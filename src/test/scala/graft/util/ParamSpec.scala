@@ -1,6 +1,8 @@
 package graft.util
 
 import graft.SparkSuite
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** util.Param.scalar — codegen-cache-friendly parameter constants used
@@ -69,6 +71,43 @@ class ParamSpec extends SparkSuite {
       assert(stats(etaLit) === stats(etaPar),
         s"literal vs param sums diverged at beta=${b.toSeq}")
     }
+    d.unpersist()
+  }
+
+  test("scalar steps reuse one codegen source; literal steps recompile") {
+    // the Newton-step shape of artifacts/r15opt/codegen_probe.log: a
+    // 9-sum weighted aggregate over a persisted frame, one per step,
+    // with the JVM-wide Janino compile counter read around each step
+    val d = (1 to 5000).map { i =>
+      (math.sin(i), math.cos(i) * 3, (i % 11).toDouble)
+    }.toDF("__y", "__x1", "__x2").persist()
+    d.count()
+    def step(b: Seq[Column]): Unit = {
+      val eta = b(0) + b(1) * col("__x1") + b(2) * col("__x2")
+      val mu = lit(1.0) / (lit(1.0) + exp(-eta))
+      val w = mu * (lit(1.0) - mu)
+      val r = col("__y") - mu
+      d.agg(sum(w), sum(w * col("__x1")), sum(w * col("__x2")),
+        sum(w * col("__x1") * col("__x1")),
+        sum(w * col("__x1") * col("__x2")),
+        sum(w * col("__x2") * col("__x2")),
+        sum(r), sum(r * col("__x1")), sum(r * col("__x2"))).head()
+    }
+    def compiles(b: Seq[Column]): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      step(b)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    // distinct per step, and unlike any constant compiled earlier in the
+    // JVM, so a literal step cannot hit the cache by coincidence
+    val betas = (1 to 5).map(i =>
+      Seq(0.0173 + 1e-7 * i, -0.00291 * i, 0.000737 * i))
+    val literal = betas.map(b => compiles(b.map(lit)))
+    val param = betas.map(b => compiles(b.map(Param.scalar)))
+    assert(param.tail.forall(_ == 0),
+      s"Param.scalar steps recompiled after step 1: $param")
+    assert(literal.forall(_ >= 1),
+      s"a lit(...) step hit the codegen cache: $literal")
     d.unpersist()
   }
 }
