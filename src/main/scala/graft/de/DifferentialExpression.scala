@@ -3,6 +3,8 @@ package graft.de
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.geo.GeoLineParser.pyStrip
+
 /** Differential-expression stage (J2/J3, A6–A8, F4/F5;
   * `pipeline2.py:540-648`).
   *
@@ -39,17 +41,11 @@ object DifferentialExpression {
       else metadata
     val metaSeq = ordered.select("sample_id", "condition")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    def strip(s: String) = {
-      var a = 0; var b = s.length
-      while (a < b && "\"' ".indexOf(s.charAt(a)) >= 0) a += 1
-      while (b > a && "\"' ".indexOf(s.charAt(b - 1)) >= 0) b -= 1
-      s.substring(a, b)
-    }
     // keys stripped too: metadata ids can arrive quoted just like the
     // expression header's (both sides of the match normalize)
-    val meta = metaSeq.collect { case (k, v) if v != null => strip(k) -> v }.toMap
+    val meta = metaSeq.collect { case (k, v) if v != null => pyStrip(k, "\"' ") -> v }.toMap
     val matched = sampleIds.flatMap { sid =>
-      meta.get(strip(sid)).map(sid -> _)
+      meta.get(pyStrip(sid, "\"' ")).map(sid -> _)
     }
     val positional =
       if (matched.isEmpty && metaSeq.length == sampleIds.length)

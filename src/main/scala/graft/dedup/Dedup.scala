@@ -1152,13 +1152,20 @@ object Dedup {
   private def measuredCandidates(cand: DataFrame): (DataFrame, Long) = {
     val obs = Observation()
     val m = cand.observe(obs, count(lit(1)).as("n_pairs")).localCheckpoint()
-    val n = scala.util.Try(scala.concurrent.Await.result(
-        obs.future, scala.concurrent.duration.Duration(30, "s"))).toOption
+    val observed = scala.util.Try(scala.concurrent.Await.result(
+      obs.future, scala.concurrent.duration.Duration(30, "s")))
+    val n = observed.toOption
       .flatMap { r =>
         Option(r.schema).filter(_.fieldNames.contains("n_pairs"))
           .map(_ => r.getAs[Long]("n_pairs"))
       }
-      .getOrElse(m.count()) // fallback: cheap count over checkpointed blocks
+      .getOrElse { // fallback: cheap count over checkpointed blocks
+        val cause = observed.fold(e => s"failed ($e)",
+          _ => "completed without n_pairs (metrics node pruned)")
+        log.warn(s"measuredCandidates: candidate-count Observation $cause; " +
+          "falling back to count() over the checkpointed candidates")
+        m.count()
+      }
     (m, n)
   }
 

@@ -1,11 +1,12 @@
 package graft.geo
 
-/** Line-level parse semantics of the GEO Series Matrix format, shared by
-  * the DataFrame reader ([[GeoMatrixReader]], column expressions) and the
-  * DataSourceV2 reader ([[GeoPartitionReader]], streaming rows). Mirrors
-  * `pipeline2.py:434-474`: tab-split, n+1-field guard, whole-row drop
-  * when any value fails Python float(), probe-id prefix/quote cleanup,
-  * NaN/Inf normalized to null (SURVEY §1.2).
+/** Line-level parse semantics of the GEO Series Matrix format: the one
+  * parser behind [[GeoMatrixReader]] (header, and every data row through a
+  * `flatMap` over `spark.read.text`). Mirrors `pipeline2.py:434-474`:
+  * tab-split, n+1-field guard, whole-row drop when any value fails Python
+  * float(), probe-id prefix/quote cleanup, NaN/Inf normalized to null
+  * (SURVEY §1.2). The specs check it against an independent
+  * column-expression parse of the same file.
   */
 object GeoLineParser {
 
@@ -48,8 +49,7 @@ object GeoLineParser {
     if (last == 'd' || last == 'D' || last == 'f' || last == 'F')
       return specialValue(t)
     // Java parseDouble accepts hex-float literals ('0x1.8p3'); Python
-    // float() and the column-expression twin (GeoMatrixReader's
-    // ^[+-]?0[xX] guard) both reject them — keep the three paths agreeing
+    // float() rejects them
     if (hexPrefix.matcher(t).find()) return specialValue(t)
     try {
       val d = java.lang.Double.parseDouble(t)

@@ -1,10 +1,8 @@
 package graft.geo
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-
-import graft.functions.gfunctions.nan_inf_to_null
 
 /** Parsed GEO series: long-form expression + row-per-sample metadata.
   *
@@ -30,10 +28,11 @@ final case class GeoData(expression: DataFrame, metadata: DataFrame,
   * row — same net routing as the reference's `in_data_section` flag on
   * well-formed files, but order-independent so the scan parallelizes.
   *
-  * Metadata lines are parsed on the driver: their count is bounded by
-  * #samples × #characteristic-keys (dimension-sized by construction), while
-  * the expression rows — the part that scales — stay distributed.
-  * Gzip input is transparent (`spark.read.text` handles .gz).
+  * Metadata and header lines are parsed on the driver: their count is
+  * bounded by #samples × #characteristic-keys (dimension-sized by
+  * construction), while the expression rows — the part that scales — stay
+  * distributed. Every line goes through [[GeoLineParser]]; Spark's text
+  * source does the file work (gzip, splits, directory listing).
   */
 object GeoMatrixReader {
 
@@ -42,90 +41,54 @@ object GeoMatrixReader {
   private val BenignKeywords =
     Seq("benign", "normal", "healthy", "non-tumor", "non-cancer", "non-malignant")
 
-  /** Python str.strip(chars) semantics: remove any run of `chars` from both
-    * ends (`pipeline2.py:228,240,254` use `.strip('"')` / `.strip('"\'')`). */
-  private def pyStrip(s: String, chars: String): String = {
-    var start = 0
-    var end = s.length
-    while (start < end && chars.indexOf(s.charAt(start)) >= 0) start += 1
-    while (end > start && chars.indexOf(s.charAt(end - 1)) >= 0) end -= 1
-    s.substring(start, end)
-  }
+  /** Long-form expression schema: ids are never null; a null value is a
+    * NaN, Inf or missing cell. */
+  private val ExpressionSchema = StructType(Seq(
+    StructField("probe_id", StringType, nullable = false),
+    StructField("sample_id", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = true)))
 
   def read(spark: SparkSession, path: String): GeoData = {
-    // Two driver-side collects (header line, '!' metadata block) plus a
-    // distributed expression scan through the DSv2 `geo` format, which
-    // splits uncompressed files by byte range. No raw-text cache: at
-    // 100 TB caching the matrix text would store the dataset twice.
-    // The header collect short-circuits via limit(1); the metadata
-    // collect is one narrow full scan whose OUTPUT is dimension-sized
-    // (text sources don't push value predicates) — the price of not
-    // holding a second copy of the matrix.
+    // One driver-side collect takes the '!' metadata block and every
+    // ID_REF header line; the expression rows stay distributed. No
+    // raw-text cache: at 100 TB caching the matrix text would store the
+    // dataset twice. The collect is one narrow full scan whose OUTPUT is
+    // dimension-sized (text sources don't push value predicates).
     val lines = spark.read.text(path)
     val v = col("value")
+    val (headerLines, metaLines) = lines
+      .filter(v.startsWith("!") ||
+        (!v.startsWith("#") && v.contains("ID_REF")))
+      .collect().map(_.getString(0)).toSeq
+      .partition(GeoLineParser.isHeader)
 
-    // Sample header (single line): ids keep their source order.
-    val headerLine = lines
-      .filter(!v.startsWith("!") && !v.startsWith("#") && v.contains("ID_REF"))
-      .limit(1).collect().headOption
-      .map(_.getString(0))
-      .getOrElse(throw new IllegalArgumentException(
-        s"No ID_REF header line found in $path"))
     // The reference keeps raw (possibly quoted) sample ids in the expression
     // frame and strips quotes later during reconciliation
     // (`pipeline2.py:363-370`); graft folds the normalization into the parse.
-    // GeoLineParser.parseHeader is the single header-split implementation
-    // (split with -1 keeps trailing empty fields, like Python str.split) —
-    // a bare split("\t") here would disagree with the DSv2 reader on
-    // trailing-tab headers and silently drop every data row.
-    val sampleIds: Seq[String] = GeoLineParser.parseHeader(headerLine)
-
-    val metaLines = lines.filter(v.startsWith("!"))
-      .collect().map(_.getString(0)).toSeq
+    // A directory of matrices must share one header: the rows of every file
+    // are labelled with these ids, so a second series would be mislabelled.
+    val headers = headerLines.map(GeoLineParser.parseHeader).distinct
+    val sampleIds: Seq[String] = headers match {
+      case Seq(ids) => ids
+      case Seq() => throw new IllegalArgumentException(
+        s"No ID_REF header line found in $path")
+      case _ => throw new IllegalArgumentException(
+        s"$path mixes GEO series with ${headers.length} distinct ID_REF " +
+          "headers: " + headers.map(_.mkString("[", ", ", "]")).mkString("; "))
+    }
     val metadata = buildMetadata(spark, metaLines)
 
-    GeoData(spark.read.format("geo").load(path), metadata, sampleIds)
-  }
+    // Each data row fans out to n (probe_id, sample_id, value) rows.
+    val ids = sampleIds.toArray
+    val expression = lines.as(Encoders.STRING).flatMap { line =>
+      GeoLineParser.parseDataRow(line, ids.length) match {
+        case Some((probe, values)) =>
+          Iterator.tabulate(ids.length)(i => Row(probe, ids(i), values(i)))
+        case None => Iterator.empty
+      }
+    }(Encoders.row(ExpressionSchema))
 
-  /** S3: data rows -> long form. Probe-id cleanup reproduces
-    * `pipeline2.py:449-459`: take the substring after the FIRST ':' if
-    * present, else after the FIRST '-' if present, then strip quotes and
-    * whitespace. A row is dropped when any of its n values would fail
-    * Python float() (`pipeline2.py:464-468`); values that parse to NaN/Inf
-    * are kept as rows but normalized to null (SURVEY §1.2). */
-  private[geo] def parseExpression(lines: DataFrame,
-                                   sampleIds: Seq[String]): DataFrame = {
-    val n = sampleIds.length
-    val v = col("value")
-    val parts = split(v, "\t")
-
-    val probeRaw = element_at(col("__parts"), 1)
-    val afterPrefix = when(probeRaw.contains(":"), regexp_replace(probeRaw, "^[^:]*:", ""))
-      .when(probeRaw.contains("-"), regexp_replace(probeRaw, "^[^-]*-", ""))
-      .otherwise(probeRaw)
-    val probeId = trim(regexp_replace(afterPrefix, "^[\"']+|[\"']+$", ""))
-
-    val tokens = slice(col("__parts"), 2, n)
-    // Python float() accepts numbers and any-case nan/inf spellings. Spark's
-    // string->double try_cast goes through Java parseDouble, which ALSO
-    // accepts 'd'/'f' type suffixes and hex floats that Python (and
-    // GeoLineParser.parseValue, the DSv2 twin) reject — the two extra
-    // guards keep the paths identical.
-    val tokenOk = (x: org.apache.spark.sql.Column) =>
-      (x.try_cast(DoubleType).isNotNull &&
-        !trim(x).rlike("[dDfF]$") && !trim(x).rlike("^[+-]?0[xX]")) ||
-        lower(trim(x)).rlike("^[+-]?(nan|inf|infinity)$")
-
-    lines
-      .filter(!v.startsWith("!") && !v.startsWith("#") && !v.contains("ID_REF"))
-      .withColumn("__parts", parts)
-      .filter(size(col("__parts")) >= n + 1)                    // guard, py:441
-      .filter(forall(tokens, tokenOk))                          // row drop, py:464-468
-      .select(probeId.as("probe_id"),
-        posexplode(transform(tokens, x => nan_inf_to_null(x.try_cast(DoubleType)))))
-      .select(col("probe_id"),
-        element_at(typedLit(sampleIds), col("pos") + 1).as("sample_id"),
-        col("col").as("value"))
+    GeoData(expression, metadata, sampleIds)
   }
 
   /** S2 + the grouping rules (`pipeline2.py:213-347`): accession + title
@@ -141,9 +104,9 @@ object GeoMatrixReader {
       metaLines.find(_.startsWith(prefix)).map(_.split("\t", -1))
 
     val sampleIds: Seq[String] = firstLine("!Sample_geo_accession")
-      .map(_.drop(1).toSeq.map(pyStrip(_, "\""))).getOrElse(Seq.empty)
+      .map(_.drop(1).toSeq.map(GeoLineParser.pyStrip(_, "\""))).getOrElse(Seq.empty)
     val titles: Seq[String] = firstLine("!Sample_title")
-      .map(_.drop(1).toSeq.map(pyStrip(_, "\""))).getOrElse(Seq.empty)
+      .map(_.drop(1).toSeq.map(GeoLineParser.pyStrip(_, "\""))).getOrElse(Seq.empty)
 
     val characteristics: Map[String, scala.collection.mutable.LinkedHashMap[String, String]] =
       sampleIds.map(_ -> scala.collection.mutable.LinkedHashMap.empty[String, String]).toMap
@@ -151,12 +114,12 @@ object GeoMatrixReader {
     metaLines.filter(_.startsWith("!Sample_characteristics_ch")).foreach { line =>
       val parts = line.split("\t", -1)
       if (parts.length >= 2) {
-        val first = pyStrip(parts(1), "\"").trim
+        val first = GeoLineParser.pyStrip(parts(1), "\"").trim
         if (first.contains(":")) {
           val label = first.split(":", 2)(0).trim.toLowerCase
           sampleIds.zipWithIndex.foreach { case (sid, i) =>
             if (i + 1 < parts.length) {
-              var value = pyStrip(parts(i + 1), "\"").trim
+              var value = GeoLineParser.pyStrip(parts(i + 1), "\"").trim
               if (value.contains(":")) value = value.split(":", 2)(1).trim
               characteristics(sid)(label) = value
             }

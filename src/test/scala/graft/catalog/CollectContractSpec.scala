@@ -67,7 +67,8 @@ class CollectContractSpec extends AnyFunSuite {
       (2, "tarjanDriver small branch of the size dispatch (<= 2M " +
         "nodes / 20M edges) — distributed coloring above"),
     "graft/geo/GeoMatrixReader.scala" ->
-      (2, "single header-line probes via limit(1)"),
+      (1, "ID_REF header + '!' metadata lines in one collect — " +
+        "#samples x #characteristic-keys, dimension-sized by the format"),
     "graft/de/Stats.scala" ->
       (2, "bhAdjustDistributed per-partition rank offsets — one long " +
         "per partition, twice (rank pass + cummin pass)"),

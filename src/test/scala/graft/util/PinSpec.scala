@@ -37,7 +37,10 @@ class PinSpec extends SparkSuite {
     try {
       val d = bomb()
       val e = intercept[Exception](Pin.primeShared(d))
-      assert(e.getMessage != null)
+      // the bomb's own failure, not just any exception on the way
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => Option(t.getMessage).exists(
+        _.contains("'(id > 100)' is not true!"))), e)
       d.unpersist(true)
     } finally spark.conf.unset(Pin.PrimeSharedKey)
   }
