@@ -1,16 +1,18 @@
 package graft.geo
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** Parsed GEO series: long-form expression + row-per-sample metadata.
+/** Parsed GEO series: per-probe expression rows + row-per-sample metadata.
   *
-  * `expression`: (probe_id STRING, sample_id STRING, value DOUBLE) — long
-  * form is the scale-friendly shape (SURVEY §1.1): per-probe operations are
-  * `groupBy`/window over probe_id, per-sample over sample_id, and the row
-  * count grows with probes × samples instead of a wide schema growing with
-  * samples.
+  * `expression`: one row per probe in the [[ProbeRows]] layout,
+  * (probe_id STRING NOT NULL, value ARRAY<DOUBLE>): the probe's values in
+  * `sampleIds` order, null for a NaN, Inf or missing cell. The sample ids
+  * travel once, in the `value` field's metadata, not in every row. Per-probe
+  * steps (threshold, impute, z-score) are row maps with no shuffle; the
+  * probe collapse is the one step that emits the long
+  * (gene, sample_id, value) form.
   *
   * `metadata`: (sample_id STRING, ordinal INT, title STRING,
   * condition STRING, characteristics MAP<STRING,STRING>) — ordinal is the
@@ -19,6 +21,41 @@ import org.apache.spark.sql.types._
   */
 final case class GeoData(expression: DataFrame, metadata: DataFrame,
                          sampleIds: Seq[String])
+
+/** Owner of the per-probe expression layout:
+  * `(probe_id STRING NOT NULL, value ARRAY<DOUBLE> NOT NULL)`, one row per
+  * probe, values in sample order, null = NaN, Inf or missing. The sample
+  * ids are stored once, in the `value` field's metadata. A typed map drops
+  * field metadata, so every step that rebuilds `value` re-attaches it with
+  * [[ProbeRows.value]]. */
+object ProbeRows {
+
+  private val SampleIdsKey = "sample_ids"
+
+  /** Schema of a typed map that emits probe rows; [[value]] then
+    * re-attaches the sample ids the map dropped. */
+  val Schema: StructType = StructType(Seq(
+    StructField("probe_id", StringType, nullable = false),
+    StructField("value", ArrayType(DoubleType, containsNull = true),
+      nullable = false)))
+
+  /** `values` as the `value` column, carrying `sampleIds`. */
+  def value(values: Column, sampleIds: Seq[String]): Column =
+    values.as("value", new MetadataBuilder()
+      .putStringArray(SampleIdsKey, sampleIds.toArray).build())
+
+  /** The sample ids a probe-row frame carries; fails when the frame is
+    * not in this layout. */
+  def sampleIds(df: DataFrame): Seq[String] =
+    df.schema.find(_.name == "value")
+      .filter(_.metadata.contains(SampleIdsKey))
+      .map(_.metadata.getStringArray(SampleIdsKey).toSeq)
+      .getOrElse(throw new IllegalArgumentException(
+        "expression frame carries no sample ids: expected one row per " +
+          "probe, (probe_id, value ARRAY<DOUBLE>), with the ids in the " +
+          s"`value` field's '$SampleIdsKey' metadata (GeoMatrixReader.read " +
+          s"output); got ${df.schema.simpleString}"))
+}
 
 /** GEO Series Matrix reader (S1–S3, `pipeline2.py:170-347,434-474`).
   *
@@ -40,13 +77,6 @@ object GeoMatrixReader {
     Seq("cancer", "tumor", "tumour", "malignant", "carcinoma")
   private val BenignKeywords =
     Seq("benign", "normal", "healthy", "non-tumor", "non-cancer", "non-malignant")
-
-  /** Long-form expression schema: ids are never null; a null value is a
-    * NaN, Inf or missing cell. */
-  private val ExpressionSchema = StructType(Seq(
-    StructField("probe_id", StringType, nullable = false),
-    StructField("sample_id", StringType, nullable = false),
-    StructField("value", DoubleType, nullable = true)))
 
   def read(spark: SparkSession, path: String): GeoData = {
     // One driver-side collect takes the '!' metadata block and every
@@ -78,15 +108,14 @@ object GeoMatrixReader {
     }
     val metadata = buildMetadata(spark, metaLines)
 
-    // Each data row fans out to n (probe_id, sample_id, value) rows.
-    val ids = sampleIds.toArray
+    // Each kept data row becomes one probe row.
+    val n = sampleIds.length
     val expression = lines.as(Encoders.STRING).flatMap { line =>
-      GeoLineParser.parseDataRow(line, ids.length) match {
-        case Some((probe, values)) =>
-          Iterator.tabulate(ids.length)(i => Row(probe, ids(i), values(i)))
-        case None => Iterator.empty
+      GeoLineParser.parseDataRow(line, n).iterator.map { case (probe, values) =>
+        Row(probe, values)
       }
-    }(Encoders.row(ExpressionSchema))
+    }(Encoders.row(ProbeRows.Schema))
+      .select(col("probe_id"), ProbeRows.value(col("value"), sampleIds))
 
     GeoData(expression, metadata, sampleIds)
   }

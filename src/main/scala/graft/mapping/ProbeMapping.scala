@@ -1,17 +1,22 @@
 package graft.mapping
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+
+import graft.geo.ProbeRows
+import graft.util.Quantiles
 
 /** Probe -> gene-symbol mapping (S4/S5, J1, F3, A5).
   *
   * The reference's Python->R->CSV round trip (`pipeline2.py:53-137`,
   * `generate_probe_mappings_csv.r`) collapses to: load the mapping table,
   * broadcast-hash-join it into the long expression frame (inner join ==
-  * left-outer-with-UNKNOWN_-default + anti-filter, `pipeline2.py:515-520`),
-  * and collapse probes to genes with a per-(gene, sample) median
-  * (`pipeline2.py:523-528`). The mapping is dimension-sized (54k rows at
-  * reference scale) — always the broadcast side.
+  * left-outer-with-UNKNOWN_-default + anti-filter, `pipeline2.py:515-520`)
+  * into the per-probe expression rows, and collapse probes to genes with a
+  * per-(gene, sample) median (`pipeline2.py:523-528`). The mapping is
+  * dimension-sized (54k rows at reference scale) — always the broadcast
+  * side.
   */
 object ProbeMapping {
 
@@ -48,18 +53,38 @@ object ProbeMapping {
         struct(col("__file"), col("__line_no"))).as("symbol"))
   }
 
-  /** J1 + F3 + A5: inner broadcast join then per-(gene, sample) median.
-    * Output: (gene, sample_id, value). */
-  def collapseToGenes(expr: DataFrame, mapping: DataFrame): DataFrame =
+  /** J1 + F3 + A5: inner broadcast join of the mapping into the probe rows
+    * ([[ProbeRows]] layout), one group per gene, and the element-wise
+    * median over the gene's probes ([[Quantiles.median]]: the `median`
+    * aggregate's arithmetic, nulls ignored, null when no probe has a
+    * value). Output: (gene, sample_id, value), one row per gene and sample.
+    *
+    * Output-layout contract: hash-partitioned on (gene, sample_id) into
+    * the session's shuffle partition count and sorted by
+    * (gene, sample_id) within each partition — the layout a grouped
+    * `median` over (gene, sample_id) leaves when its partitions hold more
+    * than the sort-based fallback's 128 keys. Downstream sums (DE's Welch
+    * moments, the network's `corr`) add doubles in partition order, so
+    * this layout is what keeps their results byte-identical. */
+  def collapseToGenes(expr: DataFrame, mapping: DataFrame): DataFrame = {
+    val sampleIds = ProbeRows.sampleIds(expr).toArray
     expr
       .join(broadcast(mapping.select("probe_id", "symbol")), Seq("probe_id"))
-      .groupBy(col("symbol").as("gene"), col("sample_id"))
-      .agg(median(col("value")).as("value"))
-
-  /** Mapping rate diagnostic (the reference logs 81.6% on GSE46602). */
-  def mappingStats(expr: DataFrame, mapping: DataFrame): (Long, Long) = {
-    val probes = expr.select("probe_id").distinct()
-    val mapped = probes.join(broadcast(mapping), Seq("probe_id"), "left_semi")
-    (probes.count(), mapped.count())
+      .groupBy(col("symbol").as("gene"))
+      .agg(collect_list(col("value")).as("probes"))
+      .flatMap { r =>
+        val gene = r.getString(0)
+        val probes = r.getSeq[scala.collection.Seq[java.lang.Double]](1)
+        Iterator.tabulate(sampleIds.length) { i =>
+          Row(gene, sampleIds(i), Quantiles.median(probes.map(_(i)).toArray))
+        }
+      }(Encoders.row(GeneSchema))
+      .repartition(col("gene"), col("sample_id"))
+      .sortWithinPartitions("gene", "sample_id")
   }
+
+  private val GeneSchema = StructType(Seq(
+    StructField("gene", StringType, nullable = true),
+    StructField("sample_id", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = true)))
 }

@@ -65,9 +65,9 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     val out = config.outputDir
 
     // Stage 1: parse (hard abort on failure, py:1158-1159). The parsed
-    // long-form expression is persisted: preprocessing AND the summary's
-    // probe count read it — without the persist the summary stage would
-    // re-scan and re-parse the raw matrix text.
+    // probe rows are persisted: preprocessing (its log2 scalar and its row
+    // map) AND the summary's probe count read them — without the persist
+    // the summary stage would re-scan and re-parse the raw matrix text.
     val geo = GeoMatrixReader.read(spark, config.matrixPath)
     geo.expression.persist(StorageLevel.MEMORY_AND_DISK)
     stage("metadata_sink") {

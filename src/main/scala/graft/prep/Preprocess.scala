@@ -1,71 +1,94 @@
 package graft.prep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Expression-matrix preprocessing over the long form (F1, A1–A4;
-  * `pipeline2.py:476-498`).
+import graft.geo.ProbeRows
+import graft.util.Quantiles
+
+/** Expression-matrix preprocessing (F1, A2–A4; `pipeline2.py:476-498`)
+  * plus the grouped robust-statistics and normalization screens.
   *
-  * All four per-probe steps (non-null threshold, median impute, conditional
-  * log2, z-score) are window aggregates over `partitionBy(probe_id)`: one
-  * shuffle of the fact table total, every subsequent pass reuses the same
-  * partitioning — no join-back of per-probe statistics. At 1000 executors
-  * the probe key is high-cardinality (54k at reference scale, unbounded for
-  * larger arrays), so the partitioning is balanced by construction.
+  * The expression steps work on the per-probe rows of [[ProbeRows]]: the
+  * reference's pandas pipeline treats each probe row of the wide matrix on
+  * its own, and so does [[run]] — a row map, no shuffle.
   */
 object Preprocess {
 
-  /** A1: global missing-value count (logged by the reference, py:483). */
-  def missingCount(expr: DataFrame): Long =
-    expr.agg(count(when(col("value").isNull, 1))).first().getLong(0)
-
-  /** F1 + A2 + A3 + A4.
+  /** F1 + A2 + A3 + A4 on probe rows.
     *
-    * @param expr     long (probe_id, sample_id, value) with nulls for NaN
-    * @param nSamples number of sample columns in the source matrix (the
-    *                 denominator of the 20% threshold, py:484)
+    *  - F1: keep probes with ≥ 20%·n non-null values (py:484).
+    *  - A2: fill a null with the probe's median ([[Quantiles.median]]).
+    *  - A3: `log2(x + 1)` when the kept probes' maximum exceeds 100 — one
+    *    collected scalar, like the reference's `if data_max > 100`
+    *    (py:488-491); null where x + 1 ≤ 0, like Spark's `log2`. The
+    *    scalar is taken from the raw values: a median fill never exceeds
+    *    its probe's maximum.
+    *  - A4: z-score with sklearn StandardScaler semantics (population std,
+    *    ddof=0; zero variance maps to 0.0, py:492-494).
+    *
+    * Each statistic uses Spark's own aggregate arithmetic in sample order
+    * (`avg`: a running sum over the count; `stddev_pop`: CentralMomentAgg's
+    * update, then sqrt(m2/n); `log2`: `StrictMath.log(x)/StrictMath.log(2)`),
+    * so every value is bit-identical to the per-probe window plan this
+    * replaced; the specs keep that plan as a reference.
+    *
+    * @param expr     probe rows in the [[ProbeRows]] layout
+    * @param nSamples the denominator of the 20% threshold (py:484)
+    * @return probe rows in the same layout and sample order; probes under
+    *         the threshold are dropped
     */
   def run(expr: DataFrame, nSamples: Int): DataFrame = {
-    val w = Window.partitionBy("probe_id")
+    val sampleIds = ProbeRows.sampleIds(expr)
     val threshold = 0.2 * nSamples
-
-    // F1: keep probes with >= 20%·n non-null values; A2: fill the rest with
-    // the probe's median (exact median, Spark >= 3.4 built-in).
-    val imputed = expr
-      .withColumn("__nn", count(col("value")).over(w))
-      .filter(col("__nn") >= threshold)
-      .withColumn("value",
-        coalesce(col("value"), median(col("value")).over(w)))
-      .drop("__nn")
-
-    // A3: conditional log2(x+1) — an adaptive plan branch picked from one
-    // collected scalar, like the reference's `if data_max > 100` (py:488-491).
-    // max(imputed value) == max(raw value) over the kept probes (the median
-    // fill never exceeds a probe's own max), so the branch scalar comes
-    // from a cheap partial-agg pass instead of the imputation window — no
-    // full-matrix persist needed to avoid running that window twice.
+    val v = col("value")
     val dataMax = expr
-      .groupBy("probe_id")
-      .agg(count(col("value")).as("__nn"), max(col("value")).as("__mx"))
-      .filter(col("__nn") >= threshold)
-      .agg(max(col("__mx"))).first() match {
+      .filter(size(filter(v, _.isNotNull)) >= threshold)
+      .agg(max(array_max(v))).first() match {
       case r if r.isNullAt(0) => Double.NegativeInfinity
       case r => r.getDouble(0)
     }
-    val scaled =
-      if (dataMax > 100) imputed.withColumn("value", log2(col("value") + 1))
-      else imputed
+    val logScale = dataMax > 100
+    expr.flatMap { r =>
+      standardize(r.getSeq[java.lang.Double](1).toArray, threshold, logScale)
+        .iterator.map(Row(r.getString(0), _))
+    }(Encoders.row(ProbeRows.Schema))
+      .select(col("probe_id"), ProbeRows.value(v, sampleIds))
+  }
 
-    // A4: per-probe standardization, sklearn StandardScaler semantics
-    // (population std, ddof=0; zero-variance rows map to 0, py:492-494).
-    scaled
-      .withColumn("__mu", avg("value").over(w))
-      .withColumn("__sd", stddev_pop("value").over(w))
-      .withColumn("value",
-        when(col("__sd") === 0.0, lit(0.0))
-          .otherwise((col("value") - col("__mu")) / col("__sd")))
-      .drop("__mu", "__sd")
+  /** One probe's F1–A4; None when it fails the threshold. */
+  private def standardize(raw: Array[java.lang.Double], threshold: Double,
+                          logScale: Boolean): Option[Array[java.lang.Double]] = {
+    if (raw.count(_ != null) < threshold) return None
+    val fill = Quantiles.median(raw)
+    val log2 = StrictMath.log(2)
+    val xs = raw.map { r =>
+      val x = if (r == null) fill else r
+      if (!logScale || x == null) x
+      else if (x + 1.0 <= 0) null
+      else java.lang.Double.valueOf(StrictMath.log(x + 1.0) / log2)
+    }
+    var sum = 0.0; var count = 0L            // avg
+    var n = 0.0; var mean = 0.0; var m2 = 0.0  // stddev_pop
+    for (x <- xs if x != null) {
+      sum += x; count += 1
+      n += 1.0
+      val delta = x - mean
+      val deltaN = delta / n
+      mean += deltaN
+      m2 += delta * (delta - deltaN)
+    }
+    // no value left (every one ≤ −1 on the log branch): avg and stddev are
+    // null, and so is every z-score
+    if (count == 0) return Some(xs)
+    val mu = sum / count
+    val sd = math.sqrt(m2 / n)
+    Some(xs.map { x =>
+      if (sd == 0.0) java.lang.Double.valueOf(0.0)
+      else if (x == null) null
+      else java.lang.Double.valueOf((x - mu) / sd)
+    })
   }
 
   /** Robust per-group outlier statistics via the median/MAD z-score

@@ -43,6 +43,29 @@ object Quantiles {
   val CollectCap = 262144L
   val MaxDepth = 2
 
+  /** Median of one row's values with the arithmetic of Spark's `median`
+    * aggregate (`Percentile` at 0.5): nulls ignored, the rest sorted,
+    * position `(n−1)·0.5`, and `(⌈pos⌉−pos)·lower + (pos−⌊pos⌋)·higher`
+    * unless the position is whole or the two neighbours are equal, in
+    * which case the value itself. Null when no value is present. Bit-equal
+    * to the aggregate on the same values; with both −0.0 and 0.0 present
+    * the sign of a zero result may differ (the aggregate's order between
+    * them is its hash map's). */
+  def median(values: Array[java.lang.Double]): java.lang.Double = {
+    var n = 0
+    val xs = new Array[Double](values.length)
+    for (v <- values) if (v != null) { xs(n) = v; n += 1 }
+    if (n == 0) return null
+    java.util.Arrays.sort(xs, 0, n)
+    val pos = (n - 1).toLong * 0.5
+    val lo = math.floor(pos).toLong
+    val hi = math.ceil(pos).toLong
+    val lower = xs(lo.toInt)
+    val higher = xs(hi.toInt)
+    if (lo == hi || lower == higher) lower
+    else (hi - pos) * lower + (pos - lo) * higher
+  }
+
   /** Exact percentiles (Spark `percentile` semantics) of `value` over
     * `df`; None when the column has no non-null rows. NULLs ignored,
     * like the aggregate. */

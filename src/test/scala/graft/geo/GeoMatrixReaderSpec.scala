@@ -13,7 +13,7 @@ class GeoMatrixReaderSpec extends SparkSuite {
   }
 
   test("data rows: probe-id prefix/quote cleanup, bad-value row dropped, nan kept as null") {
-    val rows = geo.expression.collect()
+    val rows = LongForm.expand(geo.expression).collect()
     val probes = rows.map(_.getString(0)).distinct.sorted
     // 117_at row has an unparseable token ("bad") -> whole row dropped
     // (pipeline2.py:464-468); 121_at has "nan" -> parsed, null value.
@@ -23,6 +23,18 @@ class GeoMatrixReaderSpec extends SparkSuite {
     assert(g1.length == 1 && g1.head.getDouble(2) == 8.1)
     val nanRow = rows.filter(r => r.getString(0) == "121_at" && r.getString(1) == "GSM2")
     assert(nanRow.length == 1 && nanRow.head.isNullAt(2))
+  }
+
+  test("expression: one row per probe, values in sample order, ids in the value metadata") {
+    val e = geo.expression
+    def shape(t: org.apache.spark.sql.types.StructType) =
+      t.map(f => (f.name, f.dataType, f.nullable))
+    assert(shape(e.schema) == shape(ProbeRows.Schema))
+    assert(ProbeRows.sampleIds(e) == geo.sampleIds)
+    val ddr1 = e.filter("probe_id = '1007_s_at'").collect()
+    assert(ddr1.length == 1)
+    assert(ddr1.head.getSeq[java.lang.Double](1).map(_.doubleValue) ==
+      Seq(8.1, 8.3, 5.1, 5.0))
   }
 
   test("metadata: titles, tissue-keyword conditions, characteristics map") {

@@ -14,8 +14,10 @@ import graft.functions.gfunctions.nan_inf_to_null
   * splits, gzip, directory listing and header edge cases. */
 class GeoReadSpec extends SparkSuite {
 
+  /** Cells of a probe-row frame (or of the long reference parse). */
   private def rows(df: DataFrame) =
-    df.collect().map(r => (r.getString(0), r.getString(1),
+    (if (df.columns.contains("sample_id")) df else LongForm.expand(df))
+      .collect().map(r => (r.getString(0), r.getString(1),
       if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
 
   private def expression(path: String) =

@@ -1,6 +1,7 @@
 package graft.mapping
 
 import graft.SparkSuite
+import graft.geo.LongForm
 
 class ProbeMappingSpec extends SparkSuite {
 
@@ -15,12 +16,11 @@ class ProbeMappingSpec extends SparkSuite {
 
   test("collapseToGenes: inner join drops unmapped; per-gene median over probes") {
     import spark.implicits._
-    val expr = Seq(
+    val expr = LongForm.pack(spark, Seq("s1", "s2"), Seq(
       ("p1", "s1", 1.0), ("p1", "s2", 2.0),
       ("p2", "s1", 3.0), ("p2", "s2", 4.0),
       ("p3", "s1", 9.0), ("p3", "s2", 9.0),   // unmapped -> dropped (F3)
-      ("p4", "s1", 5.0), ("p4", "s2", 6.0))
-      .toDF("probe_id", "sample_id", "value")
+      ("p4", "s1", 5.0), ("p4", "s2", 6.0)).map { case (p, s, v) => (p, s, Some(v)) })
     val mapping = Seq(("p1", "G1"), ("p2", "G1"), ("p4", "G2"))
       .toDF("probe_id", "symbol")
     val out = ProbeMapping.collapseToGenes(expr, mapping).collect()
@@ -28,6 +28,16 @@ class ProbeMappingSpec extends SparkSuite {
     assert(out == Map(
       ("G1", "s1") -> 2.0, ("G1", "s2") -> 3.0,   // median(1,3), median(2,4)
       ("G2", "s1") -> 5.0, ("G2", "s2") -> 6.0))
+  }
+
+  test("collapseToGenes: a frame without the sample-id metadata is rejected") {
+    import spark.implicits._
+    val long = Seq(("p1", "s1", 1.0)).toDF("probe_id", "sample_id", "value")
+    val mapping = Seq(("p1", "G1")).toDF("probe_id", "symbol")
+    val e = intercept[IllegalArgumentException](
+      ProbeMapping.collapseToGenes(long, mapping))
+    assert(e.getMessage.startsWith("expression frame carries no sample ids"))
+    assert(e.getMessage.contains("'sample_ids' metadata"))
   }
 
   test("duplicate PROBEID keeps last csv occurrence (dict semantics)") {

@@ -3,6 +3,7 @@ package graft.prep
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.geo.LongForm
 
 class PreprocessSpec extends SparkSuite {
 
@@ -21,8 +22,8 @@ class PreprocessSpec extends SparkSuite {
         "s4" -> None, "s5" -> Some(7.0)).map { case (s, v) => ("p3", s, v) } ++
       Seq("s1" -> Option.empty[Double], "s2" -> None, "s3" -> None,
         "s4" -> None, "s5" -> None).map { case (s, v) => ("p4", s, v) }
-    val df = rows.toDF("probe_id", "sample_id", "value")
-    val out = Preprocess.run(df, nSamples = 5)
+    val df = LongForm.pack(spark, Seq("s1", "s2", "s3", "s4", "s5"), rows)
+    val out = LongForm.expand(Preprocess.run(df, nSamples = 5))
     val byProbe = out.collect().groupBy(_.getString(0))
     assert(byProbe.keySet == Set("p1", "p2", "p3"))   // p4 dropped (0 < 1)
 
@@ -42,22 +43,16 @@ class PreprocessSpec extends SparkSuite {
 
   test("A3: log2 branch taken when max > 100") {
     import spark.implicits._
-    val df = Seq(("p", "s1", Some(1023.0)), ("p", "s2", Some(255.0)),
-      ("p", "s3", Some(511.0))).toDF("probe_id", "sample_id", "value")
-    val out = Preprocess.run(df, nSamples = 3).collect()
+    val df = LongForm.pack(spark, Seq("s1", "s2", "s3"),
+      Seq(("p", "s1", Some(1023.0)), ("p", "s2", Some(255.0)),
+        ("p", "s3", Some(511.0))))
+    val out = LongForm.expand(Preprocess.run(df, nSamples = 3)).collect()
       .map(r => r.getString(1) -> r.getDouble(2)).toMap
     // log2(x+1) = 10, 8, 9 -> mu 9, sd_pop sqrt(2/3)
     val sd = math.sqrt(2.0 / 3.0)
     assert(approx(out("s1"), 1.0 / sd))
     assert(approx(out("s2"), -1.0 / sd))
     assert(approx(out("s3"), 0.0))
-  }
-
-  test("A1 missing count") {
-    import spark.implicits._
-    val df = Seq(("p", "s1", Some(1.0)), ("p", "s2", Option.empty[Double]),
-      ("q", "s1", None)).toDF("probe_id", "sample_id", "value")
-    assert(Preprocess.missingCount(df) == 2)
   }
 
   test("robustOutlierStats: hand-computed median/MAD flags the spike") {
