@@ -1,8 +1,9 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -35,9 +36,20 @@ final case class PipelineResult(
     failures: Seq[(String, Throwable)],
     stageSeconds: Seq[(String, Double)] = Seq.empty)
 
+/** `construct_network`'s persisted frames, with the names and edge count
+  * it collected for the GEXF (reused by the later stages). */
+private final case class Network(top: DataFrame, edges: DataFrame,
+                                 nodes: Seq[String], nEdges: Long)
+
 /** The nine-stage DAG (E1, `pipeline2.py:1148-1230`) as lazy Catalyst plans
   * materialized at each sink, with the reference's per-stage error isolation:
   * parse failure aborts, anything later degrades and the run continues.
+  * Stages: `metadata_sink`, `preprocess_and_map`, `differential_analysis`,
+  * `figure_volcano`, `significant_genes`, `construct_network`,
+  * `analyze_network`, `figure_network`, `figure_barplot`, `validate_targets`
+  * (with both snapshots), `summary_report`. A figure stage's CSV and PNG
+  * come from one collect of its table; the CSV is written first, so a
+  * rendering failure leaves the table on disk.
   *
   * The normalized gene-level frame is persisted (MEMORY_AND_DISK): it feeds
   * differential analysis AND network construction — the two heaviest
@@ -59,6 +71,13 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       }
     timings += name -> (System.nanoTime() - t0) / 1e9
     out
+  }
+
+  /** Collects a figure table (gene- or top-N-bounded), writes its CSV. */
+  private def writeCollected(table: DataFrame, path: String): Seq[Row] = {
+    val rows = table.collect().toSeq
+    Sinks.writeCsv(spark.createDataFrame(rows.asJava, table.schema), path)
+    rows
   }
 
   def run(): PipelineResult = {
@@ -94,21 +113,19 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
           .run(spark, g, geo.sampleIds, geo.metadata)
           .persist(StorageLevel.MEMORY_AND_DISK)
         Sinks.writeCsv(res.orderBy("gene"), s"$out/data/differential_results")
-        Sinks.writeCsv(Sinks.volcanoData(res).orderBy("gene"),
-          s"$out/data/volcano_data")
         res
       }
     }
-    // volcano figure (pipeline2.py:1029-1055): the same gene-grain table
-    // the reference hands matplotlib, collected (bounded by the gene
-    // dimension) and rendered by the pure-JDK Figures renderer
+    // volcano figure (pipeline2.py:1029-1055): the gene-grain table the
+    // reference hands matplotlib, rendered by the pure-JDK Figures renderer
     differential.foreach { res =>
       stage("figure_volcano") {
-        val pts = Sinks.volcanoData(res).orderBy("gene").collect()
+        val pts = writeCollected(Sinks.volcanoData(res).orderBy("gene"),
+          s"$out/data/volcano_data")
           .filter(r => !r.isNullAt(1) && !r.isNullAt(2)).map { r =>
             (r.getDouble(1), r.getDouble(2),
               !r.isNullAt(3) && r.getBoolean(3))
-          }.toSeq
+          }
         Figures.renderVolcano(pts, pThreshold = 0.05, fcThreshold = 1.0,
           s"$out/figures/volcano_plot.png")
       }
@@ -142,28 +159,25 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
         val edgeSeq = edges.collect()
           .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
         Sinks.writeGexf(topSeq, edgeSeq, s"$out/data/gene_network.gexf")
-        (top, edges)
+        Network(top, edges, topSeq, edgeSeq.size.toLong)
       }
     }
 
     // Stage 6: centrality analysis (G7 guards: < 2 nodes -> zero frame)
-    val targetScores = network.flatMap { case (top, edges) =>
+    val targetScores = network.flatMap { net =>
       stage("analyze_network") {
-        val nNodes = top.count()
         val scores =
-          if (nNodes < 2) {
+          if (net.nodes.size < 2) {
             import spark.implicits._
-            val names =
-              if (nNodes == 0) Seq("PLACEHOLDER")
-              else top.collect().map(_.getString(0)).toSeq
-            names.map((_, 0.0, 0.0, 0.0, 0.0))
+            (if (net.nodes.isEmpty) Seq("PLACEHOLDER") else net.nodes)
+              .map((_, 0.0, 0.0, 0.0, 0.0))
               .toDF("gene", "degree_centrality", "betweenness_centrality",
                 "eigenvector_centrality", "composite_score")
           } else {
-            val nodes = top.select("gene")
-            val deg = Centrality.degreeCentrality(nodes, edges)
-            val btw = Centrality.betweennessCentrality(spark, nodes, edges)
-            val eig = Centrality.eigenvectorCentrality(spark, nodes, edges)
+            val nodes = net.top.select("gene")
+            val deg = Centrality.degreeCentrality(nodes, net.edges)
+            val btw = Centrality.betweennessCentrality(spark, nodes, net.edges)
+            val eig = Centrality.eigenvectorCentrality(spark, nodes, net.edges)
             Centrality.compositeScores(
               deg.join(btw, Seq("gene")).join(eig, Seq("gene")))
           }
@@ -176,48 +190,30 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       }
     }
 
-    // Stage 6b: figure-data sinks (S10 network viz + barplot tables;
-    // G5 subgraph + F10 placeholder filter live inside the builders)
+    // Stage 6b: network + barplot figures (S10, pipeline2.py:1059-1114; G5
+    // subgraph + F10 placeholder filter live inside the builders), with the
+    // reference's skip rules: network for >= 2 real nodes, bar plot for any.
+    // Plans are built inside the stage, so schema drift degrades only it.
     (network, targetScores) match {
-      case (Some((_, edges)), Some(ts)) =>
-        // plan construction sits inside a stage too: an AnalysisException
-        // from schema drift must degrade this stage, not abort the run
-        // one construction serves both sinks; the lazy holder keeps plan
-        // construction inside the first stage that forces it, so an
-        // AnalysisException still degrades a stage rather than the run
-        lazy val vizData = Sinks.networkVizData(ts, edges)
-        stage("figure_viz_nodes") {
-          Sinks.writeCsv(vizData._1.orderBy(col("node_size").desc, col("gene")),
+      case (Some(net), Some(ts)) =>
+        stage("figure_network") {
+          val (vizNodes, vizEdges) = Sinks.networkVizData(ts, net.edges)
+          val nodes = writeCollected(
+            vizNodes.orderBy(col("node_size").desc, col("gene")),
             s"$out/data/network_viz_nodes")
-        }
-        stage("figure_viz_edges") {
-          Sinks.writeCsv(vizData._2.orderBy("src", "dst"),
+            .map(r => (r.getString(0), r.getDouble(1)))
+          val es = writeCollected(vizEdges.orderBy("src", "dst"),
             s"$out/data/network_viz_edges")
-        }
-        stage("figure_barplot") {
-          Sinks.writeCsv(
-            Sinks.barplotData(ts).orderBy(col("composite_score").desc, col("gene")),
-            s"$out/data/top_targets_barplot")
-        }
-        // PNG rendering (G6 + S10 at pixel grain, pipeline2.py:1059-1114):
-        // spring-layout network for >= 2 real nodes, bar plot when any
-        // non-placeholder target exists — the reference's own skip rules
-        stage("figure_network_png") {
-          val nodes = vizData._1
-            .orderBy(col("node_size").desc, col("gene")).collect()
-            .map(r => (r.getString(0), r.getDouble(1))).toSeq
-          if (nodes.size > 1) {
-            val es = vizData._2.orderBy("src", "dst").collect()
-              .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-              .toSeq
+            .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+          if (nodes.size > 1)
             Figures.renderNetwork(nodes, es,
               s"$out/figures/network_visualization.png")
-          }
         }
-        stage("figure_barplot_png") {
-          val tops = Sinks.barplotData(ts)
-            .orderBy(col("composite_score").desc, col("gene")).collect()
-            .map(r => (r.getString(0), r.getDouble(1))).toSeq
+        stage("figure_barplot") {
+          val tops = writeCollected(
+            Sinks.barplotData(ts).orderBy(col("composite_score").desc, col("gene")),
+            s"$out/data/top_targets_barplot")
+            .map(r => (r.getString(0), r.getDouble(1)))
           if (tops.nonEmpty)
             Figures.renderBarplot(tops, s"$out/figures/top_targets.png")
         }
@@ -243,22 +239,23 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
 
     // Stage 8: summary report
     stage("summary_report") {
-      val meta = geo.metadata
-      val nCase = meta.filter(col("condition") === "case").count()
-      val nControl = meta.filter(col("condition") === "control").count()
+      val arms = geo.metadata.agg(count_if(col("condition") === "case"),
+        count_if(col("condition") === "control")).head()
       val nProbes = geo.expression.select("probe_id").distinct().count()
       val nGenes = genes.map(_.select("gene").distinct().count()).getOrElse(0L)
-      val nSig = significant.map(_.count()).getOrElse(0L)
-      val nUp = significant.map(_.filter(col("log2FC") > 0).count()).getOrElse(0L)
-      val nDown = significant.map(_.filter(col("log2FC") < 0).count()).getOrElse(0L)
-      val nNodes = network.map(_._1.count()).getOrElse(0L)
-      val nEdges = network.map(_._2.count()).getOrElse(0L)
+      val (nSig, nUp, nDown) = significant.map { s =>
+        val r = s.agg(count(lit(1)), count_if(col("log2FC") > 0),
+          count_if(col("log2FC") < 0)).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }.getOrElse((0L, 0L, 0L))
+      val nNodes = network.map(_.nodes.size.toLong).getOrElse(0L)
+      val nEdges = network.map(_.nEdges).getOrElse(0L)
       val topTargets = targetScores.map(
         _.orderBy(col("composite_score").desc, col("gene")).limit(10)
           .collect().map(r => (r.getString(0),
             r.getAs[Double]("composite_score"))).toSeq)
         .getOrElse(Seq.empty)
-      Sinks.summaryReport(geo.sampleIds.length.toLong, nCase, nControl,
+      Sinks.summaryReport(geo.sampleIds.length.toLong, arms.getLong(0), arms.getLong(1),
         nProbes, nGenes, nSig, nUp, nDown, nNodes, nEdges, topTargets,
         s"$out/summary.txt")
     }

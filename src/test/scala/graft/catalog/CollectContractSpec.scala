@@ -31,8 +31,9 @@ class CollectContractSpec extends AnyFunSuite {
         "(distributed DataFrame loops above); 1-row convergence-error " +
         "probes inside those distributed loops"),
     "graft/pipeline/DrugTargetPipeline.scala" ->
-      (8, "report stage over the top-N-bounded DE/network tables " +
-        "(<= networkTopN genes by construction) + 1-row scalar probes"),
+      (4, "figure tables (gene-grain volcano data, top-N viz and barplot " +
+        "tables) through one collect-then-write helper; the top-N network " +
+        "nodes and edges; the summary's limit(10) top targets"),
     "graft/graph/ShortestPaths.scala" ->
       (4, "small branches of the dual size dispatch (<= 100k / <= 2k " +
         "nodes) — DataFrame relaxation loops above the thresholds"),

@@ -8,8 +8,8 @@ class DrugTargetPipelineSpec extends SparkSuite {
 
   /** The single CSV part a sink wrote (Sinks.writeCsv coalesces to 1). */
   private def sinkCsv(outDir: String, name: String): String = {
-    val parts = new java.io.File(s"$outDir/data/$name").listFiles()
-      .filter(_.getName.endsWith(".csv"))
+    val parts = Option(new java.io.File(s"$outDir/data/$name").listFiles())
+      .getOrElse(Array.empty[java.io.File]).filter(_.getName.endsWith(".csv"))
     assert(parts.length == 1, s"$name: expected one csv part")
     Files.readString(parts.head.toPath)
   }
@@ -23,7 +23,7 @@ class DrugTargetPipelineSpec extends SparkSuite {
     * a value, a column, ordering or float formatting fails here.
     * Goldens are (re)generated by [[GoldenGen]]. */
   private def assertGolden(outDir: String, prefix: String): Unit = {
-    for (d <- Seq("significant_genes", "network_targets", "final_targets"))
+    for (d <- DrugTargetPipelineSpec.goldenTables)
       assert(sinkCsv(outDir, d) == golden(s"$prefix$d.csv"),
         s"golden mismatch in $d")
     assert(
@@ -31,6 +31,13 @@ class DrugTargetPipelineSpec extends SparkSuite {
         golden(s"${prefix}summary.txt"),
       "golden mismatch in summary.txt")
   }
+
+  private def mediumConfig(out: String): PipelineConfig = PipelineConfig(
+    matrixPath = resource("medium_geo_matrix.txt"),
+    mappingCsvPath = resource("medium_probe_mapping.csv"),
+    outputDir = out,
+    ensemblSnapshotPath = Some(resource("tiny_ensembl_snapshot.csv")),
+    openTargetsSnapshotPath = Some(resource("tiny_opentargets_snapshot.json")))
 
   test("full 9-stage run on the tiny fixture: all sinks written, no failures") {
     val out = Files.createTempDirectory("graft-pipe").toString
@@ -67,16 +74,15 @@ class DrugTargetPipelineSpec extends SparkSuite {
   test("medium fixture: full-CSV golden parity (20 genes, K5 cluster " +
     "+ isolated noisy nodes, bridge centralities)") {
     val out = Files.createTempDirectory("graft-pipe-m").toString
-    val cfg = PipelineConfig(
-      matrixPath = resource("medium_geo_matrix.txt"),
-      mappingCsvPath = resource("medium_probe_mapping.csv"),
-      outputDir = out,
-      ensemblSnapshotPath = Some(resource("tiny_ensembl_snapshot.csv")),
-      openTargetsSnapshotPath = Some(resource("tiny_opentargets_snapshot.json")))
-    val result = new DrugTargetPipeline(spark, cfg).run()
+    val result = new DrugTargetPipeline(spark, mediumConfig(out)).run()
     assert(result.failures.isEmpty,
       s"stage failures: ${result.failures.map { case (n, e) => s"$n: $e" }}")
     assertGolden(out, prefix = "medium_")
+    assert(result.stageSeconds.map(_._1) == Seq("metadata_sink",
+      "preprocess_and_map", "differential_analysis", "figure_volcano",
+      "significant_genes", "construct_network", "analyze_network",
+      "figure_network", "figure_barplot", "validate_targets",
+      "summary_report"))
 
     // figures/ PNGs (G6 + pixel-grain S10): all three render on the
     // medium fixture (network has >= 2 nodes here) and decode back
@@ -87,6 +93,24 @@ class DrugTargetPipelineSpec extends SparkSuite {
       assert(img != null, s"figures/$f missing or undecodable")
       assert(img.getWidth >= 1000 && img.getHeight >= 800, s"$f size")
     }
+  }
+
+  test("figure stages degrade alone: a rendering failure leaves every " +
+    "table, the GEXF and the summary written") {
+    val out = Files.createTempDirectory("graft-pipe-fig").toString
+    // a regular file where the figures directory goes: every PNG write fails
+    Files.writeString(java.nio.file.Paths.get(s"$out/figures"), "")
+    val result = new DrugTargetPipeline(spark, mediumConfig(out)).run()
+    assert(result.failures.map(_._1) ==
+      Seq("figure_volcano", "figure_network", "figure_barplot"))
+    for (d <- Seq("metadata", "gene_mapped", "differential_results",
+        "volcano_data", "significant_genes", "correlation_matrix",
+        "network_targets", "network_viz_nodes", "network_viz_edges",
+        "top_targets_barplot", "final_targets"))
+      assert(sinkCsv(out, d).nonEmpty, s"empty table $d")
+    for (f <- Seq("data/gene_network.gexf", "summary.txt"))
+      assert(new java.io.File(s"$out/$f").isFile, s"missing $f")
+    assertGolden(out, prefix = "medium_")
   }
 
   test("degenerate: no significant genes -> variance fallback, pipeline completes") {
@@ -107,4 +131,12 @@ class DrugTargetPipelineSpec extends SparkSuite {
       s"stage failures: ${result.failures.map { case (n, e) => s"$n: $e" }}")
     assert(result.targetScores.isDefined)
   }
+}
+
+object DrugTargetPipelineSpec {
+
+  /** The tables byte-compared against src/test/resources/golden. */
+  val goldenTables: Seq[String] = Seq("significant_genes", "network_targets",
+    "final_targets", "volcano_data", "network_viz_nodes", "network_viz_edges",
+    "top_targets_barplot")
 }

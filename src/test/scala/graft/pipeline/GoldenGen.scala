@@ -101,7 +101,7 @@ object GoldenGen {
                          dest: java.nio.file.Path, prefix: String): Unit = {
     val result = new DrugTargetPipeline(spark, cfg).run()
     require(result.failures.isEmpty, s"failures: ${result.failures}")
-    for (d <- Seq("significant_genes", "network_targets", "final_targets")) {
+    for (d <- DrugTargetPipelineSpec.goldenTables) {
       val part = new java.io.File(s"${cfg.outputDir}/data/$d").listFiles()
         .filter(_.getName.endsWith(".csv"))
       require(part.length == 1, s"$d: expected 1 csv part")

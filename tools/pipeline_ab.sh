@@ -14,9 +14,11 @@
 # --seed S --trace 0` once per side; odd pairs run old first, even pairs
 # new first, so host drift does not always land on the same side. The
 # summary gives each side's work_s median and quartiles, how many pairs the
-# working tree won, and, per seed, whether the two copies' output.digest
-# files (the digest of everything the pipeline wrote) match. The log with
-# every run's JSON line is kept next to the extracted copy.
+# working tree won, each side's median per pipeline stage (a stage that
+# exists on one side only is marked so), and, per seed, whether the two
+# copies' output.digest files (the digest of everything the pipeline wrote)
+# match. The log with every run's stage lines and JSON line is kept next to
+# the extracted copy.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -31,11 +33,13 @@ dirty=$(git status --porcelain --untracked-files=no | grep -q . && echo "+dirty"
 echo "# pipeline A/B: old=$OLD_REF ($OLD_DIR) new=worktree@$(git rev-parse --short HEAD)$dirty" | tee "$LOG"
 echo "# pairs=$PAIRS seeds=${SEEDS[*]} start=$(date -u +%FT%TZ)" | tee -a "$LOG"
 
-run_side() {  # <side> <seed>: one benchmark run, its last stdout line logged
-  local dir=. line
+run_side() {  # <side> <seed>: one benchmark run; its stage lines and last line logged
+  local dir=. out line
   [ "$1" = old ] && dir="$OLD_DIR"
-  line=$(cd "$dir" && python3 perfbench/run.py --workload pipeline_ref \
-    --seed "$2" --seconds 60 --trace 0 2>/dev/null | tail -1) || true
+  out=$(cd "$dir" && python3 perfbench/run.py --workload pipeline_ref \
+    --seed "$2" --seconds 60 --trace 0 2>/dev/null) || true
+  grep '^stage ' <<< "$out" | sed "s/^/pair $pair seed $2 $1 /" >> "$LOG" || true
+  line=$(tail -1 <<< "$out")
   [ -n "$line" ] || line='{}'
   echo "pair $pair seed $2 $1 $line" | tee -a "$LOG"
 }
@@ -51,10 +55,15 @@ import json, os, statistics, sys
 
 log, old_dir, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
 work = {}  # (pair, side) -> work_s, or None for a failed or incorrect run
+stages = {}  # (pair, side) -> {stage name: seconds}
 for ln in open(log):
     if not ln.startswith("pair "):
         continue
     _, pair, _, _, side, payload = ln.split(" ", 5)
+    if payload.startswith("stage "):  # "stage NAME SECONDS s"
+        _, name, secs, _ = payload.split()
+        stages.setdefault((int(pair), side), {})[name] = float(secs)
+        continue
     try:
         d = json.loads(payload)
         ok = d.get("correct") and d.get("failed") == 0
@@ -75,6 +84,29 @@ for side in ("old", "new"):
 wins = sum(1 for p in pairs if None not in (work.get((p, "old")), work.get((p, "new")))
            and work[p, "new"] < work[p, "old"])
 print(f"new faster in {wins} of {len(pairs)} pairs")
+
+# per-stage medians over each side's good runs
+per = {"old": {}, "new": {}}
+for (p, side), st in stages.items():
+    if work.get((p, side)) is not None:
+        for name, secs in st.items():
+            per[side].setdefault(name, []).append(secs)
+order = []  # a stage first seen on one side goes after its predecessor there
+for st in stages.values():
+    at = -1
+    for name in st:
+        if name in order:
+            at = order.index(name)
+        else:
+            at += 1
+            order.insert(at, name)
+print(f"{'stage':<24} {'old s':>8} {'new s':>8}")
+for name in order:
+    cells = [f"{statistics.median(per[s][name]):8.2f}" if name in per[s] else f"{'-':>8}"
+             for s in ("old", "new")]
+    only = [s for s in ("old", "new") if name in per[s]]
+    note = f"  ({only[0]} only)" if len(only) == 1 else ""
+    print(f"{name:<24} {cells[0]} {cells[1]}{note}")
 
 def digest(root, seed):
     path = os.path.join(root, ".bench_build", "inputs", f"pipeline_ref-{seed}", "output.digest")
