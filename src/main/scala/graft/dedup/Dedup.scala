@@ -1186,7 +1186,14 @@ object Dedup {
     * repartition between the joins was measured shuffling 657 MB of
     * exploded pairs and DOUBLING the query (profile in
     * OPTIMIZATION_r15.md). Width derives from the measured pair
-    * count, so it is scale-adaptive, not a local[32] constant. */
+    * count, so it is scale-adaptive, not a local[32] constant.
+    *
+    * Precondition: the pinned width covers the candidate exchange
+    * only, and holds only while `sh` broadcasts. If `sh` grows past
+    * `spark.sql.autoBroadcastJoinThreshold`, the `(id_b, shingle)`
+    * join plans its own exchange, AQE coalescing applies to that
+    * exchange again, and the verify stage silently falls back to the
+    * coalesced width. */
   private def commonShingleCounts(sh: DataFrame,
                                   candidates: DataFrame): DataFrame = {
     val (cand, nPairs) = measuredCandidates(candidates)

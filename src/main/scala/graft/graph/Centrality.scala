@@ -2,6 +2,8 @@ package graft.graph
 
 import scala.collection.mutable
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -41,18 +43,31 @@ object Centrality {
         (coalesce(col("__deg"), lit(0L)) / denom).as("degree_centrality"))
   }
 
-  private def indexGraph(nodes: Seq[String], edgeList: Seq[(String, String)])
-      : Array[Array[Int]] = {
+  /** The collected (gene) node rows and (src, dst) edge rows as node
+    * names in collected order and an undirected adjacency by node
+    * index: sorted, distinct, no self-loops, edges to unknown nodes
+    * dropped. */
+  private def indexGraph(nodeRows: Array[Row], edgeRows: Array[Row])
+      : (Seq[String], Array[Array[Int]]) = {
+    val nodes = nodeRows.map(_.getString(0)).toSeq
     val idx = nodes.zipWithIndex.toMap
     val adj = Array.fill(nodes.length)(mutable.ArrayBuffer.empty[Int])
-    edgeList.foreach { case (a, b) =>
-      (idx.get(a), idx.get(b)) match {
+    edgeRows.foreach { r =>
+      (idx.get(r.getString(0)), idx.get(r.getString(1))) match {
         case (Some(i), Some(j)) if i != j => adj(i) += j; adj(j) += i
         case _ => ()
       }
     }
-    adj.map(_.distinct.sorted.toArray)
+    (nodes, adj.map(_.distinct.sorted.toArray))
   }
+
+  /** The (gene) node and (src, dst) edge rows of an unweighted graph
+    * when they fit under the two caps ([[DriverCollect.ifFits]]). */
+  private def collectGraph(nodes: DataFrame, edges: DataFrame,
+                           nodeCap: Long, edgeCap: Long)
+      : Option[(Array[Row], Array[Row])] =
+    DriverCollect.ifFits(nodes.select("gene"), nodeCap,
+      edges.select("src", "dst"), edgeCap)
 
   /** G3: exact betweenness centrality, Brandes' algorithm, unweighted,
     * normalized — matches `nx.betweenness_centrality(G)` defaults. The
@@ -69,27 +84,22 @@ object Centrality {
                             edges: DataFrame,
                             sampleSources: Option[Int] = None,
                             maxDriverNodes: Long = 2000000L,
-                            maxDriverEdges: Long = 20000000L): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
+                            maxDriverEdges: Long = 20000000L): DataFrame = {
     // Explicit contract guard: Brandes broadcasts the full adjacency,
     // so the edge list must be driver-collectable. The operator is
     // documented for dimension-bounded graphs (top-N construction);
     // feeding a fact-scale graph must fail with THIS message, not a
     // driver OOM minutes later. Sampling (Brandes–Pich) bounds the BFS
     // work, not the adjacency size, so the guard applies either way.
-    val nCount = nodes.count()
-    val eCount = edges.count()
-    require(nCount <= maxDriverNodes && eCount <= maxDriverEdges,
-      s"betweennessCentrality: graph ($nCount nodes, $eCount edges) " +
-        s"exceeds the driver-collectable contract " +
-        s"($maxDriverNodes nodes / $maxDriverEdges edges); this " +
+    val graph = collectGraph(nodes, edges, maxDriverNodes, maxDriverEdges)
+    require(graph.isDefined,
+      s"betweennessCentrality: the graph exceeds the driver-collectable " +
+        s"contract ($maxDriverNodes nodes / $maxDriverEdges edges); this " +
         "operator broadcasts the full adjacency — reduce the graph " +
         "(top-N edges) or raise the caps if the driver has headroom")
-    val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-    val edgeSeq = edges.select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val (nodeRows, edgeRows) = graph.get
+    val (nodeSeq, adj) = indexGraph(nodeRows, edgeRows)
     val n = nodeSeq.length
-    val adj = indexGraph(nodeSeq, edgeSeq)
     val bcAdj = spark.sparkContext.broadcast(adj)
 
     val sources: Seq[Int] = sampleSources match {
@@ -100,7 +110,7 @@ object Centrality {
     }
     val estimatorScale = n.toDouble / sources.length
 
-    val partial = spark.sparkContext
+    val perPartition = spark.sparkContext
       .parallelize(sources, math.min(math.max(sources.length / 16, 1), 256))
       .mapPartitions { sources =>
         val a = bcAdj.value
@@ -139,9 +149,7 @@ object Centrality {
         }
         Iterator.single(acc)
       }
-      .treeReduce { (x, y) =>
-        var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x
-      }
+    val partial = sumInPartitionOrder(perPartition)
 
     // nx _rescale, normalized=True, undirected: scale = 1/((n-1)(n-2)) over
     // the double-counted raw sums; identity for n <= 2. The estimator
@@ -154,7 +162,36 @@ object Centrality {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
       StructType(Seq(StructField("gene", StringType, nullable = false),
         StructField("betweenness_centrality", DoubleType, nullable = false))))
-   }
+  }
+
+  /** The element-wise sum of one vector per partition, grouped as
+    * `treeReduce` (depth 2) groups it: at each level partition i goes to
+    * key i mod the level's partition count, and at most about √P vectors
+    * reach the driver. Every merge runs in ascending partition index, so
+    * the sum does not depend on shuffle fetch or task completion order
+    * (`treeReduce` folds the task results on the driver in completion
+    * order, which moved the last bits of betweenness between reruns). */
+  private def sumInPartitionOrder(parts: RDD[Array[Double]])
+      : Array[Double] = {
+    def merged(vs: Iterator[(Int, Array[Double])]): Array[Double] =
+      vs.toSeq.sortBy(_._1).map(_._2).reduceLeft { (x, y) =>
+        var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x
+      }
+    var level = parts.mapPartitionsWithIndex((i, vs) => vs.map(i -> _))
+    var width = level.getNumPartitions
+    val scale = math.max(math.ceil(math.sqrt(width)).toInt, 2)
+    while (width > scale + math.ceil(width.toDouble / scale)) {
+      width /= scale
+      val w = width
+      level = level.map { case (i, v) => (i % w, (i, v)) }
+        .partitionBy(new HashPartitioner(w))
+        .mapPartitionsWithIndex { (k, vs) =>
+          if (vs.hasNext) Iterator.single(k -> merged(vs.map(_._2)))
+          else Iterator.empty
+        }
+    }
+    merged(level.collect().iterator)
+  }
 
   /** G4: eigenvector centrality, nx semantics: power iteration on (I + A)
     * from x = 1/n, L2-normalized each step, stop when sum|Δ| < n·tol.
@@ -173,24 +210,22 @@ object Centrality {
                             tol: Double = 1e-6,
                             distributedThreshold: Long = graft.util.Dispatch.threshold(100000L),
                             edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
     // dense sub-threshold-node graphs must also go distributed — the
     // driver path collects the edge list (see pageRank's dispatch note)
-    val nNodes = nodes.count()
-    if (nNodes > distributedThreshold || edges.count() > edgeThreshold)
-      eigenvectorDistributedImpl(spark, nodes, edges, maxIter, tol,
-        nNodes)
-    else eigenvectorDriverImpl(spark, nodes, edges, maxIter, tol)
-   }
+    collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        eigenvectorDriverImpl(spark, nodeRows, edgeRows, maxIter, tol)
+      case None => graft.util.Pin.pinned(nodes, edges) {
+        eigenvectorCentralityDistributed(spark, nodes, edges, maxIter, tol)
+      }
+    }
 
-  private def eigenvectorDriverImpl(spark: SparkSession, nodes: DataFrame,
-                                    edges: DataFrame, maxIter: Int,
+  private def eigenvectorDriverImpl(spark: SparkSession,
+                                    nodeRows: Array[Row],
+                                    edgeRows: Array[Row], maxIter: Int,
                                     tol: Double): DataFrame = {
-    val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-    val edgeSeq = edges.select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val (nodeSeq, adj) = indexGraph(nodeRows, edgeRows)
     val n = nodeSeq.length
-    val adj = indexGraph(nodeSeq, edgeSeq)
 
     var x = Array.fill(n)(1.0 / n)
     var converged = false
@@ -236,15 +271,9 @@ object Centrality {
     */
   def eigenvectorCentralityDistributed(spark: SparkSession, nodes: DataFrame,
                                        edges: DataFrame, maxIter: Int = 1000,
-                                       tol: Double = 1e-6): DataFrame =
-    eigenvectorDistributedImpl(spark, nodes, edges, maxIter, tol,
-      nodes.count())
-
-  private def eigenvectorDistributedImpl(spark: SparkSession,
-                                         nodes: DataFrame, edges: DataFrame,
-                                         maxIter: Int, tol: Double,
-                                         n: Long): DataFrame = {
+                                       tol: Double = 1e-6): DataFrame = {
     import org.apache.spark.storage.StorageLevel
+    val n = nodes.count()
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
@@ -326,28 +355,27 @@ object Centrality {
                damping: Double = 0.85, iters: Int = 20,
                distributedThreshold: Long = graft.util.Dispatch.threshold(100000L),
                edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
     // dispatch on BOTH dimensions: a sub-threshold node count says
     // nothing about density, and the driver path collects the full edge
     // list — a 50k-node graph with 500M edges must take the distributed
     // branch (the union-find ≤2M-edge precedent)
-    val nNodes = nodes.count()
-    if (nNodes > distributedThreshold || edges.count() > edgeThreshold)
-      pageRankDistributedImpl(spark, nodes, edges, damping, iters,
-        nNodes)
-    else pageRankDriverImpl(spark, nodes, edges, damping, iters)
-   }
+    collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        pageRankDriverImpl(spark, nodes, nodeRows, edgeRows, damping, iters)
+      case None => graft.util.Pin.pinned(nodes, edges) {
+        pageRankDistributed(spark, nodes, edges, damping, iters)
+      }
+    }
 
+  /** `nodes` is read only for the empty-graph result (the distributed
+    * path's schema). */
   private def pageRankDriverImpl(spark: SparkSession, nodes: DataFrame,
-                                 edges: DataFrame, damping: Double,
-                                 iters: Int): DataFrame = {
-    val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-    val edgeSeq = edges.select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+                                 nodeRows: Array[Row], edgeRows: Array[Row],
+                                 damping: Double, iters: Int): DataFrame = {
+    val (nodeSeq, adj) = indexGraph(nodeRows, edgeRows)
     val n = nodeSeq.length
     if (n == 0)
       return nodes.select(col("gene"), lit(0.0).as("pagerank"))
-    val adj = indexGraph(nodeSeq, edgeSeq)
 
     var x = Array.fill(n)(1.0 / n)
     var iter = 0
@@ -386,14 +414,9 @@ object Centrality {
     * convergence-driven eigenvector loop). */
   def pageRankDistributed(spark: SparkSession, nodes: DataFrame,
                           edges: DataFrame, damping: Double = 0.85,
-                          iters: Int = 20): DataFrame =
-    pageRankDistributedImpl(spark, nodes, edges, damping, iters,
-      nodes.count())
-
-  private def pageRankDistributedImpl(spark: SparkSession, nodes: DataFrame,
-                                      edges: DataFrame, damping: Double,
-                                      iters: Int, n: Long): DataFrame = {
+                          iters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
+    val n = nodes.count()
     // Edges referencing vertices absent from `nodes` are dropped BEFORE
     // the degree count — the driver path's indexGraph skips them, and
     // keeping them here would inflate deg(u) and leak u's mass through
@@ -450,50 +473,53 @@ object Centrality {
                        iters: Int = 20,
                        distributedThreshold: Long = graft.util.Dispatch.threshold(100000L),
                        edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
-    if (nodes.count() <= distributedThreshold &&
-        edges.count() <= edgeThreshold)
-      pageRankWeightedDriverImpl(spark, nodes, edges, damping, iters)
-    else pageRankWeightedDistributed(spark, nodes, edges, damping, iters)
-   }
+    DriverCollect.ifFits(nodes.select("gene"), distributedThreshold,
+        edges.select(col("src"), col("dst"), col("w")), edgeThreshold) match {
+      case Some((nodeRows, arcRows)) =>
+        pageRankWeightedDriverImpl(spark, nodes, nodeRows, arcRows,
+          damping, iters)
+      case None =>
+        pageRankWeightedDistributed(spark, nodes, edges, damping, iters)
+    }
 
+  /** `nodes` is read only for the empty-graph result. */
   private def pageRankWeightedDriverImpl(spark: SparkSession,
-                                         nodes: DataFrame, edges: DataFrame,
+                                         nodes: DataFrame,
+                                         nodeRows: Array[Row],
+                                         arcRows: Array[Row],
                                          damping: Double,
                                          iters: Int): DataFrame = {
-    {
-      val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-      val idx = nodeSeq.zipWithIndex.toMap
-      val arcs = edges.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-        .filter { case (u, v, _) => u != v && idx.contains(u) && idx.contains(v) }
-        .groupBy(a => (a._1, a._2))
-        .map { case ((u, v), as) => (idx(u), idx(v), as.map(_._3).sum) }
-        .toSeq.sortBy(a => (a._1, a._2))
-      require(arcs.forall(_._3 > 0), "edge weights must be positive")
-      val nn = nodeSeq.length
-      if (nn == 0)
-        return nodes.select(col("gene"), lit(0.0).as("pagerank"))
-      val outW = new Array[Double](nn)
-      arcs.foreach { case (u, _, w) => outW(u) += w }
-      var x = Array.fill(nn)(1.0 / nn)
-      var it = 0
-      while (it < iters) {
-        var dang = 0.0
-        var i = 0
-        while (i < nn) { if (outW(i) == 0.0) dang += x(i); i += 1 }
-        val xn = Array.fill(nn)((1.0 - damping) / nn + damping * dang / nn)
-        arcs.foreach { case (u, v, w) =>
-          xn(v) += damping * x(u) * w / outW(u)
-        }
-        x = xn; it += 1
+    val nodeSeq = nodeRows.map(_.getString(0)).toSeq
+    val idx = nodeSeq.zipWithIndex.toMap
+    val arcs = arcRows
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      .filter { case (u, v, _) => u != v && idx.contains(u) && idx.contains(v) }
+      .groupBy(a => (a._1, a._2))
+      .map { case ((u, v), as) => (idx(u), idx(v), as.map(_._3).sum) }
+      .toSeq.sortBy(a => (a._1, a._2))
+    require(arcs.forall(_._3 > 0), "edge weights must be positive")
+    val nn = nodeSeq.length
+    if (nn == 0)
+      return nodes.select(col("gene"), lit(0.0).as("pagerank"))
+    val outW = new Array[Double](nn)
+    arcs.foreach { case (u, _, w) => outW(u) += w }
+    var x = Array.fill(nn)(1.0 / nn)
+    var it = 0
+    while (it < iters) {
+      var dang = 0.0
+      var i = 0
+      while (i < nn) { if (outW(i) == 0.0) dang += x(i); i += 1 }
+      val xn = Array.fill(nn)((1.0 - damping) / nn + damping * dang / nn)
+      arcs.foreach { case (u, v, w) =>
+        xn(v) += damping * x(u) * w / outW(u)
       }
-      val rows = nodeSeq.zipWithIndex.map { case (g, i) => Row(g, x(i)) }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("gene", StringType, nullable = false),
-          StructField("pagerank", DoubleType, nullable = false))))
+      x = xn; it += 1
     }
+    val rows = nodeSeq.zipWithIndex.map { case (g, i) => Row(g, x(i)) }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("gene", StringType, nullable = false),
+        StructField("pagerank", DoubleType, nullable = false))))
   }
 
   /** The unbounded-scale weighted PageRank path — see
@@ -560,59 +586,60 @@ object Centrality {
            iters: Int = 10,
            distributedThreshold: Long = graft.util.Dispatch.threshold(100000L),
            edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
     // size dispatch, the pageRank/eigenvector precedent: under the
     // thresholds a driver loop does the whole fixed-point in ONE job's
     // worth of work, where the DataFrame loop pays ~4 jobs/iteration of
     // fixed overhead (q132's 25-node graph: 7.4 s looped, <1 s here)
-    if (nodes.count() <= distributedThreshold &&
-        edges.count() <= edgeThreshold)
-      hitsDriverImpl(spark, nodes, edges, iters)
-    else hitsDistributed(spark, nodes, edges, iters)
-   }
-
-  private def hitsDriverImpl(spark: SparkSession, nodes: DataFrame,
-                             edges: DataFrame, iters: Int): DataFrame = {
-    {
-      val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-      val edgeSeq = edges.select("src", "dst").collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .filter { case (u, vv) => u != vv }.distinct
-      val nn = nodeSeq.length
-      if (nn == 0)
-        return nodes.select(col("gene"), lit(0.0).as("hub"),
-          lit(0.0).as("authority"))
-      val idx = nodeSeq.zipWithIndex.toMap
-      val dir = edgeSeq.collect {
-        case (u, vv) if idx.contains(u) && idx.contains(vv) =>
-          (idx(u), idx(vv))
+    collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        hitsDriverImpl(spark, nodes, nodeRows, edgeRows, iters)
+      case None => graft.util.Pin.pinned(nodes) {
+        hitsDistributed(spark, nodes, edges, iters)
       }
-      var h = Array.fill(nn)(1.0 / nn)
-      var a = Array.fill(nn)(0.0)
-      def norm(x: Array[Double]): Array[Double] = {
-        val s = math.sqrt(x.map(v => v * v).sum)
-        if (s == 0.0) x else x.map(_ / s)
-      }
-      var it = 0
-      while (it < iters) {
-        val ar = Array.fill(nn)(0.0)
-        dir.foreach { case (u, vv) => ar(vv) += h(u) }
-        a = norm(ar)
-        val hr = Array.fill(nn)(0.0)
-        dir.foreach { case (u, vv) => hr(u) += a(vv) }
-        h = norm(hr)
-        it += 1
-      }
-      val rows = nodeSeq.zipWithIndex.map { case (g, i) =>
-        Row(g, h(i), a(i))
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(
-          StructField("gene", StringType, nullable = false),
-          StructField("hub", DoubleType, nullable = false),
-          StructField("authority", DoubleType, nullable = false))))
     }
+
+  /** `nodes` is read only for the empty-graph result. */
+  private def hitsDriverImpl(spark: SparkSession, nodes: DataFrame,
+                             nodeRows: Array[Row], edgeRows: Array[Row],
+                             iters: Int): DataFrame = {
+    val nodeSeq = nodeRows.map(_.getString(0)).toSeq
+    val edgeSeq = edgeRows
+      .map(r => (r.getString(0), r.getString(1)))
+      .filter { case (u, vv) => u != vv }.distinct
+    val nn = nodeSeq.length
+    if (nn == 0)
+      return nodes.select(col("gene"), lit(0.0).as("hub"),
+        lit(0.0).as("authority"))
+    val idx = nodeSeq.zipWithIndex.toMap
+    val dir = edgeSeq.collect {
+      case (u, vv) if idx.contains(u) && idx.contains(vv) =>
+        (idx(u), idx(vv))
+    }
+    var h = Array.fill(nn)(1.0 / nn)
+    var a = Array.fill(nn)(0.0)
+    def norm(x: Array[Double]): Array[Double] = {
+      val s = math.sqrt(x.map(v => v * v).sum)
+      if (s == 0.0) x else x.map(_ / s)
+    }
+    var it = 0
+    while (it < iters) {
+      val ar = Array.fill(nn)(0.0)
+      dir.foreach { case (u, vv) => ar(vv) += h(u) }
+      a = norm(ar)
+      val hr = Array.fill(nn)(0.0)
+      dir.foreach { case (u, vv) => hr(u) += a(vv) }
+      h = norm(hr)
+      it += 1
+    }
+    val rows = nodeSeq.zipWithIndex.map { case (g, i) =>
+      Row(g, h(i), a(i))
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(
+        StructField("gene", StringType, nullable = false),
+        StructField("hub", DoubleType, nullable = false),
+        StructField("authority", DoubleType, nullable = false))))
   }
 
   /** The unbounded-scale HITS path — see [[hits]] for semantics. */

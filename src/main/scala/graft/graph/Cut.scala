@@ -43,14 +43,12 @@ object Cut {
       .select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b"))
       .distinct()
-    val es = graft.util.Pin.pinned(und) {
-      val eCount = und.count()
-      require(eCount <= maxDriverEdges,
-        s"Cut: $eCount undirected edges exceed the driver-collectable " +
-          s"contract ($maxDriverEdges); this operator collects the " +
-          "adjacency — reduce the graph (top-N edges) or raise the cap")
-      und.collect().map(r => (r.getString(0), r.getString(1)))
-    }
+    val collected = DriverCollect.ifFits(und, maxDriverEdges)
+    require(collected.isDefined,
+      s"Cut: the undirected edges exceed the driver-collectable " +
+        s"contract ($maxDriverEdges); this operator collects the " +
+        "adjacency — reduce the graph (top-N edges) or raise the cap")
+    val es = collected.get.map(r => (r.getString(0), r.getString(1)))
     val ns = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     require(ns.length <= maxDriverNodes,
       s"Cut: ${ns.length} nodes exceed the driver-collectable " +

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition by iterative peeling (graph-analytics extension
@@ -51,24 +51,23 @@ object KCore {
             maxRounds: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val canon = Triangles.canonicalize(edges, src, dst)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (canon.count() > edgeThreshold)
+    DriverCollect.ifFits(canon, edgeThreshold) match {
+      case Some(edgeRows) =>
+        kCoreDriver(spark, canon.schema("src").dataType, edgeRows, k)
+      case None => graft.util.Pin.pinned(canon) {
         kCoreDistributed(spark, canon, k, maxRounds)
-      else
-        kCoreDriver(spark, canon, k)
-    } finally canon.unpersist(false)
+      }
+    }
   }
 
-  /** Driver peeling: one pass over the collected edge list with a
-    * min-degree worklist; O(E) total work. */
-  private def kCoreDriver(spark: SparkSession, canon: DataFrame,
-                          k: Int): DataFrame = {
-    val nodeType = canon.schema("src").dataType
+  /** Driver peeling: one pass over the collected (src, dst) edge rows
+    * with a min-degree worklist; O(E) total work. */
+  private def kCoreDriver(spark: SparkSession, nodeType: DataType,
+                          edgeRows: Array[Row], k: Int): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("node", nodeType, nullable = true),
       StructField("core_degree", LongType, nullable = false)))
-    val edgeSeq = canon.collect().map(r => (r.get(0), r.get(1)))
+    val edgeSeq = edgeRows.map(r => (r.get(0), r.get(1)))
     val adj = scala.collection.mutable.Map.empty[Any,
       scala.collection.mutable.Set[Any]]
     edgeSeq.foreach { case (a, b) =>

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -32,29 +32,31 @@ object Scc {
                  driverNodeThreshold: Long = graft.util.Dispatch.threshold(2000000L),
                  driverEdgeThreshold: Long = graft.util.Dispatch.threshold(20000000L),
                  maxRounds: Int = 50): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
-    if (nodes.count() <= driverNodeThreshold &&
-        edges.count() <= driverEdgeThreshold)
-      tarjanDriver(spark, nodes, edges)
-    else coloringDistributed(spark, nodes, edges, maxRounds)
-   }
+    DriverCollect.ifFits(
+        nodes.select(col("node").cast("long")).distinct(),
+        driverNodeThreshold,
+        edges.select(col("src").cast("long"), col("dst").cast("long"))
+          .distinct(), driverEdgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        tarjanDriver(spark, nodeRows, edgeRows)
+      case None => coloringDistributed(spark, nodes, edges, maxRounds)
+    }
 
   /** Iterative Tarjan (explicit work stack; lowlink via the standard
-    * two-phase visit) over the collected graph. */
-  private def tarjanDriver(spark: SparkSession, nodes: DataFrame,
-                           edges: DataFrame): DataFrame = {
-    val ns = nodes.select(col("node").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    * two-phase visit) over the collected distinct (node) and
+    * (src, dst) rows. */
+  private def tarjanDriver(spark: SparkSession, nodeRows: Array[Row],
+                           edgeRows: Array[Row]): DataFrame = {
+    val ns = nodeRows.map(_.getLong(0)).sorted
     val idx = ns.zipWithIndex.toMap
     val n = ns.length
     val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().collect().foreach { r =>
-        (idx.get(r.getLong(0)), idx.get(r.getLong(1))) match {
-          case (Some(u), Some(v)) if u != v => adj(u) += v
-          case _ => ()
-        }
+    edgeRows.foreach { r =>
+      (idx.get(r.getLong(0)), idx.get(r.getLong(1))) match {
+        case (Some(u), Some(v)) if u != v => adj(u) += v
+        case _ => ()
       }
+    }
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStack = new Array[Boolean](n)

@@ -32,44 +32,51 @@ object ShortestPaths {
                  source: String,
                  distributedThreshold: Long = graft.util.Dispatch.threshold(100000L),
                  edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
-    if (nodes.count() <= distributedThreshold &&
-        edges.count() <= edgeThreshold)
-      fromSourceDriver(spark, nodes, edges, source)
-    else fromSourceDistributed(spark, nodes, edges, source)
-   }
-
-  private def fromSourceDriver(spark: SparkSession, nodes: DataFrame,
-                               edges: DataFrame, source: String): DataFrame = {
-    {
-      val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-      val idx = nodeSeq.zipWithIndex.toMap
-      val arcs = edges.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .filter { case (u, v, w) =>
-          idx.contains(u) && idx.contains(v) && w >= 0 }
-        .map { case (u, v, w) => (idx(u), idx(v), w) }
-      val dist = Array.fill[Long](nodeSeq.length)(Long.MaxValue)
-      idx.get(source).foreach(dist(_) = 0L)
-      var changed = dist.exists(_ == 0L)
-      var round = 0
-      while (changed && round < nodeSeq.length) {
-        changed = false
-        arcs.foreach { case (u, v, w) =>
-          if (dist(u) != Long.MaxValue && dist(u) + w < dist(v)) {
-            dist(v) = dist(u) + w; changed = true
-          }
-        }
-        round += 1
-      }
-      val rows = nodeSeq.zipWithIndex.map { case (g, i) =>
-        Row(g, if (dist(i) == Long.MaxValue) null else java.lang.Long.valueOf(dist(i)))
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1),
-        StructType(Seq(StructField("gene", StringType, nullable = false),
-          StructField("dist", LongType, nullable = true))))
+    DriverCollect.ifFits(nodes.select("gene"), distributedThreshold,
+        edges.select(col("src"), col("dst"), col("w")), edgeThreshold) match {
+      case Some((nodeRows, arcRows)) =>
+        fromSourceDriver(spark, nodeRows, arcRows, source)
+      case None => fromSourceDistributed(spark, nodes, edges, source)
     }
+
+  /** Node names in collected order and the non-negative arcs between
+    * known nodes as (src index, dst index, w). */
+  private def indexArcs(nodeRows: Array[Row], arcRows: Array[Row])
+      : (Seq[String], Array[(Int, Int, Long)]) = {
+    val nodeSeq = nodeRows.map(_.getString(0)).toSeq
+    val idx = nodeSeq.zipWithIndex.toMap
+    val arcs = arcRows
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .filter { case (u, v, w) =>
+        idx.contains(u) && idx.contains(v) && w >= 0 }
+      .map { case (u, v, w) => (idx(u), idx(v), w) }
+    (nodeSeq, arcs)
+  }
+
+  private def fromSourceDriver(spark: SparkSession, nodeRows: Array[Row],
+                               arcRows: Array[Row], source: String): DataFrame = {
+    val (nodeSeq, arcs) = indexArcs(nodeRows, arcRows)
+    val idx = nodeSeq.zipWithIndex.toMap
+    val dist = Array.fill[Long](nodeSeq.length)(Long.MaxValue)
+    idx.get(source).foreach(dist(_) = 0L)
+    var changed = dist.exists(_ == 0L)
+    var round = 0
+    while (changed && round < nodeSeq.length) {
+      changed = false
+      arcs.foreach { case (u, v, w) =>
+        if (dist(u) != Long.MaxValue && dist(u) + w < dist(v)) {
+          dist(v) = dist(u) + w; changed = true
+        }
+      }
+      round += 1
+    }
+    val rows = nodeSeq.zipWithIndex.map { case (g, i) =>
+      Row(g, if (dist(i) == Long.MaxValue) null else java.lang.Long.valueOf(dist(i)))
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.toSeq, 1),
+      StructType(Seq(StructField("gene", StringType, nullable = false),
+        StructField("dist", LongType, nullable = true))))
   }
 
   /** The unbounded-scale relaxation loop — see [[fromSource]]. */
@@ -124,49 +131,41 @@ object ShortestPaths {
   def allPairs(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
                distributedThreshold: Long = graft.util.Dispatch.threshold(2000L),
                edgeThreshold: Long = graft.util.Dispatch.threshold(200000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
-    if (nodes.count() <= distributedThreshold &&
-        edges.count() <= edgeThreshold)
-      allPairsDriver(spark, nodes, edges)
-    else allPairsDistributed(spark, nodes, edges)
-   }
-
-  private def allPairsDriver(spark: SparkSession, nodes: DataFrame,
-                             edges: DataFrame): DataFrame = {
-    {
-      val nodeSeq = nodes.select("gene").collect().map(_.getString(0)).toSeq
-      val idx = nodeSeq.zipWithIndex.toMap
-      val arcs = edges.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .filter { case (u, v, w) =>
-          idx.contains(u) && idx.contains(v) && w >= 0 }
-        .map { case (u, v, w) => (idx(u), idx(v), w) }
-      val rows = nodeSeq.indices.flatMap { s =>
-        val dist = Array.fill[Long](nodeSeq.length)(Long.MaxValue)
-        dist(s) = 0L
-        var changed = true
-        var round = 0
-        while (changed && round < nodeSeq.length) {
-          changed = false
-          arcs.foreach { case (u, v, w) =>
-            if (dist(u) != Long.MaxValue && dist(u) + w < dist(v)) {
-              dist(v) = dist(u) + w; changed = true
-            }
-          }
-          round += 1
-        }
-        nodeSeq.indices.map { i =>
-          Row(nodeSeq(s), nodeSeq(i),
-            if (dist(i) == Long.MaxValue) null
-            else java.lang.Long.valueOf(dist(i)))
-        }
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("src", StringType, nullable = false),
-          StructField("gene", StringType, nullable = false),
-          StructField("dist", LongType, nullable = true))))
+    DriverCollect.ifFits(nodes.select("gene"), distributedThreshold,
+        edges.select(col("src"), col("dst"), col("w")), edgeThreshold) match {
+      case Some((nodeRows, arcRows)) =>
+        allPairsDriver(spark, nodeRows, arcRows)
+      case None => allPairsDistributed(spark, nodes, edges)
     }
+
+  private def allPairsDriver(spark: SparkSession, nodeRows: Array[Row],
+                             arcRows: Array[Row]): DataFrame = {
+    val (nodeSeq, arcs) = indexArcs(nodeRows, arcRows)
+    val rows = nodeSeq.indices.flatMap { s =>
+      val dist = Array.fill[Long](nodeSeq.length)(Long.MaxValue)
+      dist(s) = 0L
+      var changed = true
+      var round = 0
+      while (changed && round < nodeSeq.length) {
+        changed = false
+        arcs.foreach { case (u, v, w) =>
+          if (dist(u) != Long.MaxValue && dist(u) + w < dist(v)) {
+            dist(v) = dist(u) + w; changed = true
+          }
+        }
+        round += 1
+      }
+      nodeSeq.indices.map { i =>
+        Row(nodeSeq(s), nodeSeq(i),
+          if (dist(i) == Long.MaxValue) null
+          else java.lang.Long.valueOf(dist(i)))
+      }
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("src", StringType, nullable = false),
+        StructField("gene", StringType, nullable = false),
+        StructField("dist", LongType, nullable = true))))
   }
 
   /** The unbounded-scale multi-source relaxation — [[fromSourceDistributed]]

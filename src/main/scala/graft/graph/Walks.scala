@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -28,33 +28,29 @@ object Walks {
                            damping: Double = 0.85, iters: Int = 20,
                            driverThreshold: Long = graft.util.Dispatch.threshold(100000L),
                            edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
     // size dispatch (the Centrality.pageRank discipline): a
     // fixed-iteration DataFrame loop on a dimension-bounded graph pays
     // ~20 rounds of job overhead for micro-work; below the thresholds
     // the identical update runs as an in-memory loop (same math, same
     // 6dp rounding — the recursive-CTE oracles match either path).
-    // One pass yields both the dispatch count and seed presence: a
-    // seed outside the node set would otherwise silently return an
-    // all-zero vector on either path.
-    val nStats = nodes.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("node") === seed, 1L).otherwise(0L)),
-        lit(0L)).as("s"))
-      .collect()(0)
-    require(nStats.getLong(1) > 0,
-      s"personalizedPageRank: seed $seed is not in the node set")
-    if (nStats.getLong(0) <= driverThreshold &&
-        edges.count() <= edgeThreshold)
-      pprDriver(spark, nodes, edges, seed, damping, iters)
-    else pprDistributedImpl(spark, nodes, edges, seed, damping, iters)
-   }
+    // Both paths check the seed: one outside the node set would
+    // otherwise silently return an all-zero vector.
+    DriverCollect.ifFits(nodes.select(col("node")).distinct(), driverThreshold,
+        edges.select(col("src"), col("dst")), edgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        pprDriver(spark, nodeRows, edgeRows, seed, damping, iters)
+      case None =>
+        pprDistributedImpl(spark, nodes, edges, seed, damping, iters)
+    }
 
   private def pprDistributedImpl(spark: SparkSession, nodes: DataFrame,
                                  edges: DataFrame, seed: Long,
                                  damping: Double, iters: Int): DataFrame = {
     val v = nodes.select(col("node")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val seeded = !v.filter(col("node") === seed).isEmpty
+    if (!seeded) v.unpersist(false)
+    requireSeed(seeded, seed)
     val e = edges.select(col("src"), col("dst"))
       .join(v.select(col("node").as("src")), Seq("src"))
       .join(v.select(col("node").as("dst")), Seq("dst"))
@@ -100,12 +96,13 @@ object Walks {
            alpha: Double, beta: Double = 1.0, iters: Int = 10,
            driverThreshold: Long = graft.util.Dispatch.threshold(100000L),
            edgeThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame =
-   graft.util.Pin.pinned(nodes, edges) {
-    if (nodes.count() <= driverThreshold &&
-        edges.count() <= edgeThreshold)
-      katzDriver(spark, nodes, edges, alpha, beta, iters)
-    else katzDistributedImpl(spark, nodes, edges, alpha, beta, iters)
-   }
+    DriverCollect.ifFits(nodes.select(col("node")).distinct(), driverThreshold,
+        edges.select(col("src"), col("dst")), edgeThreshold) match {
+      case Some((nodeRows, edgeRows)) =>
+        katzDriver(spark, nodeRows, edgeRows, alpha, beta, iters)
+      case None =>
+        katzDistributedImpl(spark, nodes, edges, alpha, beta, iters)
+    }
 
   private def katzDistributedImpl(spark: SparkSession, nodes: DataFrame,
                                   edges: DataFrame, alpha: Double,
@@ -136,17 +133,16 @@ object Walks {
     out
   }
 
-  /** Collected graph as (sorted node array, index map, in-adjacency by
-    * node index, out-degree by node index). */
-  private def collectGraph(nodes: DataFrame, edges: DataFrame)
+  /** Collected graph as (sorted node array, in-adjacency by node index,
+    * out-degree by node index). */
+  private def indexGraph(nodeRows: Array[Row], edgeRows: Array[Row])
       : (Array[Long], Array[Array[Int]], Array[Int]) = {
-    val ns = nodes.select(col("node")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val ns = nodeRows.map(_.getLong(0)).sorted
     val idx = ns.zipWithIndex.toMap
     val inAdj = Array.fill(ns.length)(
       scala.collection.mutable.ArrayBuffer.empty[Int])
     val outDeg = new Array[Int](ns.length)
-    edges.select(col("src"), col("dst")).collect().foreach { r =>
+    edgeRows.foreach { r =>
       (idx.get(r.getLong(0)), idx.get(r.getLong(1))) match {
         case (Some(u), Some(v)) =>
           inAdj(v) += u
@@ -157,14 +153,16 @@ object Walks {
     (ns, inAdj.map(_.sorted.toArray), outDeg)
   }
 
-  private def pprDriver(spark: SparkSession, nodes: DataFrame,
-                        edges: DataFrame, seed: Long, damping: Double,
+  private def requireSeed(found: Boolean, seed: Long): Unit =
+    require(found, s"personalizedPageRank: seed $seed is not in the node set")
+
+  private def pprDriver(spark: SparkSession, nodeRows: Array[Row],
+                        edgeRows: Array[Row], seed: Long, damping: Double,
                         iters: Int): DataFrame = {
-    val (ns, inAdj, outDeg) = collectGraph(nodes, edges)
+    val (ns, inAdj, outDeg) = indexGraph(nodeRows, edgeRows)
     val n = ns.length
     val si = ns.indexWhere(_ == seed)
-    require(si >= 0,
-      s"personalizedPageRank: seed $seed is not in the node set")
+    requireSeed(si >= 0, seed)
     var x = Array.tabulate(n)(i => if (i == si) 1.0 else 0.0)
     var it = 0
     while (it < iters) {
@@ -192,10 +190,10 @@ object Walks {
       .toSeq.toDF("node", "ppr")
   }
 
-  private def katzDriver(spark: SparkSession, nodes: DataFrame,
-                         edges: DataFrame, alpha: Double, beta: Double,
+  private def katzDriver(spark: SparkSession, nodeRows: Array[Row],
+                         edgeRows: Array[Row], alpha: Double, beta: Double,
                          iters: Int): DataFrame = {
-    val (ns, inAdj, _) = collectGraph(nodes, edges)
+    val (ns, inAdj, _) = indexGraph(nodeRows, edgeRows)
     val n = ns.length
     var x = Array.fill(n)(beta)
     var it = 0

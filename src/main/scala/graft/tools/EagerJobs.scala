@@ -30,11 +30,11 @@ object EagerJobs {
     "q43_tfidf_topk" -> 9,
     "q49_bm25" -> 12,
     "q51_ivf_ann" -> 1,
-    "q52_betweenness" -> 16,
-    "q53_eigenvector" -> 16,
+    "q52_betweenness" -> 10,
+    "q53_eigenvector" -> 10,
     "q68_bloom_incremental_dedup" -> 3,
     "q73_semantic_dedup" -> 9,
-    "q80_pagerank" -> 16,
+    "q80_pagerank" -> 10,
     "q90_temperature_sample" -> 2,
     "q93_minhash_clusters" -> 23,
     "q94_ppl_buckets" -> 9,
@@ -52,12 +52,12 @@ object EagerJobs {
     "q128_phrase_search" -> 6,
     "q129_golden_records" -> 6,
     "q130_naive_bayes" -> 23,
-    "q132_hits" -> 16,
+    "q132_hits" -> 10,
     "q133_kmeans" -> 20,
     "q137_pca" -> 9,
-    "q138_pagerank_weighted" -> 16,
-    "q139_shortest_paths" -> 16,
-    "q141_kcore" -> 6,
+    "q138_pagerank_weighted" -> 10,
+    "q139_shortest_paths" -> 10,
+    "q141_kcore" -> 3,
     "q149_rfm" -> 4,
     "q152_dbscan" -> 27,
     "q153_item_neighbors" -> 23,
@@ -69,7 +69,7 @@ object EagerJobs {
     "q160_cms_tokens" -> 9,
     "q161_kmv_distinct" -> 9,
     "q168_kaplan_meier" -> 10,
-    "q169_closeness" -> 16,
+    "q169_closeness" -> 10,
     "q172_bootstrap_ci" -> 4,
     "q181_log_rank" -> 10,
     "q196_by_fdr" -> 7,
@@ -80,8 +80,8 @@ object EagerJobs {
     "q232_nelson_aalen" -> 10,
     "q237_label_prop" -> 34,
     "q239_abc_classes" -> 3,
-    "q241_ppr" -> 11,
-    "q242_katz" -> 11,
+    "q241_ppr" -> 5,
+    "q242_katz" -> 5,
     "q246_identity_stitch" -> 6,
     "q253_mmr" -> 24,
     "q254_trimmed_mean" -> 3,
@@ -94,7 +94,7 @@ object EagerJobs {
     "q268_km_summary" -> 10,
     "q281_joinability" -> 44,
     "q292_abc_xyz" -> 4,
-    "q296_scc" -> 11,
+    "q296_scc" -> 5,
     "q301_fisher_exact" -> 3,
     "q307_holm_hochberg" -> 5,
     "q308_c_index" -> 2,
@@ -106,8 +106,8 @@ object EagerJobs {
     "q344_hodges_lehmann" -> 5,
     "q354_kendalls_w" -> 3,
     "q372_bayes_ab" -> 3,
-    "q376_articulation" -> 7,
-    "q377_bridges" -> 7,
+    "q376_articulation" -> 5,
+    "q377_bridges" -> 5,
     "q378_markov_attribution" -> 9,
     "q379_logistic" -> 19,
     "q384_poisson" -> 22,

@@ -5,14 +5,14 @@ import org.apache.spark.storage.StorageLevel
 
 /** Multi-action input pinning (optimization guide §1.2/§5).
   *
-  * The graph/ML operators probe their inputs (size-dispatch counts,
-  * guard counts) and then read them again (driver collect, or the
-  * distributed loop's first pass). An unpersisted input DataFrame is
-  * re-executed from source on EVERY action — for catalog queries whose
-  * node/edge frames derive from a 4-table fact join, the probe+collect
-  * sequence replayed that join up to 4× (measured on q80_pagerank:
-  * ~31 stages, 4 identical ~0.25 s pipeline executions; same shape in
-  * q52/q53/q132/q138/q169/q139/q241/q242/q296).
+  * An unpersisted input DataFrame is re-executed from source on EVERY
+  * action — for catalog queries whose node/edge frames derive from a
+  * 4-table fact join, a count-then-collect sequence replayed that join
+  * up to 4× (measured on q80_pagerank: ~31 stages, 4 identical ~0.25 s
+  * pipeline executions). The graph operators' driver branches read
+  * each input once (`graft.graph.DriverCollect`); the distributed
+  * loops that read an input more than once (eigenvector, pageRank,
+  * hits, k-core) pin it here.
   *
   * `pinned(dfs){body}` persists the given frames for the duration of
   * `body` and unpersists them after. Frames the CALLER already

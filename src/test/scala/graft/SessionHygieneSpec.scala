@@ -14,7 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    only in GraftSession.scala;
   *  - no `case …: Throwable`: fatal JVM errors (OOM, interrupts) must
   *    abort a run instead of being recorded as a failed query or a
-  *    degraded stage — catch with `scala.util.control.NonFatal`.
+  *    degraded stage — catch with `scala.util.control.NonFatal`;
+  *  - no `.treeReduce` / `.treeAggregate` call: their last merge folds the task
+  *    results on the driver in completion order (and their shuffle
+  *    levels in fetch order), so a floating-point sum moves between
+  *    reruns — merge in partition order instead (see
+  *    `Centrality.sumInPartitionOrder`).
   *
   * Patterns match across line breaks, so a call split over lines
   * (`SparkSession\n  .builder`) is caught too.
@@ -36,6 +41,7 @@ class SessionHygieneSpec extends AnyFunSuite {
   private val builderCall = """SparkSession\s*\.\s*builder\b""".r
   private val throwableCase =
     """case\s+[\w$]+\s*:\s*(java\.lang\.)?Throwable\b""".r
+  private val completionOrderMerge = """\.\s*tree(Reduce|Aggregate)\b""".r
 
   /** `file:line: text` for every match of `re` in `src`, at the line
     * where the match starts. */
@@ -65,6 +71,12 @@ class SessionHygieneSpec extends AnyFunSuite {
       "catch with scala.util.control.NonFatal:\n" + found.mkString("\n"))
   }
 
+  test("no treeReduce or treeAggregate (completion-order merges)") {
+    val found = sites(sources, completionOrderMerge)
+    assert(found.isEmpty,
+      "merge partial results in partition order:\n" + found.mkString("\n"))
+  }
+
   test("the scanners fire on planted violations") {
     val planted = Seq("graft/tools/Planted.scala" -> Seq(
       "    val spark = SparkSession.builder().master(\"local[4]\")",
@@ -76,10 +88,18 @@ class SessionHygieneSpec extends AnyFunSuite {
       "      case _: Throwable => ()",
       "      case e: Throwable if retry => ()",
       "      case e: java.lang.Throwable => ()",
-      "      case NonFatal(e) => ()").mkString("\n"))
+      "      case NonFatal(e) => ()",
+      "    val s = rdd.treeReduce(_ + _)",
+      "    val t = rdd.treeAggregate(0.0)(_ + _, _ + _, depth = 3)",
+      "      .treeReduce { (x, y) => x }",
+      "    val ok2 = rdd.reduce(_ + _) // not treeReduce: completion order",
+      "    val ok3 = rdd.subtreeReduce(x)").mkString("\n"))
     assert(sites(planted, builderCall).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:1:", "graft/tools/Planted.scala:2:",
         "graft/tools/Planted.scala:3:"))
     assert(sites(planted, throwableCase).size === 4)
+    assert(sites(planted, completionOrderMerge).map(_.takeWhile(_ != ' ')) ===
+      Seq("graft/tools/Planted.scala:11:", "graft/tools/Planted.scala:12:",
+        "graft/tools/Planted.scala:13:"))
   }
 }

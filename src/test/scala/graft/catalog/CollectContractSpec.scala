@@ -24,25 +24,22 @@ class CollectContractSpec extends AnyFunSuite {
   /** file (relative to src/main/scala) → (expected `.collect()` site
     * count, bounding contract). */
   private val allowed: Map[String, (Int, String)] = Map(
+    "graft/graph/DriverCollect.scala" ->
+      (1, "the one driver collect of the graph operators: limit(cap + 1), " +
+        "so <= cap + 1 rows of a frame reach the driver before the " +
+        "size dispatch or the driver-collectable guard decides"),
     "graft/graph/Centrality.scala" ->
-      (11, "betweenness behind the require-guarded driver-collectable " +
-        "contract (<= 2M nodes / 20M edges); the <= 100k-node small " +
-        "branches of eigenvector/pageRank/pageRankWeighted/hits " +
-        "(distributed DataFrame loops above); 1-row convergence-error " +
-        "probes inside those distributed loops"),
+      (2, "betweenness's per-partition Brandes vectors after the " +
+        "partition-order tree merge (<= ~sqrt(P) node-length vectors, " +
+        "behind the driver-collectable guard); the 1-row " +
+        "convergence-error probe of the distributed eigenvector loop"),
     "graft/pipeline/DrugTargetPipeline.scala" ->
       (4, "figure tables (gene-grain volcano data, top-N viz and barplot " +
         "tables) through one collect-then-write helper; the top-N network " +
         "nodes and edges; the summary's limit(10) top targets"),
-    "graft/graph/ShortestPaths.scala" ->
-      (4, "small branches of the dual size dispatch (<= 100k / <= 2k " +
-        "nodes) — DataFrame relaxation loops above the thresholds"),
     "graft/prep/Ipf.scala" ->
       (3, "row/column marginal target maps + seed cells, all behind " +
         "the maxCells require guard (category-grain by contract)"),
-    "graft/graph/Walks.scala" ->
-      (3, "1-row seed/count probe aggregate + small branches of the " +
-        "katz/PPR size dispatch (<= 100k nodes)"),
     "graft/ann/Similarity.scala" ->
       (3, "IVF seed rows via limit(nLists); MMR winner via limit(1) " +
         "per iteration (k iterations, k bounded by the API contract)"),
@@ -64,9 +61,6 @@ class CollectContractSpec extends AnyFunSuite {
     "graft/ml/Pca.scala" ->
       (2, "dimension-grain means / covariance cells (<= d and d^2 " +
         "rows; d is the feature-vector width, guarded upstream)"),
-    "graft/graph/Scc.scala" ->
-      (2, "tarjanDriver small branch of the size dispatch (<= 2M " +
-        "nodes / 20M edges) — distributed coloring above"),
     "graft/geo/GeoMatrixReader.scala" ->
       (1, "ID_REF header + '!' metadata lines in one collect — " +
         "#samples x #characteristic-keys, dimension-sized by the format"),
@@ -80,12 +74,6 @@ class CollectContractSpec extends AnyFunSuite {
         "sampling contract"),
     "graft/ml/Boost.scala" ->
       (1, "value-domain cells behind the maxCells require guard"),
-    "graft/graph/KCore.scala" ->
-      (1, "kCoreDriver small branch of the <= 2M-edge dispatch — " +
-        "DataFrame fixpoint above"),
-    "graft/graph/Cut.scala" ->
-      (1, "require-guarded driver-collectable contract (<= 2M nodes " +
-        "/ 20M edges) for the Tarjan articulation/bridge pass"),
     "graft/events/Attribution.scala" ->
       (1, "(channels+1) x (channels+2) Markov transition matrix — " +
         "channel-grain by construction"),

@@ -34,6 +34,29 @@ class CentralitySpec extends SparkSuite {
     assert(e.getMessage.contains("driver-collectable"))
   }
 
+  test("betweenness: reruns on a many-partition graph are bit-identical") {
+    // G(n, p), n = 500, p = 0.02, seed 7: 500 sources run in 31
+    // partitions, so the per-partition Brandes vectors pass a shuffle
+    // merge level and a driver-side merge. Merged in completion order,
+    // most reruns differed from the first in the last bits.
+    val rnd = new scala.util.Random(7)
+    val names = (0 until 500).map(i => f"g$i%03d")
+    val pairs = for {
+      i <- names.indices; j <- i + 1 until names.length
+      if rnd.nextDouble() < 0.02
+    } yield names(i) -> names(j)
+    val (nodes, edges) = graph(names, pairs)
+    def bits(): Map[String, Long] =
+      Centrality.betweennessCentrality(spark, nodes, edges).collect()
+        .map(r => r.getString(0) ->
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    val runs = Seq.fill(8)(bits())
+    runs.tail.zipWithIndex.foreach { case (r, i) =>
+      val moved = names.count(g => r(g) != runs.head(g))
+      assert(moved == 0, s"rerun ${i + 2}: $moved of 500 nodes differ")
+    }
+  }
+
   test("path P4: nx-parity centralities") {
     val (nodes, edges) = graph(Seq("a", "b", "c", "d"),
       Seq("a" -> "b", "b" -> "c", "c" -> "d"))

@@ -27,10 +27,14 @@ class WalksSpec extends SparkSuite {
 
   test("personalizedPageRank: a seed outside the node set fails fast") {
     val (nodes, edges) = pathGraph
-    val e = intercept[IllegalArgumentException] {
-      Walks.personalizedPageRank(spark, nodes, edges, seed = 99L)
+    // the driver loop, then the distributed loop (node cap 0)
+    Seq(100000L, 0L).foreach { cap =>
+      val e = intercept[IllegalArgumentException] {
+        Walks.personalizedPageRank(spark, nodes, edges, seed = 99L,
+          driverThreshold = cap)
+      }
+      assert(e.getMessage.contains("seed 99 is not in the node set"))
     }
-    assert(e.getMessage.contains("seed 99"))
   }
 
   test("personalizedPageRank: zero iterations keeps the seed indicator") {
