@@ -1,78 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graft._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.IntegerType
 
-/** SparkSessionExtensions entry point: registers graft's custom
-  * expressions as SQL functions at session construction, so any session
-  * built with `spark.sql.extensions=graft.GraftExtensions` (or
+import graft.functions.gfunctions
+
+/** SparkSessionExtensions entry point: registers graft's SQL functions
+  * at session construction, so any session built with
+  * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) can call them from
-  * `spark.sql(...)` without the imperative
-  * `gfunctions.register(spark)` step. The catalog-facing surface of the
-  * library — everything else composes from stock Spark functions.
+  * `spark.sql(...)`. This is the one scalar-function registry: each SQL
+  * name builds the same expression as its [[gfunctions]] Column call.
+  * The catalog-facing surface of the library — everything else composes
+  * from stock Spark functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, clazz: Class[_]): ExpressionInfo =
-    new ExpressionInfo(clazz.getCanonicalName, name)
+  import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("t_test_pvalue"),
-      info("t_test_pvalue", classOf[TTestPValue]),
-      (es: Seq[Expression]) => TTestPValue(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("cosine_similarity"),
-      info("cosine_similarity", classOf[CosineSimilarity]),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", classOf[SimHash64]),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("md5_long"),
-      info("md5_long", classOf[Md5Long]),
-      (es: Seq[Expression]) => Md5Long(es.head)))
-    ext.injectFunction((FunctionIdentifier("rolling_hash64"),
-      info("rolling_hash64", classOf[RollingHash64]),
-      (es: Seq[Expression]) => RollingHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("char_entropy"),
-      info("char_entropy", classOf[CharEntropy]),
-      (es: Seq[Expression]) => CharEntropy(es.head)))
-    ext.injectFunction((FunctionIdentifier("bleu_counts"),
-      info("bleu_counts", classOf[BleuCounts]),
-      (es: Seq[Expression]) => BleuCounts(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("rouge_l_counts"),
-      info("rouge_l_counts", classOf[RougeLCounts]),
-      (es: Seq[Expression]) => RougeLCounts(es(0), es(1))))
-    // parameterized expressions: the int arguments must be literals
-    // (they shape the output schema / generated code)
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", classOf[WordShingles]),
-      (es: Seq[Expression]) =>
-        WordShingles(es(0), litInt(es(1), "word_shingles(text, n)"))))
-    ext.injectFunction((FunctionIdentifier("minhash_hashes"),
-      info("minhash_hashes", classOf[MinhashHashes]),
-      (es: Seq[Expression]) =>
-        MinhashHashes(es(0), litInt(es(1), "minhash_hashes(s, k)"))))
-    ext.injectFunction((FunctionIdentifier("lsh_table_buckets"),
-      info("lsh_table_buckets", classOf[LshTableBuckets]),
-      (es: Seq[Expression]) => LshTableBuckets(es(0),
-        litInt(es(1), "lsh_table_buckets tables"),
-        litInt(es(2), "lsh_table_buckets planesPerTable"),
-        litInt(es(3), "lsh_table_buckets dim"))))
-    ext.injectFunction((FunctionIdentifier("repetition_counts"),
-      info("repetition_counts", classOf[RepetitionCounts]),
-      (es: Seq[Expression]) =>
-        RepetitionCounts(es(0), litInt(es(1), "repetition_counts(text, n)"))))
-    // marker words as a comma-separated string literal
-    ext.injectFunction((FunctionIdentifier("text_quality_counts"),
-      info("text_quality_counts", classOf[TextQualityCounts]),
-      (es: Seq[Expression]) => TextQualityCounts(es(0), es(1) match {
-        case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) =>
-          s.toString.split(",").toSeq
-        case other => throw new IllegalArgumentException(
-          s"text_quality_counts(text, 'w1,w2,...') requires a string literal, got $other")
-      })))
+    scalars.foreach { case (name, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getCanonicalName, name),
+        (es: Seq[Expression]) => {
+          require(es.size == arity,
+            s"$name takes $arity arguments, got ${es.size}")
+          ColumnBridge.expression(build(es.map(ColumnBridge.column)))
+        }))
+    }
     // table-valued functions: sessionize / exact dedup / as-of join
     // become `SELECT * FROM graft_...('view', ...)` for SQL-first
     // users — the TVF expands at analysis time into the identical
@@ -80,10 +38,45 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // which also offers an imperative register() for live sessions)
     graft.sql.TableFunctions.all.foreach(ext.injectTableFunction)
   }
+}
 
-  private def litInt(e: Expression, ctx: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$ctx requires an integer literal, got $other")
-  }
+object GraftExtensions {
+
+  /** (SQL name, argument count, builder over the argument Columns). */
+  private val scalars: Seq[(String, Int, Seq[Column] => Column)] = Seq(
+    ("t_test_pvalue", 2, a => gfunctions.tTestPValue(a(0), a(1))),
+    ("cosine_similarity", 2, a => gfunctions.cosine_similarity(a(0), a(1))),
+    ("simhash64", 1, a => gfunctions.simhash64(a(0))),
+    ("md5_long", 1, a => gfunctions.md5_long(a(0))),
+    ("rolling_hash64", 1, a => gfunctions.rolling_hash64(a(0))),
+    ("char_entropy", 1, a => gfunctions.char_entropy(a(0))),
+    ("bleu_counts", 2, a => gfunctions.bleu_counts(a(0), a(1))),
+    ("rouge_l_counts", 2, a => gfunctions.rouge_l_counts(a(0), a(1))),
+    // the int arguments must be literals (they shape the output schema
+    // and the generated code)
+    ("word_shingles", 2, a => gfunctions.word_shingles(a(0),
+      litInt(a(1), "word_shingles(text, n)"))),
+    ("minhash_hashes", 2, a => gfunctions.minhash_hashes(a(0),
+      litInt(a(1), "minhash_hashes(s, k)"))),
+    ("lsh_table_buckets", 4, a => gfunctions.lsh_table_buckets(a(0),
+      litInt(a(1), "lsh_table_buckets tables"),
+      litInt(a(2), "lsh_table_buckets planesPerTable"),
+      litInt(a(3), "lsh_table_buckets dim"))),
+    ("repetition_counts", 2, a => gfunctions.repetition_counts(a(0),
+      litInt(a(1), "repetition_counts(text, n)"))),
+    // marker words as a comma-separated string literal
+    ("text_quality_counts", 2, a => gfunctions.text_quality_counts(a(0),
+      ColumnBridge.expression(a(1)) match {
+        case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) =>
+          s.toString.split(",").toSeq
+        case other => throw new IllegalArgumentException(
+          s"text_quality_counts(text, 'w1,w2,...') requires a string literal, got $other")
+      })))
+
+  private def litInt(c: Column, ctx: String): Int =
+    ColumnBridge.expression(c) match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$ctx requires an integer literal, got $other")
+    }
 }

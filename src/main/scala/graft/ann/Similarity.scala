@@ -11,8 +11,8 @@ import graft.functions.gfunctions._
   *  - Brute-force top-k: the exact baseline. The query side is broadcast
   *    (bounded query set), so the corpus streams through map-side — no
   *    shuffle of the 100 TB side; cost is |corpus| * |queries| dot
-  *    products inside whole-stage codegen (CosineSimilarity is a native
-  *    codegen'd expression).
+  *    products inside whole-stage codegen (`cosine_similarity` is a
+  *    native kernel call).
   *  - Random-hyperplane LSH: deterministic pseudo-random hyperplanes
   *    (integer LCG, reproducible in any engine, including the DuckDB
   *    oracle); bucket = sign-bit pack of `planes` dot products. ANN top-k
@@ -29,7 +29,8 @@ object Similarity {
     org.apache.spark.sql.graft.LshKernel.planeComponent(p, j, dim)
 
   /** Sign-bit-packed LSH bucket id of an embedding column (single table;
-    * one native kernel call — see [[LshTableBuckets]]). */
+    * one native kernel call — see
+    * [[graft.functions.gfunctions.lsh_table_buckets]]). */
   def lshBucket(vec: Column, nPlanes: Int, dim: Int): Column =
     element_at(
       lsh_table_buckets(vec.cast("array<double>"), 1, nPlanes, dim), 1)

@@ -161,8 +161,8 @@ object Catalog {
            |                 + power(var_n / n_n, 2) / (n_n - 1), 0), 4) AS t_df
            |FROM st ORDER BY p_type""".stripMargin))
 
-  /** A7 (full): Welch p-values via the custom TTestPValue Catalyst
-    * expression. DuckDB has no t CDF, but the p-value IS the regularized
+  /** A7 (full): Welch p-values via graft's `t_test_pvalue`
+    * function. DuckDB has no t CDF, but the p-value IS the regularized
     * incomplete beta I_x(df/2, 1/2), x = df/(df+t^2) — which the oracle
     * computes by Simpson-integrating the substituted form
     * B(x; a, 1/2) = int_{sqrt(1-x)}^{1} 2(1-u^2)^(a-1) du (smooth for

@@ -253,7 +253,7 @@ object CatalogEcon {
     * one-sided Fisher test every gene-set tool runs —
     * `pipeline2.py:700-760`'s missing significance layer). Spark
     * evaluates the tail through commons-math3
-    * ([[org.apache.spark.sql.graft.HypergeomPValue]]); the ORACLE
+    * ([[org.apache.spark.sql.graft.StatKernels.hypergeomPValue]]); the ORACLE
     * re-derives it from first principles as a Σ exp(lgamma·) series —
     * two independent implementations of the same published tail, so
     * the 6-dp compare certifies the distribution itself. */

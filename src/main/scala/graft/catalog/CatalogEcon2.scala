@@ -163,7 +163,7 @@ object CatalogEcon2 {
 
   /** L63: TRUE Damerau-Levenshtein fuzzy matching over blocked part
     * names — graft's codegen'd Lowrance-Wagner
-    * [[org.apache.spark.sql.graft.DamerauLevenshtein]] vs DuckDB's
+    * [[graft.functions.gfunctions.damerau_levenshtein]] vs DuckDB's
     * INDEPENDENT built-in (the q159 certify-the-algorithm technique;
     * the unrestricted variant is pinned by DL("CA","ABC") = 2).
     * Integer distance → plain value compare, no rounding contract. */

@@ -16,7 +16,7 @@ object CatalogEcon7 {
     Tables.load(s, dir, name)
 
   /** L67: accent folding — graft's native NFD→strip-marks→NFC
-    * [[org.apache.spark.sql.graft.StripAccents]] vs DuckDB's
+    * [[graft.functions.gfunctions.strip_accents]] vs DuckDB's
     * INDEPENDENT utf8proc `strip_accents` (the certify-the-algorithm
     * discipline). The corpus is ASCII, so both sides first INJECT
     * diacritics with the same translate map — the kernel then has

@@ -175,7 +175,7 @@ object CatalogR11 {
     * ([[graft.ml.Ranking.rrfFusion]]): the two score scales are
     * incomparable (norm-invariant vs norm-weighted), which is exactly
     * the case RRF's rank-space combination exists for. Both engines
-    * rank the identical doubles (codegen'd CosineSimilarity vs
+    * rank the identical doubles (codegen'd `cosine_similarity` vs
     * DuckDB's list functions, the q26 parity), ranks are exact
     * integers, and the fused score 1/(60+r₁) + 1/(60+r₂) is the same
     * two-term sum in the same order. */

@@ -499,7 +499,7 @@ object CatalogStats {
            |FROM r ORDER BY 1""".stripMargin))
 
   /** X59 (fuzzy-match verify kernel): blocked Jaro-Winkler name matching.
-    * Spark side is graft's native codegen'd [[JaroWinkler]] expression;
+    * Spark side is graft's native codegen'd `jaro_winkler` function;
     * the ORACLE is DuckDB's built-in `jaro_winkler_similarity` — two
     * independent implementations of the published definition, so the
     * hash compare certifies the algorithm itself (the q62/NFC technique).

@@ -547,7 +547,7 @@ object CatalogStats4 {
            |FROM sc CROSS JOIN fin""".stripMargin))
 
   /** X274: per-source character-entropy profile via the codegen'd
-    * CharEntropy expression — the base64/padding screen; per-doc
+    * `char_entropy` function — the base64/padding screen; per-doc
     * values pre-rounded 6dp before the source rollup. */
   private val q380 = Q("q380_char_entropy",
     (s, dir) => {

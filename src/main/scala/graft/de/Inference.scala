@@ -484,7 +484,7 @@ object Inference {
     *   t = (t̄m_A − t̄m_B)/√(d_A + d_B),
     *
     * Welch–Satterthwaite df on the d's with h−1 denominators, p from
-    * the exact t tail (the codegen'd TTestPValue — the q14 Simpson
+    * the exact t tail (the codegen'd `t_test_pvalue` — the q14 Simpson
     * oracle technique). A 20% trim keeps ~95% Gaussian efficiency
     * while shrugging off the outliers that hand q13's plain Welch its
     * false positives.

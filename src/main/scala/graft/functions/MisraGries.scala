@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.udaf
 
 /** Misra–Gries heavy-hitters sketch as a typed [[Aggregator]] — the
   * UDAF member of the custom-function surface (the expression family
-  * covers scalars: SimHash64, BloomMightContain, t_sf; this covers
+  * covers scalars: simhash64, bloom_might_contain, t_test_pvalue; this covers
   * the "novel sketch as aggregate" case the brief calls out).
   *
   * Classic k-counter summary: each partition folds its items into at

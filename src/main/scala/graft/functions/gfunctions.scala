@@ -1,75 +1,137 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{BleuCounts, BloomMightContain, CharEntropy, ColumnBridge, CosineSimilarity, DamerauLevenshtein, DictScrub, HypergeomPValue, JaroWinkler, LshTableBuckets, Md5Long, MinhashHashes, NfcNormalize, NormalSF, RegularizedIncBeta, RepetitionCounts, RollingHash64, RougeLCounts, SimHash64, StripAccents, TTestPValue, TextQualityCounts, WordShingles}
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.graft.{BloomMightContain, ColumnBridge, DictScrub, HashUtil, KernelCall, LshKernel, MinhashKernel, StatKernels, StringSim, TextKernels, TextQualityCounts}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /** graft's function surface: custom Catalyst expressions exposed as
   * `Column`s plus pure-column helpers composed from Spark built-ins.
   * Everything here is usable inside whole-stage codegen'd plans.
+  *
+  * A stateless function is one [[KernelCall]] of a kernel method
+  * (HashUtil.scala). To add one: write the kernel method, add a wrapper
+  * here through [[call]], and, if SQL should see it, register the name in
+  * [[graft.GraftExtensions]].
   */
 object gfunctions {
 
-  /** Two-sided Student-t p-value P(|T_df| >= |t|) (Welch t-test, A7). */
+  /** `name(args…)` as a call of `kernel.method(args…, params…)`. */
+  private[graft] def call(name: String, kernel: AnyRef, method: String,
+                          resultType: DataType, inputTypes: Seq[DataType],
+                          args: Seq[Column], params: Seq[Int] = Nil,
+                          nullOutsideDomain: Boolean = false): Column =
+    ColumnBridge.column(KernelCall(name, kernel.getClass, method,
+      resultType, inputTypes, args.map(ColumnBridge.expression), params,
+      nullOutsideDomain))
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
+
+  /** Two-sided Student-t p-value P(|T_df| >= |t|) (Welch t-test, A7).
+    * Null for non-positive or NaN df ([[StatKernels.tTestPValue]]). */
   def t_test_pvalue(t: Column, df: Column): Column =
-    ColumnBridge.column(TTestPValue(
-      ColumnBridge.expression(t.cast(DoubleType)),
-      ColumnBridge.expression(df.cast(DoubleType))))
+    tTestPValue(t.cast(DoubleType), df.cast(DoubleType))
+
+  /** [[t_test_pvalue]] without the explicit casts: SQL's form, where the
+    * analyzer casts implicitly. */
+  private[graft] def tTestPValue(t: Column, df: Column): Column =
+    call("t_test_pvalue", StatKernels, "tTestPValue", DoubleType,
+      Seq(DoubleType, DoubleType), Seq(t, df), nullOutsideDomain = true)
 
   /** Hypergeometric upper-tail p-value P(X >= k): enrichment /
     * over-representation significance of overlap k between a size-n
-    * draw and a size-K success set in a size-N population. */
+    * draw and a size-K success set in a size-N population. Evaluated per
+    * group row (pathways × conditions), never per fact row. Null for
+    * inconsistent margins ([[StatKernels.hypergeomPValue]]). */
   def hypergeom_pvalue(k: Column, bigK: Column, n: Column,
                        bigN: Column): Column =
-    ColumnBridge.column(HypergeomPValue(
-      ColumnBridge.expression(k.cast(LongType)),
-      ColumnBridge.expression(bigK.cast(LongType)),
-      ColumnBridge.expression(n.cast(LongType)),
-      ColumnBridge.expression(bigN.cast(LongType))))
+    call("hypergeom_pvalue", StatKernels, "hypergeomPValue", DoubleType,
+      Seq.fill(4)(LongType),
+      Seq(k, bigK, n, bigN).map(_.cast(LongType)), nullOutsideDomain = true)
 
-  /** Cosine similarity of two ARRAY<DOUBLE> columns (codegen'd). */
+  /** Cosine similarity of two ARRAY<DOUBLE> columns: the backbone of the
+    * similarity-search / embedding-dedup operators. Length mismatches
+    * truncate to the shorter array; a zero-norm input yields null. */
   def cosine_similarity(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineSimilarity(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    call("cosine_similarity", StatKernels, "cosineSimilarity", DoubleType,
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), Seq(a, b),
+      nullOutsideDomain = true)
 
-  /** 64-bit SimHash of an ARRAY<STRING> token column. */
+  /** 64-bit SimHash of an ARRAY<STRING> token column (near-dup
+    * fingerprint). Token hash = low 8 bytes of MD5, little-endian —
+    * bit-identical to DuckDB's `md5_number_lower`, so the fingerprint is
+    * reproducible by the DuckDB oracle (bit-vote SQL over unnested
+    * tokens). Bit b is 1 iff the sum of (+1/-1) votes from token-hash bit
+    * b is positive; Hamming distance approximates token-multiset
+    * similarity. */
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
+    call("simhash64", HashUtil, "simhash64", LongType,
+      Seq(ArrayType(StringType)), Seq(tokens))
 
-  /** 64-bit string hash (md5 low 8 bytes LE == DuckDB md5_number_lower). */
+  /** 64-bit string hash: low 8 bytes of MD5, little-endian — the bit
+    * pattern of DuckDB's `md5_number_lower` as a signed long. The
+    * engine-independent hash for minhash signatures, LSH band keys and
+    * exact dedup, so every derived result stays oracle-checkable. */
   def md5_long(c: Column): Column =
-    ColumnBridge.column(Md5Long(ColumnBridge.expression(c)))
+    call("md5_long", HashUtil, "md5Lower8LE", LongType, Seq(StringType),
+      Seq(c))
 
-  /** Order-sensitive 64-bit rolling-hash fingerprint of a token array. */
+  /** Order-sensitive 64-bit fingerprint of a token array: polynomial
+    * rolling hash (base 31 in Z/2^64) over the md5-derived token hashes.
+    * Engine-specific (modular multiplication is not expressible in DuckDB
+    * without overflow), so unit tests pin it rather than the SQL oracle;
+    * the catalog's oracle-checked fingerprint uses plain md5 hex. */
   def rolling_hash64(tokens: Column): Column =
-    ColumnBridge.column(RollingHash64(ColumnBridge.expression(tokens)))
+    call("rolling_hash64", HashUtil, "rollingHash64", LongType,
+      Seq(ArrayType(StringType)), Seq(tokens))
 
-  /** TRUE Damerau-Levenshtein distance (DuckDB damerau_levenshtein
-    * semantics — unrestricted transpositions, codegen'd). */
+  /** TRUE Damerau-Levenshtein distance (unrestricted transpositions —
+    * Lowrance-Wagner), pinned to DuckDB's built-in `damerau_levenshtein`,
+    * an independent implementation of the same published definition, so
+    * the catalog compare certifies the algorithm. Typo-tolerant ER wants
+    * the transposition-aware distance: swapped adjacent letters are the
+    * dominant human typo, and plain edit distance charges them twice. */
   def damerau_levenshtein(a: Column, b: Column): Column =
-    ColumnBridge.column(DamerauLevenshtein(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    call("damerau_levenshtein", StringSim, "damerauLevenshtein", LongType,
+      Seq(StringType, StringType), Seq(a, b))
 
-  /** Jaro-Winkler similarity (DuckDB jaro_winkler_similarity semantics). */
+  /** Jaro-Winkler similarity in [0,1], pinned to DuckDB's native
+    * `jaro_winkler_similarity` (the oracle side of q159 — an independent
+    * implementation of the same definition, so the cross-engine compare
+    * checks the algorithm, not a replay). Spark has `levenshtein` but no
+    * Jaro-Winkler, whose prefix weighting ranks short-name typos far
+    * better for ER verification. Conventions in
+    * [[StringSim.jaroWinkler]]. */
   def jaro_winkler(a: Column, b: Column): Column =
-    ColumnBridge.column(JaroWinkler(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    call("jaro_winkler", StringSim, "jaroWinkler", DoubleType,
+      Seq(StringType, StringType), Seq(a, b))
 
-  /** Word n-gram shingles of a STRING column, native + codegen'd (the
-    * dedup hot path; same token boundaries as TextAnalysis.shingles). */
-  def word_shingles(text: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
+  /** Word n-gram shingles of a STRING column in one native pass (tokenize
+    * on \s+, join n consecutive tokens with one space) — the dedup hot
+    * path. Token boundaries match TextAnalysis.shingles and the DuckDB
+    * oracle exactly. */
+  def word_shingles(text: Column, n: Int): Column = {
+    require(n >= 1, "shingle size must be >= 1")
+    call("word_shingles", TextKernels, "wordShingles",
+      ArrayType(StringType, containsNull = false), Seq(StringType),
+      Seq(text), params = Seq(n))
+  }
 
-  /** Unicode NFC normalization (UAX #15) of a STRING column, native +
-    * codegen'd — canonical forms match DuckDB `nfc_normalize`. */
+  /** Unicode NFC normalization (UAX #15) of a STRING column — canonical
+    * forms match DuckDB `nfc_normalize`; ASCII rows pay one scan and no
+    * allocation. */
   def nfc_normalize(text: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(text)))
+    call("nfc_normalize", TextKernels, "nfcNormalize", StringType,
+      Seq(StringType), Seq(text))
 
-  /** Diacritic stripping (DuckDB strip_accents semantics — NFD, drop
-    * combining marks, NFC), native + codegen'd. */
+  /** Diacritic stripping (NFD → drop \p{Mn} → NFC), pinned to DuckDB's
+    * independent utf8proc-based `strip_accents` — the accent-folding
+    * step of search normalization and ER blocking ("Müller" must block
+    * with "Muller"). ASCII fast path. */
   def strip_accents(text: Column): Column =
-    ColumnBridge.column(StripAccents(ColumnBridge.expression(text)))
+    call("strip_accents", TextKernels, "stripAccents", StringType,
+      Seq(StringType), Seq(text))
 
   /** Aho–Corasick dictionary scrub of a STRING column: every
     * non-overlapping leftmost-longest dictionary-term occurrence →
@@ -81,27 +143,34 @@ object gfunctions {
     ColumnBridge.column(DictScrub(ColumnBridge.expression(text), dict, mask))
 
   /** Shannon entropy (bits) of a STRING column's code-point
-    * distribution, native + codegen'd — the base64/padding screen. */
+    * distribution — the quality screen: base64/hex blobs score high and
+    * flat, padding near zero, natural language ~4 bits. Accumulates in
+    * sorted code-point order ([[TextKernels.charEntropy]]). */
   def char_entropy(text: Column): Column =
-    ColumnBridge.column(CharEntropy(ColumnBridge.expression(text)))
+    call("char_entropy", TextKernels, "charEntropy", DoubleType,
+      Seq(StringType), Seq(text))
 
   /** BLEU clipped-match sufficient statistics of a (candidate,
-    * reference) pair, native + codegen'd:
+    * reference) pair in one native pass, per pair with no shuffle:
     * [num1, den1, ..., num4, den4, cand_len, ref_len]. */
   def bleu_counts(cand: Column, ref: Column): Column =
-    ColumnBridge.column(BleuCounts(ColumnBridge.expression(cand),
-      ColumnBridge.expression(ref)))
+    call("bleu_counts", TextKernels, "bleuCounts", Longs,
+      Seq(StringType, StringType), Seq(cand, ref))
 
-  /** ROUGE-L sufficient statistics of a (candidate, reference) pair,
-    * native + codegen'd: [lcs_len, cand_len, ref_len]. */
+  /** ROUGE-L sufficient statistics of a (candidate, reference) pair over
+    * whitespace tokens (two-row-DP token LCS, per pair):
+    * [lcs_len, cand_len, ref_len]. */
   def rouge_l_counts(cand: Column, ref: Column): Column =
-    ColumnBridge.column(RougeLCounts(ColumnBridge.expression(cand),
-      ColumnBridge.expression(ref)))
+    call("rouge_l_counts", TextKernels, "rougeLCounts", Longs,
+      Seq(StringType, StringType), Seq(cand, ref))
 
   /** Repetition counts of a STRING column in one native pass:
     * [total n-grams, distinct n-grams, n_tokens, max token count]. */
-  def repetition_counts(text: Column, n: Int): Column =
-    ColumnBridge.column(RepetitionCounts(ColumnBridge.expression(text), n))
+  def repetition_counts(text: Column, n: Int): Column = {
+    require(n >= 1, "n-gram size must be >= 1")
+    call("repetition_counts", TextKernels, "repetitionCounts", Ints,
+      Seq(StringType), Seq(text), params = Seq(n))
+  }
 
   /** Quality-metric counts of a STRING column in one native pass:
     * [n_tokens, n_non_ws, n_alpha, n_digit, n_marker_tokens]. */
@@ -109,17 +178,27 @@ object gfunctions {
     ColumnBridge.column(TextQualityCounts(
       ColumnBridge.expression(text), markers))
 
-  /** The k MinHash hash-family values of a shingle STRING column
-    * (== md5_long("i:" + shingle) for each i), one codegen call. */
-  def minhash_hashes(shingle: Column, k: Int): Column =
-    ColumnBridge.column(MinhashHashes(ColumnBridge.expression(shingle), k))
+  /** The k MinHash hash-family values of a shingle STRING column in one
+    * call (== md5_long(i + ":" + shingle) for i in 0..k-1, hence equal to
+    * the DuckDB oracle's values). */
+  def minhash_hashes(shingle: Column, k: Int): Column = {
+    require(k >= 1, "hash count must be >= 1")
+    call("minhash_hashes", MinhashKernel, "hashes", Longs, Seq(StringType),
+      Seq(shingle), params = Seq(k))
+  }
 
   /** Per-table LSH buckets of an ARRAY<DOUBLE> column (deterministic LCG
-    * hyperplanes, one kernel call per row). */
+    * hyperplanes, one kernel call per row): element t is table t's
+    * sign-bit-packed bucket. Replaces a per-plane column fan-out whose
+    * generated code (tables × planes × dim literals) spent most of the
+    * runtime in Janino compilation. */
   def lsh_table_buckets(vec: Column, tables: Int, planesPerTable: Int,
-                        dim: Int): Column =
-    ColumnBridge.column(LshTableBuckets(
-      ColumnBridge.expression(vec), tables, planesPerTable, dim))
+                        dim: Int): Column = {
+    require(tables >= 1 && planesPerTable >= 1 && planesPerTable <= 64)
+    call("lsh_table_buckets", LshKernel, "tableBuckets", Longs,
+      Seq(ArrayType(DoubleType)), Seq(vec),
+      params = Seq(tables, planesPerTable, dim))
+  }
 
   /** Bloom-filter membership probe of a STRING column against a
     * serialized sketch BloomFilter literal (codegen'd; no false
@@ -185,55 +264,17 @@ object gfunctions {
 
   /** Regularized incomplete beta I_x(a, b): F-distribution tails
     * (P(F_{d1,d2} > f) = reg_inc_beta(d2/(d2+d1*f), d2/2, d1/2)),
-    * binomial tails, t tails. */
+    * binomial tails, t tails. Evaluated per group row. Null outside the
+    * support ([[StatKernels.regIncBeta]]). */
   def reg_inc_beta(x: Column, a: Column, b: Column): Column =
-    ColumnBridge.column(RegularizedIncBeta(
-      ColumnBridge.expression(x.cast(DoubleType)),
-      ColumnBridge.expression(a.cast(DoubleType)),
-      ColumnBridge.expression(b.cast(DoubleType))))
+    call("reg_inc_beta", StatKernels, "regIncBeta", DoubleType,
+      Seq.fill(3)(DoubleType), Seq(x, a, b).map(_.cast(DoubleType)),
+      nullOutsideDomain = true)
 
   /** Standard-normal survival function P(Z > z) (rank-test and
-    * two-proportion normal approximations). */
+    * two-proportion normal approximations). Null for NaN z
+    * ([[StatKernels.normalSF]]). */
   def normal_sf(z: Column): Column =
-    ColumnBridge.column(NormalSF(
-      ColumnBridge.expression(z.cast(DoubleType))))
-
-  /** Register the SQL-callable names (usable from `spark.sql`). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "t_test_pvalue", exprs => TTestPValue(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "md5_long", exprs => Md5Long(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash64", exprs => RollingHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bleu_counts", exprs => BleuCounts(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "rouge_l_counts", exprs => RougeLCounts(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "reg_inc_beta",
-      exprs => RegularizedIncBeta(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "normal_sf", exprs => NormalSF(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hypergeom_pvalue",
-      exprs => HypergeomPValue(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-  }
+    call("normal_sf", StatKernels, "normalSF", DoubleType, Seq(DoubleType),
+      Seq(z.cast(DoubleType)), nullOutsideDomain = true)
 }

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * operator builds — same shuffles, same pushdown, zero extra layers.
   * Available two ways: injected at session build by
   * [[graft.GraftExtensions]], or imperatively via [[register]] on an
-  * existing session (the gfunctions.register twin).
+  * existing session.
   */
 object TableFunctions {
 

@@ -102,7 +102,7 @@ object Relevance {
     * recall-oriented generation-eval companion to [[bleuCorpus]]:
     * token-level longest common subsequence, P = LCS/|cand|,
     * R = LCS/|ref|, F = 2PR/(P+R). All three stats come from the
-    * codegen'd RougeLCounts kernel (two-row-DP LCS, per-pair local) —
+    * codegen'd `rouge_l_counts` kernel (two-row-DP LCS, per-pair local) —
     * one shuffle-free scan, no cross-row state; the 100 TB cost is
     * exactly the token DP. Zero-length sides yield null scores, and
     * LCS = 0 yields F = 0 (not null) when both sides are non-empty.
@@ -137,9 +137,8 @@ object Relevance {
     * zeroes the score (the standard corpus-BLEU convention).
     *
     * Shape: clipping is per-pair, so every statistic comes from ONE
-    * codegen'd [[org.apache.spark.sql.graft.RougeLCounts sibling]]
-    * BleuCounts kernel scan (clipped matches + totals for n = 1..4
-    * plus both lengths) and one 10-integer aggregate — no explode, no
+    * codegen'd `bleu_counts` kernel scan, the `rouge_l_counts` sibling
+    * (clipped matches + totals for n = 1..4 plus both lengths) and one 10-integer aggregate — no explode, no
     * (pair, gram) shuffle anywhere. Output (one row): n_pairs,
     * p1..p4 6dp, brevity_penalty 6dp, bleu 6dp (null when a candidate
     * side has no 4-grams at all). */
@@ -147,7 +146,7 @@ object Relevance {
                  refCol: String): DataFrame = {
     import graft.functions.gfunctions.bleu_counts
     // clipping is PER-PAIR by definition, so the whole computation is
-    // one codegen'd kernel scan (BleuCounts: clipped matches + totals
+    // one codegen'd kernel scan (bleu_counts: clipped matches + totals
     // for n = 1..4 plus both lengths) and ONE 10-integer aggregate —
     // no explode, no (pair, gram) shuffle. The first cut of this
     // operator joined per-order gram counts and went super-linear at

@@ -46,17 +46,18 @@ object UrlOps {
     * struct<scheme, auth, path, query> with EXACT per-group
     * `regexp_extract` semantics (empty string on no-match / absent
     * group, null on null input — see
-    * [[org.apache.spark.sql.graft.UrlParts]]). canonicalizeUrl +
+    * [[org.apache.spark.sql.graft.UrlKernel]]). canonicalizeUrl +
     * urlHost previously ran the regex 4+ times per row (one
     * regexp_extract per group plus the malformed guard; measured
     * code-real 1.23x on q421 after the r14 NULL-host fix added the
-    * guard — `artifacts/r15opt/ab_q421_attr.log`); identical
-    * UrlParts(url) instances in one projection CSE into ONE compiled
-    * match per row. */
+    * guard — `artifacts/r15opt/ab_q421_attr.log`). Common-subexpression
+    * elimination merges only calls in always-evaluated positions, so a
+    * call inside a CASE branch still runs its own match. */
   private def urlParts(url: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      org.apache.spark.sql.graft.UrlParts(
-        org.apache.spark.sql.graft.ColumnBridge.expression(url)))
+    graft.functions.gfunctions.call("url_parts",
+      org.apache.spark.sql.graft.UrlKernel, "parts",
+      org.apache.spark.sql.graft.UrlKernel.schema,
+      Seq(org.apache.spark.sql.types.StringType), Seq(url))
 
   private def hostFromParts(p: Column): Column = {
     val noUser = regexp_replace(p.getField("auth"), "^[^@]*@", "")

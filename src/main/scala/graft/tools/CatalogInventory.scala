@@ -57,7 +57,10 @@ object CatalogInventory {
     val eagerJobCounts = Seq.newBuilder[(String, Int)]
     val findings = Seq.newBuilder[String]
 
-    sorted.foreach { q =>
+    /** Constructs `q` over `dir`: the frame and the non-metadata jobs
+      * construction ran. */
+    def construct(q: Catalog.Q,
+                  dir: String): (org.apache.spark.sql.DataFrame, Int) = {
       spark.catalog.clearCache()
       val before = {
         org.apache.spark.graft.ListenerBusAccess
@@ -65,7 +68,7 @@ object CatalogInventory {
         jobs.get()
       }
       val df =
-        try q.run(spark, sfDir)
+        try q.run(spark, dir)
         catch {
           case NonFatal(e) =>
             println(s"CONSTRUCT-FAIL ${q.name}: ${e.getMessage}")
@@ -73,7 +76,11 @@ object CatalogInventory {
         }
       org.apache.spark.graft.ListenerBusAccess
         .waitUntilEmpty(spark.sparkContext)
-      val constructionJobs = jobs.get() - before
+      (df, jobs.get() - before)
+    }
+
+    sorted.foreach { q =>
+      val (df, constructionJobs) = construct(q, sfDir)
       val eager = constructionJobs > 0
       if (eager) { eagers += q.name; eagerJobCounts += q.name -> constructionJobs }
       else lazies += q.name
@@ -110,8 +117,16 @@ object CatalogInventory {
     // paste-ready block for graft.tools.EagerJobs.expected — the
     // per-eager-query construction job counts EagerJobContractSpec pins
     println(s"\n== EAGER JOB COUNTS (paste into EagerJobs.expected) ==")
+    // a query pinned at another scale (EagerJobs.pinScale) is counted
+    // again over that sibling of sfDir
+    val byName = sorted.map(q => q.name -> q).toMap
     eagerJobCounts.result().foreach { case (n, c) =>
-      println("    \"" + n + "\" -> " + c + ",")
+      val scale = EagerJobs.pinScale(n)
+      val pinned =
+        if (Paths.get(sfDir).getFileName.toString == scale) c
+        else construct(byName(n),
+          Paths.get(sfDir).resolveSibling(scale).toString)._2
+      println("    \"" + n + "\" -> " + pinned + ",")
     }
     spark.stop()
   }

@@ -540,3 +540,113 @@ object StringSim {
     d(la + 1)(lb + 1).toLong
   }
 }
+
+/** Distribution tails and vector similarity behind graft's statistics
+  * functions (callable from generated code). Each returns null outside
+  * its domain, where scipy returns NaN (graft normalizes NaN to null,
+  * SURVEY §1.2); a NaN that the formula itself yields passes through.
+  */
+object StatKernels {
+
+  /** Two-sided Student-t p-value P(|T_df| >= |t|), the Welch test's tail
+    * (`drug_target_gse46602/pipeline2.py:598-603` uses
+    * `scipy.stats.ttest_ind(equal_var=False)`): the identity
+    * p = I_{df/(df+t^2)}(df/2, 1/2) with commons-math3's regularized
+    * incomplete beta. Null for NaN t or NaN / non-positive df. */
+  def tTestPValue(t: Double, df: Double): java.lang.Double =
+    if (df.isNaN || t.isNaN || df <= 0.0) null
+    else org.apache.commons.math3.special.Beta.regularizedBeta(
+      df / (df + t * t), df / 2.0, 0.5)
+
+  /** Hypergeometric upper tail P(X >= k) for overlap k between a size-`n`
+    * draw and a size-`bigK` success set in a size-`bigN` population: the
+    * over-representation (ORA / one-sided Fisher exact) test of
+    * enrichment analysis. Null for inconsistent margins; exact 1.0 / 0.0
+    * at the support edges. */
+  def hypergeomPValue(k: Long, bigK: Long, n: Long,
+                      bigN: Long): java.lang.Double =
+    if (bigN <= 0 || bigK < 0 || n < 0 || bigK > bigN || n > bigN ||
+        bigN > Int.MaxValue) null
+    else if (k <= math.max(0L, n + bigK - bigN)) 1.0
+    else if (k > math.min(bigK, n)) 0.0
+    else new org.apache.commons.math3.distribution.HypergeometricDistribution(
+      bigN.toInt, bigK.toInt, n.toInt)
+      .upperCumulativeProbability(k.toInt)
+
+  /** Regularized incomplete beta I_x(a, b): the F-distribution tail
+    * (one-way ANOVA, Brown–Forsythe: P(F_{d1,d2} > f) = I_x(d2/2, d1/2)
+    * with x = d2 / (d2 + d1·f)), the binomial tail, and the t tail
+    * ([[tTestPValue]] is the b = 1/2 case). Null outside the support
+    * (x ∉ [0,1], a or b ≤ 0, any NaN), where scipy.special.betainc
+    * returns NaN. */
+  def regIncBeta(x: Double, a: Double, b: Double): java.lang.Double =
+    if (x.isNaN || a.isNaN || b.isNaN || x < 0.0 || x > 1.0 ||
+        a <= 0.0 || b <= 0.0) null
+    else org.apache.commons.math3.special.Beta.regularizedBeta(x, a, b)
+
+  /** Standard-normal survival P(Z > z) = erfc(z/√2)/2, the tail behind
+    * rank-test normal approximations (Mann–Whitney U, Wilcoxon) and
+    * two-proportion z-tests. commons-math3 Erf.erfc is accurate to
+    * machine precision over the full double range (scipy.stats.norm.sf
+    * parity). Null for NaN z. */
+  def normalSF(z: Double): java.lang.Double =
+    if (z.isNaN) null
+    else org.apache.commons.math3.special.Erf.erfc(z / math.sqrt(2.0)) / 2.0
+
+  /** Cosine similarity of two double arrays, truncated to the shorter
+    * one; null when either norm is zero. Elements must not be null
+    * (embedding vectors never are). Sums run in index order. */
+  def cosineSimilarity(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a.getDouble(i); val y = b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
+  }
+}
+
+/** One-pass URL decomposition into struct<scheme, auth, path, query>,
+  * the per-row kernel of `UrlOps.canonicalizeUrl` / `urlHost`. One
+  * compiled-pattern match fills all four fields, where four
+  * `regexp_extract` calls (one per group, plus the malformed guard) ran
+  * the same regex again for each.
+  *
+  * EXACT `regexp_extract` replication, field by field (the DuckDB
+  * oracle replays the same regex decomposition, so outputs must be
+  * bit-identical): a non-matching non-null input yields "" in every
+  * field (regexp_extract's no-match value — the scheme field doubles
+  * as the malformed guard exactly as `regexp_extract(url, re, 1) =
+  * ''` did); a group that did not participate in the match (absent
+  * `?query`) yields "" (RegExpExtract's null-group convention); a null
+  * input nulls the struct (the same propagation as regexp_extract's).
+  * The pattern is anchored, so `find(0)` ≡ `matches` — the same entry
+  * point RegExpExtract uses.
+  */
+object UrlKernel {
+  val schema: org.apache.spark.sql.types.DataType =
+    org.apache.spark.sql.types.StructType(Seq("scheme", "auth", "path", "query")
+      .map(org.apache.spark.sql.types.StructField(_,
+        org.apache.spark.sql.types.StringType, nullable = false)))
+
+  private val pattern = java.util.regex.Pattern.compile(
+    "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\\?([^#]*))?(?:#.*)?$")
+  private val Empty = UTF8String.EMPTY_UTF8
+
+  def parts(u: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    val m = pattern.matcher(u.toString)
+    if (!m.find(0))
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](Empty, Empty, Empty, Empty))
+    else {
+      def g(i: Int): UTF8String = {
+        val s = m.group(i)
+        if (s == null) Empty else UTF8String.fromString(s)
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](g(1), g(2), g(3), g(4)))
+    }
+  }
+}

@@ -26,7 +26,10 @@ class GraftExtensionsSpec extends SparkSuite {
           |       minhash_hashes('a b c', 2) AS mh,
           |       lsh_table_buckets(array(1.0d, 0.5d), 2, 4, 2) AS lb,
           |       repetition_counts('a b a b', 2) AS rc,
-          |       text_quality_counts('the cat 12', 'the,a') AS qc
+          |       text_quality_counts('the cat 12', 'the,a') AS qc,
+          |       char_entropy('aab') AS ce,
+          |       bleu_counts('a b c d', 'a b d') AS bc,
+          |       rouge_l_counts('a b c', 'a c') AS rl
           |""".stripMargin).collect()(0)
       assert(r.getAs[Long]("m") == 8250560606382298838L)
       assert(math.abs(r.getAs[Double]("p") - 0.0733880348) < 1e-6)
@@ -38,6 +41,39 @@ class GraftExtensionsSpec extends SparkSuite {
       assert(r.getSeq[Int](r.fieldIndex("rc")).toSeq == Seq(3, 2, 4, 2))
       // 3 tokens, 8 non-ws chars, 6 alpha, 2 digits, 1 marker hit ("the")
       assert(r.getSeq[Int](r.fieldIndex("qc")).toSeq == Seq(3, 8, 6, 2, 1))
+      // -(2/3 log2 2/3 + 1/3 log2 1/3)
+      assert(math.abs(r.getAs[Double]("ce") - 0.9182958340544896) < 1e-12)
+      // unigrams 3/4 clipped, bigrams 1/3 ("a b"), no 3- or 4-gram match
+      assert(r.getSeq[Long](r.fieldIndex("bc")).toSeq ==
+        Seq(3L, 4L, 1L, 3L, 0L, 2L, 0L, 1L, 4L, 3L))
+      // LCS "a c" = 2 tokens
+      assert(r.getSeq[Long](r.fieldIndex("rl")).toSeq == Seq(2L, 3L, 2L))
+
+      // every SQL name builds the same expression as its Column call
+      import graft.functions.gfunctions._
+      import org.apache.spark.sql.functions.{array, lit}
+      val c = s2.range(1).select(
+        md5_long(lit("abc")), t_test_pvalue(lit(2.0), lit(10.0)),
+        simhash64(array(lit("x"), lit("x"), lit("y"))),
+        cosine_similarity(array(lit(1.0), lit(0.0)), array(lit(1.0), lit(0.0))),
+        rolling_hash64(array(lit("a"), lit("b"))),
+        word_shingles(lit("a b c d"), 3), minhash_hashes(lit("a b c"), 2),
+        lsh_table_buckets(array(lit(1.0), lit(0.5)), 2, 4, 2),
+        repetition_counts(lit("a b a b"), 2),
+        text_quality_counts(lit("the cat 12"), Seq("the", "a")),
+        char_entropy(lit("aab")), bleu_counts(lit("a b c d"), lit("a b d")),
+        rouge_l_counts(lit("a b c"), lit("a c"))).collect()(0)
+      assert(r.length == 13 && c.length == 13)
+      (0 until 13).foreach { i =>
+        val (sql, col) = (r.get(i), c.get(i))
+        val same = (sql, col) match {
+          case (a: Double, b: Double) =>
+            java.lang.Double.doubleToRawLongBits(a) ==
+              java.lang.Double.doubleToRawLongBits(b)
+          case (a, b) => a == b
+        }
+        assert(same, s"${r.schema(i).name}: SQL $sql, Column $col")
+      }
 
       // table-valued functions ride the same injection: sessionize a
       // tiny view purely through SQL (2 events 10s apart + 1 far away

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level sweep of `src/main` for two invariants:
+/** Source-level sweep of `src/main` for these invariants:
   *
   *  - every session comes from [[GraftSession]], so no entry main can
   *    drift from the library's conf contract (ANSI off, UTC, parquet NTZ
@@ -19,7 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    results on the driver in completion order (and their shuffle
   *    levels in fetch order), so a floating-point sum moves between
   *    reruns — merge in partition order instead (see
-  *    `Centrality.sumInPartitionOrder`).
+  *    `Centrality.sumInPartitionOrder`);
+  *  - no `CodegenFallback`: an expression mixing it in drops its whole
+  *    projection out of whole-stage codegen. A stateless function is a
+  *    `KernelCall` (expressions.scala), whose `StaticInvoke` has both
+  *    paths.
   *
   * Patterns match across line breaks, so a call split over lines
   * (`SparkSession\n  .builder`) is caught too.
@@ -42,6 +46,7 @@ class SessionHygieneSpec extends AnyFunSuite {
   private val throwableCase =
     """case\s+[\w$]+\s*:\s*(java\.lang\.)?Throwable\b""".r
   private val completionOrderMerge = """\.\s*tree(Reduce|Aggregate)\b""".r
+  private val codegenFallback = """\bCodegenFallback\b""".r
 
   /** `file:line: text` for every match of `re` in `src`, at the line
     * where the match starts. */
@@ -77,6 +82,13 @@ class SessionHygieneSpec extends AnyFunSuite {
       "merge partial results in partition order:\n" + found.mkString("\n"))
   }
 
+  test("no CodegenFallback (every expression keeps whole-stage codegen)") {
+    val found = sites(sources, codegenFallback)
+    assert(found.isEmpty,
+      "call a kernel method through KernelCall instead:\n" +
+        found.mkString("\n"))
+  }
+
   test("the scanners fire on planted violations") {
     val planted = Seq("graft/tools/Planted.scala" -> Seq(
       "    val spark = SparkSession.builder().master(\"local[4]\")",
@@ -93,7 +105,11 @@ class SessionHygieneSpec extends AnyFunSuite {
       "    val t = rdd.treeAggregate(0.0)(_ + _, _ + _, depth = 3)",
       "      .treeReduce { (x, y) => x }",
       "    val ok2 = rdd.reduce(_ + _) // not treeReduce: completion order",
-      "    val ok3 = rdd.subtreeReduce(x)").mkString("\n"))
+      "    val ok3 = rdd.subtreeReduce(x)",
+      "import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback",
+      "    extends UnaryExpression with CodegenFallback {",
+      "  // NoCodegenFallbackHere, codegenFallback: other identifiers",
+      "    with ImplicitCastInputTypes with CodegenFallback").mkString("\n"))
     assert(sites(planted, builderCall).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:1:", "graft/tools/Planted.scala:2:",
         "graft/tools/Planted.scala:3:"))
@@ -101,5 +117,8 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(sites(planted, completionOrderMerge).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:11:", "graft/tools/Planted.scala:12:",
         "graft/tools/Planted.scala:13:"))
+    assert(sites(planted, codegenFallback).map(_.takeWhile(_ != ' ')) ===
+      Seq("graft/tools/Planted.scala:16:", "graft/tools/Planted.scala:17:",
+        "graft/tools/Planted.scala:19:"))
   }
 }

@@ -10,7 +10,8 @@ import graft.tools.{EagerJobs, ExplainAudit, PlanHygiene}
 /** Job-count discipline for EAGER queries (round-10 verdict task 7):
   * every query in [[ExplainAudit.excluded]] runs Spark jobs during
   * CONSTRUCTION, which exempts it from the plan audit — so this spec
-  * pins how MANY. Each eager query is constructed at sf0.001 under a
+  * pins how MANY. Each eager query is constructed at the scale of its
+  * pin ([[EagerJobs.pinScale]], sf0.001 for most) under a
   * job listener (metadata jobs filtered, the CatalogInventory
   * methodology) and its non-metadata job count must stay within
   * max(2, 25%) of the pinned [[EagerJobs.expected]] value. A lost
@@ -26,6 +27,10 @@ import graft.tools.{EagerJobs, ExplainAudit, PlanHygiene}
 class EagerJobContractSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** The test-data directory of `name`'s pin, a sibling of [[sfDir]]. */
+  private def pinDir(name: String): String = java.nio.file.Paths.get(sfDir)
+    .resolveSibling(EagerJobs.pinScale(name)).toString
 
   private def slack(expected: Int): Int = math.max(2, (expected + 3) / 4)
 
@@ -57,7 +62,7 @@ class EagerJobContractSpec extends SparkSuite {
     ExplainAudit.excluded.keys.toSeq.sorted.foreach { name =>
       spark.catalog.clearCache()
       val before = drained()
-      qs(name)(spark, sfDir) // construction only — never an action here
+      qs(name)(spark, pinDir(name)) // construction only — never an action here
       val got = drained() - before
       val exp = EagerJobs.expected.getOrElse(name, 0)
       if (math.abs(got - exp) > slack(exp))
@@ -71,5 +76,16 @@ class EagerJobContractSpec extends SparkSuite {
         "\n(legitimate pass-structure change? regenerate via " +
         "sbt 'runMain graft.tools.CatalogInventory' and update " +
         "EagerJobs.expected in the same commit)")
+  }
+
+  test("every graph query's pin is taken on a non-empty graph") {
+    val qs = Catalog.queries
+    val empty = EagerJobs.graphPinScale.keys.toSeq.sorted.collect {
+      case name if qs(name)(spark, pinDir(name)).isEmpty =>
+        s"$name at ${EagerJobs.pinScale(name)}"
+    }
+    assert(empty.isEmpty, "graph queries pinned on an empty result: " +
+      empty.mkString(", "))
+    assert(EagerJobs.graphPinScale.keySet.subsetOf(EagerJobs.expected.keySet))
   }
 }

@@ -517,4 +517,15 @@ class DedupSpec extends SparkSuite {
       .as[(Long, Option[Long])].collect().toMap
     assert(got2(201L) == Some(102L))
   }
+
+  test("observed: the row of a completed Observation, None for one never run") {
+    val never = org.apache.spark.sql.Observation()
+    spark.range(3).observe(never, count(lit(1)).as("n")) // no action
+    assert(Dedup.observed(never, "never-run",
+      scala.concurrent.duration.Duration(50, "ms")).isEmpty)
+    val done = org.apache.spark.sql.Observation()
+    spark.range(3).observe(done, count(lit(1)).as("n")).collect()
+    assert(Dedup.observed(done, "completed").map(_.getAs[Long]("n")) ==
+      Some(3L))
+  }
 }

@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.functions.gfunctions.char_entropy
 import org.apache.spark.sql.functions._
 
-/** Round-8 text batch: CharEntropy expression (X274), Dunning G²
+/** Round-8 text batch: `char_entropy` (X274), Dunning G²
   * collocations (X275), Good–Turing unseen mass (X276), corpus BLEU-4
   * (X277). */
 class LlmTextBatchSpec extends SparkSuite {
