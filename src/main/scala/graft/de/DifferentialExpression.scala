@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.geo.GeoLineParser.pyStrip
+import graft.geo.ProbeRows
 
 /** Differential-expression stage (J2/J3, A6–A8, F4/F5;
   * `pipeline2.py:540-648`).
   *
   * Sample-group reconciliation (J2) happens on driver-side dimension data
   * (sample lists are bounded by array width, not data volume); the per-gene
-  * statistics run distributed through `Stats.welchTTest` (one hash agg) and
-  * `Stats.bhAdjust`.
+  * statistics are a row map over the gene rows (`Stats.welchTTestRows`),
+  * then `Stats.bhAdjust`.
   */
 object DifferentialExpression {
 
@@ -65,19 +66,25 @@ object DifferentialExpression {
     }
   }
 
-  /** A6–A8 + F4/F5 over long-form gene expression.
+  /** A6–A8 + F4/F5 over gene rows.
     *
-    * @param geneExpr (gene, sample_id, value)
+    * The case/control masks come from [[resolveGroups]]; each gene's Welch
+    * test is a row map over its vector ([[Stats.welchTTestRows]]), so the
+    * statistics do not depend on the partitioning.
+    *
+    * @param genes gene rows, `(gene, value ARRAY<DOUBLE>)` with the sample
+    *              ids in the `value` metadata (the probe collapse's output)
     * @return (gene, log2FC, pvalue, adjusted_pvalue) — the reference's
     *         differential_results.csv schema (`pipeline2.py:610-627`)
     */
-  def run(spark: SparkSession, geneExpr: DataFrame,
+  def run(spark: SparkSession, genes: DataFrame,
           sampleIds: Seq[String], metadata: DataFrame): DataFrame = {
-    import spark.implicits._
-    val groups = resolveGroups(sampleIds, metadata).toDF("sample_id", "condition")
-    val joined = geneExpr.join(broadcast(groups), Seq("sample_id"))   // J3
-    val tested = Stats.welchTTest(joined, Seq("gene"), "condition", "value")
-      .select($"gene", $"log2fc".as("log2FC"), $"pvalue")
+    val arm = resolveGroups(sampleIds, metadata).toMap            // J3
+    val ids = ProbeRows.sampleIds(genes)
+    val tested = Stats.welchTTestRows(genes, "gene", "value",
+        ids.map(arm.get(_).contains("case")).toArray,
+        ids.map(arm.get(_).contains("control")).toArray)
+      .select(col("gene"), col("log2fc").as("log2FC"), col("pvalue"))
     Stats.bhAdjust(tested, "pvalue", "adjusted_pvalue", tieBreak = Seq("gene"))
       .select("gene", "log2FC", "pvalue", "adjusted_pvalue")
   }

@@ -1,8 +1,9 @@
 package graft.de
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.gfunctions._
 
@@ -167,9 +168,10 @@ object Stats {
     * One hash aggregation computes per-(key, group) sufficient statistics
     * (partial + final, map-side combine for free); the two groups are then
     * pivoted with conditional aggregates — no self-join, no shuffle beyond
-    * the one groupBy. Output: keyCols, mean_case, mean_control, log2fc
-    * (mean_case - mean_control, valid on standardized log-scale data,
-    * `pipeline2.py:594-596`), t_stat, t_df, pvalue.
+    * the one groupBy. Output: keyCols, mean_case, n_case, mean_control,
+    * n_control, log2fc (mean_case - mean_control, valid on standardized
+    * log-scale data, `pipeline2.py:594-596`), t_stat, t_df, pvalue
+    * ([[welchFromMoments]]).
     *
     * caseVal/controlVal select the two groups; rows with other group values
     * are ignored (matches the reference, which only reads the case/control
@@ -180,7 +182,7 @@ object Stats {
                  controlVal: String = "control"): DataFrame = {
     val g = col(groupCol)
     val v = col(valueCol)
-    val stats = df
+    welchFromMoments(df
       .filter(g === caseVal || g === controlVal)
       .groupBy(keyCols.map(col): _*)
       .agg(
@@ -189,7 +191,35 @@ object Stats {
         count(when(g === caseVal, v)).as("n_case"),
         avg(when(g === controlVal, v)).as("mean_control"),
         var_samp(when(g === controlVal, v)).as("var_control"),
-        count(when(g === controlVal, v)).as("n_control"))
+        count(when(g === controlVal, v)).as("n_control")))
+  }
+
+  /** Welch t-test over vector rows `(key, value ARRAY<DOUBLE>)`, one row
+    * per key: the arms are index masks over the vector, and each arm's
+    * moments come from [[Moments.of]] in index order — a row map, no
+    * aggregate and no shuffle, so the result does not depend on the
+    * partitioning. Same output as [[welchTTest]] with `keyCol` as the key
+    * ([[welchFromMoments]]). */
+  def welchTTestRows(df: DataFrame, keyCol: String, valueCol: String,
+                     isCase: Array[Boolean],
+                     isControl: Array[Boolean]): DataFrame = {
+    val schema = StructType(df.schema(keyCol) +: Seq(
+      "mean_case" -> DoubleType, "var_case" -> DoubleType, "n_case" -> LongType,
+      "mean_control" -> DoubleType, "var_control" -> DoubleType,
+      "n_control" -> LongType).map { case (n, t) =>
+        StructField(n, t, nullable = t == DoubleType) })
+    welchFromMoments(df.select(col(keyCol), col(valueCol)).map { r =>
+      val xs = r.getSeq[java.lang.Double](1)
+      val c = Moments.of(xs, isCase)
+      val k = Moments.of(xs, isControl)
+      Row(r.get(0), c.mean, c.varSamp, c.n, k.mean, k.varSamp, k.n)
+    }(Encoders.row(schema)))
+  }
+
+  /** The tail both Welch forms share: (key..., mean_case, var_case,
+    * n_case, mean_control, var_control, n_control) to log2fc, t_stat, t_df
+    * and pvalue, the variances dropped. */
+  private def welchFromMoments(stats: DataFrame): DataFrame = {
     val t = welch_t(col("mean_case"), col("var_case"), col("n_case"),
       col("mean_control"), col("var_control"), col("n_control"))
     val tdf = welch_df(col("var_case"), col("n_case"),
@@ -200,6 +230,42 @@ object Stats {
       .withColumn("t_df", tdf)
       .withColumn("pvalue", t_test_pvalue(col("t_stat"), col("t_df")))
       .drop("var_case", "var_control")
+  }
+
+  /** `avg`, `var_samp` and `count` of a vector's non-null elements. */
+  final case class Moments(mean: java.lang.Double, varSamp: java.lang.Double,
+                           n: Long)
+
+  object Moments {
+
+    /** The moments of the non-null `xs(i)` where `keep(i)` (all when
+      * `keep` is null), with Spark's aggregate arithmetic applied in index
+      * order: `avg` is a running sum over the count, `var_samp` is
+      * CentralMomentAgg's update, m2 / (n - 1), null below two values.
+      * These are the bits the aggregates give over the same values in one
+      * partition, in this order. */
+    def of(xs: scala.collection.Seq[java.lang.Double],
+           keep: Array[Boolean] = null): Moments = {
+      var sum = 0.0
+      var n = 0.0; var mean = 0.0; var m2 = 0.0
+      var i = 0
+      val it = xs.iterator
+      while (it.hasNext) {
+        val x = it.next()
+        if (x != null && (keep == null || keep(i))) {
+          val v = x.doubleValue
+          sum += v
+          n += 1.0
+          val delta = v - mean
+          val deltaN = delta / n
+          mean += deltaN
+          m2 += delta * (delta - deltaN)
+        }
+        i += 1
+      }
+      Moments(if (n == 0.0) null else sum / n,
+        if (n < 2.0) null else m2 / (n - 1.0), n.toLong)
+    }
   }
 
   /** Storey's π₀ estimate (Storey 2002) over a λ grid: the estimated

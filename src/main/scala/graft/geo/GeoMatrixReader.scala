@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * `sampleIds` order, null for a NaN, Inf or missing cell. The sample ids
   * travel once, in the `value` field's metadata, not in every row. Per-probe
   * steps (threshold, impute, z-score) are row maps with no shuffle; the
-  * probe collapse is the one step that emits the long
-  * (gene, sample_id, value) form.
+  * probe collapse emits the same layout keyed by gene, one row per gene
+  * ([[ProbeRows.GeneSchema]]), and the per-gene statistics downstream are
+  * row maps over it too.
   *
   * `metadata`: (sample_id STRING, ordinal INT, title STRING,
   * condition STRING, characteristics MAP<STRING,STRING>) — ordinal is the
@@ -27,7 +28,8 @@ final case class GeoData(expression: DataFrame, metadata: DataFrame,
   * probe, values in sample order, null = NaN, Inf or missing. The sample
   * ids are stored once, in the `value` field's metadata. A typed map drops
   * field metadata, so every step that rebuilds `value` re-attaches it with
-  * [[ProbeRows.value]]. */
+  * [[ProbeRows.value]]. Gene rows, the probe collapse's output, are the
+  * same layout keyed by `gene` ([[GeneSchema]]). */
 object ProbeRows {
 
   private val SampleIdsKey = "sample_ids"
@@ -39,6 +41,10 @@ object ProbeRows {
     StructField("value", ArrayType(DoubleType, containsNull = true),
       nullable = false)))
 
+  /** Schema of a typed map that emits gene rows, `(gene, value)`. */
+  val GeneSchema: StructType = StructType(Seq(
+    StructField("gene", StringType, nullable = true), Schema("value")))
+
   /** `values` as the `value` column, carrying `sampleIds`. */
   def value(values: Column, sampleIds: Seq[String]): Column =
     values.as("value", new MetadataBuilder()
@@ -47,14 +53,17 @@ object ProbeRows {
   /** The sample ids a probe-row frame carries; fails when the frame is
     * not in this layout. */
   def sampleIds(df: DataFrame): Seq[String] =
-    df.schema.find(_.name == "value")
-      .filter(_.metadata.contains(SampleIdsKey))
-      .map(_.metadata.getStringArray(SampleIdsKey).toSeq)
-      .getOrElse(throw new IllegalArgumentException(
+    sampleIdsOf(df).getOrElse(throw new IllegalArgumentException(
         "expression frame carries no sample ids: expected one row per " +
           "probe, (probe_id, value ARRAY<DOUBLE>), with the ids in the " +
           s"`value` field's '$SampleIdsKey' metadata (GeoMatrixReader.read " +
           s"output); got ${df.schema.simpleString}"))
+
+  /** The sample ids of a probe- or gene-row frame; None for any other. */
+  def sampleIdsOf(df: DataFrame): Option[Seq[String]] =
+    df.schema.find(_.name == "value")
+      .filter(_.metadata.contains(SampleIdsKey))
+      .map(_.metadata.getStringArray(SampleIdsKey).toSeq)
 }
 
 /** GEO Series Matrix reader (S1–S3, `pipeline2.py:170-347,434-474`).

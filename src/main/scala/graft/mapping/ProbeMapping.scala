@@ -2,7 +2,6 @@ package graft.mapping
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.geo.ProbeRows
 import graft.util.Quantiles
@@ -11,10 +10,10 @@ import graft.util.Quantiles
   *
   * The reference's Python->R->CSV round trip (`pipeline2.py:53-137`,
   * `generate_probe_mappings_csv.r`) collapses to: load the mapping table,
-  * broadcast-hash-join it into the long expression frame (inner join ==
-  * left-outer-with-UNKNOWN_-default + anti-filter, `pipeline2.py:515-520`)
-  * into the per-probe expression rows, and collapse probes to genes with a
-  * per-(gene, sample) median (`pipeline2.py:523-528`). The mapping is
+  * broadcast-hash-join it into the per-probe expression rows (inner join
+  * == left-outer-with-UNKNOWN_-default + anti-filter,
+  * `pipeline2.py:515-520`), and collapse probes to one row per gene with
+  * an element-wise median (`pipeline2.py:523-528`). The mapping is
   * dimension-sized (54k rows at reference scale) — always the broadcast
   * side.
   */
@@ -57,34 +56,26 @@ object ProbeMapping {
     * ([[ProbeRows]] layout), one group per gene, and the element-wise
     * median over the gene's probes ([[Quantiles.median]]: the `median`
     * aggregate's arithmetic, nulls ignored, null when no probe has a
-    * value). Output: (gene, sample_id, value), one row per gene and sample.
+    * value).
     *
-    * Output-layout contract: hash-partitioned on (gene, sample_id) into
-    * the session's shuffle partition count and sorted by
-    * (gene, sample_id) within each partition — the layout a grouped
-    * `median` over (gene, sample_id) leaves when its partitions hold more
-    * than the sort-based fallback's 128 keys. Downstream sums (DE's Welch
-    * moments, the network's `corr`) add doubles in partition order, so
-    * this layout is what keeps their results byte-identical. */
+    * Output: gene rows, `(gene, value ARRAY<DOUBLE>)` with the values in
+    * the input's sample order and the sample ids in the `value` field's
+    * metadata ([[ProbeRows.GeneSchema]]), one row per gene. A median does
+    * not depend on the order its probes arrive in, so each gene's vector is
+    * the same under any partitioning; the row order is not fixed, and every
+    * consumer orders by gene where its output needs an order. */
   def collapseToGenes(expr: DataFrame, mapping: DataFrame): DataFrame = {
-    val sampleIds = ProbeRows.sampleIds(expr).toArray
+    val sampleIds = ProbeRows.sampleIds(expr)
+    val n = sampleIds.length
     expr
       .join(broadcast(mapping.select("probe_id", "symbol")), Seq("probe_id"))
       .groupBy(col("symbol").as("gene"))
       .agg(collect_list(col("value")).as("probes"))
-      .flatMap { r =>
-        val gene = r.getString(0)
+      .map { r =>
         val probes = r.getSeq[scala.collection.Seq[java.lang.Double]](1)
-        Iterator.tabulate(sampleIds.length) { i =>
-          Row(gene, sampleIds(i), Quantiles.median(probes.map(_(i)).toArray))
-        }
-      }(Encoders.row(GeneSchema))
-      .repartition(col("gene"), col("sample_id"))
-      .sortWithinPartitions("gene", "sample_id")
+        Row(r.getString(0),
+          Array.tabulate(n)(i => Quantiles.median(probes.map(_(i)).toArray)))
+      }(Encoders.row(ProbeRows.GeneSchema))
+      .select(col("gene"), ProbeRows.value(col("value"), sampleIds))
   }
-
-  private val GeneSchema = StructType(Seq(
-    StructField("gene", StringType, nullable = true),
-    StructField("sample_id", StringType, nullable = false),
-    StructField("value", DoubleType, nullable = true)))
 }

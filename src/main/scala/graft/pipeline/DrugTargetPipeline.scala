@@ -17,7 +17,13 @@ import graft.prep.Preprocess
 import graft.report.{Figures, Sinks}
 
 /** Configuration for one pipeline run (mirrors the reference ctor +
-  * hard-coded constants, `pipeline2.py:140-153,661,944`). */
+  * hard-coded constants, `pipeline2.py:140-153,661,944`).
+  *
+  * @param nTopGenes the network's gene count, at most
+  *   [[CoExpressionNetwork.MaxDriverGenes]] (2,000): their vectors are
+  *   collected for the pairwise correlations. A larger value fails here,
+  *   before any stage runs.
+  */
 final case class PipelineConfig(
     matrixPath: String,
     mappingCsvPath: String,
@@ -26,7 +32,11 @@ final case class PipelineConfig(
     openTargetsSnapshotPath: Option[String] = None,
     nTopGenes: Int = 500,
     corrThreshold: Double = 0.7,
-    topNValidation: Int = 20)
+    topNValidation: Int = 20) {
+  require(nTopGenes <= CoExpressionNetwork.MaxDriverGenes,
+    s"nTopGenes $nTopGenes: at most ${CoExpressionNetwork.MaxDriverGenes} " +
+      "(the network's gene vectors are collected for the correlations)")
+}
 
 final case class PipelineResult(
     differential: Option[DataFrame],
@@ -51,9 +61,14 @@ private final case class Network(top: DataFrame, edges: DataFrame,
   * come from one collect of its table; the CSV is written first, so a
   * rendering failure leaves the table on disk.
   *
-  * The normalized gene-level frame is persisted (MEMORY_AND_DISK): it feeds
-  * differential analysis AND network construction — the two heaviest
-  * consumers — so the scan/shuffle pipeline up to it runs once.
+  * The probe collapse emits gene rows, `(gene, value ARRAY<DOUBLE>)` in
+  * sample order ([[graft.geo.ProbeRows]] keyed by gene), persisted
+  * (MEMORY_AND_DISK): they feed the gene matrix sink, differential analysis
+  * AND network construction, so the scan/shuffle pipeline up to them runs
+  * once. Every per-gene statistic (Welch moments, variance, correlation)
+  * is computed over a whole vector in sample order, and every output is
+  * ordered by an explicit key, so no output depends on the partition
+  * count.
   */
 final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
 
@@ -94,7 +109,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
         s"$out/data/metadata")
     }
 
-    // Stages 2+3: preprocess + probe collapse
+    // Stages 2+3: preprocess + probe collapse into gene rows
     val genes = stage("preprocess_and_map") {
       val prepped = Preprocess.run(geo.expression, geo.sampleIds.length)
       val mapping = ProbeMapping.loadMappingCsv(spark, config.mappingCsvPath)
@@ -143,18 +158,11 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       stage("construct_network") {
         val top = CoExpressionNetwork.topGenes(g, significant, config.nTopGenes)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val corrs = CoExpressionNetwork.correlations(g, top)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val edges = CoExpressionNetwork.edges(corrs, config.corrThreshold)
-          .persist(StorageLevel.MEMORY_AND_DISK)
         val topSeq = top.collect().map(_.getString(0)).toSeq
-        Sinks.writeCsv(
-          Sinks.pivotWide(
-            corrs.select(col("g1"), col("g2"), col("corr"))
-              .unionAll(corrs.select(col("g2"), col("g1"), col("corr")))
-              .unionAll(top.select(col("gene").as("g1"), col("gene").as("g2"),
-                lit(1.0).as("corr"))),
-            "g1", "g2", "corr", topSeq),
+        val corrs = CoExpressionNetwork.pairwise(g, top)
+        val edges = CoExpressionNetwork.edges(corrs.frame(spark), config.corrThreshold)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        Sinks.writeCsv(Sinks.correlationMatrix(spark, corrs, topSeq),
           s"$out/data/correlation_matrix")
         val edgeSeq = edges.collect()
           .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
@@ -242,7 +250,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       val arms = geo.metadata.agg(count_if(col("condition") === "case"),
         count_if(col("condition") === "control")).head()
       val nProbes = geo.expression.select("probe_id").distinct().count()
-      val nGenes = genes.map(_.select("gene").distinct().count()).getOrElse(0L)
+      val nGenes = genes.map(_.count()).getOrElse(0L)
       val (nSig, nUp, nDown) = significant.map { s =>
         val r = s.agg(count(lit(1)), count_if(col("log2FC") > 0),
           count_if(col("log2FC") < 0)).head()

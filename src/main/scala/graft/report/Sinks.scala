@@ -2,16 +2,20 @@ package graft.report
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Output sinks (S8–S11, `pipeline2.py` CSV/GEXF/summary writers).
   *
   * CSV sinks coalesce to one file to match the reference's single-file
   * contract — acceptable because every sink in this pipeline is
   * aggregate-sized (metadata, DE results, centralities); the raw fact data
-  * never flows through a sink. Wide pivots happen only here, at the edge:
-  * internal representation stays long.
+  * never flows through a sink. Wide frames are built only here, at the
+  * edge: the gene matrix is a select of the gene rows' elements, the
+  * correlation matrix is filled from the computed pairs.
   */
 object Sinks {
 
@@ -19,14 +23,42 @@ object Sinks {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
-  /** Long -> wide pivot for matrix-shaped sinks (normalized / gene-mapped /
-    * correlation csv). Column order = `colOrder` (source sample order). */
+  /** Wide matrix sink frame, rows ordered by `keyCol`, one column per
+    * `colOrder` entry. Over gene rows (`value` carrying its sample ids,
+    * [[graft.geo.ProbeRows]]) it is a select of the array elements by
+    * sample id (`colCol` names nothing there). Over a long
+    * (key, column, value) frame it is a `pivot` taking each cell's value. */
   def pivotWide(long: DataFrame, keyCol: String, colCol: String,
                 valCol: String, colOrder: Seq[String]): DataFrame =
-    long.groupBy(col(keyCol))
-      .pivot(colCol, colOrder)
-      .agg(first(col(valCol)))
-      .orderBy(col(keyCol))
+    graft.geo.ProbeRows.sampleIdsOf(long) match {
+      case Some(ids) =>
+        val at = ids.zipWithIndex.toMap
+        long.select(col(keyCol) +: colOrder.map(c => col(valCol)(at(c)).as(c)): _*)
+          .orderBy(col(keyCol))
+      case None =>
+        long.groupBy(col(keyCol))
+          .pivot(colCol, colOrder)
+          .agg(first(col(valCol)))
+          .orderBy(col(keyCol))
+    }
+
+  /** The correlation-matrix sink (`pipeline2.py:705-706`): one row per
+    * gene in Spark's string order, `g1` then one column per `columns`
+    * gene, 1.0 on the diagonal, an empty cell where the correlation is
+    * null. Cells are read from the pairs already computed, no pivot. The
+    * frame is a local relation of at most top-N rows, written once and
+    * read by no later plan. */
+  def correlationMatrix(spark: SparkSession, corrs: graft.net.CoExpressionNetwork.Correlations,
+                        columns: Seq[String]): DataFrame = {
+    val idx = corrs.genes.zipWithIndex.toMap
+    val cols = columns.map(idx.get)
+    val rows = corrs.genes.indices.map { i =>
+      Row.fromSeq(corrs.genes(i) +: cols.map(_.map(corrs(i, _)).orNull))
+    }
+    spark.createDataFrame(rows.asJava,
+      StructType(StructField("g1", StringType, nullable = false) +:
+        columns.map(StructField(_, DoubleType, nullable = true))))
+  }
 
   /** S9: GEXF sink, same shape as nx.write_gexf for an undirected weighted
     * graph. Driver-side string render — the network is dimension-bounded

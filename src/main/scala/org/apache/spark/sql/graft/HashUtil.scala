@@ -167,7 +167,7 @@ object TextKernels {
   def charEntropy(s: UTF8String): Double = {
     val str = s.toString
     if (str.isEmpty) return 0.0
-    val counts = new java.util.TreeMap[Integer, Long]()
+    val counts = new java.util.TreeMap[Integer, java.lang.Long]()
     var i = 0
     var total = 0L
     while (i < str.length) {
@@ -577,11 +577,12 @@ object StatKernels {
     * (one-way ANOVA, Brown–Forsythe: P(F_{d1,d2} > f) = I_x(d2/2, d1/2)
     * with x = d2 / (d2 + d1·f)), the binomial tail, and the t tail
     * ([[tTestPValue]] is the b = 1/2 case). Null outside the support
-    * (x ∉ [0,1], a or b ≤ 0, any NaN), where scipy.special.betainc
-    * returns NaN. */
+    * (x ∉ [0,1], a or b ≤ 0 or infinite, any NaN), where
+    * scipy.special.betainc returns NaN (commons-math3's continued
+    * fraction diverges on an infinite shape). */
   def regIncBeta(x: Double, a: Double, b: Double): java.lang.Double =
     if (x.isNaN || a.isNaN || b.isNaN || x < 0.0 || x > 1.0 ||
-        a <= 0.0 || b <= 0.0) null
+        a <= 0.0 || b <= 0.0 || a.isInfinite || b.isInfinite) null
     else org.apache.commons.math3.special.Beta.regularizedBeta(x, a, b)
 
   /** Standard-normal survival P(Z > z) = erfc(z/√2)/2, the tail behind

@@ -37,6 +37,10 @@ class CollectContractSpec extends AnyFunSuite {
       (4, "figure tables (gene-grain volcano data, top-N viz and barplot " +
         "tables) through one collect-then-write helper; the top-N network " +
         "nodes and edges; the summary's limit(10) top targets"),
+    "graft/net/CoExpressionNetwork.scala" ->
+      (1, "the top-N gene vectors the pairwise correlations are computed " +
+        "from: limit(MaxDriverGenes + 1) behind a require guard " +
+        "(2,000 vectors of #samples doubles; the pipeline takes 500)"),
     "graft/prep/Ipf.scala" ->
       (3, "row/column marginal target maps + seed cells, all behind " +
         "the maxCells require guard (category-grain by contract)"),

@@ -1,26 +1,73 @@
 package graft.de
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSuite
 
 class StatsSpec extends SparkSuite {
 
-  test("welchTTest matches scipy ttest_ind(equal_var=False) on a pinned case") {
+  /** Both Welch forms over (gene, condition, value) rows of one gene: the
+    * long aggregate ([[Stats.welchTTest]]) and the row map over the gene's
+    * vector, values in row order ([[Stats.welchTTestRows]]). */
+  private def welchBoth(rows: Seq[(String, String, Double)]): Seq[Row] = {
     import spark.implicits._
+    val long = Stats.welchTTest(rows.toDF("gene", "condition", "value"),
+      Seq("gene"), "condition", "value")
+    val vector = Stats.welchTTestRows(
+      Seq((rows.head._1, rows.map(_._3))).toDF("gene", "value"), "gene", "value",
+      rows.map(_._2 == "case").toArray, rows.map(_._2 == "control").toArray)
+    assert(long.columns.toSeq == vector.columns.toSeq)
+    Seq(long.collect().head, vector.collect().head)
+  }
+
+  test("welchTTest matches scipy ttest_ind(equal_var=False) on a pinned case") {
     // case = [3.1,4.2,5.3,4.8], control = [2.0,2.5,1.8,2.2,2.4]; expected
     // values computed with an independent incomplete-beta implementation
     // (scipy semantics, tolerance 1e-9).
     val rows = Seq(3.1, 4.2, 5.3, 4.8).map(v => ("g1", "case", v)) ++
       Seq(2.0, 2.5, 1.8, 2.2, 2.4).map(v => ("g1", "control", v))
-    val df = rows.toDF("gene", "condition", "value")
-    val r = Stats.welchTTest(df, Seq("gene"), "condition", "value").collect().head
-    assert(approx(r.getAs[Double]("mean_case"), 4.35))
-    assert(approx(r.getAs[Double]("mean_control"), 2.18))
-    assert(approx(r.getAs[Double]("log2fc"), 2.17))
-    assert(approx(r.getAs[Double]("t_stat"), 4.424273929811939))
-    assert(approx(r.getAs[Double]("t_df"), 3.441202274363128))
-    assert(approx(r.getAs[Double]("pvalue"), 0.016005107446869053))
+    for (r <- welchBoth(rows)) {
+      assert(approx(r.getAs[Double]("mean_case"), 4.35))
+      assert(approx(r.getAs[Double]("mean_control"), 2.18))
+      assert(r.getAs[Long]("n_case") == 4L && r.getAs[Long]("n_control") == 5L)
+      assert(approx(r.getAs[Double]("log2fc"), 2.17))
+      assert(approx(r.getAs[Double]("t_stat"), 4.424273929811939))
+      assert(approx(r.getAs[Double]("t_df"), 3.441202274363128))
+      assert(approx(r.getAs[Double]("pvalue"), 0.016005107446869053))
+    }
+  }
+
+  test("welchTTestRows gives the aggregate's bits over one in-order " +
+    "partition: avg, var_samp and count applied in vector order") {
+    val rng = new scala.util.Random(7)
+    val ids = 0 until 11
+    val isCase = ids.map(_ % 3 != 0).toArray
+    val isControl = ids.map(_ % 3 == 0).toArray
+    val genes = (0 until 40).map { g =>
+      s"g$g" -> ids.map(i =>
+        if (g % 5 == 0 && i == 3) null           // a missing cell
+        else if (g % 7 == 0 && isControl(i) && i > 0) null   // one control value
+        else java.lang.Double.valueOf(rng.nextGaussian() * 1e3 + g))
+    }
+    val longRows = for ((g, vs) <- genes; i <- ids)
+      yield Row(g, if (isCase(i)) "case" else "control", vs(i))
+    val long = spark.createDataFrame(spark.sparkContext.parallelize(longRows, 1),
+      StructType.fromDDL("gene STRING, condition STRING, value DOUBLE"))
+    val vectors = spark.createDataFrame(spark.sparkContext.parallelize(
+        genes.map { case (g, vs) => Row(g, vs) }, 3),
+      StructType.fromDDL("gene STRING, value ARRAY<DOUBLE>"))
+    def byGene(df: DataFrame) = df.collect().map(r => r.getString(0) ->
+      r.toSeq.tail.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case o => o
+      }).toMap
+    val want = byGene(Stats.welchTTest(long, Seq("gene"), "condition", "value"))
+    val got = byGene(Stats.welchTTestRows(vectors, "gene", "value", isCase, isControl))
+    assert(got.size == 40 && got == want)
+    // the one-control-value genes: var_samp null, so t and p are null
+    assert(got("g7").last == null)
   }
 
   test("t-CDF p-values match the exact regularized incomplete beta at pinned points") {
@@ -47,26 +94,24 @@ class StatsSpec extends SparkSuite {
   }
 
   test("welch t flips sign under group swap; p unchanged") {
-    import spark.implicits._
     val rows = Seq(1.0, 2.0, 3.0).map(v => ("g", "case", v)) ++
       Seq(4.0, 5.5, 6.0, 7.0).map(v => ("g", "control", v))
-    val df = rows.toDF("gene", "condition", "value")
-    val a = Stats.welchTTest(df, Seq("gene"), "condition", "value").collect().head
-    val swapped = df.withColumn("condition",
-      when($"condition" === "case", "control").otherwise("case"))
-    val b = Stats.welchTTest(swapped, Seq("gene"), "condition", "value").collect().head
-    assert(approx(a.getAs[Double]("t_stat"), -b.getAs[Double]("t_stat")))
-    assert(approx(a.getAs[Double]("pvalue"), b.getAs[Double]("pvalue")))
+    val swapped = rows.map { case (g, c, v) =>
+      (g, if (c == "case") "control" else "case", v) }
+    for ((a, b) <- welchBoth(rows).zip(welchBoth(swapped))) {
+      assert(approx(a.getAs[Double]("t_stat"), -b.getAs[Double]("t_stat")))
+      assert(approx(a.getAs[Double]("pvalue"), b.getAs[Double]("pvalue")))
+    }
   }
 
   test("welch p null when a group is constant-free (n<2) or zero-SE") {
-    import spark.implicits._
-    val df = Seq(("g", "case", 1.0), ("g", "case", 1.0),
-      ("g", "control", 1.0), ("g", "control", 1.0)).toDF("gene", "condition", "value")
-    val r = Stats.welchTTest(df, Seq("gene"), "condition", "value").collect().head
-    // zero variance both sides -> SE 0 -> t null -> p null (scipy: NaN)
-    assert(r.isNullAt(r.fieldIndex("t_stat")))
-    assert(r.isNullAt(r.fieldIndex("pvalue")))
+    val rows = Seq(("g", "case", 1.0), ("g", "case", 1.0),
+      ("g", "control", 1.0), ("g", "control", 1.0))
+    for (r <- welchBoth(rows)) {
+      // zero variance both sides -> SE 0 -> t null -> p null (scipy: NaN)
+      assert(r.isNullAt(r.fieldIndex("t_stat")))
+      assert(r.isNullAt(r.fieldIndex("pvalue")))
+    }
   }
 
   test("bhAdjust matches statsmodels fdr_bh on a pinned case, nulls isolated") {

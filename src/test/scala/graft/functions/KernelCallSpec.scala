@@ -55,7 +55,15 @@ class KernelCallSpec extends SparkSuite {
       Double.NaN, 1L, 2L, 3L, 3000000000L, 0.0),
     // negative margins, a mismatch-length cosine
     Row("not a url", "not an url", Seq("q"), Seq(1.0, 1.0, 1.0),
-      Seq(2.0), 0.0, 1.0, 0.0, 0.5, 0.5, 1L, -1L, 2L, 10L, 8.5))
+      Seq(2.0), 0.0, 1.0, 0.0, 0.5, 0.5, 1L, -1L, 2L, 10L, 8.5),
+    // infinite shapes: +inf a, +inf b, -inf a with +inf b
+    Row("aab", "ab", Seq("a"), Seq(1.0), Seq(1.0), 1.0, 2.0, 0.5,
+      Double.PositiveInfinity, 2.0, 1L, 2L, 2L, 4L, 1.0),
+    Row("ab", "aab", Seq("b"), Seq(2.0), Seq(3.0), -1.0, 2.0, 0.5, 2.0,
+      Double.PositiveInfinity, 1L, 2L, 2L, 4L, -1.0),
+    Row("ba", "ba", Seq("c"), Seq(4.0), Seq(5.0), 3.0, 4.0, 0.25,
+      Double.NegativeInfinity, Double.PositiveInfinity, 0L, 1L, 1L, 2L,
+      2.0))
 
   /** Each stateless function once, with the kernel method its generated
     * code must call. */
@@ -151,6 +159,9 @@ class KernelCallSpec extends SparkSuite {
     assert(at(2, 2) == null) // x < 0
     assert(at(4, 2) == null) // a = 0
     assert(at(5, 2) == null) // NaN b
+    assert(at(7, 2) == null) // a = +inf
+    assert(at(8, 2) == null) // b = +inf
+    assert(at(9, 2) == null) // a = -inf, b = +inf
     assert(at(2, 3) == null) // NaN z
     assert(at(1, 3) == 1.0) // erfc(-40/sqrt 2)/2
     assert(at(1, 4) == null) // zero-norm cosine

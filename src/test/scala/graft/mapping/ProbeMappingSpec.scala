@@ -1,7 +1,7 @@
 package graft.mapping
 
 import graft.SparkSuite
-import graft.geo.LongForm
+import graft.geo.{LongForm, ProbeRows}
 
 class ProbeMappingSpec extends SparkSuite {
 
@@ -16,18 +16,26 @@ class ProbeMappingSpec extends SparkSuite {
 
   test("collapseToGenes: inner join drops unmapped; per-gene median over probes") {
     import spark.implicits._
-    val expr = LongForm.pack(spark, Seq("s1", "s2"), Seq(
-      ("p1", "s1", 1.0), ("p1", "s2", 2.0),
-      ("p2", "s1", 3.0), ("p2", "s2", 4.0),
-      ("p3", "s1", 9.0), ("p3", "s2", 9.0),   // unmapped -> dropped (F3)
-      ("p4", "s1", 5.0), ("p4", "s2", 6.0)).map { case (p, s, v) => (p, s, Some(v)) })
+    val expr = LongForm.pack(spark, Seq("s2", "s1", "s3"), Seq(
+      ("p1", "s1", Some(1.0)), ("p1", "s2", Some(2.0)), ("p1", "s3", None),
+      ("p2", "s1", Some(3.0)), ("p2", "s2", Some(4.0)), ("p2", "s3", None),
+      ("p3", "s1", Some(9.0)), ("p3", "s2", Some(9.0)),   // unmapped -> dropped (F3)
+      ("p4", "s1", Some(5.0)), ("p4", "s2", Some(6.0)), ("p4", "s3", Some(7.0))))
     val mapping = Seq(("p1", "G1"), ("p2", "G1"), ("p4", "G2"))
       .toDF("probe_id", "symbol")
-    val out = ProbeMapping.collapseToGenes(expr, mapping).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+    val genes = ProbeMapping.collapseToGenes(expr, mapping)
+    assert(genes.columns.toSeq == Seq("gene", "value"))
+    assert(ProbeRows.sampleIds(genes) == Seq("s2", "s1", "s3"))
+    val out = genes.collect().map(r =>
+      r.getString(0) -> r.getSeq[java.lang.Double](1).map(Option(_))).toMap
+    // median(2,4), median(1,3), no value at s3 -> null
     assert(out == Map(
-      ("G1", "s1") -> 2.0, ("G1", "s2") -> 3.0,   // median(1,3), median(2,4)
-      ("G2", "s1") -> 5.0, ("G2", "s2") -> 6.0))
+      "G1" -> Seq(Some(3.0), Some(2.0), None),
+      "G2" -> Seq(Some(6.0), Some(5.0), Some(7.0))))
+    assert(LongForm.expand(genes.withColumnRenamed("gene", "probe_id"))
+      .filter($"probe_id" === "G2").collect()
+      .map(r => r.getString(1) -> r.getDouble(2)).toSeq ==
+      Seq("s2" -> 6.0, "s1" -> 5.0, "s3" -> 7.0))
   }
 
   test("collapseToGenes: a frame without the sample-id metadata is rejected") {

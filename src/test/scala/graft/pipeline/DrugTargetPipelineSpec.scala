@@ -113,12 +113,72 @@ class DrugTargetPipelineSpec extends SparkSuite {
     assertGolden(out, prefix = "medium_")
   }
 
+  /** Every file a run wrote, by path under the output directory, a CSV
+    * part under its table's name (part file names carry a random id). */
+  private def outputs(outDir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(outDir)
+    val files = Files.walk(root).iterator()
+    val all = scala.collection.mutable.Map.empty[String, Seq[Byte]]
+    while (files.hasNext) {
+      val f = files.next()
+      val name = f.getFileName.toString
+      if (Files.isRegularFile(f) && !name.startsWith(".") && !name.startsWith("_")) {
+        val rel = root.relativize(f).toString
+        val key = if (name.startsWith("part-")) root.relativize(f.getParent).toString else rel
+        assert(!all.contains(key), s"two parts in $key")
+        all(key) = Files.readAllBytes(f).toSeq
+      }
+    }
+    all.toMap
+  }
+
+  test("medium fixture: every output byte-identical at 1, 4 and 200 " +
+    "shuffle partitions and with 64-byte file splits") {
+    def runWith(kv: (String, String)): Map[String, Seq[Byte]] = {
+      val old = spark.conf.getOption(kv._1)
+      spark.conf.set(kv._1, kv._2)
+      try {
+        val out = Files.createTempDirectory("graft-pipe-inv").toString
+        val result = new DrugTargetPipeline(spark, mediumConfig(out)).run()
+        assert(result.failures.isEmpty, s"$kv: ${result.failures}")
+        outputs(out)
+      } finally old match {
+        case Some(v) => spark.conf.set(kv._1, v)
+        case None => spark.conf.unset(kv._1)
+      }
+    }
+    val base = runWith("spark.sql.shuffle.partitions" -> "4")
+    assert(base.keySet.count(_.startsWith("data/")) == 12 &&
+      base.keySet.count(_.startsWith("figures/")) == 3 &&
+      base.contains("summary.txt"), base.keySet)
+    for (kv <- Seq("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.shuffle.partitions" -> "200",
+        "spark.sql.files.maxPartitionBytes" -> "64")) {
+      val got = runWith(kv)
+      assert(got.keySet == base.keySet, kv)
+      val differ = base.keySet.filter(k => got(k) != base(k))
+      assert(differ.isEmpty, s"$kv: outputs differ: ${differ.toSeq.sorted}")
+    }
+  }
+
+  test("a network larger than the collected-vector cap fails at config time") {
+    val cap = graft.net.CoExpressionNetwork.MaxDriverGenes
+    assert(mediumConfig("unused").copy(nTopGenes = cap).nTopGenes == cap)
+    val e = intercept[IllegalArgumentException](
+      mediumConfig("unused").copy(nTopGenes = cap + 1))
+    assert(e.getMessage.contains(s"nTopGenes ${cap + 1}: at most $cap"))
+  }
+
   test("degenerate: no significant genes -> variance fallback, pipeline completes") {
     val out = Files.createTempDirectory("graft-pipe2").toString
-    // all-flat expression: no significance, correlations null -> empty net
+    // no significant gene, so the network takes the top genes by variance;
+    // G1 and G2 are constant: zero variance, null correlation with every
+    // gene (empty cells), no edge. G3 and G4 move together: one edge.
     val tmp = Files.createTempDirectory("graft-fix")
     val matrix = tmp.resolve("flat.txt")
-    val rows = (1 to 4).map(i => s""""p${i}_x"\t1.0\t2.0\t1.0\t2.0""")
+    val values = Seq("1.0\t1.0\t1.0\t1.0", "2.0\t2.0\t2.0\t2.0",
+      "1.0\t2.0\t1.0\t2.0", "1.0\t2.0\t1.0\t2.0")
+    val rows = values.zipWithIndex.map { case (v, i) => s""""p${i + 1}_x"\t$v""" }
     Files.writeString(matrix,
       "!Sample_geo_accession\t\"S1\"\t\"S2\"\t\"S3\"\t\"S4\"\n" +
         "\"ID_REF\"\t\"S1\"\t\"S2\"\t\"S3\"\t\"S4\"\n" + rows.mkString("\n") + "\n")
@@ -130,13 +190,27 @@ class DrugTargetPipelineSpec extends SparkSuite {
     assert(result.failures.isEmpty,
       s"stage failures: ${result.failures.map { case (n, e) => s"$n: $e" }}")
     assert(result.targetScores.isDefined)
+    val summary = Files.readString(java.nio.file.Paths.get(s"$out/summary.txt"))
+    assert(summary.linesIterator.map(_.trim).filter(_.startsWith("Edges:")).toSeq ==
+      Seq("Edges: 1"))
+    assert(summary.contains("Significant genes: 0"))
+    // header in variance order (G3, G4 vary; G1, G2 constant, by name);
+    // rows by gene; the constant genes' off-diagonal cells are empty
+    assert(sinkCsv(out, "correlation_matrix") ==
+      """g1,G3,G4,G1,G2
+        |G1,,,1.0,
+        |G2,,,,1.0
+        |G3,1.0,1.0,,
+        |G4,1.0,1.0,,
+        |""".stripMargin)
   }
 }
 
 object DrugTargetPipelineSpec {
 
   /** The tables byte-compared against src/test/resources/golden. */
-  val goldenTables: Seq[String] = Seq("significant_genes", "network_targets",
-    "final_targets", "volcano_data", "network_viz_nodes", "network_viz_edges",
-    "top_targets_barplot")
+  val goldenTables: Seq[String] = Seq("metadata", "gene_mapped",
+    "differential_results", "correlation_matrix", "significant_genes",
+    "network_targets", "final_targets", "volcano_data", "network_viz_nodes",
+    "network_viz_edges", "top_targets_barplot")
 }

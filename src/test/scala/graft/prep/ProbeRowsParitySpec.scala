@@ -8,48 +8,67 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSuite
-import graft.geo.{GeoData, GeoMatrixReader, LongForm}
+import graft.geo.{GeoData, GeoMatrixReader, LongForm, ProbeRows}
 import graft.mapping.ProbeMapping
 
 /** Bit-exact parity of the probe-row `Preprocess.run` and
   * `ProbeMapping.collapseToGenes` with the long-layout window and
   * grouped-median plans they replaced ([[LongLayoutReference]]): every
-  * preprocessed value by its raw bits, and the collapsed frame's
-  * partition-by-partition row sequence, the order downstream sums
-  * consume it in. */
+  * preprocessed value and every collapsed (gene, sample) median by its raw
+  * bits. And the gene rows do not depend on the partitioning: the same
+  * vectors, bit for bit, at 1, 4 and 200 shuffle partitions and with the
+  * probe rows spread over 7 input partitions. */
 class ProbeRowsParitySpec extends SparkSuite {
 
-  private type Cell = (String, String, Option[Long])
+  private type Cell = (String, String)
 
   private def bits(r: Row, i: Int): Option[Long] =
     if (r.isNullAt(i)) None else Some(doubleToRawLongBits(r.getDouble(i)))
 
-  /** Row sequence of every partition of `df` once persisted, as the
-    * pipeline persists the collapsed genes. */
-  private def layout(df: DataFrame): Seq[Seq[Cell]] = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try p.rdd.glom().collect().toSeq
-      .map(_.toSeq.map(r => (r.getString(0), r.getString(1), bits(r, 2))))
-    finally p.unpersist()
+  /** (gene, sample) -> value bits of a long frame. */
+  private def cells(long: DataFrame): Map[Cell, Option[Long]] =
+    long.collect().map(r => (r.getString(0), r.getString(1)) -> bits(r, 2)).toMap
+
+  /** Gene rows by gene, each vector by its raw bits. */
+  private def geneBits(genes: DataFrame): Map[String, Seq[Option[Long]]] =
+    genes.collect().map(r => r.getString(0) -> r.getSeq[java.lang.Double](1)
+      .map(v => Option(v).map(x => doubleToRawLongBits(x)))).toMap
+
+  private def withPartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
   }
 
-  /** Asserts preprocess parity and returns both collapsed layouts
-    * (probe rows, long-layout reference). */
-  private def parity(geo: GeoData, mapping: DataFrame): (Seq[Seq[Cell]], Seq[Seq[Cell]]) = {
+  /** Asserts preprocess and collapse parity with the long-layout plans and
+    * that the gene rows are the same under every partitioning tried. */
+  private def parity(geo: GeoData, mapping: DataFrame): Unit = {
     geo.expression.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = geo.sampleIds.length
       val prepped = Preprocess.run(geo.expression, n)
       val reference = LongLayoutReference.preprocess(
         LongForm.expand(geo.expression), n)
-      val got = LongForm.expand(prepped).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> bits(r, 2)).toMap
-      val want = reference.collect()
-        .map(r => (r.getString(0), r.getString(1)) -> bits(r, 2)).toMap
-      assert(got.size == want.size && got.nonEmpty)
-      assert(got == want, "preprocessed values differ from the window plan")
-      (layout(ProbeMapping.collapseToGenes(prepped, mapping)),
-        layout(LongLayoutReference.collapse(reference, mapping)))
+      val got = cells(LongForm.expand(prepped))
+      assert(got.size == reference.count() && got.nonEmpty)
+      assert(got == cells(reference), "preprocessed values differ from the window plan")
+
+      val genes = ProbeMapping.collapseToGenes(prepped, mapping)
+      assert(ProbeRows.sampleIds(genes) == geo.sampleIds)
+      val want = cells(LongLayoutReference.collapse(reference, mapping))
+      val collapsed = cells(LongForm.expand(genes.withColumnRenamed("gene", "probe_id")))
+      assert(collapsed.nonEmpty && collapsed == want,
+        "collapsed medians differ from the grouped median")
+
+      val base = geneBits(genes)
+      for (p <- Seq(1, 4, 200)) withPartitions(p) {
+        assert(geneBits(ProbeMapping.collapseToGenes(prepped, mapping)) == base,
+          s"gene rows differ at $p shuffle partitions")
+      }
+      val spread = Preprocess.run(geo.expression.repartition(7), n)
+      assert(geneBits(ProbeMapping.collapseToGenes(spread, mapping)) == base,
+        "gene rows differ with the probe rows over 7 input partitions")
     } finally geo.expression.unpersist()
   }
 
@@ -59,21 +78,13 @@ class ProbeRowsParitySpec extends SparkSuite {
 
   test("medium fixture: bit-identical values and partition layout") {
     val (geo, mapping) = fixture("medium")
-    val (got, want) = parity(geo, mapping)
-    assert(got == want)
+    parity(geo, mapping)
   }
 
   test("tiny fixture: bit-identical values; each gene's rows in the same " +
     "partition and order") {
-    // 12 (gene, sample) keys: the grouped median's partitions hold fewer
-    // than its sort-based fallback's 128 keys and come out in hash-map
-    // insertion order, which interleaves genes differently from the
-    // sorted layout. Per-gene sums see only the per-gene order.
     val (geo, mapping) = fixture("tiny")
-    val (got, want) = parity(geo, mapping)
-    def byGene(l: Seq[Seq[Cell]]) = l.map(_.groupBy(_._1))
-    assert(got.length == want.length)
-    assert(byGene(got) == byGene(want))
+    parity(geo, mapping)
   }
 
   /** A GEO matrix over GSM1..GSM12 (non-lexical ids) with its mapping:
@@ -129,10 +140,7 @@ class ProbeRowsParitySpec extends SparkSuite {
       "with > 128 keys per partition and non-lexical sample ids") {
       val (geo, mapping) = generated(seed = if (logBranch) 2 else 1, logBranch)
       assert(geo.sampleIds.sorted != geo.sampleIds)
-      val (got, want) = parity(geo, mapping)
-      assert(want.forall(_.length > 128),
-        s"partition sizes ${want.map(_.length)}")
-      assert(got == want)
+      parity(geo, mapping)
     }
   }
 }
