@@ -5,8 +5,10 @@ import scala.collection.mutable
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graph centrality kernels (G2–G4, `pipeline2.py:747-749`), networkx
   * numeric parity.
@@ -18,6 +20,14 @@ import org.apache.spark.sql.types._
   * distributes its per-source Brandes passes over the cluster (source
   * vertices are an RDD; adjacency is a broadcast), which is the standard
   * scale-out for exact betweenness: embarrassingly parallel per source.
+  *
+  * The pipeline's network is already on the driver when it is scored, so
+  * [[networkScores]] computes all three centralities and the composite
+  * score there, with no Spark job: the same Brandes slices, loop and merge
+  * order as [[betweennessCentrality]], the same power iteration as
+  * [[eigenvectorCentrality]]'s driver branch, and the arithmetic of
+  * [[degreeCentrality]] and [[compositeScores]], so its rows carry the
+  * bits of the frame composition `deg ⋈ btw ⋈ eig → compositeScores`.
   */
 object Centrality {
 
@@ -25,7 +35,12 @@ object Centrality {
     * add_node, never in an edge) get 0. Matches nx.Graph edge semantics:
     * parallel/bidirectional duplicates collapse to one edge and
     * self-loops are dropped; a single-node graph scores 1 (nx
-    * special-cases len(G) <= 1). */
+    * special-cases len(G) <= 1). An edge to a node outside `nodes`
+    * still counts for its known endpoint.
+    *
+    * The pipeline scores its network with [[networkScores]]; this frame
+    * form's callers are the benchmark's traced pipeline and the specs,
+    * and it goes with that mirror. */
   def degreeCentrality(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val n = nodes.count()
     if (n <= 1)
@@ -43,22 +58,29 @@ object Centrality {
         (coalesce(col("__deg"), lit(0L)) / denom).as("degree_centrality"))
   }
 
-  /** The collected (gene) node rows and (src, dst) edge rows as node
-    * names in collected order and an undirected adjacency by node
-    * index: sorted, distinct, no self-loops, edges to unknown nodes
+  /** An undirected adjacency by node index over `nodes` in the given
+    * order: sorted, distinct, no self-loops, edges to unknown nodes
     * dropped. */
-  private def indexGraph(nodeRows: Array[Row], edgeRows: Array[Row])
-      : (Seq[String], Array[Array[Int]]) = {
-    val nodes = nodeRows.map(_.getString(0)).toSeq
+  private def adjacency(nodes: Seq[String], edges: Iterator[(String, String)])
+      : Array[Array[Int]] = {
     val idx = nodes.zipWithIndex.toMap
     val adj = Array.fill(nodes.length)(mutable.ArrayBuffer.empty[Int])
-    edgeRows.foreach { r =>
-      (idx.get(r.getString(0)), idx.get(r.getString(1))) match {
+    edges.foreach { case (s, d) =>
+      (idx.get(s), idx.get(d)) match {
         case (Some(i), Some(j)) if i != j => adj(i) += j; adj(j) += i
         case _ => ()
       }
     }
-    (nodes, adj.map(_.distinct.sorted.toArray))
+    adj.map(_.distinct.sorted.toArray)
+  }
+
+  /** The collected (gene) node rows and (src, dst) edge rows as node
+    * names in collected order and their [[adjacency]]. */
+  private def indexGraph(nodeRows: Array[Row], edgeRows: Array[Row])
+      : (Seq[String], Array[Array[Int]]) = {
+    val nodes = nodeRows.map(_.getString(0)).toSeq
+    (nodes, adjacency(nodes,
+      edgeRows.iterator.map(r => (r.getString(0), r.getString(1)))))
   }
 
   /** The (gene) node and (src, dst) edge rows of an unweighted graph
@@ -71,14 +93,20 @@ object Centrality {
 
   /** G3: exact betweenness centrality, Brandes' algorithm, unweighted,
     * normalized — matches `nx.betweenness_centrality(G)` defaults. The
-    * per-source BFS passes run distributed: sources are parallelized,
-    * adjacency broadcast, partial dependency vectors summed.
+    * per-source BFS passes run distributed: sources are parallelized
+    * ([[brandesSlices]] of them), adjacency broadcast, and each slice's
+    * [[brandes]] vector summed in partition order.
     *
     * `sampleSources = Some(k)` switches to the Brandes–Pich estimator:
     * k evenly-spread source vertices, dependencies scaled by n/k — the
     * scale path when exact O(V·E) is too much (sampling error
     * ~O(1/sqrt(k)); with k >= n it is exact). Deterministic source
     * choice (every n/k-th vertex in key order), never random.
+    *
+    * The pipeline scores its network with [[networkScores]], which runs
+    * the same slices, loop and merge on the driver; this frame form
+    * serves the catalog (`CatalogDomain`) and the benchmark's traced
+    * pipeline.
     */
   def betweennessCentrality(spark: SparkSession, nodes: DataFrame,
                             edges: DataFrame,
@@ -108,54 +136,11 @@ object Centrality {
         (0 until k).map(i => (i * step).toInt).distinct
       case _ => 0 until n
     }
-    val estimatorScale = n.toDouble / sources.length
-
     val perPartition = spark.sparkContext
-      .parallelize(sources, math.min(math.max(sources.length / 16, 1), 256))
-      .mapPartitions { sources =>
-        val a = bcAdj.value
-        val nn = a.length
-        val acc = new Array[Double](nn)
-        sources.foreach { s =>
-          // Brandes single-source shortest-path accumulation
-          val sigma = new Array[Double](nn)
-          val dist = Array.fill(nn)(-1)
-          val delta = new Array[Double](nn)
-          val preds = Array.fill(nn)(mutable.ArrayBuffer.empty[Int])
-          val stack = mutable.ArrayBuffer.empty[Int]
-          val queue = mutable.Queue.empty[Int]
-          sigma(s) = 1.0; dist(s) = 0; queue.enqueue(s)
-          while (queue.nonEmpty) {
-            val v = queue.dequeue()
-            stack += v
-            var k = 0
-            val nbrs = a(v)
-            while (k < nbrs.length) {
-              val w = nbrs(k)
-              if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
-              if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); preds(w) += v }
-              k += 1
-            }
-          }
-          var i = stack.length - 1
-          while (i >= 0) {
-            val w = stack(i)
-            preds(w).foreach { v =>
-              delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
-            }
-            if (w != s) acc(w) += delta(w)
-            i -= 1
-          }
-        }
-        Iterator.single(acc)
-      }
+      .parallelize(sources, brandesSlices(sources.length))
+      .mapPartitions(ss => Iterator.single(brandes(bcAdj.value, ss)))
     val partial = sumInPartitionOrder(perPartition)
-
-    // nx _rescale, normalized=True, undirected: scale = 1/((n-1)(n-2)) over
-    // the double-counted raw sums; identity for n <= 2. The estimator
-    // scale (n/k) corrects for sampled sources (1.0 when exact).
-    val scale =
-      (if (n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0) * estimatorScale
+    val scale = betweennessScale(n, sources.length)
     val rows = nodeSeq.zipWithIndex.map { case (g, i) =>
       Row(g, partial(i) * scale)
     }
@@ -164,25 +149,91 @@ object Centrality {
         StructField("betweenness_centrality", DoubleType, nullable = false))))
   }
 
-  /** The element-wise sum of one vector per partition, grouped as
-    * `treeReduce` (depth 2) groups it: at each level partition i goes to
-    * key i mod the level's partition count, and at most about √P vectors
-    * reach the driver. Every merge runs in ascending partition index, so
-    * the sum does not depend on shuffle fetch or task completion order
-    * (`treeReduce` folds the task results on the driver in completion
-    * order, which moved the last bits of betweenness between reruns). */
+  /** How many slices betweenness cuts its sources into: 16 sources per
+    * slice, between 1 and 256 slices. */
+  private[graph] def brandesSlices(nSources: Int): Int =
+    math.min(math.max(nSources / 16, 1), 256)
+
+  /** The slices `SparkContext.parallelize(0 until n, k)` cuts: slice i
+    * holds sources [i·n/k, (i+1)·n/k). */
+  private[graph] def sourceSlices(n: Int, k: Int): IndexedSeq[Range] =
+    (0 until k).map(i => ((i.toLong * n) / k).toInt until (((i + 1L) * n) / k).toInt)
+
+  /** nx _rescale, normalized=True, undirected: 1/((n-1)(n-2)) over the
+    * double-counted raw sums, identity for n <= 2, times the estimator
+    * scale n/k for k sampled sources (1.0 when exact). */
+  private def betweennessScale(n: Int, nSources: Int): Double =
+    (if (n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0) * (n.toDouble / nSources)
+
+  /** Brandes' single-source shortest-path accumulation for each of
+    * `sources` in turn, summed into one node-length vector: the work of
+    * one betweenness slice. */
+  private[graph] def brandes(adj: Array[Array[Int]], sources: Iterator[Int])
+      : Array[Double] = {
+    val nn = adj.length
+    val acc = new Array[Double](nn)
+    sources.foreach { s =>
+      val sigma = new Array[Double](nn)
+      val dist = Array.fill(nn)(-1)
+      val delta = new Array[Double](nn)
+      val preds = Array.fill(nn)(mutable.ArrayBuffer.empty[Int])
+      val stack = mutable.ArrayBuffer.empty[Int]
+      val queue = mutable.Queue.empty[Int]
+      sigma(s) = 1.0; dist(s) = 0; queue.enqueue(s)
+      while (queue.nonEmpty) {
+        val v = queue.dequeue()
+        stack += v
+        var k = 0
+        val nbrs = adj(v)
+        while (k < nbrs.length) {
+          val w = nbrs(k)
+          if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
+          if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); preds(w) += v }
+          k += 1
+        }
+      }
+      var i = stack.length - 1
+      while (i >= 0) {
+        val w = stack(i)
+        preds(w).foreach { v =>
+          delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
+        }
+        if (w != s) acc(w) += delta(w)
+        i -= 1
+      }
+    }
+    acc
+  }
+
+  /** The widths of the merge levels for `p` per-partition vectors,
+    * grouped as `treeReduce` (depth 2) groups them: the level count
+    * shrinks by ⌈√p⌉ while that saves work, so at most about √p vectors
+    * are left for the last merge. */
+  private[graph] def mergeWidths(p: Int): Seq[Int] = {
+    val scale = math.max(math.ceil(math.sqrt(p)).toInt, 2)
+    Iterator.iterate(p)(_ / scale)
+      .takeWhile(w => w > scale + math.ceil(w.toDouble / scale)).map(_ / scale)
+      .toSeq
+  }
+
+  /** Element-wise sum of (index, vector) pairs in ascending index,
+    * accumulated into the first vector. */
+  private def merged(vs: Iterator[(Int, Array[Double])]): Array[Double] =
+    vs.toSeq.sortBy(_._1).map(_._2).reduceLeft { (x, y) =>
+      var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x
+    }
+
+  /** The element-wise sum of one vector per partition, over the
+    * [[mergeWidths]] levels: at each level partition i goes to key i mod
+    * the level's width. Every merge runs in ascending partition index,
+    * so the sum does not depend on shuffle fetch or task completion
+    * order (`treeReduce` folds the task results on the driver in
+    * completion order, which moved the last bits of betweenness between
+    * reruns). [[sumInOrder]] is the same merge over local vectors. */
   private def sumInPartitionOrder(parts: RDD[Array[Double]])
       : Array[Double] = {
-    def merged(vs: Iterator[(Int, Array[Double])]): Array[Double] =
-      vs.toSeq.sortBy(_._1).map(_._2).reduceLeft { (x, y) =>
-        var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x
-      }
     var level = parts.mapPartitionsWithIndex((i, vs) => vs.map(i -> _))
-    var width = level.getNumPartitions
-    val scale = math.max(math.ceil(math.sqrt(width)).toInt, 2)
-    while (width > scale + math.ceil(width.toDouble / scale)) {
-      width /= scale
-      val w = width
+    mergeWidths(level.getNumPartitions).foreach { w =>
       level = level.map { case (i, v) => (i % w, (i, v)) }
         .partitionBy(new HashPartitioner(w))
         .mapPartitionsWithIndex { (k, vs) =>
@@ -193,6 +244,18 @@ object Centrality {
     merged(level.collect().iterator)
   }
 
+  /** [[sumInPartitionOrder]] over vectors already on the driver, vector
+    * i standing for partition i: the same levels, groups and order, so
+    * the same bits. */
+  private[graph] def sumInOrder(parts: Seq[Array[Double]]): Array[Double] = {
+    var level = parts.zipWithIndex.map(_.swap)
+    mergeWidths(parts.length).foreach { w =>
+      level = level.groupBy(_._1 % w).toSeq.sortBy(_._1)
+        .map { case (k, vs) => k -> merged(vs.iterator) }
+    }
+    merged(level.iterator)
+  }
+
   /** G4: eigenvector centrality, nx semantics: power iteration on (I + A)
     * from x = 1/n, L2-normalized each step, stop when sum|Δ| < n·tol.
     * Throws IllegalStateException past maxIter like nx's
@@ -200,10 +263,13 @@ object Centrality {
     * zero-filled frame (G7, `pipeline2.py:778-792`).
     *
     * Dispatches on graph size: below `distributedThreshold` nodes the
-    * collected driver loop runs (exact, no per-iteration job overhead);
-    * above it the iteration runs as a distributed DataFrame loop
-    * ([[eigenvectorCentralityDistributed]]) that never collects the
-    * graph.
+    * collected driver loop runs ([[eigenvector]]: exact, no
+    * per-iteration job overhead); above it the iteration runs as a
+    * distributed DataFrame loop ([[eigenvectorCentralityDistributed]])
+    * that never collects the graph. The pipeline scores its network
+    * with [[networkScores]] (the same driver loop); this frame form
+    * serves the catalog (`CatalogDomain`) and the benchmark's traced
+    * pipeline.
     */
   def eigenvectorCentrality(spark: SparkSession, nodes: DataFrame,
                             edges: DataFrame, maxIter: Int = 1000,
@@ -214,19 +280,22 @@ object Centrality {
     // driver path collects the edge list (see pageRank's dispatch note)
     collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
       case Some((nodeRows, edgeRows)) =>
-        eigenvectorDriverImpl(spark, nodeRows, edgeRows, maxIter, tol)
+        val (nodeSeq, adj) = indexGraph(nodeRows, edgeRows)
+        val x = eigenvector(adj, maxIter, tol)
+        val rows = nodeSeq.zipWithIndex.map { case (g, i) => Row(g, x(i)) }
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+          StructType(Seq(StructField("gene", StringType, nullable = false),
+            StructField("eigenvector_centrality", DoubleType, nullable = false))))
       case None => graft.util.Pin.pinned(nodes, edges) {
         eigenvectorCentralityDistributed(spark, nodes, edges, maxIter, tol)
       }
     }
 
-  private def eigenvectorDriverImpl(spark: SparkSession,
-                                    nodeRows: Array[Row],
-                                    edgeRows: Array[Row], maxIter: Int,
-                                    tol: Double): DataFrame = {
-    val (nodeSeq, adj) = indexGraph(nodeRows, edgeRows)
-    val n = nodeSeq.length
-
+  /** The driver power iteration of [[eigenvectorCentrality]] over an
+    * [[adjacency]]: scores by node index. */
+  private def eigenvector(adj: Array[Array[Int]], maxIter: Int,
+                          tol: Double): Array[Double] = {
+    val n = adj.length
     var x = Array.fill(n)(1.0 / n)
     var converged = false
     var iter = 0
@@ -254,11 +323,7 @@ object Centrality {
     if (!converged && n > 0)
       throw new IllegalStateException(
         s"eigenvector centrality failed to converge in $maxIter iterations")
-
-    val rows = nodeSeq.zipWithIndex.map { case (g, i) => Row(g, x(i)) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(StructField("gene", StringType, nullable = false),
-        StructField("eigenvector_centrality", DoubleType, nullable = false))))
+    x
   }
 
   /** G4 at scale: the same (I + A) power iteration as a distributed
@@ -699,7 +764,11 @@ object Centrality {
     * MinMaxScaler: zero range -> 0) and average them into the composite
     * score (`pipeline2.py:758-769`), sorted descending with gene as the
     * deterministic tiebreak. Global min/max come from a 1-row aggregate
-    * cross join — no single-partition window. */
+    * cross join — no single-partition window.
+    *
+    * The pipeline scores its network with [[networkScores]]; this frame
+    * form's callers are the benchmark's traced pipeline and the specs,
+    * and it goes with that mirror. */
   def compositeScores(centralities: DataFrame): DataFrame = {
     val cols = Seq("degree_centrality", "betweenness_centrality",
       "eigenvector_centrality")
@@ -718,5 +787,67 @@ object Centrality {
         (col("degree_centrality") + col("betweenness_centrality") +
           col("eigenvector_centrality")) / 3)
       .orderBy(col("composite_score").desc, col("gene"))
+  }
+
+  /** The columns of [[networkScores]]'s rows: the min-max normalized
+    * centralities and the composite score, as [[compositeScores]] names
+    * them. */
+  val ScoreSchema: StructType = StructType(
+    StructField("gene", StringType, nullable = false) +:
+      Seq("degree_centrality", "betweenness_centrality",
+        "eigenvector_centrality", "composite_score")
+        .map(StructField(_, DoubleType, nullable = false)))
+
+  /** G2–G4 + A14/A15 on a graph already on the driver: one row per node,
+    * `(gene, degree, betweenness, eigenvector, composite)` in
+    * [[ScoreSchema]], sorted by composite descending, then gene, in
+    * Spark's order (the double compare; `UTF8String` byte order). The
+    * bits equal the frame composition
+    * `compositeScores(deg ⋈ btw ⋈ eig)` over the same graph with the
+    * nodes collected in the order given:
+    *   - degree: distinct neighbours over (n − 1), a long over a double;
+    *   - betweenness: the sources `0 until n` cut into
+    *     [[brandesSlices]] slices as `parallelize` cuts them, one
+    *     [[brandes]] vector per slice, summed in [[sumInPartitionOrder]]'s
+    *     grouping ([[sumInOrder]]);
+    *   - eigenvector: the driver power iteration (default `maxIter` and
+    *     `tol`); non-convergence throws the same IllegalStateException;
+    *   - composite: min-max per column (zero range → 0), then the mean
+    *     of the three.
+    *
+    * Edges are undirected (src, dst) pairs; duplicates, self-loops and
+    * edges to unknown nodes are dropped. No size decision is made here:
+    * the caller holds the graph already (the pipeline's is bounded by
+    * [[graft.net.CoExpressionNetwork.MaxDriverGenes]] nodes), so
+    * `SPARK_GRAFT_FORCE_DISPATCH` does not reach it. */
+  def networkScores(nodes: IndexedSeq[String],
+                    edges: Seq[(String, String, Double)]): IndexedSeq[Row] = {
+    val n = nodes.length
+    val adj = adjacency(nodes, edges.iterator.map(e => (e._1, e._2)))
+    val degree =
+      if (n <= 1) Array.fill(n)(1.0)
+      else { val denom = (n - 1L).toDouble; adj.map(_.length.toLong / denom) }
+    val scale = betweennessScale(n, n)
+    val betweenness = sumInOrder(sourceSlices(n, brandesSlices(n))
+      .map(slice => brandes(adj, slice.iterator))).map(_ * scale)
+    val cols = Seq(degree, betweenness, eigenvector(adj, 1000, 1e-6)).map { c =>
+      val lo = c.reduceOption((a, b) => if (SQLOrderingUtil.compareDoubles(b, a) < 0) b else a)
+      val hi = c.reduceOption((a, b) => if (SQLOrderingUtil.compareDoubles(b, a) > 0) b else a)
+      (lo, hi) match {
+        case (Some(mn), Some(mx)) =>
+          val range = mx - mn
+          c.map(v => if (range == 0.0) 0.0 else (v - mn) / range)
+        case _ => c
+      }
+    }
+    val Seq(d, b, e) = cols
+    nodes.indices
+      .map(i => Row(nodes(i), d(i), b(i), e(i), (d(i) + b(i) + e(i)) / 3))
+      .sortWith { (x, y) =>
+        val byScore = SQLOrderingUtil.compareDoubles(y.getDouble(4), x.getDouble(4))
+        if (byScore != 0) byScore < 0
+        else UTF8String.fromString(x.getString(0))
+          .compareTo(UTF8String.fromString(y.getString(0))) < 0
+      }
   }
 }

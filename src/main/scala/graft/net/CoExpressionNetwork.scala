@@ -1,6 +1,7 @@
 package graft.net
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,6 +23,11 @@ object CoExpressionNetwork {
     * gene as the deterministic tiebreak (pandas stable sort,
     * `pipeline2.py:684-685`). Membership in the expression data (F8) is
     * enforced by construction (both branches derive from it).
+    *
+    * The pipeline takes its significant branch from the significant rows
+    * it already holds (the first `n`, in gene order) and calls this only
+    * with `None`; the significant branch here serves the benchmark's
+    * traced pipeline and the specs.
     *
     * @param geneExpr gene rows, `(gene, value ARRAY<DOUBLE>)`
     */
@@ -58,6 +64,10 @@ object CoExpressionNetwork {
     * Output: (g1, g2, corr) for g1 < g2, in (g1, g2) order, from
     * [[pairwise]]. A constant gene has a null corr (pandas NaN) and falls
     * out of the edge threshold.
+    *
+    * The pipeline reads the pairs from [[pairwise]] directly (matrix and
+    * edges); this frame form's callers are the benchmark's traced
+    * pipeline and the specs, and it goes with that mirror.
     *
     * @param geneExpr gene rows, `(gene, value ARRAY<DOUBLE>)`
     */
@@ -117,7 +127,12 @@ object CoExpressionNetwork {
       .select("src", "dst", "weight")
 
   /** G1: undirected weighted edges where |corr| > threshold
-    * (`pipeline2.py:712-716`; weight = |corr|). */
+    * (`pipeline2.py:712-716`; weight = |corr|).
+    *
+    * The pipeline takes its edges from [[Correlations.edges]], the same
+    * list in the same order over the computed pairs; this frame form's
+    * callers are the benchmark's traced pipeline and the specs, and it
+    * goes with that mirror. */
   def edges(correlations: DataFrame, threshold: Double = 0.7): DataFrame =
     correlations
       .filter(abs(col("corr")) > threshold)
@@ -140,6 +155,17 @@ object CoExpressionNetwork {
       out
     }
     private def at(i: Int, j: Int): Int = i * n - i * (i + 1) / 2 + (j - i - 1)
+
+    /** G1 over the computed pairs: (g1, g2, |corr|) for every pair with
+      * |corr| > threshold, in (g1, g2) order — the rows, in the order,
+      * that collecting `edges(frame(spark), threshold)` gives (a null
+      * corr never passes; the compare is Spark's double compare). */
+    def edges(threshold: Double): IndexedSeq[(String, String, Double)] =
+      for {
+        i <- 0 until n; j <- i + 1 until n
+        c = upper(at(i, j)) if c != null
+        w = math.abs(c.doubleValue) if SQLOrderingUtil.compareDoubles(w, threshold) > 0
+      } yield (genes(i), genes(j), w)
 
     /** corr(genes(i), genes(j)); 1.0 on the diagonal. */
     def apply(i: Int, j: Int): java.lang.Double =

@@ -4,7 +4,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.de.DifferentialExpression
@@ -46,10 +48,11 @@ final case class PipelineResult(
     failures: Seq[(String, Throwable)],
     stageSeconds: Seq[(String, Double)] = Seq.empty)
 
-/** `construct_network`'s persisted frames, with the names and edge count
-  * it collected for the GEXF (reused by the later stages). */
-private final case class Network(top: DataFrame, edges: DataFrame,
-                                 nodes: Seq[String], nEdges: Long)
+/** `construct_network`'s graph: the top-N gene names, in the order the
+  * network indexes them, and the edges (g1, g2, |corr|) in (g1, g2)
+  * order. */
+private final case class Network(nodes: IndexedSeq[String],
+                                 edges: Seq[(String, String, Double)])
 
 /** The nine-stage DAG (E1, `pipeline2.py:1148-1230`) as lazy Catalyst plans
   * materialized at each sink, with the reference's per-stage error isolation:
@@ -57,9 +60,11 @@ private final case class Network(top: DataFrame, edges: DataFrame,
   * Stages: `metadata_sink`, `preprocess_and_map`, `differential_analysis`,
   * `figure_volcano`, `significant_genes`, `construct_network`,
   * `analyze_network`, `figure_network`, `figure_barplot`, `validate_targets`
-  * (with both snapshots), `summary_report`. A figure stage's CSV and PNG
-  * come from one collect of its table; the CSV is written first, so a
-  * rendering failure leaves the table on disk.
+  * (with both snapshots), `summary_report`. Each stage runs with the Spark
+  * local property [[DrugTargetPipeline.StageProperty]] set to its name, so
+  * a listener can charge jobs to stages. A figure stage's CSV and PNG
+  * come from one set of rows; the CSV is written first, so a rendering
+  * failure leaves the table on disk.
   *
   * The probe collapse emits gene rows, `(gene, value ARRAY<DOUBLE>)` in
   * sample order ([[graft.geo.ProbeRows]] keyed by gene), persisted
@@ -69,6 +74,18 @@ private final case class Network(top: DataFrame, edges: DataFrame,
   * is computed over a whole vector in sample order, and every output is
   * ordered by an explicit key, so no output depends on the partition
   * count.
+  *
+  * From `significant_genes` on, every table is bounded by the gene count
+  * or by top-N and is computed from rows the driver already holds: the
+  * significant table is collected once (it gives the network's genes and
+  * the summary's counts), the pairs, edges, centralities and composite
+  * scores are computed on the driver ([[CoExpressionNetwork.pairwise]],
+  * [[Centrality.networkScores]]), and the network, figure and summary
+  * tables are cut from those rows. Spark jobs there are the CSV writes,
+  * the significant-table collect, the top-vector collect (plus the
+  * variance ranking when no gene is significant), the target validation
+  * and the summary's counts over the matrix (distinct probes, genes,
+  * sample arms).
   */
 final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
 
@@ -76,24 +93,30 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
   private val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
 
   private def stage[T](name: String)(body: => T): Option[T] = {
+    val sc = spark.sparkContext
     val t0 = System.nanoTime()
+    sc.setLocalProperty(DrugTargetPipeline.StageProperty, name)
     val out =
       try Some(body)
       catch {
         case NonFatal(e) =>
           failures += name -> e
           None
-      }
+      } finally sc.setLocalProperty(DrugTargetPipeline.StageProperty, null)
     timings += name -> (System.nanoTime() - t0) / 1e9
     out
   }
 
-  /** Collects a figure table (gene- or top-N-bounded), writes its CSV. */
-  private def writeCollected(table: DataFrame, path: String): Seq[Row] = {
-    val rows = table.collect().toSeq
-    Sinks.writeCsv(spark.createDataFrame(rows.asJava, table.schema), path)
+  /** Writes a bounded table's rows, already on the driver, as its CSV. */
+  private def writeRows(rows: Seq[Row], schema: StructType,
+                        path: String): Seq[Row] = {
+    Sinks.writeCsv(spark.createDataFrame(rows.asJava, schema), path)
     rows
   }
+
+  /** Collects a gene- or top-N-bounded table, writes its CSV. */
+  private def writeCollected(table: DataFrame, path: String): Seq[Row] =
+    writeRows(table.collect().toSeq, table.schema, path)
 
   def run(): PipelineResult = {
     val out = config.outputDir
@@ -145,81 +168,69 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
           s"$out/figures/volcano_plot.png")
       }
     }
+    // the significant table, in gene order, collected once: it gives the
+    // network's genes and the summary's counts
     val significant = differential.flatMap { d =>
       stage("significant_genes") {
         val sig = DifferentialExpression.significant(d)
-        Sinks.writeCsv(sig.orderBy("gene"), s"$out/data/significant_genes")
-        sig
+        (sig, writeCollected(sig.orderBy("gene"), s"$out/data/significant_genes"))
       }
     }
+    val sigRows = significant.map(_._2)
 
-    // Stage 5: network construction
+    // Stage 5: network construction. The network's genes are the first
+    // nTopGenes significant rows (gene order; significant genes are gene
+    // rows by construction), else the top genes by variance (A9).
     val network = genes.flatMap { g =>
       stage("construct_network") {
-        val top = CoExpressionNetwork.topGenes(g, significant, config.nTopGenes)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val topSeq = top.collect().map(_.getString(0)).toSeq
-        val corrs = CoExpressionNetwork.pairwise(g, top)
-        val edges = CoExpressionNetwork.edges(corrs.frame(spark), config.corrThreshold)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val topSeq = sigRows.filter(_.nonEmpty) match {
+          case Some(rows) => rows.take(config.nTopGenes).map(_.getAs[String]("gene"))
+          case None => CoExpressionNetwork.topGenes(g, None, config.nTopGenes)
+            .collect().map(_.getString(0)).toSeq
+        }
+        import spark.implicits._
+        val corrs = CoExpressionNetwork.pairwise(g, topSeq.toDF("gene"))
+        val edges = corrs.edges(config.corrThreshold)
         Sinks.writeCsv(Sinks.correlationMatrix(spark, corrs, topSeq),
           s"$out/data/correlation_matrix")
-        val edgeSeq = edges.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
-        Sinks.writeGexf(topSeq, edgeSeq, s"$out/data/gene_network.gexf")
-        Network(top, edges, topSeq, edgeSeq.size.toLong)
+        Sinks.writeGexf(topSeq, edges, s"$out/data/gene_network.gexf")
+        Network(topSeq.toIndexedSeq, edges)
       }
     }
 
-    // Stage 6: centrality analysis (G7 guards: < 2 nodes -> zero frame)
-    val targetScores = network.flatMap { net =>
+    // Stage 6: centrality analysis on the driver (G7 guards: < 2 nodes ->
+    // zero rows)
+    val scores = network.flatMap { net =>
       stage("analyze_network") {
-        val scores =
-          if (net.nodes.size < 2) {
-            import spark.implicits._
+        val rows =
+          if (net.nodes.size < 2)
             (if (net.nodes.isEmpty) Seq("PLACEHOLDER") else net.nodes)
-              .map((_, 0.0, 0.0, 0.0, 0.0))
-              .toDF("gene", "degree_centrality", "betweenness_centrality",
-                "eigenvector_centrality", "composite_score")
-          } else {
-            val nodes = net.top.select("gene")
-            val deg = Centrality.degreeCentrality(nodes, net.edges)
-            val btw = Centrality.betweennessCentrality(spark, nodes, net.edges)
-            val eig = Centrality.eigenvectorCentrality(spark, nodes, net.edges)
-            Centrality.compositeScores(
-              deg.join(btw, Seq("gene")).join(eig, Seq("gene")))
-          }
-        // persist BEFORE the sink write: the write materializes the cache,
-        // so the figure-data and summary stages reuse the centralities
-        // instead of recomputing Brandes + power iteration
-        val persisted = scores.persist(StorageLevel.MEMORY_AND_DISK)
-        Sinks.writeCsv(persisted, s"$out/data/network_targets")
-        persisted
+              .map(Row(_, 0.0, 0.0, 0.0, 0.0))
+          else Centrality.networkScores(net.nodes, net.edges)
+        writeRows(rows, Centrality.ScoreSchema, s"$out/data/network_targets")
       }
     }
+    val targetScores = scores.map(rows =>
+      spark.createDataFrame(rows.asJava, Centrality.ScoreSchema))
 
     // Stage 6b: network + barplot figures (S10, pipeline2.py:1059-1114; G5
-    // subgraph + F10 placeholder filter live inside the builders), with the
-    // reference's skip rules: network for >= 2 real nodes, bar plot for any.
-    // Plans are built inside the stage, so schema drift degrades only it.
-    (network, targetScores) match {
-      case (Some(net), Some(ts)) =>
+    // subgraph + F10 placeholder filter live inside the row builders), with
+    // the reference's skip rules: network for >= 2 real nodes, bar plot for
+    // any.
+    (network, scores) match {
+      case (Some(net), Some(rows)) =>
         stage("figure_network") {
-          val (vizNodes, vizEdges) = Sinks.networkVizData(ts, net.edges)
-          val nodes = writeCollected(
-            vizNodes.orderBy(col("node_size").desc, col("gene")),
-            s"$out/data/network_viz_nodes")
-            .map(r => (r.getString(0), r.getDouble(1)))
-          val es = writeCollected(vizEdges.orderBy("src", "dst"),
-            s"$out/data/network_viz_edges")
-            .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-          if (nodes.size > 1)
-            Figures.renderNetwork(nodes, es,
+          val (vizNodes, vizEdges) = Sinks.networkVizRows(rows, net.edges)
+          writeRows(vizNodes, Sinks.VizNodeSchema, s"$out/data/network_viz_nodes")
+          writeRows(vizEdges, Sinks.VizEdgeSchema, s"$out/data/network_viz_edges")
+          if (vizNodes.size > 1)
+            Figures.renderNetwork(
+              vizNodes.map(r => (r.getString(0), r.getDouble(1))),
+              vizEdges.map(r => (r.getString(0), r.getString(1), r.getDouble(2))),
               s"$out/figures/network_visualization.png")
         }
         stage("figure_barplot") {
-          val tops = writeCollected(
-            Sinks.barplotData(ts).orderBy(col("composite_score").desc, col("gene")),
+          val tops = writeRows(Sinks.barplotRows(rows), Sinks.BarplotSchema,
             s"$out/data/top_targets_barplot")
             .map(r => (r.getString(0), r.getDouble(1)))
           if (tops.nonEmpty)
@@ -251,24 +262,31 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
         count_if(col("condition") === "control")).head()
       val nProbes = geo.expression.select("probe_id").distinct().count()
       val nGenes = genes.map(_.count()).getOrElse(0L)
-      val (nSig, nUp, nDown) = significant.map { s =>
-        val r = s.agg(count(lit(1)), count_if(col("log2FC") > 0),
-          count_if(col("log2FC") < 0)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
+      // count_if(log2FC > 0) / (log2FC < 0): Spark's double compare
+      def sign(r: Row): Int = {
+        val i = r.fieldIndex("log2FC")
+        if (r.isNullAt(i)) 0 else SQLOrderingUtil.compareDoubles(r.getDouble(i), 0.0)
+      }
+      val (nSig, nUp, nDown) = sigRows.map { rows =>
+        (rows.size.toLong, rows.count(sign(_) > 0).toLong,
+          rows.count(sign(_) < 0).toLong)
       }.getOrElse((0L, 0L, 0L))
       val nNodes = network.map(_.nodes.size.toLong).getOrElse(0L)
-      val nEdges = network.map(_.nEdges).getOrElse(0L)
-      val topTargets = targetScores.map(
-        _.orderBy(col("composite_score").desc, col("gene")).limit(10)
-          .collect().map(r => (r.getString(0),
-            r.getAs[Double]("composite_score"))).toSeq)
+      val nEdges = network.map(_.edges.size.toLong).getOrElse(0L)
+      val topTargets = scores.map(_.take(10).map(r => (r.getString(0), r.getDouble(4))))
         .getOrElse(Seq.empty)
       Sinks.summaryReport(geo.sampleIds.length.toLong, arms.getLong(0), arms.getLong(1),
         nProbes, nGenes, nSig, nUp, nDown, nNodes, nEdges, topTargets,
         s"$out/summary.txt")
     }
 
-    PipelineResult(differential, significant, targetScores, finalTargets,
-      failures.toSeq, timings.toSeq)
+    PipelineResult(differential, significant.map(_._1), targetScores,
+      finalTargets, failures.toSeq, timings.toSeq)
   }
+}
+
+object DrugTargetPipeline {
+
+  /** The Spark local property each stage's jobs carry: the stage name. */
+  val StageProperty = "graft.stage"
 }

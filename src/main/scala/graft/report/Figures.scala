@@ -16,10 +16,10 @@ import javax.imageio.ImageIO
   * Scale discipline: every renderer takes COLLECTED figure data — which
   * is bounded by the figure-data sinks' own contracts (volcano = the
   * DE gene table the reference also collects to plot; network/barplot =
-  * top-30/top-20 frames by construction, `Sinks.networkVizData`/
-  * `barplotData`). Rendering is inherently a driver-side act on a
-  * dimension-sized table; the distributed work (scoring, subgraphing,
-  * thresholding) all happened upstream in the plans.
+  * top-30/top-20 rows by construction, `Sinks.networkVizRows`/
+  * `barplotRows`). Rendering is inherently a driver-side act on a
+  * dimension-sized table; the scoring, subgraphing and thresholding all
+  * happened upstream.
   *
   * The spring layout is Fruchterman–Reingold with the networkx
   * parameterization (`spring_layout(subgraph, seed=42)`,

@@ -108,7 +108,11 @@ object Sinks {
   /** S10 network-viz *data* (`pipeline2.py:1059-1094`): top-N nodes by
     * composite score with PLACEHOLDER rows dropped (F10,
     * `pipeline2.py:1062-1063`), node size = composite score (J6 lookup),
-    * plus the induced subgraph's edges (G5). */
+    * plus the induced subgraph's edges (G5).
+    *
+    * The pipeline builds these tables from its score rows
+    * ([[networkVizRows]]); this frame form's callers are the benchmark's
+    * traced pipeline and the specs, and it goes with that mirror. */
   def networkVizData(targetScores: DataFrame, edges: DataFrame,
                      topN: Int = 30): (DataFrame, DataFrame) = {
     val top = targetScores.filter(col("gene") =!= "PLACEHOLDER")
@@ -119,11 +123,41 @@ object Sinks {
   }
 
   /** S10 barplot *data* (`pipeline2.py:1096-1114`): top-N targets by
-    * composite score, placeholders dropped (F10). */
+    * composite score, placeholders dropped (F10).
+    *
+    * The pipeline builds this table from its score rows
+    * ([[barplotRows]]); this frame form's callers are the benchmark's
+    * traced pipeline and the specs, and it goes with that mirror. */
   def barplotData(targetScores: DataFrame, topN: Int = 20): DataFrame =
     targetScores.filter(col("gene") =!= "PLACEHOLDER")
       .orderBy(col("composite_score").desc, col("gene")).limit(topN)
       .select("gene", "composite_score")
+
+  /** [[networkVizData]] over score rows already on the driver, in
+    * [[graft.graph.Centrality.networkScores]]' layout and order (composite
+    * descending, then gene): the first `topN` non-PLACEHOLDER
+    * `(gene, node_size)` rows ([[VizNodeSchema]]), and the `edges` with
+    * both endpoints among them, in the order given ([[VizEdgeSchema]]). */
+  def networkVizRows(scores: Seq[Row], edges: Seq[(String, String, Double)],
+                     topN: Int = 30): (Seq[Row], Seq[Row]) = {
+    val top = barplotRows(scores, topN)
+    val in = top.map(_.getString(0)).toSet
+    (top, edges.collect { case (s, d, w) if in(s) && in(d) => Row(s, d, w) })
+  }
+
+  /** [[barplotData]] over score rows already on the driver
+    * ([[networkVizRows]]' input): the first `topN` non-PLACEHOLDER
+    * `(gene, composite_score)` rows ([[BarplotSchema]]). */
+  def barplotRows(scores: Seq[Row], topN: Int = 20): Seq[Row] =
+    scores.iterator.filter(_.getString(0) != "PLACEHOLDER").take(topN)
+      .map(r => Row(r.getString(0), r.getDouble(4))).toSeq
+
+  val VizNodeSchema: StructType = StructType(Seq(
+    StructField("gene", StringType), StructField("node_size", DoubleType)))
+  val VizEdgeSchema: StructType = StructType(Seq(StructField("src", StringType),
+    StructField("dst", StringType), StructField("weight", DoubleType)))
+  val BarplotSchema: StructType = StructType(Seq(
+    StructField("gene", StringType), StructField("composite_score", DoubleType)))
 
   /** S11: the summary.txt contract (`pipeline2.py:1118-1146`). */
   def summaryReport(nSamples: Long, nCase: Long, nControl: Long,

@@ -32,11 +32,16 @@ class CollectContractSpec extends AnyFunSuite {
       (2, "betweenness's per-partition Brandes vectors after the " +
         "partition-order tree merge (<= ~sqrt(P) node-length vectors, " +
         "behind the driver-collectable guard); the 1-row " +
-        "convergence-error probe of the distributed eigenvector loop"),
+        "convergence-error probe of the distributed eigenvector loop. " +
+        "The pipeline's scorer (networkScores) collects nothing: it " +
+        "takes the graph the pipeline already holds"),
     "graft/pipeline/DrugTargetPipeline.scala" ->
-      (4, "figure tables (gene-grain volcano data, top-N viz and barplot " +
-        "tables) through one collect-then-write helper; the top-N network " +
-        "nodes and edges; the summary's limit(10) top targets"),
+      (2, "gene-grain tables through one collect-then-write helper: the " +
+        "volcano data, and the significant table, whose rows also give " +
+        "the network's genes and the summary's counts; the variance " +
+        "fallback's top-N gene names (limit(nTopGenes)). The edges, " +
+        "scores, figure tables and top 10 are cut from driver rows, " +
+        "with no collect"),
     "graft/net/CoExpressionNetwork.scala" ->
       (1, "the top-N gene vectors the pairwise correlations are computed " +
         "from: limit(MaxDriverGenes + 1) behind a require guard " +

@@ -1,5 +1,7 @@
 package graft.graph
 
+import org.apache.spark.SparkThrowable
+
 import graft.SparkSuite
 
 class DriverCollectSpec extends SparkSuite {
@@ -20,6 +22,11 @@ class DriverCollectSpec extends SparkSuite {
     assert(DriverCollect.ifFits(unreadable, -1L).isEmpty)
     val df = spark.range(5).toDF("id")
     assert(DriverCollect.ifFits(df, 4L, unreadable, 100L).isEmpty)
-    intercept[Exception](DriverCollect.ifFits(df, 5L, unreadable, 100L))
+    // the failure is the second frame's assert_true at run time, not an
+    // analysis error (whose message would quote the same plan text)
+    val e = intercept[RuntimeException](
+      DriverCollect.ifFits(df, 5L, unreadable, 100L))
+    assert(e.asInstanceOf[SparkThrowable].getCondition == "USER_RAISED_EXCEPTION" &&
+      e.getMessage.contains("'(id < 0)' is not true"), e.getMessage)
   }
 }

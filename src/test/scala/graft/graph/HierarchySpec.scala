@@ -40,15 +40,17 @@ class HierarchySpec extends SparkSuite {
 
   test("a cycle is detected, not silently mislabeled") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("c", "p")
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Hierarchy.flattenToRoot(edges, "c", "p", maxDepthLog2 = 6)
     }
+    assert(e.getMessage.contains("hierarchy did not settle in 2^6 hops"))
   }
 
   test("multi-parent input is rejected") {
     val edges = Seq((1L, 2L), (1L, 3L)).toDF("c", "p")
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Hierarchy.flattenToRoot(edges, "c", "p")
     }
+    assert(e.getMessage.contains("not a forest: a child has multiple parents"))
   }
 }

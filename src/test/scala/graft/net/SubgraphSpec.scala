@@ -1,6 +1,6 @@
 package graft.net
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 import graft.SparkSuite
 import graft.report.Sinks
@@ -36,5 +36,16 @@ class SubgraphSpec extends SparkSuite {
     val got = Sinks.barplotData(scores, topN = 2)
       .as[(String, Double)].collect().toSeq
     assert(got == Seq(("A", 0.9), ("B", 0.8)))
+  }
+
+  test("networkVizRows / barplotRows: the frame forms' tables from score " +
+    "rows already sorted by composite") {
+    val rows = Seq(("PLACEHOLDER", 9.9), ("A", 0.9), ("B", 0.8), ("C", 0.5),
+      ("D", 0.4)).map { case (g, c) => Row(g, 0.0, 0.0, 0.0, c) }
+    val es = Seq(("A", "B", 0.9), ("B", "C", 0.8), ("C", "D", 0.75), ("A", "D", 0.71))
+    val (nodes, sub) = Sinks.networkVizRows(rows, es, topN = 3)
+    assert(nodes == Seq(Row("A", 0.9), Row("B", 0.8), Row("C", 0.5)))
+    assert(sub == Seq(Row("A", "B", 0.9), Row("B", "C", 0.8)))
+    assert(Sinks.barplotRows(rows, topN = 2) == Seq(Row("A", 0.9), Row("B", 0.8)))
   }
 }

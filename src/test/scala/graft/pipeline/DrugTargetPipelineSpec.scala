@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSuite
 
 class DrugTargetPipelineSpec extends SparkSuite {
@@ -159,6 +162,31 @@ class DrugTargetPipelineSpec extends SparkSuite {
       val differ = base.keySet.filter(k => got(k) != base(k))
       assert(differ.isEmpty, s"$kv: outputs differ: ${differ.toSeq.sorted}")
     }
+  }
+
+  test("medium fixture: Spark jobs per stage, keyed on the stage local " +
+    "property (the network half runs only its writes and collects)") {
+    val jobs = scala.collection.mutable.Map.empty[String, Int]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty(DrugTargetPipeline.StageProperty)))
+          .foreach(s => jobs.synchronized(jobs(s) = jobs.getOrElse(s, 0) + 1))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = Files.createTempDirectory("graft-pipe-jobs").toString
+      val result = new DrugTargetPipeline(spark, mediumConfig(out)).run()
+      assert(result.failures.isEmpty, result.failures)
+      ListenerBusAccess.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(sc.getLocalProperty(DrugTargetPipeline.StageProperty) == null)
+    val pinned = Seq("construct_network", "analyze_network", "figure_network",
+      "figure_barplot", "summary_report")
+    assert(pinned.map(s => s -> jobs.synchronized(jobs.getOrElse(s, 0))) == Seq(
+      "construct_network" -> 3, "analyze_network" -> 1, "figure_network" -> 2,
+      "figure_barplot" -> 1, "summary_report" -> 7))
   }
 
   test("a network larger than the collected-vector cap fails at config time") {

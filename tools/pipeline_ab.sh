@@ -18,7 +18,8 @@
 # exists on one side only is marked so), and, per seed, whether the two
 # copies' output.digest files (the digest of everything the pipeline wrote)
 # match. The log with every run's stage lines and JSON line is kept next to
-# the extracted copy.
+# the extracted copy. The script exits 1 when any run failed, was
+# incorrect or printed no result, after printing the summary.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -72,9 +73,11 @@ for ln in open(log):
         work[int(pair), side] = None
 
 pairs = sorted({p for p, _ in work})
+n_bad = 0
 for side in ("old", "new"):
     xs = [work[p, side] for p in pairs if work.get((p, side)) is not None]
     bad = len(pairs) - len(xs)
+    n_bad += bad
     if len(xs) >= 2:
         q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
         print(f"{side}: work_s median {med:.2f} s, quartiles {q1:.2f}-{q3:.2f} s "
@@ -114,6 +117,10 @@ def digest(root, seed):
 
 for seed in dict.fromkeys(seeds):
     a, b = digest(old_dir, seed), digest(".", seed)
-    same = "match" if a is not None and a == b else "DIFFER"
+    same = "MISSING" if None in (a, b) else "match" if a == b else "DIFFER"
     print(f"seed {seed}: output.digest {same} (old {str(a)[:16]}, new {str(b)[:16]})")
+
+if n_bad:
+    print(f"FAIL: {n_bad} failed or incorrect runs")
+    sys.exit(1)
 EOF
