@@ -71,49 +71,17 @@ object Similarity {
       posexplode(lsh_table_buckets(col(vecCol).cast("array<double>"),
         tables, planesPerTable, dim)).as(Seq("table", "bucket")))
 
-  /** IVF (inverted-file) index: a seeded MLlib KMeans coarse quantizer
-    * partitions the corpus into nLists cells; a query probes its nProbe
-    * nearest centroids and exactly re-ranks only those cells' vectors.
-    * The scale shape: centroids are a broadcast dimension, the corpus is
-    * scanned once to assign cells (narrow), and search shuffles only on
-    * the cell key. Complements the hyperplane-LSH path (data-adaptive
-    * cells vs oblivious hashes); recall pinned in the spec. KMeans is
-    * seeded but float-sum order makes exact centroids run-dependent, so
-    * this operator is unit-tested rather than DuckDB-oracled. */
-  def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-               nLists: Int, seed: Long = 42L): (DataFrame, Array[Array[Double]]) = {
-    // Cluster L2-NORMALIZED vectors: the quantizer assigns by Euclidean
-    // distance while search probes cells by cosine — on the unit sphere
-    // the two orders agree (||a-b||² = 2 - 2cosθ), so normalization makes
-    // assignment and probing consistent. Unnormalized embeddings would
-    // let KMeans split cells by magnitude and cosine probing would then
-    // pick cells near-arbitrarily, silently losing recall. The raw
-    // vectors are kept for the exact cosine re-rank (cosine is
-    // scale-invariant, so re-rank is unaffected either way).
-    val arr = col(vecCol).cast("array<double>")
-    val nrm = sqrt(aggregate(arr, lit(0.0), (acc, x) => acc + x * x))
-    val unit = when(nrm > 0.0, transform(arr, x => x / nrm)).otherwise(arr)
-    val toVec = org.apache.spark.ml.functions.array_to_vector(unit)
-    val feat = corpus.select(col(idCol).as("id"),
-      arr.as("arr"), toVec.as("features"))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nLists).setSeed(seed).setMaxIter(20)
-      .fit(feat.select("features"))
-    val assigned = model.transform(feat)
-      .select(col("id"), col("arr"), col("prediction").as("cell"))
-    (assigned, model.clusterCenters.map(_.toArray))
-  }
-
-  /** IVF with a deterministic hash-seeded coarse quantizer: the nLists
-    * corpus vectors that come FIRST in md5-hash order of their id become
-    * the cell centroids (cell = rank in that order), and every corpus
-    * vector is assigned to its max-cosine centroid in one narrow
-    * projection — no Lloyd iterations, so centroids are reproducible
-    * bit-for-bit in any engine (this is the DuckDB-oracled IVF path;
-    * [[ivfIndex]] keeps the data-adaptive KMeans quantizer, whose
-    * float-sum order is run-dependent, for recall-critical use).
+  /** IVF (inverted-file) index with a deterministic hash-seeded coarse
+    * quantizer: the nLists corpus vectors that come FIRST in md5-hash
+    * order of their id become the cell centroids (cell = rank in that
+    * order), and every corpus vector is assigned to its max-cosine
+    * centroid in one narrow projection — no Lloyd iterations, so
+    * centroids are reproducible bit-for-bit in any engine (the
+    * DuckDB-oracled IVF path). A query probes its nProbe nearest
+    * centroids and exactly re-ranks only those cells' vectors
+    * ([[ivfTopK]]); search shuffles only on the cell key.
     *
-    * Scale shape matches ivfIndex: seed selection is a TakeOrdered on the
+    * Scale shape: seed selection is a TakeOrdered on the
     * 8-byte hash (no global sort), the centroid table is a broadcast-sized
     * literal, and assignment is map-side — the corpus is scanned once and
     * never shuffled. The argmax key is the ROUNDED cosine (9 dp, ties to

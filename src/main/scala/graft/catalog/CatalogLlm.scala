@@ -699,10 +699,9 @@ object CatalogLlm {
     * vectors first in md5-hash order, so the oracle can replay seed
     * selection (q44's signed-HUGEINT idiom), cell assignment (rounded-
     * cosine argmax, ties to lowest cell), probing and re-rank exactly.
-    * The data-adaptive KMeans quantizer ([[Similarity.ivfIndex]]) stays
-    * the recall-critical production path, pinned by SimilaritySpec —
-    * its float-sum-order-dependent centroids are what kept this entry
-    * rows-only before. */
+    * The quantizer is hash-seeded, not fitted: a KMeans quantizer's
+    * centroids depend on float-sum order, which would leave this entry
+    * rows-only. */
   private val q51 = Q("q51_ivf_ann",
     (s, dir) => {
       import s.implicits._

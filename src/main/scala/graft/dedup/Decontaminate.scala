@@ -75,26 +75,4 @@ object Decontaminate {
     if (onlyContaminated) agg.filter(col("n_contaminated") > 0) else agg
   }
 
-  /** The decontaminated corpus: rows of `corpus` minus the overlapping
-    * documents. minOverlap == 1 takes the fast path: the contaminated id
-    * set is just a semi-join + distinct, with no per-doc overlap count
-    * and hence no corpus-side aggregation shuffle. */
-  def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
-                    bench: DataFrame, benchTextCol: String,
-                    shingleSize: Int = 8, minOverlap: Int = 1): DataFrame = {
-    val bad =
-      if (minOverlap <= 1) {
-        val corpusSh = corpus.select(col(idCol).as("id"),
-          explode(array_distinct(word_shingles(col(textCol), shingleSize)))
-            .as("shingle"))
-        val benchSh = bench.select(
-          explode(array_distinct(word_shingles(col(benchTextCol), shingleSize)))
-            .as("shingle")).distinct()
-        corpusSh.join(broadcast(benchSh), Seq("shingle"), "left_semi")
-          .select(col("id").as(idCol)).distinct()
-      } else
-        overlaps(corpus, idCol, textCol, bench, benchTextCol,
-          shingleSize, minOverlap).select(col("id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
-  }
 }

@@ -484,12 +484,6 @@ object Dedup {
         coalesce(col(textCol), lit("")).as(textCol))
   }
 
-  /** Simhash fingerprint + the b band keys used for LSH bucketing.
-    * bandBits * bands must be <= 64. word_shingles(text, 1) is the native
-    * tokenizer (codegen'd, same boundaries as TextAnalysis.tokens). */
-  def withSimhash(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("simhash", simhash64(word_shingles(col(textCol), 1)))
-
   private def bandKey(sig: Column, band: Int, bandBits: Int): Column =
     shiftrightunsigned(sig, band * bandBits)
       .bitwiseAND(lit((1L << bandBits) - 1))
@@ -732,18 +726,6 @@ object Dedup {
     labels
   }
 
-  /** Full simhash near-dup dedup: pairs -> components -> keep min id per
-    * component; singletons (no near-dup) keep themselves. Returns the kept
-    * rows of `df`. */
-  def simhashDedup(df: DataFrame, idCol: String, textCol: String,
-                   bands: Int = 4, maxDist: Int = 3): DataFrame = {
-    val pairs = simhashPairs(df, idCol, textCol, bands, maxDist)
-    val comp = connectedComponents(pairs)
-    val drop = comp.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
   /** MinHash signature values: for each of `numHashes` hash functions i,
     * sig_i = min over distinct shingles s of md5_long(i || ':' || s).
     * Output: (id, sig: array<long>). One shuffle (groupBy id).
@@ -930,32 +912,6 @@ object Dedup {
     out
   }
 
-  /** Signature-state maintenance for [[incrementalMinHashDedup]]: fold
-    * a batch result's ACCEPTED rows (is_new) into the signature
-    * history — the append step the operator's contract leaves to the
-    * caller, made first-class so every ingest loop (and the streaming
-    * twin, [[graft.streaming.NearDupIngest]]) evolves state the same
-    * way. Pure column selection + union: no shuffle — callers persist
-    * or localCheckpoint the result per their loop's lineage budget. */
-  def evolveSignatureHistory(historySigs: DataFrame,
-                             batchResult: DataFrame): DataFrame =
-    historySigs.select(col("id"), col("sig"))
-      .unionByName(batchResult.filter(col("is_new"))
-        .select(col("id"), col("sig")))
-
-  /** Compaction for a signature history that accumulated re-appended
-    * ids (a replayed batch after a crash, overlapping backfills): one
-    * row per id. Signatures are a pure function of the text, so
-    * duplicate ids carry identical sigs and an arbitrary
-    * representative is exact — but the min-struct pick keeps the
-    * result deterministic under any partitioning even if a caller fed
-    * two texts under one id. One hash aggregate; run it before
-    * persisting history between ingest sessions, not per batch. */
-  def compactSignatureHistory(historySigs: DataFrame): DataFrame =
-    historySigs.groupBy(col("id"))
-      .agg(min(struct(col("sig"))).as("__m"))
-      .select(col("id"), col("__m.sig").as("sig"))
-
   /** Latest-version-per-key dedup — the CDC/upsert compaction every
     * ingestion pipeline runs (multiple snapshots/changelog rows per
     * business key -> keep the newest): row_number over the key ordered
@@ -1032,8 +988,8 @@ object Dedup {
     * inside those prefixes, so the self-join sees the RARE shingles only
     * and the f^2 fan-out of stopword-like n-grams never happens.
     * Candidates are then verified with the exact intersection
-    * ([[verifyJaccard]]). The prefix bound uses tau - 1e-4 so pairs that
-    * only reach tau after 4-dp rounding are still caught.
+    * ([[verifyFromPostings]]). The prefix bound uses tau - 1e-4 so pairs
+    * that only reach tau after 4-dp rounding are still caught.
     *
     * Shuffles: shingle doc-freq agg, per-doc rank window (keyed by doc),
     * prefix self-join on shingle, verification join — all on fine-grained
@@ -1324,14 +1280,6 @@ object Dedup {
       .select(col("id").as(idCol))
     df.join(drop, Seq(idCol), "left_anti")
   }
-
-  /** Exact-Jaccard verification of candidate pairs against the documents
-    * table (convenience wrapper over [[verifyFromPostings]]). */
-  def verifyJaccard(df: DataFrame, idCol: String, textCol: String,
-                    candidates: DataFrame, shingleSize: Int,
-                    minJaccard: Double): DataFrame =
-    verifyFromPostings(postings(df, idCol, textCol, shingleSize),
-      candidates, minJaccard)
 
   /** Cross-source duplicate matrix — the corpus-governance question
     * "which crawls/mirrors overlap, and by how much": for every ordered

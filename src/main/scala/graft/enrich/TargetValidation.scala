@@ -29,52 +29,6 @@ object TargetValidation {
   def loadOpenTargetsSnapshot(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(openTargetsSchema).json(path)
 
-  /** Online enrichment connector (the at-scale variant of the snapshot
-    * join, S6/S7; the reference's N+1 synchronous HTTP loop at
-    * `pipeline2.py:829-942`): per-partition BATCHED, rate-limited
-    * lookups through a pluggable fetch function, returning the exact
-    * [[openTargetsSchema]] frame — [[validate]] runs unchanged on a
-    * snapshot or on this. Zero-egress builds and tests plug an
-    * in-memory fetch; a production build plugs the GraphQL client.
-    *
-    * Shape at scale: one task per partition issues `ceil(rows /
-    * batchSize)` calls, sleeping `minIntervalMillis` between batches —
-    * the cluster-wide request rate is (parallelism x 1000 /
-    * minIntervalMillis), so callers size `ids.repartition(n)` to the
-    * service's quota. The fetch returns raw JSON bodies keyed by id;
-    * parsing happens declaratively via from_json against the pinned
-    * schema, so a response-shape drift fails analysis, not tasks.
-    *
-    * Miss semantics match the snapshot path exactly: an id absent from
-    * the fetch result yields a null body -> null struct columns -> the
-    * same zero-filled metrics [[validate]] produces for a snapshot miss
-    * (`pipeline2.py:1002-1009`).
-    */
-  def onlineEnrich(ids: DataFrame, idCol: String,
-                   fetch: Seq[String] => Map[String, String],
-                   batchSize: Int = 50,
-                   minIntervalMillis: Long = 0L): DataFrame = {
-    require(batchSize > 0, "batchSize must be positive")
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val fetched = ids.select(col(idCol).cast("string")).na.drop()
-      .distinct().as[String]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val bodies = fetch(batch.toSeq)
-          if (minIntervalMillis > 0) Thread.sleep(minIntervalMillis)
-          batch.iterator.map(id => (id, bodies.get(id).orNull))
-        }
-      }.toDF("__id", "__body")
-    val parsed = from_json(col("__body"), openTargetsSchema)
-    fetched.select(
-      col("__id").as("ensembl_id"),
-      parsed.getField("approvedSymbol").as("approvedSymbol"),
-      parsed.getField("biotype").as("biotype"),
-      parsed.getField("knownDrugs").as("knownDrugs"),
-      parsed.getField("associatedDiseases").as("associatedDiseases"))
-  }
-
   /** (symbol, ensembl_id) csv with header. One row per symbol: real
     * Ensembl snapshots can map a symbol to several ids, and a duplicate
     * would fan out the enrichment left join into multiple final-target

@@ -153,9 +153,9 @@ object Attribution {
     * Relational part (the 100 TB part): transition counts from ONE
     * lead window over (user, ts, tie) — START→first, touch→next,
     * last→CONV/NULL — then a hash aggregate to the (states+2)²-bounded
-    * transition matrix. Driver part (the bounded part, the X239 IPF
-    * precedent): row-normalize and run a FIXED `iters`-step absorption
-    * fixpoint for the base chain and once per removal scenario —
+    * transition matrix. Driver part (the bounded part): row-normalize
+    * and run a FIXED `iters`-step absorption fixpoint for the base
+    * chain and once per removal scenario —
     * deterministic arithmetic, no linear-solver pivoting, so an
     * engine replaying the same recipe (the oracle's recursive CTE)
     * reproduces the doubles. Geometric convergence makes 200 steps

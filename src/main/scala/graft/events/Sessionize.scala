@@ -5,10 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch operators over the `events` stream table: gap-based
-  * sessionization, tumbling-window aggregation, and bounded-window dedup —
-  * the batch halves of the Structured Streaming surface (the streaming
-  * variants share the same column logic over readStream with a
-  * watermark).
+  * sessionization, tumbling-window aggregation, and bounded-window dedup.
   *
   * Scale: both sessionization windows partition by user_id (shuffle on
   * user, fine-grained key, no global sort); tumbling windows are a plain

@@ -47,27 +47,11 @@ object Triangles {
         .agg(count(lit(1)).as("n_triangles"))
     }
 
-  /** Per-vertex triangle participation (vertex, n_triangles BIGINT);
-    * vertices in no triangle are absent (left-join against the vertex set
-    * and zero-fill at the call site if a dense result is needed). */
-  def perVertex(edges: DataFrame, src: String = "src",
-                dst: String = "dst"): DataFrame =
-    withOriented(edges, src, dst) { oriented =>
-      val wedges = oriented.select(col("u"), col("v"))
-        .join(oriented.select(col("u").as("v"), col("v").as("w")), Seq("v"))
-      val tris = wedges
-        .join(oriented.select(col("u"), col("v").as("w")), Seq("u", "w"))
-      tris.select(col("u").as("vertex"))
-        .unionAll(tris.select(col("v").as("vertex")))
-        .unionAll(tris.select(col("w").as("vertex")))
-        .groupBy("vertex").agg(count(lit(1)).as("n_triangles"))
-    }
-
   /** Local clustering coefficient: per vertex, the fraction of its
     * neighbor pairs that are themselves connected —
     * 2·triangles(v) / (deg(v)·(deg(v)−1)), rounded 4dp. Vertices of
     * degree < 2 have no defined coefficient and are dropped. Shares the
-    * oriented wedge-join core with [[perVertex]] (same O(m^{3/2})
+    * oriented wedge-join core with [[countTriangles]] (same O(m^{3/2})
     * bound); degrees come from the canonical frame already persisted
     * for orientation, so the graph is materialized exactly once.
     * Output: (node, degree BIGINT, triangles BIGINT, clustering). */

@@ -7,12 +7,11 @@ import org.apache.spark.sql.functions._
   * minimal member of the GBM family, built the graft way: the fact
   * table collapses ONCE to per-feature-value cells (n, Σy, Σy²), and
   * every boosting round is then a driver-side best-split scan over
-  * the VALUE-DOMAIN-BOUNDED cell array (the X239 IPF discipline —
-  * feature domains like hour-of-day or integer buckets are the
-  * contract, enforced by `maxCells`). Stump predictions are constant
-  * within a cell, so residual sufficient statistics per cell are
-  * derivable in closed form round-over-round — the raw data is never
-  * rescanned.
+  * the VALUE-DOMAIN-BOUNDED cell array (feature domains like
+  * hour-of-day or integer buckets are the contract, enforced by
+  * `maxCells`). Stump predictions are constant within a cell, so
+  * residual sufficient statistics per cell are derivable in closed
+  * form round-over-round — the raw data is never rescanned.
   *
   * Determinism: the split argmin ranks the 6-dp-ROUNDED SSE with a
   * smallest-threshold tie-break (the bm25 rounded-rank-key

@@ -3,8 +3,6 @@ package graft.mm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.gfunctions._
-
 /** Multimodal column plumbing: image/audio/video payloads are opaque
   * `binary` columns with a typed metadata struct. The Spark-side shape —
   * schema, partitioning, per-batch decode boundary — is real, and so
@@ -34,25 +32,11 @@ object Multimodal {
       struct(lit(mime).as("mime"),
         length(col(payloadCol).cast("binary")).as("n_bytes")).as("meta"))
 
-  /** STUB decode: deterministic fake features standing in for a real
-    * decoder (image decode / audio spectrogram). Emits per-media summary
-    * features computed natively on the binary payload: byte length, first
-    * byte, and an md5-derived 64-bit content id. The real decoder would
-    * run inside mapPartitions over the same rows with the same output
-    * schema (media_id, features array<double>). */
   /** First BYTE of a binary column as an int (hex of the 1-byte slice) —
     * byte-accurate where ascii(cast to string) would return the first
     * CODE POINT and mis-read any non-ASCII payload. */
   private def byteAt(bin: Column, pos: Column): Column =
     coalesce(conv(hex(bin.substr(pos, lit(1))), 16, 10).cast("int"), lit(0))
-
-  def stubDecode(df: DataFrame): DataFrame =
-    df.select(col("media_id"), col("meta"),
-      array(
-        col("meta.n_bytes").cast("double"),
-        byteAt(col("media"), lit(1)).cast("double"),
-        (pmod(md5_long(col("media").cast("string")), lit(997))).cast("double"))
-        .as("features"))
 
   /** Frame sampling: every `stride`-th byte position becomes one "frame"
     * row (media_id, frame_idx, frame_off, frame_val). The explode keeps

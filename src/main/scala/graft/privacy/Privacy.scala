@@ -9,49 +9,21 @@ import org.apache.spark.sql.functions._
   * all. k-anonymity's suppression step (Sweeney 2002): a row is safe
   * only if at least k rows share its full quasi-identifier combination
   * (the columns an adversary could link on — zip, segment, nation…);
-  * rarer combinations are dropped.
+  * rarer combinations are dropped. [[suppressionReport]] sizes that
+  * step for a release review.
   *
   * Scale shape: one hash aggregate on the quasi-identifier key for the
-  * group sizes, joined back co-partitioned on that same key (the
-  * group-size side is combination-cardinality; AQE broadcasts it when
-  * small). No window, no global sort; the fact rows are scanned once.
+  * group sizes; everything after it runs on the combination-cardinality
+  * sizes table. No window, no global sort; the fact rows are scanned once.
   */
 object Privacy {
 
-  /** Rows whose quasi-identifier combination has >= k members; all
-    * other rows suppressed. Null counts as a value (an all-null
-    * combination shared by k rows survives — nulls are linkable too). */
-  def kAnonymize(df: DataFrame, quasiCols: Seq[String], k: Long): DataFrame = {
-    require(!df.columns.contains("__gn"),
-      "input must not contain a __gn column")
-    kAnonymizeAgainst(df, groupSizes(df, quasiCols), quasiCols, k)
-  }
-
-  /** Group sizes for [[kAnonymizeAgainst]] — exposed so a caller can
-    * persist the snapshot (the accumulated release population) and
-    * filter later/streaming data against it. */
+  /** Quasi-identifier group sizes (quasiCols…, __gn): the one
+    * combination-cardinality aggregate behind [[suppressionReport]].
+    * Null counts as a value (an all-null combination shared by k rows
+    * survives a >= k gate — nulls are linkable too). */
   def groupSizes(df: DataFrame, quasiCols: Seq[String]): DataFrame =
     df.groupBy(quasiCols.map(col): _*).agg(count(lit(1)).as("__gn"))
-
-  /** The suppression filter against a PRECOMPUTED sizes table
-    * ((quasiCols…, __gn) — [[groupSizes]]' shape). This is also the
-    * STREAMING form: with a streaming `df` and a batch-maintained sizes
-    * snapshot, the stream-static join is stateless per micro-batch and
-    * the static side is re-read each batch, so a refreshed snapshot is
-    * picked up without restart (the incrementalDedupStream pattern) —
-    * rows whose combination hasn't reached k in the released population
-    * are held back. */
-  def kAnonymizeAgainst(df: DataFrame, sizes: DataFrame,
-                        quasiCols: Seq[String], k: Long): DataFrame = {
-    require(quasiCols.nonEmpty, "quasiCols must be non-empty")
-    require(k >= 1, "k must be >= 1")
-    require(!df.columns.contains("__gn"),
-      "input must not contain a __gn column")
-    // null-safe join: co-null rows shield each other (see Joins scaladoc)
-    graft.util.Joins.nullSafeStatsJoin(df, sizes, quasiCols)
-      .filter(col("__gn") >= k)
-      .drop("__gn")
-  }
 
   /** ε-differentially-private count release via the Laplace mechanism
     * (Dwork et al. 2006): released = count + Lap(Δ/ε), Δ = 1 for
@@ -147,11 +119,11 @@ object Privacy {
   }
 
   /** t-closeness audit (X316, Li et al. 2007) — the third rung of the
-    * release ladder after [[kAnonymize]] (class size) and
-    * [[lDiversity]] (distinct sensitive values): a class passes iff
-    * the DISTRIBUTION of its ordered sensitive attribute is within
-    * earth-mover's distance `t` of the release-wide distribution, so
-    * a 50-member class that is 96% one salary band still fails even
+    * release ladder after k-anonymity ([[suppressionReport]], class
+    * size) and [[lDiversity]] (distinct sensitive values): a class
+    * passes iff the DISTRIBUTION of its ordered sensitive attribute is
+    * within earth-mover's distance `t` of the release-wide distribution,
+    * so a 50-member class that is 96% one salary band still fails even
     * though it is k-anonymous and l-diverse.
     *
     * EMD over an ORDERED attribute with m distinct release-wide values
@@ -162,7 +134,7 @@ object Privacy {
     * the documented LONG contract), and only the final normalization
     * divides. Complete-case on the sensitive column: a null has no
     * position on the ordered axis (the ranked-axis contract); null
-    * QUASI values are kept — nulls are linkable, [[kAnonymize]]'s
+    * QUASI values are kept — nulls are linkable, [[groupSizes]]'
     * convention.
     *
     * Shape: one fact aggregate to (class, value) cells, one to the

@@ -61,13 +61,6 @@ object Sampling {
       .drop("__p")
   }
 
-  /** Temperature (α) sampling weights — the multilingual/multi-domain
-    * rebalancing rule (mT5/XLM-R style): stratum s gets weight
-    * w(s) ∝ n_s^α, α ∈ [0, 1]. α = 1 reproduces the natural
-    * distribution, α = 0 is uniform across strata, and the usual
-    * α ≈ 0.3–0.7 up-samples small strata without letting them dominate.
-    * Counts are a stratum-cardinality aggregate collected to the driver
-    * (the stratum list is bounded by definition — the q57 contract). */
   /** Collected per-stratum row counts. Null strata are excluded from
     * the mass, not just the output: mixtureSample can never select them
     * (null lookups get rate 0), so counting them would silently scale
@@ -81,20 +74,15 @@ object Sampling {
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  def temperatureWeights(df: DataFrame, strataCol: String,
-                         alpha: Double): Map[String, Double] = {
-    require(alpha >= 0.0 && alpha <= 1.0, "alpha must be in [0, 1]")
-    val counts = strataCounts(df, strataCol)
-    val raw = counts.map { case (s, n) => s -> math.pow(n.toDouble, alpha) }
-    val total = raw.values.sum
-    raw.map { case (s, w) => s -> w / total }
-  }
-
-  /** Temperature-weighted mixture sample: the per-stratum counts are
-    * aggregated ONCE and both the n^α weights and the acceptance rates
-    * min(1, target·w/n) derive from that single collected map —
-    * delegating to mixtureSample(temperatureWeights(df)) would scan and
-    * aggregate the corpus a second time for counts already in hand. The
+  /** Temperature-weighted mixture sample — the multilingual/multi-domain
+    * rebalancing rule (mT5/XLM-R style): stratum s gets weight
+    * w(s) ∝ n_s^α, α ∈ [0, 1]. α = 1 reproduces the natural
+    * distribution, α = 0 is uniform across strata, and the usual
+    * α ≈ 0.3–0.7 up-samples small strata without letting them dominate.
+    * The per-stratum counts are aggregated ONCE and both the n^α weights
+    * and the acceptance rates min(1, target·w/n) derive from that single
+    * collected map (the stratum list is bounded by definition — the q57
+    * contract), so the corpus is not aggregated a second time. The
     * sample itself stays the L29 shape: broadcast rates onto a narrow
     * md5 filter, corpus rows never shuffled (two scans total: counts +
     * filter). Rate arithmetic runs at the driver in the same IEEE op

@@ -341,8 +341,6 @@ object CorpusStats {
                      blockCol: String, n: Int): DataFrame = {
     import graft.functions.gfunctions.word_shingles
     import org.apache.spark.sql.expressions.Window
-    val wNb = Window.partitionBy(col(blockCol))
-      .orderBy(length(col(textCol)), col(idCol))
     val pairs = docs
       .select(col(idCol).as("id_a"), col(blockCol).as("__blk"),
         length(col(textCol)).as("__len"))

@@ -39,14 +39,11 @@ import org.apache.spark.sql.functions._
   */
 object UrlOps {
 
-  private val UrlRe =
-    "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\\?([^#]*))?(?:#.*)?$"
-
-  /** One-pass decomposition of `url` by [[UrlRe]] into
+  /** One-pass decomposition of `url` by the anchored URL regex of
+    * [[org.apache.spark.sql.graft.UrlKernel]] into
     * struct<scheme, auth, path, query> with EXACT per-group
     * `regexp_extract` semantics (empty string on no-match / absent
-    * group, null on null input — see
-    * [[org.apache.spark.sql.graft.UrlKernel]]). canonicalizeUrl +
+    * group, null on null input). canonicalizeUrl +
     * urlHost previously ran the regex 4+ times per row (one
     * regexp_extract per group plus the malformed guard; measured
     * code-real 1.23x on q421 after the r14 NULL-host fix added the

@@ -103,7 +103,7 @@ object ExplainAudit {
 
   /** The audited (LAZY) names — construction runs zero Spark jobs, so
     * the physical plan is inspectable and CatalogPlanAuditSpec asserts
-    * [[PlanHygiene]] findings against [[PlanAllowlist]] for every one
+    * [[PlanHygiene]] findings against its `PlanAllowlist` for every one
     * of them. Machine-generated by [[CatalogInventory]] (round 10). */
   val audited: Seq[String] = Seq(
       "q1_pricing_agg", "q2_filter_revenue", "q3_broadcast_join",

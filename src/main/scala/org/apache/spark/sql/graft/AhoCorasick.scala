@@ -84,15 +84,6 @@ final class AhoCorasick(patterns: Seq[String]) extends Serializable {
   private val out: Array[Int] = outLen.toArray
   private val dict: Array[Int] = dictLink.toArray
 
-  /** Longest dictionary match ending at `node` (in bytes), 0 if none —
-    * folds the dict-link chain so nested suffix terms are seen. */
-  private def bestOut(node: Int): Int = {
-    var best = out(node)
-    var d = dict(node)
-    while (d != 0) { if (out(d) > best) best = out(d); d = dict(d) }
-    best
-  }
-
   /** One automaton pass collecting (endExclusive, len) of every match,
     * then the greedy leftmost-longest non-overlapping selection (the
     * regex-'g' scan contract documented above). Returns the scrubbed

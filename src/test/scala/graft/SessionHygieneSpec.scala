@@ -23,7 +23,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - no `CodegenFallback`: an expression mixing it in drops its whole
   *    projection out of whole-stage codegen. A stateless function is a
   *    `KernelCall` (expressions.scala), whose `StaticInvoke` has both
-  *    paths.
+  *    paths;
+  *  - every file is reachable from an entry point: the mains, the
+  *    catalog, the pipeline, the session and extension classes, the
+  *    Catalyst package and the types the benchmark names. A file is
+  *    reached when a reached file names one of its top-level types
+  *    outside comments, so a cluster of files that only name each
+  *    other is unreached too. Code that only a spec calls is deleted
+  *    with the spec.
   *
   * Patterns match across line breaks, so a call split over lines
   * (`SparkSession\n  .builder`) is caught too.
@@ -47,6 +54,96 @@ class SessionHygieneSpec extends AnyFunSuite {
     """case\s+[\w$]+\s*:\s*(java\.lang\.)?Throwable\b""".r
   private val completionOrderMerge = """\.\s*tree(Reduce|Aggregate)\b""".r
   private val codegenFallback = """\bCodegenFallback\b""".r
+
+  private val topLevelType = ("""(?m)^(?:(?:final|sealed|abstract|""" +
+    """implicit|case|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*""" +
+    """(?:object|class|trait)\s+([A-Za-z_]\w*)""").r
+  private val identifier = """[A-Za-z_]\w*""".r
+  private val definesMain = """\bdef\s+main\b""".r
+  private val charLiteral = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'""".r
+
+  /** `text` without its `//` and (nested) `/* */` comments. String and
+    * char literals are kept whole, so a `//` inside a string starts no
+    * comment. */
+  private def code(text: String): String = {
+    val out = new StringBuilder
+    val n = text.length
+    var i = 0
+    def at(s: String) = text.startsWith(s, i)
+    def keep(j: Int): Unit = { out ++= text.substring(i, j); i = j }
+    while (i < n) {
+      if (at("/*")) {
+        var depth = 0
+        while ({
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+          depth > 0 && i < n
+        }) ()
+        out += ' '
+      } else if (at("//")) {
+        while (i < n && text(i) != '\n') i += 1
+      } else if (at("\"\"\"")) {
+        val end = text.indexOf("\"\"\"", i + 3)
+        keep(if (end < 0) n else end + 3)
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < n && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, n))
+      } else charLiteral.findPrefixOf(text.substring(i, math.min(n, i + 8))) match {
+        case Some(lit) => keep(i + lit.length)
+        case None => out += text(i); i += 1
+      }
+    }
+    out.toString
+  }
+
+  /** The root files of `src`: the mains, the catalog, the pipeline, the
+    * session and extension classes, the Catalyst package, and every
+    * file defining a type in `rootNames`. */
+  private def isRoot(file: String, fileCode: String,
+                     rootNames: Set[String]): Boolean =
+    Set("graft/Bench.scala", "graft/Verify.scala", "graft/SparkEntry.scala",
+      "graft/GraftSession.scala", "graft/GraftExtensions.scala")(file) ||
+      Seq("graft/catalog/", "graft/pipeline/", "org/apache/spark/sql/graft/")
+        .exists(file.startsWith) ||
+      definesMain.findFirstIn(fileCode).nonEmpty ||
+      topLevelType.findAllMatchIn(fileCode).exists(m => rootNames(m.group(1)))
+
+  /** Files of `src` that no root reaches, in file order: a file is
+    * reached when a reached file's code names one of its top-level
+    * types. */
+  private def unreached(src: Seq[(String, String)],
+                        rootNames: Set[String]): Seq[String] = {
+    val codes = src.map { case (f, t) => f -> code(t) }
+    val types = codes.map { case (f, c) =>
+      f -> topLevelType.findAllMatchIn(c).map(_.group(1)).toSet }
+    val names = codes.map { case (f, c) =>
+      f -> identifier.findAllIn(c).toSet }.toMap
+    var reached = codes.collect {
+      case (f, c) if isRoot(f, c, rootNames) => f }.toSet
+    var frontier = reached
+    while (frontier.nonEmpty) {
+      val used = frontier.flatMap(names)
+      frontier = types.collect {
+        case (f, ts) if !reached(f) && ts.exists(used) => f }.toSet
+      reached ++= frontier
+    }
+    src.map(_._1).filterNot(reached)
+  }
+
+  /** Every identifier the benchmark's Scala sources use outside
+    * comments: the library types it calls are roots. */
+  private def benchmarkNames: Set[String] = {
+    val dir = Paths.get("perfbench/scala")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .flatMap(p => identifier.findAllIn(code(Files.readString(p))))
+      .toSet
+    finally walk.close()
+  }
 
   /** `file:line: text` for every match of `re` in `src`, at the line
     * where the match starts. */
@@ -89,6 +186,17 @@ class SessionHygieneSpec extends AnyFunSuite {
         found.mkString("\n"))
   }
 
+  test("every src/main file is reachable from an entry point") {
+    val names = benchmarkNames
+    assert(names.contains("DrugTargetPipeline"),
+      "perfbench/scala no longer names the pipeline")
+    val orphans = unreached(sources, names)
+    assert(orphans.isEmpty,
+      "no main, catalog query, pipeline stage or benchmark reaches " +
+        "these files; delete them with their specs:\n" +
+        orphans.mkString("\n"))
+  }
+
   test("the scanners fire on planted violations") {
     val planted = Seq("graft/tools/Planted.scala" -> Seq(
       "    val spark = SparkSession.builder().master(\"local[4]\")",
@@ -120,5 +228,35 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(sites(planted, codegenFallback).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:16:", "graft/tools/Planted.scala:17:",
         "graft/tools/Planted.scala:19:"))
+
+    // reachability: Entry is a root (a main) and Timed one by the
+    // benchmark's names. Orphan is named by nothing, PingA and PingB
+    // only by each other, Mentioned only in comments (line, scaladoc,
+    // nested block). The `//` in a string and the '"' char literal must
+    // not hide the code after them (Used, Quoted).
+    val tree = Seq(
+      "graft/tools/Entry.scala" -> Seq(
+        "object Entry {",
+        "  /** see [[Mentioned]] */",
+        "  def main(args: Array[String]): Unit = {",
+        "    val url = \"http://host/x\" ; Used.f() // Mentioned.g()",
+        "    val q = '\"' ; /* Mentioned /* nested */ Mentioned */ Quoted.f()",
+        "  }",
+        "}").mkString("\n"),
+      "graft/x/Used.scala" -> "final case class Used(x: Int)\nobject Used { def f() = 1 }",
+      "graft/x/Quoted.scala" -> "private[graft] object Quoted { def f() = 1 }",
+      "graft/x/Timed.scala" -> "class Timed { def run() = Helper.h() }",
+      "graft/x/Helper.scala" -> "object Helper { def h() = 2 }",
+      "graft/x/Mentioned.scala" -> "object Mentioned { def g() = 3 }",
+      "graft/x/Orphan.scala" -> "object Orphan { def g() = Used.f() }",
+      "graft/x/PingA.scala" -> "object PingA { def a(): Int = PingB.b() }",
+      "graft/x/PingB.scala" -> "trait PingB\nobject PingB { def b(): Int = PingA.a() }")
+    assert(unreached(tree, Set("Timed")) === Seq("graft/x/Mentioned.scala",
+      "graft/x/Orphan.scala", "graft/x/PingA.scala", "graft/x/PingB.scala"))
+    // a catalog file is a root without being named
+    assert(unreached(tree.map { case (f, t) =>
+      f.replace("graft/x/Orphan", "graft/catalog/Orphan") -> t },
+      Set("Timed")) === Seq("graft/x/Mentioned.scala",
+      "graft/x/PingA.scala", "graft/x/PingB.scala"))
   }
 }

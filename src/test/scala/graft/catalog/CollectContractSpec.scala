@@ -46,9 +46,6 @@ class CollectContractSpec extends AnyFunSuite {
       (1, "the top-N gene vectors the pairwise correlations are computed " +
         "from: limit(MaxDriverGenes + 1) behind a require guard " +
         "(2,000 vectors of #samples doubles; the pipeline takes 500)"),
-    "graft/prep/Ipf.scala" ->
-      (3, "row/column marginal target maps + seed cells, all behind " +
-        "the maxCells require guard (category-grain by contract)"),
     "graft/ann/Similarity.scala" ->
       (3, "IVF seed rows via limit(nLists); MMR winner via limit(1) " +
         "per iteration (k iterations, k bounded by the API contract)"),

@@ -230,8 +230,9 @@ class DedupSpec extends SparkSuite {
   }
 
   test("simhash identical docs have equal fingerprints; near dups are close") {
-    val sigs = Dedup.withSimhash(docs, "text")
-      .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
+    val sigs = docs.select($"doc_id",
+        simhash64(word_shingles($"text", 1)).as("simhash"))
+      .as[(Long, Long)].collect().toMap
     assert(sigs(1L) == sigs(2L))
     val dNear = java.lang.Long.bitCount(sigs(1L) ^ sigs(3L))
     val dFar = java.lang.Long.bitCount(sigs(1L) ^ sigs(6L))
@@ -347,25 +348,19 @@ class DedupSpec extends SparkSuite {
   }
 
   test("degenerate band parameters are rejected loudly") {
-    intercept[IllegalArgumentException] {
-      Dedup.simhashPairs(docs, "doc_id", "text", bands = 1)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.simhashPairs(docs, "doc_id", "text", bands = 5)   // 64 % 5 != 0
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.minhashLshPairs(docs, "doc_id", "text", numHashes = 16, bands = 32)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.minhashLshPairs(docs, "doc_id", "text", numHashes = 16, bands = 3)
-    }
-  }
-
-  test("simhashDedup removes exact dup, keeps distinct docs") {
-    val kept = Dedup.simhashDedup(docs, "doc_id", "text", maxDist = 0)
-      .select("doc_id").as[Long].collect().sorted
-    assert(!kept.contains(2L))
-    assert(kept.contains(1L) && kept.contains(4L) && kept.contains(6L))
+    def rejected(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage
+    assert(rejected(Dedup.simhashPairs(docs, "doc_id", "text", bands = 1)) ===
+      "requirement failed: bands must divide 64 and be >= 2, got 1")
+    assert(rejected(Dedup.simhashPairs(docs, "doc_id", "text",
+      bands = 5)) ===   // 64 % 5 != 0
+      "requirement failed: bands must divide 64 and be >= 2, got 5")
+    assert(rejected(Dedup.minhashLshPairs(docs, "doc_id", "text",
+      numHashes = 16, bands = 32)) ===
+      "requirement failed: bands must divide numHashes (16), got 32")
+    assert(rejected(Dedup.minhashLshPairs(docs, "doc_id", "text",
+      numHashes = 16, bands = 3)) ===
+      "requirement failed: bands must divide numHashes (16), got 3")
   }
 
   test("ngramJaccardPairs: exact dup has jaccard 1.0; near dup above 0.5") {
@@ -376,6 +371,8 @@ class DedupSpec extends SparkSuite {
     assert(pairs((1L, 2L)) == 1.0)
     assert(pairs.contains((1L, 3L)) && pairs((1L, 3L)) < 1.0)
     assert(!pairs.contains((1L, 6L)))
+    // doc4: 4 trigrams; doc5: 6 trigrams; common = 4 -> j = 4/6
+    assert(approx(pairs((4L, 5L)), 0.6667, 1e-4))
   }
 
   test("minhash lsh: shingle-less docs never pair (no sentinel-signature bucket)") {
@@ -413,14 +410,6 @@ class DedupSpec extends SparkSuite {
     val pairs = Dedup.embeddingPairs(vecs, "vec_id", "embedding", 64, 0.99)
       .as[(Long, Long, Double)].collect()
     assert(pairs.nonEmpty && pairs.forall(p => p._2 == p._1 + 10000 && p._3 >= 0.99))
-  }
-
-  test("verifyJaccard matches set arithmetic") {
-    val cand = Seq((4L, 5L)).toDF("id_a", "id_b")
-    val got = Dedup.verifyJaccard(docs, "doc_id", "text", cand, 3, 0.0)
-      .as[(Long, Long, Double)].collect()
-    // doc4: 4 trigrams; doc5: 6 trigrams; common = 4 -> j = 4/6
-    assert(got.length == 1 && approx(got(0)._3, 0.6667, 1e-4))
   }
 
   test("crossSourceDupMatrix: shared distinct contents per source pair") {

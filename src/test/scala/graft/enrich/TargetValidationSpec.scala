@@ -54,53 +54,6 @@ class TargetValidationSpec extends SparkSuite {
     assert(order == Seq("CACNA1F", "EMPTY1", "IL12A", "NOHIT"))
   }
 
-  test("onlineEnrich: same schema and miss semantics as the snapshot join") {
-    import spark.implicits._
-    // mock service: bodies for ENSG1/ENSG2 only — ENSG3 is a MISS on the
-    // online path while the snapshot path has it; both paths must
-    // zero-fill identically for ids neither side resolves (NOHIT).
-    val bodies = Map(
-      "ENSG1" ->
-        """{"ensembl_id":"ENSG1","approvedSymbol":"CACNA1F","biotype":"protein_coding",
-           "knownDrugs":{"count":324,"rows":[{"drug":{"id":"D1","name":"drugA"}}]},
-           "associatedDiseases":{"count":2,"rows":[
-             {"disease":{"id":"X1","name":"d1"},"score":0.6},
-             {"disease":{"id":"X2","name":"d2"},"score":0.554}]}}""",
-      "ENSG2" ->
-        """{"ensembl_id":"ENSG2","approvedSymbol":"IL12A","biotype":"protein_coding",
-           "knownDrugs":{"count":0,"rows":[]},
-           "associatedDiseases":{"count":1,"rows":[
-             {"disease":{"id":"X3","name":"d3"},"score":0.251}]}}"""
-    ).map { case (k, v) => k -> v.replaceAll("\n\\s*", "") }
-    val ids = Seq("ENSG1", "ENSG2", "ENSG3").toDF("ensembl_id")
-    val fetch: Seq[String] => Map[String, String] =
-      batch => bodies.filter { case (k, _) => batch.contains(k) }
-    val online = TargetValidation.onlineEnrich(ids, "ensembl_id", fetch,
-      batchSize = 2, minIntervalMillis = 1)
-
-    // exact snapshot schema
-    val snapshotCols = Seq("ensembl_id", "approvedSymbol", "biotype",
-      "knownDrugs", "associatedDiseases")
-    assert(online.columns.toSeq == snapshotCols)
-    assert(online.schema.map(_.dataType) ==
-      openTargets().select(snapshotCols.map(org.apache.spark.sql
-        .functions.col): _*).schema.map(_.dataType))
-
-    // validate() runs unchanged: hits score identically to the snapshot
-    // path; the online-missing ENSG3 (EMPTY1) zero-fills like NOHIT
-    val scores = Seq(("CACNA1F", 0.9), ("IL12A", 0.8), ("EMPTY1", 0.7),
-      ("NOHIT", 0.6)).toDF("gene", "composite_score")
-    val ensembl = Seq(("CACNA1F", "ENSG1"), ("IL12A", "ENSG2"),
-      ("EMPTY1", "ENSG3")).toDF("symbol", "ensembl_id")
-    val out = TargetValidation.validate(scores, ensembl, online)
-    val rows = out.collect().map(r => r.getString(0) ->
-      (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    assert(rows("CACNA1F") == ((324L, 0.577, 194.631)))
-    assert(rows("IL12A") == ((0L, 0.251, 0.1)))
-    assert(rows("EMPTY1") == ((0L, 0.0, 0.0)))   // online miss -> zero-fill
-    assert(rows("NOHIT") == ((0L, 0.0, 0.0)))    // unresolved id -> zero-fill
-  }
-
   test("is_valid_symbol matches the reference predicate on edge cases") {
     import spark.implicits._
     import graft.functions.gfunctions.is_valid_symbol

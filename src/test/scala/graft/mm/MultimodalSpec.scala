@@ -9,6 +9,11 @@ class MultimodalSpec extends SparkSuite {
 
   private val docs = Seq((1L, "abcdefgh"), (2L, "xy"), (3L, "")).toDF("id", "payload")
 
+  /** The exceptions from `e` down its cause chain: a kernel's failure
+    * reaches the driver wrapped in the job's SparkException. */
+  private def chain(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
   test("asMediaTable: binary column + typed metadata") {
     val m = Multimodal.asMediaTable(docs, "id", "payload", "text/plain")
     assert(m.schema("media").dataType.typeName == "binary")
@@ -16,17 +21,6 @@ class MultimodalSpec extends SparkSuite {
       .as[(Long, String, Int)].collect().sortBy(_._1)
     assert(meta.toSeq == Seq((1L, "text/plain", 8), (2L, "text/plain", 2),
       (3L, "text/plain", 0)))
-  }
-
-  test("stubDecode yields deterministic fixed-width features") {
-    val m = Multimodal.asMediaTable(docs, "id", "payload", "text/plain")
-    val f = Multimodal.stubDecode(m).select($"media_id", $"features")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1).toMap
-    assert(f(1L).length == 3 && f(1L)(0) == 8.0 && f(1L)(1) == 'a'.toDouble)
-    // determinism across invocations
-    val f2 = Multimodal.stubDecode(m).select($"media_id", $"features")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1).toMap
-    assert(f == f2)
   }
 
   test("decodePartitions: mapPartitions boundary, deterministic stub kernel") {
@@ -60,7 +54,9 @@ class MultimodalSpec extends SparkSuite {
     val err = intercept[org.apache.spark.SparkException] {
       Multimodal.decodePartitions(bad, Multimodal.imageKernel).collect()
     }
-    assert(err.getMessage != null)
+    assert(chain(err).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage == "requirement failed: imagePixels: payload is not " +
+        "a decodable image (PNG/JPEG/BMP/GIF)"), err)
   }
 
   test("audioKernel decodes a real WAV to exact PCM features") {
@@ -93,9 +89,11 @@ class MultimodalSpec extends SparkSuite {
 
     // corrupt payload fails loudly at the boundary
     val bad = Seq((10L, Array[Byte](9, 9, 9))).toDF("media_id", "media")
-    intercept[org.apache.spark.SparkException] {
+    val err = intercept[org.apache.spark.SparkException] {
       Multimodal.decodePartitions(bad, Multimodal.audioKernel).collect()
     }
+    assert(chain(err).exists(
+      _.isInstanceOf[javax.sound.sampled.UnsupportedAudioFileException]), err)
   }
 
   test("videoMetadata: committed MP4 fixture parses brand, duration " +
@@ -111,10 +109,13 @@ class MultimodalSpec extends SparkSuite {
     val f = Multimodal.decodePartitions(media, Multimodal.videoKernel)
       .as[(Long, Seq[Float])].collect().toMap
     assert(f(11L) == Seq(2.5f, 320f, 240f, mp4.length.toFloat))
-    // non-MP4 payload: loud contract failure, not a silent zero row
-    intercept[IllegalArgumentException] {
+    // non-MP4 payload: loud contract failure, not a silent zero row —
+    // its first "box" header claims ~1.8 GB past an 11-byte payload
+    val err = intercept[IllegalArgumentException] {
       Multimodal.videoMetadata("not a video".getBytes)
     }
+    assert(err.getMessage ===
+      "requirement failed: videoMetadata: corrupt box 'a vi' at 0")
   }
 
   test("videoFrameKernel: committed MJPEG-AVI fixture decodes to real " +
@@ -145,12 +146,15 @@ class MultimodalSpec extends SparkSuite {
       f(12L)(1) == 8f && f(12L)(2) == 6f && f(12L)(3) >= 249f &&
       f(12L)(4) <= 6f && f(12L)(5) <= 6f)
     // non-AVI payload: loud contract failure at the boundary
-    intercept[IllegalArgumentException] {
+    val notRiff = "requirement failed: aviFrames: not a RIFF/AVI payload"
+    assert(intercept[IllegalArgumentException] {
       Multimodal.aviFrames("not a riff".getBytes)
-    }
+    }.getMessage === notRiff)
     // an MP4 is not an AVI — the two kernels stay honest about routing
     val mp4 = getClass.getResourceAsStream("/tiny_video.mp4").readAllBytes()
-    intercept[IllegalArgumentException] { Multimodal.aviFrames(mp4) }
+    assert(intercept[IllegalArgumentException] {
+      Multimodal.aviFrames(mp4)
+    }.getMessage === notRiff)
   }
 
   test("frame sampling: every stride-th byte, short media empty") {

@@ -12,49 +12,6 @@ class PrivacySpec extends SparkSuite {
     (6L, "EF", 2)
   ).toDF("id", "seg", "nation")
 
-  test("kAnonymize keeps only rows in groups of at least k") {
-    val k2 = Privacy.kAnonymize(rows, Seq("seg", "nation"), 2)
-      .select("id").as[Long].collect().sorted
-    assert(k2.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
-    val k3 = Privacy.kAnonymize(rows, Seq("seg", "nation"), 3)
-      .select("id").as[Long].collect().sorted
-    assert(k3.toSeq == Seq(1L, 2L, 3L))
-    // schema is unchanged (no working column leaks)
-    assert(Privacy.kAnonymize(rows, Seq("seg"), 1).columns.toSeq ==
-      rows.columns.toSeq)
-  }
-
-  test("null quasi-identifier values group together (nulls are linkable)") {
-    val withNull = Seq((1L, Option.empty[String]), (2L, None), (3L, Some("X")))
-      .toDF("id", "seg")
-    val kept = Privacy.kAnonymize(withNull, Seq("seg"), 2)
-      .select("id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L, 2L))   // the two null-seg rows protect each other
-  }
-
-  test("kAnonymizeAgainst on a stream: snapshot gates rows per micro-batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    // released population: AB seen 3x, EF once
-    val sizes = Privacy.groupSizes(
-      Seq((1L, "AB"), (2L, "AB"), (3L, "AB"), (6L, "EF")).toDF("id", "seg"),
-      Seq("seg"))
-    in.addData((10L, "AB"), (11L, "EF"), (12L, "ZZ"))
-    val q = Privacy.kAnonymizeAgainst(in.toDF().toDF("id", "seg"),
-        sizes, Seq("seg"), k = 2)
-      .writeStream.format("memory").queryName("kanon_stream")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ck-kanon").toString)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("kanon_stream").select("id")
-      .as[Long].collect().sorted
-    assert(got.toSeq == Seq(10L))   // EF (n=1) and ZZ (unseen) held back
-  }
-
   test("suppressionReport: per-k groups, rows, suppressed fraction") {
     val got = Privacy.suppressionReport(rows, Seq("seg", "nation"),
         Seq(1L, 2L, 3L, 10L))
@@ -63,5 +20,14 @@ class PrivacySpec extends SparkSuite {
     assert(got(2L) == ((2L, 2L, 5L, 0.1667)))
     assert(got(3L) == ((3L, 1L, 3L, 0.5)))
     assert(got(10L) == ((10L, 0L, 0L, 1.0)))   // everything suppressed
+  }
+
+  test("null quasi-identifier values group together (nulls are linkable)") {
+    val withNull = Seq((1L, Option.empty[String]), (2L, None), (3L, Some("X")))
+      .toDF("id", "seg")
+    val got = Privacy.suppressionReport(withNull, Seq("seg"), Seq(2L))
+      .as[(Long, Long, Long, Double)].collect()
+    // the two null-seg rows form one group of 2 and protect each other
+    assert(got.toSeq == Seq((2L, 1L, 2L, 0.3333)))
   }
 }

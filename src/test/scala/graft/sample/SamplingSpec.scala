@@ -65,36 +65,29 @@ class SamplingSpec extends SparkSuite {
       .select("id", "split").as[(Long, String)].collect().sorted.toSeq
     assert(a == b)
     // degenerate weights rejected loudly
-    intercept[IllegalArgumentException] {
+    val err = intercept[IllegalArgumentException] {
       Sampling.contentSplit(docs, "text", Seq("a" -> 0.0, "b" -> 1.0))
     }
+    assert(err.getMessage ===
+      "requirement failed: splits must be non-empty with positive weights")
   }
 
-  test("temperatureWeights: alpha endpoints and up-sampling direction") {
-    // skewed strata: s0 has 700 rows, s1/s2/s3 have 100 each
+  test("temperatureSample: null strata get no mass; bad alpha rejected") {
     val skew = ((0L until 700L).map(i => (i, "s0")) ++
       (0L until 300L).map(i => (700 + i, s"s${1 + i % 3}"))).toDF("k", "g")
-    val natural = Sampling.temperatureWeights(skew, "g", alpha = 1.0)
-    assert(approx(natural("s0"), 0.7, 1e-9) && approx(natural("s1"), 0.1, 1e-9))
-    val uniform = Sampling.temperatureWeights(skew, "g", alpha = 0.0)
-    assert(uniform.values.forall(w => approx(w, 0.25, 1e-9)))
-    val mid = Sampling.temperatureWeights(skew, "g", alpha = 0.5)
-    // between natural and uniform: big stratum shrinks, small ones grow
-    assert(mid("s0") < natural("s0") && mid("s0") > uniform("s0"))
-    assert(mid("s1") > natural("s1") && mid("s1") < uniform("s1"))
-    assert(approx(mid.values.sum, 1.0, 1e-9))
-    intercept[IllegalArgumentException] {
-      Sampling.temperatureWeights(skew, "g", alpha = 1.5)
-    }
-    // null strata are excluded from the weight MASS, not just the output
-    // (counting them would scale every real stratum's rate down)
+    // null-stratum rows neither consume target mass nor get sampled:
+    // counting them would scale every real stratum's rate down
     val withNulls = skew.union(
       (0L until 1000L).map(i => (5000 + i, Option.empty[String]))
         .toDF("k", "g"))
-    val wn = Sampling.temperatureWeights(withNulls, "g", alpha = 1.0)
-    assert(wn.keySet == natural.keySet)
-    assert(approx(wn.values.sum, 1.0, 1e-9))
-    assert(approx(wn("s0"), natural("s0"), 1e-9))
+    def sampled(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      Sampling.temperatureSample(df, "g", "k", alpha = 0.5, targetRows = 200)
+        .select("k").as[Long].collect().sorted.toSeq
+    assert(sampled(withNulls) == sampled(skew))
+    val err = intercept[IllegalArgumentException] {
+      Sampling.temperatureSample(skew, "g", "k", alpha = 1.5, targetRows = 200)
+    }
+    assert(err.getMessage === "requirement failed: alpha must be in [0, 1]")
   }
 
   test("temperatureSample: up-samples small strata vs natural rate") {
