@@ -305,7 +305,7 @@ object Similarity {
     val spark = candidates.sparkSession
     import scala.collection.mutable.ArrayBuffer
     val picked = ArrayBuffer.empty[(Long, Double, Double)] // id, rel, mmr
-    var selVecs = ArrayBuffer.empty[(Long, Seq[Double])]
+    val selVecs = ArrayBuffer.empty[(Long, Seq[Double])]
     var i = 0
     val total = cand.count()
     while (i < k && i < total) {

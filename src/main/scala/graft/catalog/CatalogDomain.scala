@@ -1170,7 +1170,6 @@ object CatalogDomain {
     * aggregates epoch-microsecond diffs. */
   private val q92 = Q("q92_funnel_latency",
     (s, dir) => {
-      import s.implicits._
       graft.events.Funnel.conversionLatency(t(s, dir, "events"), "user_id",
         "event_type", "ts", Seq("signup", "click", "purchase"))
     },

@@ -312,7 +312,6 @@ object CatalogEcon {
     * marginals summed from the SAME joint-cell aggregate. */
   private val q171 = Q("q171_mutual_info",
     (s, dir) => {
-      import s.implicits._
       graft.de.InfoTheory.mutualInformation(t(s, dir, "part"),
         "p_brand", "p_size")
     },

@@ -337,7 +337,6 @@ object CatalogEcon3 {
     * comparable across table sizes. */
   private val q188 = Q("q188_cramers_v",
     (s, dir) => {
-      import s.implicits._
       graft.de.RankStats.contingencyEffects(t(s, dir, "orders"),
         "o_orderpriority", "o_orderstatus")
     },

@@ -1068,7 +1068,6 @@ object CatalogLlm {
     * surviving a >= threshold gate (suffix sum). */
   private val q65 = Q("q65_gate_sweep",
     (s, dir) => {
-      import s.implicits._
       val scored = TextAnalysis.withQuality(t(s, dir, "documents"), "text")
       TextAnalysis.gateSweep(scored, "quality_score")
     },
@@ -1413,7 +1412,6 @@ object CatalogLlm {
     * sequence packing (q55). Bucket key floors the 9-dp-rounded log2. */
   private val q83 = Q("q83_padding_efficiency",
     (s, dir) => {
-      import s.implicits._
       graft.text.Chunking.paddingEfficiency(
         t(s, dir, "documents"), "text", seqLen = 256)
     },
@@ -1610,7 +1608,6 @@ object CatalogLlm {
     * lexicographic tie-break so the top-k cut is engine-independent. */
   private val q96 = Q("q96_pmi_pairs",
     (s, dir) => {
-      import s.implicits._
       graft.text.CorpusStats.pmiPairs(t(s, dir, "documents"),
         "doc_id", "text", minTermDocs = 10, maxTermDocs = 400,
         minPairDocs = 5, k = 50)
@@ -1803,7 +1800,6 @@ object CatalogLlm {
     * 6-dp centroid rounding contract. */
   private val q133 = Q("q133_kmeans",
     (s, dir) => {
-      import s.implicits._
       graft.ml.KMeans.lloydStats(t(s, dir, "embeddings"),
         "vec_id", "embedding", k = 8, iters = 3)
     },

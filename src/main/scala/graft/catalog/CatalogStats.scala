@@ -268,7 +268,6 @@ object CatalogStats {
     * both engines bucket identically by construction. */
   private val q151 = Q("q151_benford",
     (s, dir) => {
-      import s.implicits._
       graft.util.Profile.benfordFirstDigit(t(s, dir, "orders"),
         "o_totalprice")
     },
@@ -550,7 +549,6 @@ object CatalogStats {
     * point query. est >= exact by construction (CmsKmvSpec). */
   private val q160 = Q("q160_cms_tokens",
     (s, dir) => {
-      import s.implicits._
       graft.sketch.Sketches.cmsTokenReport(
         t(s, dir, "documents"), "text",
         depth = 4, width = 256, probeTopK = 20)
@@ -582,7 +580,6 @@ object CatalogStats {
     * → ±1/√k ≈ 6% expected error, visible in the report. */
   private val q161 = Q("q161_kmv_distinct",
     (s, dir) => {
-      import s.implicits._
       graft.sketch.Sketches.kmvDistinct(
           t(s, dir, "lineitem"), "l_returnflag", "l_orderkey", k = 256)
         .withColumnRenamed("grp", "l_returnflag")

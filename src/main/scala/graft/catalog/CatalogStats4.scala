@@ -251,7 +251,6 @@ object CatalogStats4 {
     * aggregate. */
   private val q375 = Q("q375_segmented_ols",
     (s, dir) => {
-      import s.implicits._
       graft.ml.Regression.segmented(t(s, dir, "lineitem"),
         "l_extendedprice", "l_quantity", knot = 25.0)
     },
@@ -790,7 +789,6 @@ object CatalogStats4 {
     * oracle replays OLS + scale + the weighted-solve recursion. */
   private val q385 = Q("q385_huber",
     (s, dir) => {
-      import s.implicits._
       // exactScale pinned: the DuckDB oracle replays the EXACT
       // recursive median/MAD, so the approx_percentile dispatch path
       // (valid for the library at fact scale) would diverge from it at
@@ -1544,7 +1542,6 @@ object CatalogStats4 {
     * variance, Simpson normal-tail oracle. */
   private val q394 = Q("q394_jonckheere",
     (s, dir) => {
-      import s.implicits._
       graft.de.RankStats.jonckheereTerpstra(t(s, dir, "orders"),
         "o_orderpriority", "o_totalprice",
         Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
@@ -1638,7 +1635,6 @@ object CatalogStats4 {
     * oracle. */
   private val q395 = Q("q395_brunner_munzel",
     (s, dir) => {
-      import s.implicits._
       graft.de.RankStats.brunnerMunzel(t(s, dir, "events"),
         "event_type", "value", a = "click", b = "view")
     },

@@ -1,11 +1,13 @@
 package graft.de
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.gfunctions._
+import graft.util.DriverOrder
 
 /** Statistical transforms for differential expression: Benjamini–Hochberg
   * FDR adjustment (A8, `pipeline2.py:619-629` / statsmodels `fdr_bh`) and
@@ -14,6 +16,10 @@ import graft.functions.gfunctions._
 object Stats {
 
   /** Benjamini–Hochberg adjusted p-values.
+    *
+    * The pipeline adjusts rows it already holds ([[bhAdjustRows]], the same
+    * bits); this frame form serves the catalog, [[byAdjust]] and the
+    * benchmark's traced pipeline.
     *
     * Matches `statsmodels.stats.multitest.multipletests(method='fdr_bh')`:
     * over the m non-null p's, adj_i = min(1, cummin_{j>=i}(p_j * m / j))
@@ -50,6 +56,33 @@ object Stats {
     val result = adjusted.unionByName(invalid).localCheckpoint()
     cached.unpersist(false)
     result
+  }
+
+  /** [[bhAdjust]] over p-values already on the driver, with the windowed
+    * branch's bits: the valid p's (neither null nor NaN; m of them) are
+    * ranked by p (`SQLOrderingUtil.compareDoubles`), ties by `keys` in
+    * Spark's string order (the windowed `tieBreak`, [[DriverOrder]]); each
+    * factor is `p * m / rank`, the reverse running min keeps the earlier
+    * value on a tie (`min`'s `least` update), then `min(1.0, ·)`. Invalid
+    * p's get null. Returns the adjusted values in input order. No size
+    * decision is made: the caller holds the rows already, so
+    * `SPARK_GRAFT_FORCE_DISPATCH` does not reach it. */
+  def bhAdjustRows(keys: IndexedSeq[String],
+                   ps: IndexedSeq[java.lang.Double]): Array[java.lang.Double] = {
+    val ranked = ps.indices.filter(i => ps(i) != null && !ps(i).isNaN)
+      .sortWith { (a, b) =>
+        val c = SQLOrderingUtil.compareDoubles(ps(a), ps(b))
+        if (c != 0) c < 0 else DriverOrder.strings(keys(a), keys(b)) < 0
+      }
+    val m = ranked.length.toDouble
+    val out = new Array[java.lang.Double](ps.length)
+    var run = Double.NaN
+    for (r <- ranked.indices.reverse) {
+      val f = ps(ranked(r)) * m / (r + 1).toDouble
+      if (r == ranked.length - 1 || SQLOrderingUtil.compareDoubles(f, run) < 0) run = f
+      out(ranked(r)) = if (SQLOrderingUtil.compareDoubles(run, 1.0) < 0) run else 1.0
+    }
+    out
   }
 
   /** Benjamini–Yekutieli FDR (X91): BH's guarantee under ARBITRARY

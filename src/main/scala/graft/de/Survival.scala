@@ -375,7 +375,7 @@ object Survival {
       var bit: Array[Int] = null
       var seen = 0L; var n = 0L
       var pairs = 0L; var conc = 0L; var tied = 0L
-      var block = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      val block = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
       var blockT = Double.NaN
       def bitAdd(i0: Int): Unit = {
         var i = i0

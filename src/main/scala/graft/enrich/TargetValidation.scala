@@ -1,10 +1,14 @@
 package graft.enrich
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.gfunctions.is_valid_symbol
+import graft.util.DriverOrder
 
 /** Target validation against offline Ensembl/OpenTargets snapshots
   * (S6/S7, J7, A13, A16, F6/F7; `pipeline2.py:829-1021`).
@@ -40,6 +44,10 @@ object TargetValidation {
       .groupBy("symbol").agg(min(col("ensembl_id")).as("ensembl_id"))
 
   /** F7 + §2.6 top-k + J7 + A13 + A16.
+    *
+    * The pipeline validates the score rows it holds ([[validateRows]], the
+    * same rows); this frame form's caller is the benchmark's traced
+    * pipeline, and it goes with that mirror.
     *
     * @param targetScores (gene, composite_score, ...) sorted or not — the
     *                     top-N cut re-sorts deterministically
@@ -83,5 +91,81 @@ object TargetValidation {
       .select("gene", "composite_score", "num_known_drugs",
         "avg_association_score", "drugability_score")
       .orderBy(col("drugability_score").desc, col("gene"))
+  }
+
+  /** [[validate]]'s columns. */
+  val FinalSchema: StructType = StructType(Seq(
+    StructField("gene", StringType), StructField("composite_score", DoubleType),
+    StructField("num_known_drugs", LongType),
+    StructField("avg_association_score", DoubleType),
+    StructField("drugability_score", DoubleType)))
+
+  /** [[validate]] over score rows already on the driver, with the frame
+    * form's rows, values and order:
+    *   - the top cut: `scores` sorted by composite descending, then gene
+    *     (Spark's order, [[DriverOrder]]), filtered by `is_valid_symbol`
+    *     over a local frame (evaluated on the driver, no job), first `topN`;
+    *   - the snapshots: `ensembl` (symbol, ensembl_id) and `openTargets`
+    *     (the loaders' frames) filtered to those symbols and their ids and
+    *     collected — at most `topN` symbols' rows reach the driver;
+    *   - the joins: left joins on equal non-null keys, one output row per
+    *     match (an id with several OpenTargets rows fans out), a miss
+    *     zero-filled;
+    *   - the scores: the non-null association scores summed in array
+    *     order from 0.0, over their count (0.0 when none); `round` is
+    *     `BigDecimal.valueOf(d).setScale(3, HALF_UP)`, and drugability is
+    *     taken from the unrounded average;
+    *   - the order: drugability descending, then gene.
+    *
+    * @param scores (gene, composite_score) pairs
+    * @return rows in [[FinalSchema]]
+    */
+  def validateRows(scores: Seq[(String, Double)], ensembl: DataFrame,
+                   openTargets: DataFrame, topN: Int = 20): Seq[Row] = {
+    val spark = ensembl.sparkSession
+    val ranked = scores.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
+      if (c != 0) c < 0 else DriverOrder.strings(a._1, b._1) < 0
+    }
+    val rankedSchema = StructType(Seq(StructField("gene", StringType),
+      StructField("composite_score", DoubleType, nullable = false)))
+    val top = spark.createDataFrame(ranked.map(Row.fromTuple).asJava, rankedSchema)
+      .filter(is_valid_symbol(col("gene"))).collect().take(topN)
+      .map(r => (r.getString(0), r.getDouble(1)))
+    val symbols = top.map(_._1).distinct
+    val ids: Map[String, Seq[String]] = ensembl
+      .filter(col("symbol").isin(symbols: _*))
+      .select(col("symbol"), col("ensembl_id")).collect().toSeq
+      .groupBy(_.getString(0)).map { case (k, rs) => k -> rs.map(_.getString(1)) }
+    val idSet = ids.valuesIterator.flatten.filter(_ != null).toSeq.distinct
+    // (nDrugs, the association scores) per OpenTargets row
+    val targets: Map[String, Seq[(Long, Seq[java.lang.Double])]] = openTargets
+      .filter(col("ensembl_id").isin(idSet: _*))
+      .select(col("ensembl_id"), col("knownDrugs.count"),
+        col("associatedDiseases.rows.score"))
+      .collect().toSeq
+      .groupBy(_.getString(0)).map { case (k, rs) => k -> rs.map { r =>
+        (if (r.isNullAt(1)) 0L else r.getLong(1),
+          if (r.isNullAt(2)) Seq.empty else r.getSeq[java.lang.Double](2))
+      } }
+    def round3(d: Double): Double =
+      if (d.isNaN || d.isInfinite) d
+      else java.math.BigDecimal.valueOf(d)
+        .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue
+    val rows = for {
+      (gene, composite) <- top.toSeq
+      id <- ids.getOrElse(gene, Seq(null))
+      (nDrugs, scoreList) <- Option(id).flatMap(targets.get).getOrElse(Seq((0L, Seq.empty)))
+    } yield {
+      val present = scoreList.filter(_ != null)
+      val avg =
+        if (present.isEmpty) 0.0
+        else present.foldLeft(0.0)(_ + _.doubleValue) / present.size
+      Row(gene, composite, nDrugs, round3(avg), round3(nDrugs * 0.6 + avg * 0.4))
+    }
+    rows.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(b.getDouble(4), a.getDouble(4))
+      if (c != 0) c < 0 else DriverOrder.strings(a.getString(0), b.getString(0)) < 0
+    }
   }
 }

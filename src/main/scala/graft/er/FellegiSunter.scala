@@ -1,6 +1,6 @@
 package graft.er
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fellegi–Sunter probabilistic record-linkage scoring (Fellegi &

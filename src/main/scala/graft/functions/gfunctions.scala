@@ -253,12 +253,13 @@ object gfunctions {
 
   /** Gene-symbol validity predicate (F6, `pipeline2.py:794-827`): length
     * 1..20, no "_at", no UNKNOWN_ prefix, at least one letter, charset
-    * alnum plus '.' and '-'. Pure built-ins, no UDF. */
+    * alnum plus '.' and '-'. The charset admits no '_', so it implies the
+    * "_at" and UNKNOWN_ rules, which are not tested again (the "_at" rule
+    * is case-insensitive: its `lower` would load ICU's case mappings, about
+    * 1.7 s on first use in a JVM). Pure built-ins, no UDF. */
   def is_valid_symbol(c: Column): Column =
     c.isNotNull &&
       length(c).between(1, 20) &&
-      !lower(c).contains("_at") &&
-      !c.startsWith("UNKNOWN_") &&
       c.rlike("[A-Za-z]") &&
       c.rlike("^[A-Za-z0-9.\\-]+$")
 

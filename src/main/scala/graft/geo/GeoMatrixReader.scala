@@ -1,5 +1,7 @@
 package graft.geo
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -133,7 +135,8 @@ object GeoMatrixReader {
     * lines, characteristics pivot (label taken from the FIRST sample's
     * "label: value" — a reference quirk kept as-is), cancer/benign keyword
     * assignment with tissue -> title -> any-characteristic precedence, and
-    * the half/half default when either group has < 2 samples. */
+    * the half/half default when either group has < 2 samples. The frame is
+    * a local relation in `ordinal` order: collecting it runs no Spark job. */
   private[geo] def buildMetadata(spark: SparkSession,
                                  metaLines: Seq[String]): DataFrame = {
     // split limit -1: keep trailing empty fields (Python str.split
@@ -205,7 +208,6 @@ object GeoMatrixReader {
       Row(sid, i, if (i < titles.length) titles(i) else null,
         groups.get(sid).orNull, characteristics(sid).toMap)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 }

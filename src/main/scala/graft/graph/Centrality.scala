@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.util.DriverOrder
 
 /** Graph centrality kernels (G2–G4, `pipeline2.py:747-749`), networkx
   * numeric parity.
@@ -846,8 +847,7 @@ object Centrality {
       .sortWith { (x, y) =>
         val byScore = SQLOrderingUtil.compareDoubles(y.getDouble(4), x.getDouble(4))
         if (byScore != 0) byScore < 0
-        else UTF8String.fromString(x.getString(0))
-          .compareTo(UTF8String.fromString(y.getString(0))) < 0
+        else DriverOrder.strings(x.getString(0), y.getString(0)) < 0
       }
   }
 }

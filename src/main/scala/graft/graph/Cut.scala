@@ -2,7 +2,7 @@ package graft.graph
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Articulation points and bridges (X269/X270) — the single points of

@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Split-conformal prediction intervals (X282; Vovk et al. / Lei et

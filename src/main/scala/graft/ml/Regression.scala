@@ -196,7 +196,6 @@ object Regression {
       else {
         val eta = lit(beta(0)) + lit(beta(1)) * col("__x1") +
           lit(beta(2)) * col("__x2")
-        val mu = lit(1.0) / (lit(1.0) + exp(-eta))
         // log-likelihood via the numerically-stable single-log form:
         // y·η − ln(1+e^η)  (identical algebra to y·lnμ + (1−y)·ln(1−μ))
         val ll = col("__y") * eta - log(lit(1.0) + exp(eta))

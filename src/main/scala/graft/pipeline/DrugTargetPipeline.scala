@@ -5,7 +5,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -75,17 +74,27 @@ private final case class Network(nodes: IndexedSeq[String],
   * ordered by an explicit key, so no output depends on the partition
   * count.
   *
-  * From `significant_genes` on, every table is bounded by the gene count
-  * or by top-N and is computed from rows the driver already holds: the
-  * significant table is collected once (it gives the network's genes and
-  * the summary's counts), the pairs, edges, centralities and composite
-  * scores are computed on the driver ([[CoExpressionNetwork.pairwise]],
-  * [[Centrality.networkScores]]), and the network, figure and summary
-  * tables are cut from those rows. Spark jobs there are the CSV writes,
-  * the significant-table collect, the top-vector collect (plus the
-  * variance ranking when no gene is significant), the target validation
-  * and the summary's counts over the matrix (distinct probes, genes,
-  * sample arms).
+  * From the probe collapse on, every table is bounded by the gene count
+  * or by top-N and is computed from rows the driver already holds:
+  *   - the sample metadata is a local relation, its rows collected with no
+  *     job; they give the metadata sink, the sample groups and the
+  *     summary's arms;
+  *   - the Welch table is collected once and adjusted on the driver
+  *     ([[DifferentialExpression.runRows]]); the volcano and significant
+  *     tables are the Column forms over a local frame of those rows, and
+  *     the significant rows give the network's genes and the summary's
+  *     counts;
+  *   - the pairs, edges, centralities and composite scores are computed on
+  *     the driver ([[CoExpressionNetwork.pairwise]],
+  *     [[Centrality.networkScores]]), and the network, figure and summary
+  *     tables are cut from those rows;
+  *   - target validation joins the top valid symbols with their snapshot
+  *     rows on the driver ([[TargetValidation.validateRows]]).
+  *
+  * The Spark jobs left are: the header collect, parse, preprocess and probe
+  * collapse (with the gene matrix write); the Welch collect; the top-vector
+  * collect (plus the variance ranking when no gene is significant); the two
+  * snapshot reads; the summary's distinct-probe count; and the CSV writes.
   */
 final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
 
@@ -107,14 +116,20 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     out
   }
 
+  /** Rows already on the driver as a local relation: Catalyst evaluates a
+    * Project or Filter over it on the driver, and collecting it runs no
+    * job. */
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** Writes a bounded table's rows, already on the driver, as its CSV. */
   private def writeRows(rows: Seq[Row], schema: StructType,
                         path: String): Seq[Row] = {
-    Sinks.writeCsv(spark.createDataFrame(rows.asJava, schema), path)
+    Sinks.writeCsv(local(rows, schema), path)
     rows
   }
 
-  /** Collects a gene- or top-N-bounded table, writes its CSV. */
+  /** Collects a table over a local relation (no job), writes its CSV. */
   private def writeCollected(table: DataFrame, path: String): Seq[Row] =
     writeRows(table.collect().toSeq, table.schema, path)
 
@@ -127,9 +142,14 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     // the summary stage would re-scan and re-parse the raw matrix text.
     val geo = GeoMatrixReader.read(spark, config.matrixPath)
     geo.expression.persist(StorageLevel.MEMORY_AND_DISK)
+    // the sample metadata is a local relation: its rows reach the driver
+    // with no job, and feed the sink, the sample groups and the summary
+    val metaTable = geo.metadata.drop("characteristics")
+    val metaRows = metaTable.collect().toSeq.sortBy(_.getAs[Int]("ordinal"))
+    val conditions = metaRows.map(r =>
+      (r.getAs[String]("sample_id"), r.getAs[String]("condition")))
     stage("metadata_sink") {
-      Sinks.writeCsv(geo.metadata.drop("characteristics").orderBy("ordinal"),
-        s"$out/data/metadata")
+      writeRows(metaRows, metaTable.schema, s"$out/data/metadata")
     }
 
     // Stages 2+3: preprocess + probe collapse into gene rows
@@ -144,22 +164,22 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       g
     }
 
-    // Stage 4: differential expression
-    val differential = genes.flatMap { g =>
+    // Stage 4: differential expression, its gene-grain table collected
+    // once and adjusted on the driver, in gene order
+    val diffRows = genes.flatMap { g =>
       stage("differential_analysis") {
-        val res = DifferentialExpression
-          .run(spark, g, geo.sampleIds, geo.metadata)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        Sinks.writeCsv(res.orderBy("gene"), s"$out/data/differential_results")
-        res
+        writeRows(DifferentialExpression.runRows(g, geo.sampleIds, conditions),
+          DifferentialExpression.ResultSchema, s"$out/data/differential_results")
       }
     }
+    // the volcano and significant tables are the Column forms over a local
+    // frame of those rows: Catalyst evaluates them on the driver, no job
+    val differential = diffRows.map(local(_, DifferentialExpression.ResultSchema))
     // volcano figure (pipeline2.py:1029-1055): the gene-grain table the
     // reference hands matplotlib, rendered by the pure-JDK Figures renderer
     differential.foreach { res =>
       stage("figure_volcano") {
-        val pts = writeCollected(Sinks.volcanoData(res).orderBy("gene"),
-          s"$out/data/volcano_data")
+        val pts = writeCollected(Sinks.volcanoData(res), s"$out/data/volcano_data")
           .filter(r => !r.isNullAt(1) && !r.isNullAt(2)).map { r =>
             (r.getDouble(1), r.getDouble(2),
               !r.isNullAt(3) && r.getBoolean(3))
@@ -168,15 +188,14 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
           s"$out/figures/volcano_plot.png")
       }
     }
-    // the significant table, in gene order, collected once: it gives the
-    // network's genes and the summary's counts
-    val significant = differential.flatMap { d =>
+    // the significant table, in gene order: it gives the network's genes
+    // and the summary's counts
+    val sigRows = differential.flatMap { d =>
       stage("significant_genes") {
-        val sig = DifferentialExpression.significant(d)
-        (sig, writeCollected(sig.orderBy("gene"), s"$out/data/significant_genes"))
+        writeCollected(DifferentialExpression.significant(d),
+          s"$out/data/significant_genes")
       }
     }
-    val sigRows = significant.map(_._2)
 
     // Stage 5: network construction. The network's genes are the first
     // nTopGenes significant rows (gene order; significant genes are gene
@@ -210,8 +229,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
         writeRows(rows, Centrality.ScoreSchema, s"$out/data/network_targets")
       }
     }
-    val targetScores = scores.map(rows =>
-      spark.createDataFrame(rows.asJava, Centrality.ScoreSchema))
+    val targetScores = scores.map(local(_, Centrality.ScoreSchema))
 
     // Stage 6b: network + barplot figures (S10, pipeline2.py:1059-1114; G5
     // subgraph + F10 placeholder filter live inside the row builders), with
@@ -240,28 +258,30 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     }
 
     // Stage 7: target validation against offline snapshots (skipped, like a
-    // failed API, when no snapshot is configured)
-    val finalTargets = targetScores.flatMap { ts =>
+    // failed API, when no snapshot is configured): the top valid symbols of
+    // the score rows, joined on the driver with their snapshot rows
+    val finalTargets = scores.flatMap { rows =>
       (config.ensemblSnapshotPath, config.openTargetsSnapshotPath) match {
         case (Some(ens), Some(ot)) =>
           stage("validate_targets") {
-            val ft = TargetValidation.validate(ts,
-              TargetValidation.loadEnsemblSnapshot(spark, ens),
-              TargetValidation.loadOpenTargetsSnapshot(spark, ot),
-              config.topNValidation)
-            Sinks.writeCsv(ft, s"$out/data/final_targets")
-            ft
+            writeRows(TargetValidation.validateRows(
+                rows.map(r => (r.getString(0), r.getDouble(4))),
+                TargetValidation.loadEnsemblSnapshot(spark, ens),
+                TargetValidation.loadOpenTargetsSnapshot(spark, ot),
+                config.topNValidation),
+              TargetValidation.FinalSchema, s"$out/data/final_targets")
           }
         case _ => None
       }
-    }
+    }.map(local(_, TargetValidation.FinalSchema))
 
     // Stage 8: summary report
     stage("summary_report") {
-      val arms = geo.metadata.agg(count_if(col("condition") === "case"),
-        count_if(col("condition") === "control")).head()
+      def arm(c: String) = conditions.count(_._2 == c).toLong
       val nProbes = geo.expression.select("probe_id").distinct().count()
-      val nGenes = genes.map(_.count()).getOrElse(0L)
+      // one DE row per gene row
+      val nGenes = diffRows.map(_.size.toLong)
+        .getOrElse(genes.map(_.count()).getOrElse(0L))
       // count_if(log2FC > 0) / (log2FC < 0): Spark's double compare
       def sign(r: Row): Int = {
         val i = r.fieldIndex("log2FC")
@@ -275,12 +295,13 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       val nEdges = network.map(_.edges.size.toLong).getOrElse(0L)
       val topTargets = scores.map(_.take(10).map(r => (r.getString(0), r.getDouble(4))))
         .getOrElse(Seq.empty)
-      Sinks.summaryReport(geo.sampleIds.length.toLong, arms.getLong(0), arms.getLong(1),
+      Sinks.summaryReport(geo.sampleIds.length.toLong, arm("case"), arm("control"),
         nProbes, nGenes, nSig, nUp, nDown, nNodes, nEdges, topTargets,
         s"$out/summary.txt")
     }
 
-    PipelineResult(differential, significant.map(_._1), targetScores,
+    PipelineResult(differential,
+      sigRows.map(local(_, DifferentialExpression.ResultSchema)), targetScores,
       finalTargets, failures.toSeq, timings.toSeq)
   }
 }

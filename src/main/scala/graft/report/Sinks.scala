@@ -94,7 +94,9 @@ object Sinks {
     * (gene, log2FC, neg_log10_adj_p, significant). numpy/pandas parity:
     * -log10(0) = +Infinity (not null), NaN-comparison flags = false (not
     * null); the significance predicate is the SHARED
-    * [[graft.de.DifferentialExpression.isSignificant]] column. */
+    * [[graft.de.DifferentialExpression.isSignificant]] column. The pipeline
+    * applies it to a local frame of its DE rows (evaluated on the driver);
+    * the benchmark's traced pipeline applies it to the DE frame. */
   def volcanoData(results: DataFrame, pThreshold: Double = 0.05,
                   fcThreshold: Double = 1.0): DataFrame =
     results.select(

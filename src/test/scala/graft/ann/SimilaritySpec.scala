@@ -1,7 +1,5 @@
 package graft.ann
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 import graft.functions.gfunctions._
 

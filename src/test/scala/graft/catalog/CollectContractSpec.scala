@@ -36,12 +36,13 @@ class CollectContractSpec extends AnyFunSuite {
         "The pipeline's scorer (networkScores) collects nothing: it " +
         "takes the graph the pipeline already holds"),
     "graft/pipeline/DrugTargetPipeline.scala" ->
-      (2, "gene-grain tables through one collect-then-write helper: the " +
-        "volcano data, and the significant table, whose rows also give " +
-        "the network's genes and the summary's counts; the variance " +
-        "fallback's top-N gene names (limit(nTopGenes)). The edges, " +
-        "scores, figure tables and top 10 are cut from driver rows, " +
-        "with no collect"),
+      (3, "local relations only, collected with no job: the sample " +
+        "metadata (sample-grain), and through one collect-then-write " +
+        "helper the volcano and significant tables over the local frame " +
+        "of the DE rows (gene-grain, behind DifferentialExpression's " +
+        "MaxDriverRows cap); the variance fallback's top-N gene names " +
+        "(limit(nTopGenes)). The edges, scores, figure tables, final " +
+        "targets and top 10 are cut from driver rows, with no collect"),
     "graft/net/CoExpressionNetwork.scala" ->
       (1, "the top-N gene vectors the pairwise correlations are computed " +
         "from: limit(MaxDriverGenes + 1) behind a require guard " +
@@ -87,8 +88,14 @@ class CollectContractSpec extends AnyFunSuite {
       (1, "union-find small branch of the <= 2M-edge dispatch — " +
         "star-contraction label propagation above"),
     "graft/de/DifferentialExpression.scala" ->
-      (1, "GEO sample-metadata table — sample-grain (a platform has " +
-        "dozens to hundreds of samples, never fact rows)"),
+      (2, "GEO sample-metadata table — sample-grain (a platform has " +
+        "dozens to hundreds of samples, never fact rows); the Welch " +
+        "table, gene-grain, limit(MaxDriverRows + 1) behind a fixed " +
+        "2,000,000-row cap that fails with the count"),
+    "graft/enrich/TargetValidation.scala" ->
+      (3, "the valid-symbol cut over a local frame of the score rows " +
+        "(<= nTopGenes rows, no job); the Ensembl and OpenTargets " +
+        "snapshot rows filtered to the <= topN symbols and their ids"),
     "graft/catalog/CatalogDomain.scala" ->
       (1, "limit(100) frame collected for stored-order ranking"))
 

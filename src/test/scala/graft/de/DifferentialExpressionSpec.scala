@@ -1,7 +1,5 @@
 package graft.de
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 import graft.geo.GeoMatrixReader
 import graft.mapping.ProbeMapping

@@ -42,8 +42,10 @@ class NormalityTrendSpec extends SparkSuite {
   test("theilSen: series-grain guard fails fast on oversized groups") {
     val big = (1 to 50).map(i => ("g", i.toDouble, i.toDouble))
       .toDF("g", "x", "y")
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       RobustStats.theilSen(big, "g", "x", "y", maxSeriesRows = 10L)
-    }
+    }.getMessage == "requirement failed: theilSen input has a group with " +
+      "50 rows — above the series-grain contract (10); pre-aggregate the " +
+      "series (e.g. to daily grain) before calling")
   }
 }

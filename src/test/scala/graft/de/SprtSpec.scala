@@ -6,7 +6,6 @@ class SprtSpec extends SparkSuite {
   import spark.implicits._
 
   private val wPos = math.log(0.9 / 0.5)   // p0=0.5, p1=0.9
-  private val wNeg = math.log(0.1 / 0.5)
   private val lnA = math.log(0.95 / 0.05)
 
   private def run(xs: Seq[Int], g: String = "g") =

@@ -1,7 +1,6 @@
 package graft.de
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSuite
@@ -157,6 +156,43 @@ class StatsSpec extends SparkSuite {
     assert(windowed.size == distributed.size)
     // bit-exact equality: both forms apply the same operations in order
     windowed.foreach { case (k, v) => assert(distributed(k) == v, s"at $k") }
+  }
+
+  /** [[Stats.bhAdjustRows]] against both branches of [[Stats.bhAdjust]]
+    * (ties by gene): every adjusted value compared with `==`, nulls in
+    * place. */
+  private def assertDriverBh(rows: Seq[(String, java.lang.Double)]): Unit = {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (g, p) => Row(g, p) }, 3),
+      StructType.fromDDL("gene STRING, pvalue DOUBLE"))
+    val got = Stats.bhAdjustRows(rows.map(_._1).toIndexedSeq, rows.map(_._2).toIndexedSeq)
+    assert(got.length == rows.size)
+    for (threshold <- Seq(Long.MaxValue, 0L)) {   // windowed, distributed
+      val want = Stats.bhAdjust(df, "pvalue", "adj", Seq("gene"), threshold)
+        .collect().map(r => r.getString(0) ->
+          (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+      assert(want.size == rows.size)
+      for (((g, _), a) <- rows.zip(got))
+        assert(Option(a).map(_.doubleValue) == want(g), s"$g, threshold $threshold")
+    }
+  }
+
+  test("driver BH has bhAdjust's bits on both branches: ties, p = 0 and " +
+    "1, null and NaN p, m = 0 and 1, UTF-8 tie-break") {
+    val nan = java.lang.Double.valueOf(Double.NaN)
+    def d(x: Double) = java.lang.Double.valueOf(x)
+    // zＡ < z𝐀 in UTF-8 bytes, z𝐀 < zＡ in UTF-16 units
+    assertDriverBh(Seq("a" -> d(0.01), "b" -> d(0.04), "c" -> d(0.03),
+      "d" -> d(0.005), "e" -> null, "f" -> d(0.2), "g" -> nan, "h" -> d(0.0),
+      "i" -> d(1.0), "j" -> d(1.0), "k" -> d(0.0), "z𝐀" -> d(0.02),
+      "zＡ" -> d(0.02), "z~" -> d(0.02), "y" -> d(0.03)))
+    assertDriverBh(Seq("a" -> null, "b" -> nan))            // m = 0
+    assertDriverBh(Seq.empty)
+    assertDriverBh(Seq("a" -> d(0.3), "b" -> null))         // m = 1
+    assertDriverBh(Seq("a" -> d(1.0)))
+    assertDriverBh((1 to 997).map { i =>
+      ("k" + i, if (i % 19 == 0) null else d(((i * 7919) % 1009) / 1009.0))
+    } ++ Seq("t1" -> d(0.25), "t2" -> d(0.25), "t3" -> d(0.25)))
   }
 
   test("tied p-values receive identical adjusted values") {

@@ -106,13 +106,13 @@ class ContentChunkingSpec extends SparkSuite {
       ("d", "one two")).toDF("id", "text")
     val got = ContentChunking.contentDefinedChunks(df, "id", "text")
     assert(got.collect().map(_.getAs[String]("id")).toSet == Set("d"))
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       ContentChunking.contentDefinedChunks(df, "id", "text",
         maskBits = 0)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: maskBits in [1,24]")
+    assert(intercept[IllegalArgumentException] {
       ContentChunking.contentDefinedChunks(df, "id", "text",
         minTokens = 10, maxTokens = 10)
-    }
+    }.getMessage == "requirement failed: maxTokens must exceed minTokens")
   }
 }

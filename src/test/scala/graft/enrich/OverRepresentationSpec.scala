@@ -2,7 +2,6 @@ package graft.enrich
 
 import graft.SparkSuite
 import graft.functions.gfunctions.hypergeom_pvalue
-import org.apache.spark.sql.functions._
 
 class OverRepresentationSpec extends SparkSuite {
   import spark.implicits._

@@ -54,6 +54,57 @@ class TargetValidationSpec extends SparkSuite {
     assert(order == Seq("CACNA1F", "EMPTY1", "IL12A", "NOHIT"))
   }
 
+  test("validateRows gives validate's rows: two Ensembl ids, a fanned-out " +
+    "id, null scores, no knownDrugs, rounding, invalid symbols, misses") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-validate")
+    val ens = dir.resolve("ensembl.csv")
+    java.nio.file.Files.writeString(ens, "symbol,ensembl_id\n" +
+      "CACNA1F,ENSG1\nMULTI,ENSG9\nMULTI,ENSG5\nIL12A,ENSG2\nEMPTY1,ENSG3\n" +
+      "ROUNDER,ENSG4\nNODIS,ENSG6\nNOHIT2,ENSG7\n1234_at,ENSG1\n")
+    val ot = dir.resolve("opentargets.json")
+    def target(id: String, drugs: Option[Int], scores: Option[Seq[String]]) =
+      s"""{"ensembl_id":"$id"""" +
+        drugs.fold("")(n => s""","knownDrugs":{"count":$n,"rows":[]}""") +
+        scores.fold("")(ss => ""","associatedDiseases":{"count":1,"rows":[""" +
+          ss.map(x => s"""{"disease":{"id":"X","name":"x"},"score":$x}""")
+            .mkString(",") + "]}") + "}"
+    java.nio.file.Files.writeString(ot, Seq(
+      target("ENSG1", Some(324), Some(Seq("0.6", "0.554"))),
+      target("ENSG5", Some(3), Some(Seq("0.5"))),              // MULTI, row 1
+      target("ENSG5", Some(1), Some(Seq("null", "0.25", "0.3"))), // MULTI, row 2
+      target("ENSG9", Some(99), Some(Seq("0.9"))),             // not the min id
+      target("ENSG2", None, Some(Seq("0.251"))),               // no knownDrugs
+      target("ENSG3", Some(5), Some(Seq.empty)),
+      target("ENSG4", Some(2), Some(Seq("0.2225", "0.2225", "0.2225"))),
+      target("ENSG6", Some(2), None)                           // no diseases
+    ).mkString("\n") + "\n")
+    val scores = Seq("CACNA1F" -> 0.9, "1234_at" -> 0.95, "UNKNOWN_X" -> 0.94,
+      "TOOLONGSYMBOLNAMEXXXX" -> 0.93, "123" -> 0.92, "MULTI" -> 0.8,
+      "IL12A" -> 0.7, "EMPTY1" -> 0.6, "ROUNDER" -> 0.5, "NODIS" -> 0.5,
+      "NOHIT" -> 0.4, "NOHIT2" -> 0.4)
+    val ensembl = TargetValidation.loadEnsemblSnapshot(spark, ens.toString)
+    val openTargets = TargetValidation.loadOpenTargetsSnapshot(spark, ot.toString)
+    import spark.implicits._
+    for (topN <- Seq(20, 5, 0)) {
+      val want = TargetValidation.validate(scores.toDF("gene", "composite_score"),
+        ensembl, openTargets, topN).collect().toSeq
+      val got = TargetValidation.validateRows(scores, ensembl, openTargets, topN)
+      assert(got.map(_.getString(0)) == want.map(_.getString(0)), s"topN $topN: rows")
+      for ((g, w) <- got.zip(want)) {
+        assert(g.getDouble(1) == w.getDouble(1) && g.getLong(2) == w.getLong(2) &&
+          g.getDouble(3) == w.getDouble(3) && g.getDouble(4) == w.getDouble(4),
+          s"topN $topN: $g vs $w")
+      }
+      if (topN == 20) {
+        // MULTI's min id ENSG5 has two rows: 2.0 and 0.71
+        assert(got.map(_.getString(0)) == Seq("CACNA1F", "EMPTY1", "MULTI",
+          "ROUNDER", "NODIS", "MULTI", "IL12A", "NOHIT", "NOHIT2"))
+      }
+      if (topN == 5) assert(got.map(_.getString(0)).toSet ==
+        Set("CACNA1F", "MULTI", "IL12A", "EMPTY1", "NODIS"))
+    }
+  }
+
   test("is_valid_symbol matches the reference predicate on edge cases") {
     import spark.implicits._
     import graft.functions.gfunctions.is_valid_symbol

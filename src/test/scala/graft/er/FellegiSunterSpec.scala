@@ -34,12 +34,12 @@ class FellegiSunterSpec extends SparkSuite {
 
   test("score rejects degenerate m/u") {
     val pairs = Seq(Tuple1(true)).toDF("f1")
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       FellegiSunter.score(pairs, Map("f1" -> ((1.0, 0.1))))
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: m/u in (0,1) for f1")
+    assert(intercept[IllegalArgumentException] {
       FellegiSunter.score(pairs, Map.empty)
-    }
+    }.getMessage == "requirement failed: at least one comparison field")
   }
 
   test("end-to-end: a planted near-duplicate outranks random pairs") {

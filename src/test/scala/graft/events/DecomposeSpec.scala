@@ -60,12 +60,12 @@ class DecomposeSpec extends SparkSuite {
 
   test("even or tiny periods are rejected") {
     val df = Seq(("g", 0, 1L)).toDF("g", "t", "x")
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Decompose.classical(df, "g", "t", "x", m = 4)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: period must be odd and >= 3, got 4")
+    assert(intercept[IllegalArgumentException] {
       Decompose.classical(df, "g", "t", "x", m = 1)
-    }
+    }.getMessage == "requirement failed: period must be odd and >= 3, got 1")
   }
 
   test("multiplicativeIndex: exact-fraction ratio-to-MA indexes " +

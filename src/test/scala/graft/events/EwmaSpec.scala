@@ -39,9 +39,9 @@ class EwmaSpec extends SparkSuite {
     val df = Seq(("g", 0, 5.0), ("g", 1, 17.0)).toDF("g", "t", "x")
     assert(Ewma.ewmaLast(df, "g", "t", "x", 1.0).head()
       .getAs[Double]("ewma_last") == 17.0)
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Ewma.ewmaLast(df, "g", "t", "x", 0.0)
-    }
+    }.getMessage == "requirement failed: alpha must be in (0,1], got 0.0")
   }
 
   test("holt: matches a driver-side fold of the same recurrence") {

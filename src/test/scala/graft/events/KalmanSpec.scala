@@ -91,11 +91,11 @@ class KalmanSpec extends SparkSuite {
 
   test("invalid variances rejected") {
     val df = Seq(("g", 0, 1.0)).toDF("g", "t", "z")
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Kalman.localLevel(df, "g", "t", "z", -1.0, 1.0)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: process variance must be >= 0, got -1.0")
+    assert(intercept[IllegalArgumentException] {
       Kalman.localLevel(df, "g", "t", "z", 1.0, 0.0)
-    }
+    }.getMessage == "requirement failed: observation variance must be > 0, got 0.0")
   }
 }

@@ -48,10 +48,11 @@ class StrengthLjungSpec extends SparkSuite {
       "g", "v").head()
     assert(r.getAs[Double]("hl_estimate") == 3.0)
     assert(r.getAs[Long]("n_pairs") == 15L)
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       graft.de.RobustStats.hodgesLehmann(
         (1 to 50).map(i => ("g", i.toDouble)).toDF("g", "v"),
         "g", "v", maxGroupRows = 10L)
-    }
+    }.getMessage == "requirement failed: hodgesLehmann input has a group " +
+      "with 50 rows — above the series-grain contract (10); pre-aggregate first")
   }
 }

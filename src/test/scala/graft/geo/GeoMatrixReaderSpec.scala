@@ -1,7 +1,5 @@
 package graft.geo
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 class GeoMatrixReaderSpec extends SparkSuite {

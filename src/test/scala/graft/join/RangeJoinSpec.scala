@@ -2,7 +2,6 @@ package graft.join
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite

@@ -6,7 +6,6 @@ import graft.geo.{LongForm, ProbeRows}
 class ProbeMappingSpec extends SparkSuite {
 
   test("golden mapping csv loads; blank symbols dropped; last duplicate wins") {
-    import spark.implicits._
     val m = ProbeMapping.loadMappingCsv(spark, resource("tiny_probe_mapping.csv"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("1007_s_at" -> "DDR1", "1053_at" -> "RFC2",
@@ -49,7 +48,6 @@ class ProbeMappingSpec extends SparkSuite {
   }
 
   test("duplicate PROBEID keeps last csv occurrence (dict semantics)") {
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-map").toFile
     val f = new java.io.File(tmp, "dup.csv")
     java.nio.file.Files.writeString(f.toPath,

@@ -138,11 +138,11 @@ class LofSpec extends SparkSuite {
       .toDF("id", "x", "y")
     assert(Lof.localOutlierFactor(df, "id", "x", "y", 1, 1.0)
       .count() == 1)
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Lof.localOutlierFactor(df, "id", "x", "y", 0, 1.0)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: k must be >= 1, got 0")
+    assert(intercept[IllegalArgumentException] {
       Lof.localOutlierFactor(df, "id", "x", "y", 1, 0.0)
-    }
+    }.getMessage == "requirement failed: radius must be positive, got 0.0")
   }
 }

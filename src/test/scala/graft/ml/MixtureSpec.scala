@@ -53,8 +53,8 @@ class MixtureSpec extends SparkSuite {
     val df = Seq(Some(1.0), None, Some(2.0), Some(30.0), Some(31.0))
       .toDF("x")
     assert(Mixture.gmm2(df, "x").head().getAs[Long]("n") == 4)
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Mixture.gmm2(df, "x", iters = 0)
-    }
+    }.getMessage == "requirement failed: iters must be >= 1")
   }
 }

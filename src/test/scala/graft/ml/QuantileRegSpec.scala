@@ -1,7 +1,6 @@
 package graft.ml
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class QuantileRegSpec extends SparkSuite {
   import spark.implicits._
@@ -102,12 +101,12 @@ class QuantileRegSpec extends SparkSuite {
     assert(got.getAs[Long]("n") == 3)
     assert(got.isNullAt(got.fieldIndex("b0")))
     assert(got.isNullAt(got.fieldIndex("pinball")))
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Regression.quantile2(df, "y", "x1", "x2", 0.0)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: tau must be in (0,1), got 0.0")
+    assert(intercept[IllegalArgumentException] {
       Regression.quantile2(df, "y", "x1", "x2", 0.5, eps = 0.0)
-    }
+    }.getMessage == "requirement failed: eps must be > 0, got 0.0")
   }
 
   test("null rows are dropped (complete-case)") {

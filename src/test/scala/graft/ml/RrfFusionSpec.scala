@@ -71,11 +71,11 @@ class RrfFusionSpec extends SparkSuite {
   }
 
   test("invalid params rejected") {
-    intercept[IllegalArgumentException] {
+    assert(intercept[IllegalArgumentException] {
       Ranking.rrfFusion(scored, "q", "item", Seq.empty)
-    }
-    intercept[IllegalArgumentException] {
+    }.getMessage == "requirement failed: need at least one score column")
+    assert(intercept[IllegalArgumentException] {
       Ranking.rrfFusion(scored, "q", "item", Seq("sa"), k = 0)
-    }
+    }.getMessage == "requirement failed: k must be >= 1, got 0")
   }
 }

@@ -1,7 +1,5 @@
 package graft.mm
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 class MultimodalSpec extends SparkSuite {

@@ -164,6 +164,8 @@ class DrugTargetPipelineSpec extends SparkSuite {
     }
   }
 
+  // every stage is pinned: after the probe collapse only the writes, the
+  // Welch and top-vector collects, the snapshot reads and the probe count
   test("medium fixture: Spark jobs per stage, keyed on the stage local " +
     "property (the network half runs only its writes and collects)") {
     val jobs = scala.collection.mutable.Map.empty[String, Int]
@@ -182,11 +184,17 @@ class DrugTargetPipelineSpec extends SparkSuite {
       ListenerBusAccess.waitUntilEmpty(sc)
     } finally sc.removeSparkListener(listener)
     assert(sc.getLocalProperty(DrugTargetPipeline.StageProperty) == null)
-    val pinned = Seq("construct_network", "analyze_network", "figure_network",
-      "figure_barplot", "summary_report")
-    assert(pinned.map(s => s -> jobs.synchronized(jobs.getOrElse(s, 0))) == Seq(
-      "construct_network" -> 3, "analyze_network" -> 1, "figure_network" -> 2,
-      "figure_barplot" -> 1, "summary_report" -> 7))
+    val stages = Seq("metadata_sink", "preprocess_and_map",
+      "differential_analysis", "figure_volcano", "significant_genes",
+      "construct_network", "analyze_network", "figure_network",
+      "figure_barplot", "validate_targets", "summary_report")
+    assert(stages.map(s => s -> jobs.synchronized(jobs.getOrElse(s, 0))) == Seq(
+      "metadata_sink" -> 1, "preprocess_and_map" -> 10,
+      "differential_analysis" -> 3, "figure_volcano" -> 1,
+      "significant_genes" -> 1, "construct_network" -> 3,
+      "analyze_network" -> 1, "figure_network" -> 2, "figure_barplot" -> 1,
+      "validate_targets" -> 5, "summary_report" -> 3))
+    assert(jobs.keySet.diff(stages.toSet).isEmpty, jobs)
   }
 
   test("a network larger than the collected-vector cap fails at config time") {

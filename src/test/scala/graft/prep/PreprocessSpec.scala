@@ -1,14 +1,11 @@
 package graft.prep
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 import graft.geo.LongForm
 
 class PreprocessSpec extends SparkSuite {
 
   test("F1 threshold + A2 median impute + A4 z-score (no log2 branch)") {
-    import spark.implicits._
     // 5 samples; probe p1 full, p2 has 2 nulls (60% non-null, kept),
     // p3 has 4+ nulls (<=20%: dropped when 1 of 5 non-null = 20% -> kept?
     // threshold is >= 0.2*5 = 1 non-null -> p3 with exactly 1 survives;
@@ -42,7 +39,6 @@ class PreprocessSpec extends SparkSuite {
   }
 
   test("A3: log2 branch taken when max > 100") {
-    import spark.implicits._
     val df = LongForm.pack(spark, Seq("s1", "s2", "s3"),
       Seq(("p", "s1", Some(1023.0)), ("p", "s2", Some(255.0)),
         ("p", "s3", Some(511.0))))

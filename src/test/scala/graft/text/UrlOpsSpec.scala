@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** URL canonicalization + eTLD+1 (q421's operators): the pinned
   * canonicalization contract case by case, and longest-suffix

@@ -1,7 +1,5 @@
 package graft.web
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 /** Crawl-lifecycle operators: cross-snapshot CDC statuses (incl. the
