@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.gfunctions._
+import graft.util.Pin
 
 /** Similarity search over an embedding column (array<float|double>).
   *
@@ -167,16 +168,14 @@ object Similarity {
     * Output: (id, cell, kept) for every corpus row.
     */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    nLists: Int, threshold: Double): DataFrame = {
+                    nLists: Int, threshold: Double): DataFrame = Pin.scope { pin =>
     // the assignment (a cosine against every centroid per row) fans out
-    // to three consumers (both pair sides + the verdict join) — persist
-    // it once or the dominant cost runs 3x. persist + release (not
-    // localCheckpoint): the pin must be RELEASABLE once the compact
-    // verdict is materialized, or repeated calls in one session (bench
-    // best-of-3) would accumulate a pinned copy of the fat
-    // (id, vector, cell) frame per call.
-    val (assigned, _) = ivfIndexSeeded(corpus, idCol, vecCol, nLists)
-    assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // to three consumers (both pair sides + the verdict join) — pin it
+    // once or the dominant cost runs 3x. A pin (not localCheckpoint):
+    // it is RELEASED once the compact verdict is materialized, or
+    // repeated calls in one session (bench best-of-3) would accumulate a
+    // copy of the fat (id, vector, cell) frame per call.
+    val assigned = pin(ivfIndexSeeded(corpus, idCol, vecCol, nLists)._1)
     val lo = assigned.select(col("cell"), col("id").as("a_id"),
       col("arr").as("a_arr"))
     val hi = assigned.select(col("cell"), col("id").as("b_id"),
@@ -187,11 +186,9 @@ object Similarity {
         >= threshold)
       .select(col("b_id").as("id")).distinct()
       .withColumn("__dup", lit(true))
-    val out = assigned.join(dropped, Seq("id"), "left_outer")
+    assigned.join(dropped, Seq("id"), "left_outer")
       .select(col("id"), col("cell"), col("__dup").isNull.as("kept"))
       .localCheckpoint()   // verdict-only (3 narrow columns), eager
-    assigned.unpersist(false)
-    out
   }
 
   /** ANN top-k via multi-table LSH: candidates are corpus rows sharing a
@@ -281,7 +278,7 @@ object Similarity {
     * column. Output: (rank 1..k, id, relevance 6dp, mmr_score 6dp).
     */
   def mmrSelect(candidates: DataFrame, idCol: String, vecCol: String,
-                relCol: String, k: Int, lambda: Double): DataFrame = {
+                relCol: String, k: Int, lambda: Double): DataFrame = Pin.scope { pin =>
     require(k >= 1, "k must be >= 1")
     require(lambda >= 0 && lambda <= 1, "lambda in [0,1]")
     // id normalized to long and null-relevance rows dropped up front:
@@ -296,12 +293,11 @@ object Similarity {
         s"${idType.simpleString}) — string ids would cast to null " +
         "and silently break the per-round argmax; map them to a " +
         "numeric surrogate first")
-    val cand = candidates
+    val cand = pin(candidates
       .filter(col(relCol).isNotNull)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"),
-        round(col(relCol), 6).as("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(col(relCol), 6).as("rel")))
     val spark = candidates.sparkSession
     import scala.collection.mutable.ArrayBuffer
     val picked = ArrayBuffer.empty[(Long, Double, Double)] // id, rel, mmr
@@ -337,7 +333,6 @@ object Similarity {
       selVecs += ((wid, wvec))
       i += 1
     }
-    cand.unpersist(false)
     import spark.implicits._
     picked.toSeq.zipWithIndex
       .map { case ((id, rel, mmr), ix) => (ix + 1L, id, rel, mmr) }

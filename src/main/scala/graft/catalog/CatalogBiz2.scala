@@ -108,17 +108,16 @@ object CatalogBiz2 {
     * Gini; exact-cents cumulative sums, floor-arithmetic equal-count
     * deciles — the X54 no-ntile discipline). */
   private val q261 = Q("q261_lorenz",
-    (s, dir) => {
+    (s, dir) => graft.util.Pin.scope { pin =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val cust = t(s, dir, "orders")
+      val cust = pin(t(s, dir, "orders")
         .groupBy($"o_custkey")
         .agg(round(sum($"o_totalprice") * 100).cast("long").as("cents"))
         // complete-case on the ranked axis (fuzz-43, the gini class):
         // an all-null-price customer has null cents — engines rank
         // nulls at opposite ends, shifting every decile boundary
-        .filter($"cents".isNotNull)
-        .persist()
+        .filter($"cents".isNotNull))
       // customer-grain global rank: one eager count probe routes it
       // through the size-dispatched Ranks form (no single-partition
       // sort over the customer domain at scale); the whole-frame
@@ -127,7 +126,7 @@ object CatalogBiz2 {
       val n = cust.count()
       val ranked = graft.util.Ranks.globalRowNumber(cust,
         Seq($"cents".asc, $"o_custkey".asc), "rn", n)
-      val out = ranked
+      ranked
         .withColumn("decile",
           (floor(($"rn" - 1) * 10.0 / lit(n)) + 1).cast("long"))
         .groupBy($"decile")
@@ -141,11 +140,8 @@ object CatalogBiz2 {
           round($"__dc" / 100.0, 2).as("decile_revenue"),
           round($"cum_cents".cast("double") / $"tot", 4).as("cum_share"))
         .orderBy($"decile")
-        // 10-row result: materialize so cust's cache entry is
-        // released here (leak-free)
+        // 10-row result: materialized before cust's pin is released
         .localCheckpoint()
-      cust.unpersist(false)
-      out
     },
     Some("""WITH cust AS (
            |  SELECT o_custkey,

@@ -94,18 +94,17 @@ object CatalogLlm2 {
     * caller's policy; ranking ties broken by doc_id) and cut into four
     * floor-arithmetic phases; per-phase doc/token/quality profile. */
   private val q265 = Q("q265_curriculum",
-    (s, dir) => {
+    (s, dir) => graft.util.Pin.scope { pin =>
       import s.implicits._
-      val scored = graft.text.TextAnalysis
+      val scored = pin(graft.text.TextAnalysis
         .withQuality(t(s, dir, "documents"), "text")
-        .select($"doc_id", $"n_tokens", $"quality_score")
-        .persist()
+        .select($"doc_id", $"n_tokens", $"quality_score"))
       // document-grain global rank: one eager count probe routes it
       // through the size-dispatched Ranks form (no single-partition
       // sort over the corpus at scale); the whole-frame count window
       // collapses to a literal
       val n = scored.count()
-      val out = graft.util.Ranks.globalRowNumber(scored,
+      graft.util.Ranks.globalRowNumber(scored,
           Seq($"quality_score".asc, $"doc_id".asc), "rn", n)
         .withColumn("phase",
           (floor(($"rn" - 1) * 4.0 / lit(n)) + 1).cast("long"))
@@ -116,11 +115,8 @@ object CatalogLlm2 {
           round(min($"quality_score"), 4).as("min_quality"),
           round(max($"quality_score"), 4).as("max_quality"))
         .orderBy($"phase")
-        // 4-row result: materialize so scored's cache entry is
-        // released here (leak-free)
+        // 4-row result: materialized before scored's pin is released
         .localCheckpoint()
-      scored.unpersist(false)
-      out
     },
     Some("""WITH m AS (SELECT doc_id,
            |  len(regexp_extract_all(text, '\S+')) AS n_tok,

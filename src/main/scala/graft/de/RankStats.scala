@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Rank- and contingency-based statistics beyond the Welch/BH family in
   * [[Stats]]: chi-square independence, ROC AUC (Mann–Whitney), and
   * grouped simple OLS. All are aggregation-first: the fact table
@@ -95,19 +97,17 @@ object RankStats {
     * raw continuous ones, so the collapsed table is counted and
     * guarded (the coxPh fail-fast pattern) before the sort runs. */
   def rocAuc(df0: DataFrame, label: String, score: String,
-             maxDistinctScores: Long = 2000000L): DataFrame = {
+             maxDistinctScores: Long = 2000000L): DataFrame = Pin.scope { pin =>
     // complete-case on the score/label axes (fuzz-24: the KS fuzz-14
     // rationale applies to every ranked-axis statistic — a null score
     // has no rank position and engines sort it oppositely, shifting
     // every below-count; a null label is an unjudgeable row)
     val df = df0.filter(col(score).isNotNull && col(label).isNotNull)
-    val g = df.groupBy(col(score).as("__s"))
+    val g = pin(df.groupBy(col(score).as("__s"))
       .agg(sum(col(label)).cast("double").as("np"),
-        (count(lit(1)) - sum(col(label))).cast("double").as("nn"))
-      .persist()
+        (count(lit(1)) - sum(col(label))).cast("double").as("nn")))
     val nScores = g.count()
-    graft.util.CacheGuard.requireReleasing(
-      nScores <= maxDistinctScores, g)(
+    require(nScores <= maxDistinctScores,
       s"rocAuc: $nScores distinct scores exceeds the single-sort " +
         s"guard ($maxDistinctScores) — the running-rank window would " +
         "serialize over the score domain; pre-round or bucket the " +
@@ -118,18 +118,15 @@ object RankStats {
     // ANSI-safe: a single-class input has no ranking to score — null auc
     // (not a divide-by-zero) so callers can coalesce or filter.
     val denom = sum(col("np")) * sum(col("nn"))
-    val out = g.withColumn("__below", below)
+    g.withColumn("__below", below)
       .agg(
         round(when(denom > 0,
           sum(col("np") * (col("__below") + lit(0.5) * col("nn"))) / denom),
           4).as("auc"),
         sum(col("np")).cast("long").as("n_pos"),
         sum(col("nn")).cast("long").as("n_neg"))
-      // one row: materialize so g's cache entry is released here (the
-      // logRank leak-free guard pattern)
+      // one row: materialized before g's pin is released
       .localCheckpoint()
-    g.unpersist(false)
-    out
   }
 
   /** Per-group two-sample Kolmogorov–Smirnov D between the `value`
@@ -441,50 +438,51 @@ object RankStats {
                          ordered: Seq[String]): DataFrame = {
     require(ordered.size >= 2, "need an ordered list of >= 2 groups")
     val v = col(value).cast("double")
-    val cells = df
-      .filter(col(group).isin(ordered: _*) && v.isNotNull)
-      .groupBy(v.as("__v"), col(group).as("__g"))
-      .agg(count(lit(1)).as("__c"))
-      .persist()
-    // bounded-value-grain guard (the coxPh pattern): the cumulative
-    // windows below single-sort the distinct-value domain
-    val nCells = cells.count()
-    graft.util.CacheGuard.requireReleasing(nCells <= 2000000L, cells)(
-      s"jonckheereTerpstra: $nCells (value, group) cells exceeds the " +
-        "single-sort guard (2000000) — pre-round or bucket the value " +
-        "column before calling")
-    try {
-    // one row per distinct value with per-group count columns
-    val pivoted = cells.groupBy(col("__v"))
-      .agg(ordered.zipWithIndex.map { case (g, i) =>
-        sum(when(col("__g") === g, col("__c")).otherwise(0L))
-          .as(s"__c$i")
-      }.head, ordered.zipWithIndex.drop(1).map { case (g, i) =>
-        sum(when(col("__g") === g, col("__c")).otherwise(0L))
-          .as(s"__c$i")
-      }: _*)
-    val wCum = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withCum = ordered.indices.foldLeft(pivoted) { (d, i) =>
-      d.withColumn(s"__cum$i",
-        coalesce(sum(col(s"__c$i")).over(wCum), lit(0L)))
+    // the cells are pinned until the one driver row is collected
+    val agg = Pin.scope { pin =>
+      val cells = pin(df
+        .filter(col(group).isin(ordered: _*) && v.isNotNull)
+        .groupBy(v.as("__v"), col(group).as("__g"))
+        .agg(count(lit(1)).as("__c")))
+      // bounded-value-grain guard (the coxPh pattern): the cumulative
+      // windows below single-sort the distinct-value domain
+      val nCells = cells.count()
+      require(nCells <= 2000000L,
+        s"jonckheereTerpstra: $nCells (value, group) cells exceeds the " +
+          "single-sort guard (2000000) — pre-round or bucket the value " +
+          "column before calling")
+      // one row per distinct value with per-group count columns
+      val pivoted = cells.groupBy(col("__v"))
+        .agg(ordered.zipWithIndex.map { case (g, i) =>
+          sum(when(col("__g") === g, col("__c")).otherwise(0L))
+            .as(s"__c$i")
+        }.head, ordered.zipWithIndex.drop(1).map { case (g, i) =>
+          sum(when(col("__g") === g, col("__c")).otherwise(0L))
+            .as(s"__c$i")
+        }: _*)
+      val wCum = Window.orderBy(col("__v"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val withCum = ordered.indices.foldLeft(pivoted) { (d, i) =>
+        d.withColumn(s"__cum$i",
+          coalesce(sum(col(s"__c$i")).over(wCum), lit(0L)))
+      }
+      // 2·JT stays integer: 2·Σ_v Σ_j c_j·(Σ_{i<j}C_i) + Σ_v Σ_j c_j·Σ_{i<j}c_i
+      val jt2 = ordered.indices.drop(1).map { j =>
+        val below = ordered.indices.take(j)
+          .map(i => col(s"__cum$i")).reduce(_ + _)
+        val tied = ordered.indices.take(j)
+          .map(i => col(s"__c$i")).reduce(_ + _)
+        col(s"__c$j") * (lit(2) * below + tied)
+      }.reduce(_ + _)
+      val tv = ordered.indices.map(i => col(s"__c$i")).reduce(_ + _)
+      val aggCols =
+        ordered.indices.map(i =>
+          sum(col(s"__c$i")).as(s"__n$i")) ++ Seq(
+          sum(tv * (tv - 1) * (lit(2) * tv + 5)).as("__t25"),
+          sum(tv * (tv - 1)).as("__t2"),
+          sum(tv * (tv - 1) * (tv - 2)).as("__t3"))
+      withCum.agg(sum(jt2).as("__jt2"), aggCols: _*).head()
     }
-    // 2·JT stays integer: 2·Σ_v Σ_j c_j·(Σ_{i<j}C_i) + Σ_v Σ_j c_j·Σ_{i<j}c_i
-    val jt2 = ordered.indices.drop(1).map { j =>
-      val below = ordered.indices.take(j)
-        .map(i => col(s"__cum$i")).reduce(_ + _)
-      val tied = ordered.indices.take(j)
-        .map(i => col(s"__c$i")).reduce(_ + _)
-      col(s"__c$j") * (lit(2) * below + tied)
-    }.reduce(_ + _)
-    val tv = ordered.indices.map(i => col(s"__c$i")).reduce(_ + _)
-    val aggCols =
-      ordered.indices.map(i =>
-        sum(col(s"__c$i")).as(s"__n$i")) ++ Seq(
-        sum(tv * (tv - 1) * (lit(2) * tv + 5)).as("__t25"),
-        sum(tv * (tv - 1)).as("__t2"),
-        sum(tv * (tv - 1) * (tv - 2)).as("__t3"))
-    val agg = withCum.agg(sum(jt2).as("__jt2"), aggCols: _*).head()
     val ns = ordered.indices.map(i =>
       agg.getAs[Long](s"__n$i")).filter(_ > 0)
     val n = ns.sum
@@ -521,7 +519,6 @@ object RankStats {
       when(!isnan(col("__z")), round(col("__z"), 4)).as("z"),
       when(!isnan(col("__z")),
         round(lit(2.0) * normal_sf(abs(col("__z"))), 6)).as("p_value"))
-    } finally cells.unpersist(false)
   }
 
   /** Brunner–Munzel test (X289; scipy.stats.brunnermunzel parity) —
@@ -548,43 +545,44 @@ object RankStats {
                     a: String, b: String): DataFrame = {
     import graft.functions.gfunctions.t_test_pvalue
     val v = col(value).cast("double")
-    val cells = df
-      .filter(col(group).isin(a, b) && v.isNotNull)
-      .groupBy(v.as("__v"), col(group).as("__g"))
-      .agg(count(lit(1)).as("__c"))
-      .persist()
-    // bounded-value-grain guard (the coxPh pattern): the midrank
-    // cumulative windows single-sort the distinct-value domain
-    val nCells = cells.count()
-    graft.util.CacheGuard.requireReleasing(nCells <= 2000000L, cells)(
-      s"brunnerMunzel: $nCells (value, group) cells exceeds the " +
-        "single-sort guard (2000000) — pre-round or bucket the value " +
-        "column before calling")
-    try {
-    val piv = cells.groupBy(col("__v"))
-      .agg(sum(when(col("__g") === a, col("__c")).otherwise(0L))
-          .as("__ca"),
-        sum(when(col("__g") === b, col("__c")).otherwise(0L))
-          .as("__cb"))
-    val wCum = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val t = col("__ca") + col("__cb")
-    // doubled midranks (exact integers): overall and within-group
-    val ranked = piv
-      .withColumn("__ba", coalesce(sum(col("__ca")).over(wCum), lit(0L)))
-      .withColumn("__bb", coalesce(sum(col("__cb")).over(wCum), lit(0L)))
-      .withColumn("__r2", lit(2) * (col("__ba") + col("__bb")) + t + 1)
-      .withColumn("__ra2", lit(2) * col("__ba") + col("__ca") + 1)
-      .withColumn("__rb2", lit(2) * col("__bb") + col("__cb") + 1)
-    val agg = ranked.agg(
-      sum(col("__ca")).as("na"), sum(col("__cb")).as("nb"),
-      sum(col("__ca") * col("__r2")).as("sra2"),
-      sum(col("__cb") * col("__r2")).as("srb2"),
-      // placement sums in quarters: (R − Rw)·2 is integer, squares /4
-      sum(col("__ca") * pow(col("__r2") - col("__ra2"), 2)).as("qa"),
-      sum(col("__cb") * pow(col("__r2") - col("__rb2"), 2)).as("qb"),
-      sum(col("__ca") * (col("__r2") - col("__ra2"))).as("la"),
-      sum(col("__cb") * (col("__r2") - col("__rb2"))).as("lb")).head()
+    // the cells are pinned until the one driver row is collected
+    val agg = Pin.scope { pin =>
+      val cells = pin(df
+        .filter(col(group).isin(a, b) && v.isNotNull)
+        .groupBy(v.as("__v"), col(group).as("__g"))
+        .agg(count(lit(1)).as("__c")))
+      // bounded-value-grain guard (the coxPh pattern): the midrank
+      // cumulative windows single-sort the distinct-value domain
+      val nCells = cells.count()
+      require(nCells <= 2000000L,
+        s"brunnerMunzel: $nCells (value, group) cells exceeds the " +
+          "single-sort guard (2000000) — pre-round or bucket the value " +
+          "column before calling")
+      val piv = cells.groupBy(col("__v"))
+        .agg(sum(when(col("__g") === a, col("__c")).otherwise(0L))
+            .as("__ca"),
+          sum(when(col("__g") === b, col("__c")).otherwise(0L))
+            .as("__cb"))
+      val wCum = Window.orderBy(col("__v"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val t = col("__ca") + col("__cb")
+      // doubled midranks (exact integers): overall and within-group
+      val ranked = piv
+        .withColumn("__ba", coalesce(sum(col("__ca")).over(wCum), lit(0L)))
+        .withColumn("__bb", coalesce(sum(col("__cb")).over(wCum), lit(0L)))
+        .withColumn("__r2", lit(2) * (col("__ba") + col("__bb")) + t + 1)
+        .withColumn("__ra2", lit(2) * col("__ba") + col("__ca") + 1)
+        .withColumn("__rb2", lit(2) * col("__bb") + col("__cb") + 1)
+      ranked.agg(
+        sum(col("__ca")).as("na"), sum(col("__cb")).as("nb"),
+        sum(col("__ca") * col("__r2")).as("sra2"),
+        sum(col("__cb") * col("__r2")).as("srb2"),
+        // placement sums in quarters: (R − Rw)·2 is integer, squares /4
+        sum(col("__ca") * pow(col("__r2") - col("__ra2"), 2)).as("qa"),
+        sum(col("__cb") * pow(col("__r2") - col("__rb2"), 2)).as("qb"),
+        sum(col("__ca") * (col("__r2") - col("__ra2"))).as("la"),
+        sum(col("__cb") * (col("__r2") - col("__rb2"))).as("lb")).head()
+    }
     val spark = df.sparkSession
     import spark.implicits._
     val na = if (agg.isNullAt(0)) 0L else agg.getLong(0)
@@ -629,7 +627,6 @@ object RankStats {
         round(col("__df"), 2).as("df"),
         round(t_test_pvalue(col("__t"), col("__df")), 6)
           .as("p_value"))
-    } finally cells.unpersist(false)
   }
 
   /** Ordinal association battery (X320): Goodman–Kruskal γ, Somers'
@@ -653,53 +650,49 @@ object RankStats {
     * t_x, t_y, t_xy BIGINT, gamma 6dp, somers_d_yx 6dp, tau_b 6dp).
     */
   def ordinalAssociation(df: DataFrame, xCol: String, yCol: String,
-                         maxCells: Long = 2000L): DataFrame = {
-    val cells = df
+                         maxCells: Long = 2000L): DataFrame = Pin.scope { pin =>
+    val cells = pin(df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .persist()
+      .agg(count(lit(1)).as("__c")))
     val nCells = cells.count()
-    graft.util.CacheGuard.requireReleasing(
-      nCells <= maxCells, cells)(
+    require(nCells <= maxCells,
       s"ordinalAssociation: $nCells cells exceeds the pair-grid guard " +
         s"($maxCells) — band the columns before calling")
-    try {
-      val other = cells.select(col("__x").as("__x2"),
-        col("__y").as("__y2"), col("__c").as("__c2"))
-      val pairs = cells.crossJoin(broadcast(other))
-      val prod = col("__c") * col("__c2")
-      val agg = pairs.agg(
-        sum(col("__c")).as("__ntot"),
-        count(lit(1)).as("__np"),
-        sum(when(col("__x2") > col("__x") && col("__y2") > col("__y"),
-          prod).otherwise(0L)).as("c"),
-        sum(when(col("__x2") > col("__x") && col("__y2") < col("__y"),
-          prod).otherwise(0L)).as("d"),
-        sum(when(col("__x2") === col("__x") && col("__y2") > col("__y"),
-          prod).otherwise(0L)).as("tx"),
-        sum(when(col("__x2") > col("__x") && col("__y2") === col("__y"),
-          prod).otherwise(0L)).as("ty"),
-        sum(when(col("__x2") === col("__x") && col("__y2") === col("__y"),
-          // c·(c−1) is even; shiftright keeps the division in LONG
-          shiftright(col("__c") * (col("__c") - 1), 1))
-          .otherwise(0L)).as("txy"))
-      // __ntot double-counts by the grid fan-out: each cell row meets
-      // every broadcast row — recover n as sum(c)/nCells exactly
-      val n = (col("__ntot") / lit(nCells)).cast("long")
-      val cd = (col("c") + col("d")).cast("double")
-      val gamma = (col("c") - col("d")).cast("double") / nullif(cd, lit(0.0))
-      val somers = (col("c") - col("d")).cast("double") /
-        nullif(cd + col("ty"), lit(0.0))
-      val taub = (col("c") - col("d")).cast("double") /
-        nullif(sqrt((cd + col("tx")) * (cd + col("ty"))), lit(0.0))
-      agg.select(n.as("n"), col("c").as("n_concordant"),
-        col("d").as("n_discordant"), col("tx").as("t_x"),
-        col("ty").as("t_y"), col("txy").as("t_xy"),
-        round(gamma, 6).as("gamma"),
-        round(somers, 6).as("somers_d_yx"),
-        round(taub, 6).as("tau_b"))
-        .localCheckpoint()
-    } finally cells.unpersist(false)
+    val other = cells.select(col("__x").as("__x2"),
+      col("__y").as("__y2"), col("__c").as("__c2"))
+    val pairs = cells.crossJoin(broadcast(other))
+    val prod = col("__c") * col("__c2")
+    val agg = pairs.agg(
+      sum(col("__c")).as("__ntot"),
+      count(lit(1)).as("__np"),
+      sum(when(col("__x2") > col("__x") && col("__y2") > col("__y"),
+        prod).otherwise(0L)).as("c"),
+      sum(when(col("__x2") > col("__x") && col("__y2") < col("__y"),
+        prod).otherwise(0L)).as("d"),
+      sum(when(col("__x2") === col("__x") && col("__y2") > col("__y"),
+        prod).otherwise(0L)).as("tx"),
+      sum(when(col("__x2") > col("__x") && col("__y2") === col("__y"),
+        prod).otherwise(0L)).as("ty"),
+      sum(when(col("__x2") === col("__x") && col("__y2") === col("__y"),
+        // c·(c−1) is even; shiftright keeps the division in LONG
+        shiftright(col("__c") * (col("__c") - 1), 1))
+        .otherwise(0L)).as("txy"))
+    // __ntot double-counts by the grid fan-out: each cell row meets
+    // every broadcast row — recover n as sum(c)/nCells exactly
+    val n = (col("__ntot") / lit(nCells)).cast("long")
+    val cd = (col("c") + col("d")).cast("double")
+    val gamma = (col("c") - col("d")).cast("double") / nullif(cd, lit(0.0))
+    val somers = (col("c") - col("d")).cast("double") /
+      nullif(cd + col("ty"), lit(0.0))
+    val taub = (col("c") - col("d")).cast("double") /
+      nullif(sqrt((cd + col("tx")) * (cd + col("ty"))), lit(0.0))
+    agg.select(n.as("n"), col("c").as("n_concordant"),
+      col("d").as("n_discordant"), col("tx").as("t_x"),
+      col("ty").as("t_y"), col("txy").as("t_xy"),
+      round(gamma, 6).as("gamma"),
+      round(somers, 6).as("somers_d_yx"),
+      round(taub, 6).as("tau_b"))
+      .localCheckpoint()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Order-statistic summaries that stay exact cross-engine because they
   * select VALUES rather than interpolate: weighted median, deterministic
   * mode, and the Pythagorean-means battery. All three collapse the fact
@@ -168,13 +170,12 @@ object RobustStats {
     * invariant within a tie, so the estimate is deterministic.
     * Output: (group, n BIGINT, n_pairs BIGINT, hl_estimate 6dp). */
   def hodgesLehmann(df: DataFrame, groupCol: String, valueCol: String,
-                    maxGroupRows: Long = 10000L): DataFrame = {
-    val pts = df.select(col(groupCol).as("__g"),
+                    maxGroupRows: Long = 10000L): DataFrame = Pin.scope { pin =>
+    val pts = pin(df.select(col(groupCol).as("__g"),
       col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
       .withColumn("__i", row_number().over(
-        Window.partitionBy(col("__g")).orderBy(col("__v"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Window.partitionBy(col("__g")).orderBy(col("__v")))))
     val worst = pts.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
       .agg(max(col("__n"))).head
     val maxN = if (worst.isNullAt(0)) 0L else worst.getLong(0)
@@ -194,6 +195,8 @@ object RobustStats {
           .as("hl_estimate"))
       .select(col("__g").as(groupCol), col("n"), col("n_pairs"),
         col("hl_estimate"))
+      // group-grain output: materialized before pts' pin is released
+      .localCheckpoint()
   }
 
   /** Theil–Sen robust trend per group: the exact median of all
@@ -211,12 +214,11 @@ object RobustStats {
     * Output: (group, n BIGINT, n_pairs BIGINT, slope 6dp,
     * intercept 6dp); groups with < 2 distinct x yield null slope. */
   def theilSen(df: DataFrame, groupCol: String, xCol: String,
-               yCol: String, maxSeriesRows: Long = 10000L): DataFrame = {
-    val pts = df.select(col(groupCol).as("__g"),
+               yCol: String, maxSeriesRows: Long = 10000L): DataFrame = Pin.scope { pin =>
+    val pts = pin(df.select(col(groupCol).as("__g"),
       col(xCol).cast("double").as("__x"),
       col(yCol).cast("double").as("__y"))
-      .filter(col("__x").isNotNull && col("__y").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("__x").isNotNull && col("__y").isNotNull))
     val worst = pts.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
       .agg(max(col("__n"))).head
     val maxN = if (worst.isNullAt(0)) 0L else worst.getLong(0)
@@ -246,5 +248,7 @@ object RobustStats {
         round(col("__slope"), 6).as("slope"),
         round(col("__my") - col("__slope") * col("__mx"), 6)
           .as("intercept"))
+      // group-grain output: materialized before pts' pin is released
+      .localCheckpoint()
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.gfunctions._
-import graft.util.DriverOrder
+import graft.util.{DriverOrder, Pin}
 
 /** Statistical transforms for differential expression: Benjamini–Hochberg
   * FDR adjustment (A8, `pipeline2.py:619-629` / statsmodels `fdr_bh`) and
@@ -38,12 +38,12 @@ object Stats {
     */
   def bhAdjust(df: DataFrame, pCol: String, outCol: String,
                tieBreak: Seq[String] = Seq.empty,
-               distributedThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = {
+               distributedThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = Pin.scope { pin =>
     // df is consumed by the count() AND the adjusted/invalid branches; at
     // pipeline scale the input is the heavy Welch aggregation, so an
-    // unpersisted plan would run that aggregation twice. The result is
-    // gene-cardinality — materialize it, then release the cache.
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // unpinned plan would run that aggregation twice. The result is
+    // gene-cardinality — materialize it before the pin is released.
+    val cached = pin(df)
     val p = col(pCol)
     val bad = p.isNull || isnan(p)
     val invalid = cached.filter(bad).withColumn(outCol, lit(null).cast("double"))
@@ -53,9 +53,7 @@ object Stats {
       if (m == 0) valid.withColumn(outCol, lit(null).cast("double"))
       else if (m <= distributedThreshold) bhWindowed(valid, p, outCol, m, tieBreak)
       else bhAdjustDistributed(valid, pCol, outCol, m, tieBreak)
-    val result = adjusted.unionByName(invalid).localCheckpoint()
-    cached.unpersist(false)
-    result
+    adjusted.unionByName(invalid).localCheckpoint()
   }
 
   /** [[bhAdjust]] over p-values already on the driver, with the windowed
@@ -129,14 +127,13 @@ object Stats {
     * the range partitioner. p must be a double column.
     */
   def bhAdjustDistributed(valid: DataFrame, pCol: String, outCol: String,
-                          m: Long, tieBreak: Seq[String]): DataFrame = {
+                          m: Long, tieBreak: Seq[String]): DataFrame = Pin.scope { pin =>
     val spark = valid.sparkSession
     val sortCols = col(pCol).asc +: tieBreak.map(col(_).asc)
     val nPart = math.max(spark.sparkContext.defaultParallelism,
       (m / 500000L).toInt + 1)
-    val sorted = valid.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .cache()
+    val sorted = pin(valid.repartitionByRange(nPart, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     val pIdx = sorted.schema.fieldIndex(pCol)
     val mD = m.toDouble
 
@@ -185,15 +182,13 @@ object Stats {
         org.apache.spark.sql.Row.fromSeq(row.toSeq :+ adj(j))
       }
     }
-    // The cache above is correctness-load-bearing, not just a speedup:
+    // The pin above is correctness-load-bearing, not just a speedup:
     // repartitionByRange samples to pick bounds, so a recompute could
     // place rows differently while offsets/suffixAfter still describe the
     // cached layout. Materialize the result against the cached layout
-    // (eager localCheckpoint), then release the cache so repeated calls
-    // don't accumulate a sorted copy of the input per invocation.
-    val result = spark.createDataFrame(out, schema).localCheckpoint()
-    sorted.unpersist(false)
-    result
+    // (eager localCheckpoint) before the pin is released, so repeated
+    // calls don't accumulate a sorted copy of the input per invocation.
+    spark.createDataFrame(out, schema).localCheckpoint()
   }
 
   /** Welch t-test over a long-form (key..., group, value) DataFrame.
@@ -345,10 +340,10 @@ object Stats {
     * adjustments (the bhAdjust convention). Output: input columns +
     * holm, hochberg. */
   def holmHochberg(df: DataFrame, pCol: String,
-                   tieBreak: Seq[String] = Seq.empty): DataFrame = {
+                   tieBreak: Seq[String] = Seq.empty): DataFrame = Pin.scope { pin =>
     val p = col(pCol)
     val bad = p.isNull || isnan(p)
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = pin(df)
     val invalid = cached.filter(bad)
       .withColumn("holm", lit(null).cast("double"))
       .withColumn("hochberg", lit(null).cast("double"))
@@ -375,8 +370,6 @@ object Stats {
         .withColumn("hochberg", min(term).over(wBwd))
         .drop("__rk")
     }
-    val result = adjusted.unionByName(invalid).localCheckpoint()
-    cached.unpersist(false)
-    result
+    adjusted.unionByName(invalid).localCheckpoint()
   }
 }

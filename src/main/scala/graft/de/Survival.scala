@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Kaplan–Meier survival estimation over right-censored durations —
   * the retention-curve estimator ("what fraction of users/subjects
   * survive past t") that handles still-active subjects correctly where
@@ -42,16 +44,14 @@ object Survival {
     * remap concentrated null order dates into all-null subjects). */
   def kaplanMeier(df: DataFrame, durationCol: String,
                   eventCol: String,
-                  maxDistinctTimes: Long = 200000L): DataFrame = {
-    val byT = df
+                  maxDistinctTimes: Long = 200000L): DataFrame = Pin.scope { pin =>
+    val byT = pin(df
       .filter(col(durationCol).isNotNull && col(eventCol).isNotNull)
       .groupBy(col(durationCol).as("t"))
       .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("n_event"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored"))
-      .persist()
+        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored")))
     val nTimes = byT.count()
-    graft.util.CacheGuard.requireReleasing(
-      nTimes <= maxDistinctTimes, byT)(
+    require(nTimes <= maxDistinctTimes,
       s"kaplanMeier: $nTimes distinct durations exceeds the " +
         s"single-sort guard ($maxDistinctTimes) — bucket the duration " +
         "column before calling")
@@ -62,7 +62,7 @@ object Survival {
     // At-risk at t = subjects whose duration >= t = total − (all rows
     // strictly before t).
     val wAll = Window.partitionBy()
-    val out = byT
+    byT
       .withColumn("n_risk",
         sum(col("n_event") + col("n_censored")).over(wAll) -
           coalesce(sum(col("n_event") + col("n_censored")).over(wPrev),
@@ -79,12 +79,9 @@ object Survival {
         when(col("__dead") === 0, lit(0.0))
           .otherwise(round(exp(sum(col("__lnterm")).over(wAsc)), 6))
           .as("survival"))
-    // duration-grain output, bounded by the guard above: materialize
-    // so byT's cache entry is released here (leak-free — the logRank
-    // pattern)
-    val result = out.localCheckpoint()
-    byT.unpersist(false)
-    result
+      // duration-grain output, bounded by the guard above: materialized
+      // before byT's pin is released
+      .localCheckpoint()
   }
 
   /** Scalar endpoints of the KM curve: median survival time (smallest
@@ -138,17 +135,15 @@ object Survival {
     * rmst 4dp). */
   def rmstByGroup(df: DataFrame, groupCol: String, durationCol: String,
                   eventCol: String, tau: Double,
-                  maxDistinctTimes: Long = 200000L): DataFrame = {
+                  maxDistinctTimes: Long = 200000L): DataFrame = Pin.scope { pin =>
     require(tau > 0, "tau must be positive")
-    val byT = df
+    val byT = pin(df
       .filter(col(durationCol).isNotNull && col(eventCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(durationCol).as("t"))
       .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("n_event"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored"))
-      .persist()
+        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored")))
     val nTimes = byT.count()
-    graft.util.CacheGuard.requireReleasing(
-      nTimes <= maxDistinctTimes, byT)(
+    require(nTimes <= maxDistinctTimes,
       s"rmstByGroup: $nTimes distinct (group, duration) cells exceeds " +
         s"the single-sort guard ($maxDistinctTimes) — bucket the " +
         "duration column before calling")
@@ -189,7 +184,7 @@ object Survival {
       .withColumn("__nev", sum(col("n_event")).over(wAll))
       .withColumn("__rn",
         row_number().over(Window.partitionBy(g).orderBy(col("t").desc)))
-    val out = integ.filter(col("__rn") === 1)
+    integ.filter(col("__rn") === 1)
       .select(g.as(groupCol),
         col("__nsub").as("n_subjects"),
         col("__nev").as("n_events"),
@@ -199,8 +194,6 @@ object Survival {
           col("survival") * (lit(tau) - least(tD, lit(tau))), 4)
           .as("rmst"))
       .localCheckpoint()
-    byT.unpersist(false)
-    out
   }
 
   /** Nelson–Aalen cumulative hazard and the Fleming–Harrington
@@ -213,18 +206,16 @@ object Survival {
     * fh_survival 6dp). */
   def nelsonAalen(df: DataFrame, durationCol: String,
                   eventCol: String,
-                  maxDistinctTimes: Long = 200000L): DataFrame = {
+                  maxDistinctTimes: Long = 200000L): DataFrame = Pin.scope { pin =>
     // complete-case on the time axis — the kaplanMeier contract
-    val byT = df
+    val byT = pin(df
       .filter(col(durationCol).isNotNull && col(eventCol).isNotNull)
       .groupBy(col(durationCol).as("t"))
       .agg(sum(when(col(eventCol) === 1, 1L).otherwise(0L)).as("n_event"),
-        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored"))
-      .persist()
+        sum(when(col(eventCol) === 1, 0L).otherwise(1L)).as("n_censored")))
     // the kaplanMeier bounded-duration-grain guard
     val nTimes = byT.count()
-    graft.util.CacheGuard.requireReleasing(
-      nTimes <= maxDistinctTimes, byT)(
+    require(nTimes <= maxDistinctTimes,
       s"nelsonAalen: $nTimes distinct durations exceeds the " +
         s"single-sort guard ($maxDistinctTimes) — bucket the duration " +
         "column before calling")
@@ -233,7 +224,7 @@ object Survival {
     val wPrev = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wAll = Window.partitionBy()
-    val out = byT
+    byT
       .withColumn("n_risk",
         sum(col("n_event") + col("n_censored")).over(wAll) -
           coalesce(sum(col("n_event") + col("n_censored")).over(wPrev),
@@ -244,8 +235,6 @@ object Survival {
         round(col("__h"), 6).as("cum_hazard"),
         round(exp(-col("__h")), 6).as("fh_survival"))
       .localCheckpoint()
-    byT.unpersist(false)
-    out
   }
 
   /** Two-sample log-rank test (X79): does group `a`'s survival curve
@@ -265,23 +254,21 @@ object Survival {
     * everywhere). */
   def logRank(df: DataFrame, groupCol: String, durationCol: String,
               eventCol: String, a: String, b: String,
-              maxDistinctTimes: Long = 200000L): DataFrame = {
+              maxDistinctTimes: Long = 200000L): DataFrame = Pin.scope { pin =>
     val isA = col(groupCol) === a
     // complete-case on the time axis — the kaplanMeier contract
-    val byT = df.filter(isA || col(groupCol) === b)
+    val byT = pin(df.filter(isA || col(groupCol) === b)
       .filter(col(durationCol).isNotNull && col(eventCol).isNotNull)
       .groupBy(col(durationCol).as("t"))
       .agg(
         sum(when(isA, 1L).otherwise(0L)).as("c_a"),
         sum(when(!isA, 1L).otherwise(0L)).as("c_b"),
         sum(when(isA && col(eventCol) === 1, 1L).otherwise(0L)).as("d_a"),
-        sum(when(!isA && col(eventCol) === 1, 1L).otherwise(0L)).as("d_b"))
-      .persist()
+        sum(when(!isA && col(eventCol) === 1, 1L).otherwise(0L)).as("d_b")))
     // Same bounded-duration-grain contract as [[coxPh]]: the
     // cumulative windows below single-sort the distinct durations.
     val nTimes = byT.count()
-    graft.util.CacheGuard.requireReleasing(
-      nTimes <= maxDistinctTimes, byT)(
+    require(nTimes <= maxDistinctTimes,
       s"logRank: $nTimes distinct durations exceeds the single-sort " +
         s"guard ($maxDistinctTimes) — bucket the duration column " +
         "before calling")
@@ -304,7 +291,7 @@ object Survival {
       sum(col("d_a")).as("o_a"), sum(col("d_b")).as("o_b"),
       sum(expA).as("__ea"), sum(dT - expA).as("__eb"),
       sum(varT).as("__v"))
-    val out = agg.select(col("n_a"), col("n_b"), col("o_a"),
+    agg.select(col("n_a"), col("n_b"), col("o_a"),
       round(col("__ea"), 4).as("e_a"), col("o_b"),
       round(col("__eb"), 4).as("e_b"),
       when(col("__v") > 0,
@@ -312,12 +299,8 @@ object Survival {
       when(col("__v") > 0,
         round(pow(col("o_a") - col("__ea"), 2) / col("__v"), 4))
         .as("chi2"))
-      // one row: materialize so byT's cache entry can be released here
-      // instead of leaking per call in a long-lived session (the coxPh
-      // unpersist pattern)
+      // one row: materialized before byT's pin is released
       .localCheckpoint()
-    byT.unpersist(false)
-    out
   }
 
   /** Harrell's concordance index per group — "does a higher risk score
@@ -522,7 +505,7 @@ object Survival {
   def coxPh(df: DataFrame, durationCol: String, eventCol: String,
             xCol: String, iters: Int = 8,
             timeBuckets: Int = 0,
-            maxDistinctTimes: Long = 200000L): DataFrame = {
+            maxDistinctTimes: Long = 200000L): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
     require(timeBuckets >= 0, "timeBuckets must be >= 0")
     import graft.functions.gfunctions.normal_sf
@@ -546,10 +529,9 @@ object Survival {
             lit(width))
       }
     }
-    val cells = bucketed
+    val cells = pin(bucketed
       .groupBy(col("__t"), col("__x"))
-      .agg(count(lit(1)).as("__n"), sum(col("__e")).as("__d"))
-      .persist()
+      .agg(count(lit(1)).as("__n"), sum(col("__e")).as("__d")))
     // The per-step cumulative window below is ordered but
     // unpartitioned — one task sorts the distinct-duration domain
     // (the bounded-duration-grain contract). Continuous durations at
@@ -561,8 +543,7 @@ object Survival {
       count_distinct(col("__t")).as("__nt")).head()
     val nCells = probe.getLong(0)
     val nTimes = probe.getLong(1)
-    graft.util.CacheGuard.requireReleasing(
-      nTimes <= maxDistinctTimes, cells)(
+    require(nTimes <= maxDistinctTimes,
       s"coxPh: $nTimes distinct durations exceeds the single-sort " +
         s"guard ($maxDistinctTimes); risk-set sums serialize over " +
         "the duration domain — coarsen with timeBuckets (> 0) or " +
@@ -614,7 +595,6 @@ object Survival {
     if (!singular && (info.isNaN || info <= 0.0)) singular = true
     val counts = cellsIt.agg(sum(col("__n")).as("n"),
       sum(col("__d")).as("ne")).head()
-    cells.unpersist(false)
     val n = if (counts.isNullAt(0)) 0L else counts.getLong(0)
     val ne = if (counts.isNullAt(1)) 0L else counts.getLong(1)
     import spark.implicits._

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.gfunctions._
 import graft.text.TextAnalysis
+import graft.util.Pin
 
 /** Deduplication operators for LLM training-data pipelines, each designed
   * around a bounded shuffle — never an all-pairs comparison:
@@ -31,18 +32,6 @@ import graft.text.TextAnalysis
 object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Materialize a bounded operator result (localCheckpoint) and release
-    * the operator-internal persists that produced it. Pair outputs are
-    * candidate-proportional (small next to the corpus), so eager
-    * materialization is cheap and leaves no dangling cached corpus data
-    * in a long-lived session. */
-  private def materializeAndRelease(out: DataFrame,
-                                    internals: DataFrame*): DataFrame = {
-    val r = out.localCheckpoint()
-    internals.foreach(_.unpersist(false))
-    r
-  }
 
   /** How long to wait for an [[Observation]] after its action returns.
     * Observed metrics complete on the ASYNC listener bus
@@ -497,7 +486,7 @@ object Dedup {
     * docs all hashing to 0) and is logged as a coverage cap. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    bands: Int = 4, maxDist: Int = 3,
-                   maxBucket: Int = 10000): DataFrame = {
+                   maxBucket: Int = 10000): DataFrame = Pin.scope { pin =>
     // bands must split the 64-bit fingerprint evenly, and bands = 1 is a
     // degenerate all-pairs join (its 64-bit "mask" also wraps to 0 via
     // shift-count semantics, keying every doc identically)
@@ -515,13 +504,11 @@ object Dedup {
       .select(col("id"), simhash64(col("toks")).as("simhash"))
     // banded feeds both self-join sides plus the big-bucket filter;
     // persist so the corpus is tokenized + fingerprinted once.
-    val banded = sigs.select(col("id"), col("simhash"),
+    val banded = pin(sigs.select(col("id"), col("simhash"),
       explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"), bandKey(col("simhash"), b, bandBits).as("key"))
       }: _*)).as("bk"))
-      .select(col("id"), col("simhash"), col("bk.band"), col("bk.key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(banded)
+      .select(col("id"), col("simhash"), col("bk.band"), col("bk.key")))
     val a = banded.select(col("band"), col("key"),
       col("id").as("id_a"), col("simhash").as("sig_a"))
     val b = banded.select(col("band"), col("key"),
@@ -538,7 +525,7 @@ object Dedup {
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
       .distinct()
-    val out = materializeAndRelease(pairs, banded)
+    val out = pairs.localCheckpoint()
     warnCappedBuckets(obs, "simhashPairs", maxBucket)
     out
   }
@@ -691,15 +678,14 @@ object Dedup {
     * reference implementation for the equality spec (the star algorithm
     * above is the production path). */
   private[dedup] def connectedComponentsLabelProp(edges: DataFrame,
-                                                  maxIter: Int = 300): DataFrame = {
+                                                  maxIter: Int = 300): DataFrame = Pin.scope { pin =>
     // Both the symmetrized edges and each iteration's labels are
     // persisted: the loop joins sym every round, and labels' lineage
     // would otherwise grow by one join per iteration (re-deriving the
     // whole pair pipeline each time). Superseded label cachings are
     // dropped as soon as the next round materializes.
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sym = pin(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst"))))
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
     var converged = false
@@ -722,7 +708,6 @@ object Dedup {
       converged = nChanged == 0
       iter += 1
     }
-    sym.unpersist(false)
     labels
   }
 
@@ -761,7 +746,7 @@ object Dedup {
                       shingleSize: Int = 3, numHashes: Int = 16,
                       bands: Int = 4, minJaccard: Double = 0.5,
                       maxBucket: Int = 100000,
-                      maxPairsPerId: Int = Int.MaxValue): DataFrame = {
+                      maxPairsPerId: Int = Int.MaxValue): DataFrame = Pin.scope { pin =>
     // bands must split the signature evenly: bands > numHashes gives
     // empty band slices (every doc keys identically), and a non-divisor
     // silently drops the remainder hashes from banding
@@ -776,21 +761,17 @@ object Dedup {
     // posts feeds the signature build AND the Jaccard verification (the
     // postings ARE the shingle sets) — persist so the corpus is
     // tokenized + shingled once, not 3-4 times
-    val posts = df.select(col(idCol).as("id"),
+    val posts = pin(df.select(col(idCol).as("id"),
       explode(array_distinct(word_shingles(col(textCol), shingleSize)))
-        .as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(posts)
+        .as("shingle")))
     val mins = (0 until numHashes).map(i =>
       min(element_at(col("hs"), i + 1)).as(s"s$i"))
-    val sigs = posts
+    val sigs = pin(posts
       .select(col("id"), minhash_hashes(col("shingle"), numHashes).as("hs"))
       .groupBy("id")
       .agg(mins.head, mins.tail: _*)
       .select(col("id"),
-        array((0 until numHashes).map(i => col(s"s$i")): _*).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(sigs)
+        array((0 until numHashes).map(i => col(s"s$i")): _*).as("sig")))
     val banded = sigs.select(col("id"), explode(
       array((0 until bands).map { b =>
         struct(lit(b).as("band"),
@@ -817,8 +798,7 @@ object Dedup {
             col("x.key") === col("y.key") && col("x.id") < col("y.id"))
         .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
     val guarded = capPairsPerId(cand, maxPairsPerId, "minhashLshPairs")
-    val out = materializeAndRelease(
-      verifyFromPostings(posts, guarded, minJaccard), sigs, posts)
+    val out = verifyFromPostings(posts, guarded, minJaccard).localCheckpoint()
     warnCappedBuckets(obs, "minhashLshPairs", maxBucket)
     out
   }
@@ -851,7 +831,7 @@ object Dedup {
                               textCol: String, historySigs: DataFrame,
                               shingleSize: Int = 3, numHashes: Int = 16,
                               bands: Int = 4, minAgreement: Double = 0.5,
-                              maxBucket: Int = 100000): DataFrame = {
+                              maxBucket: Int = 100000): DataFrame = Pin.scope { pin =>
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands must divide numHashes ($numHashes), got $bands")
     require(minAgreement > 0.0 && minAgreement <= 1.0,
@@ -860,15 +840,14 @@ object Dedup {
     // inner explode: shingle-less docs drop (the minhashLshPairs rule)
     val mins = (0 until numHashes).map(i =>
       min(element_at(col("hs"), i + 1)).as(s"s$i"))
-    val bSigs = batch
+    val bSigs = pin(batch
       .select(col(idCol).as("id"),
         explode(array_distinct(word_shingles(col(textCol), shingleSize)))
           .as("shingle"))
       .select(col("id"), minhash_hashes(col("shingle"), numHashes).as("hs"))
       .groupBy("id").agg(mins.head, mins.tail: _*)
       .select(col("id"),
-        array((0 until numHashes).map(i => col(s"s$i")): _*).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        array((0 until numHashes).map(i => col(s"s$i")): _*).as("sig")))
     def banded(sigs: DataFrame): DataFrame =
       sigs.select(col("id"), col("sig"), explode(
         array((0 until bands).map { b =>
@@ -907,7 +886,6 @@ object Dedup {
       .select(col("id"), col("matched_history_id").isNull.as("is_new"),
         col("matched_history_id"), col("sig_agreement"), col("sig"))
       .localCheckpoint()
-    bSigs.unpersist(false)
     warnCappedBuckets(obs, "incrementalMinHashDedup", maxBucket)
     out
   }
@@ -996,16 +974,14 @@ object Dedup {
     * keys; no all-pairs stage at any point. Exact, no coverage caps. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int = 3, minJaccard: Double = 0.5,
-                        maxPairsPerId: Int = Int.MaxValue): DataFrame = {
+                        maxPairsPerId: Int = Int.MaxValue): DataFrame = Pin.scope { pin =>
     // The exploded postings feed SIX consumers across the plan (doc-freq,
     // prefix rank, both sides of the candidate join, verification sides)
     // — without a persist the physical plan re-scans and re-shingles the
     // corpus once per consumer (observed: 18 parquet scans). Persist is
     // the correct Spark answer for a multi-consumer DAG; MEMORY_AND_DISK
     // spills instead of evicting under pressure.
-    val sh = postings(df, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(sh)
+    val sh = pin(postings(df, idCol, textCol, shingleSize))
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val tauEff = math.max(0.0, minJaccard - 1e-4)
     val wDoc = Window.partitionBy("id")
@@ -1032,8 +1008,7 @@ object Dedup {
             col("x.id") < col("y.id"))
         .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
     val guarded = capPairsPerId(cand, maxPairsPerId, "ngramJaccardPairs")
-    materializeAndRelease(
-      verifyFromPostings(sh, guarded, minJaccard, Some(sizes)), sh)
+    verifyFromPostings(sh, guarded, minJaccard, Some(sizes)).localCheckpoint()
   }
 
   /** Asymmetric containment pairs C(A→B) = |A∩B|/|A| — the
@@ -1052,10 +1027,8 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, minContainment: Double = 0.8,
                        maxShingleDf: Long = 100L,
-                       maxPairsPerId: Int = Int.MaxValue): DataFrame = {
-    val sh = postings(df, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(sh)
+                       maxPairsPerId: Int = Int.MaxValue): DataFrame = Pin.scope { pin =>
+    val sh = pin(postings(df, idCol, textCol, shingleSize))
     val rare = sh.join(
       sh.groupBy("shingle").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxShingleDf && col("df") >= 2)
@@ -1080,7 +1053,7 @@ object Dedup {
       .withColumn("cont_b", round(col("n_common") / col("n_b"), 4))
       .filter(greatest(col("cont_a"), col("cont_b")) >= minContainment)
       .select("id_a", "id_b", "n_common", "n_a", "n_b", "cont_a", "cont_b")
-    materializeAndRelease(out, sh)
+    out.localCheckpoint()
   }
 
   /** Distinct (id, shingle) postings of a document table (native
@@ -1247,12 +1220,10 @@ object Dedup {
     * (id_a, id_b, cos_sim) with id_a < id_b. */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                      minCos: Double, tables: Int = 4,
-                     planesPerTable: Int = 4): DataFrame = {
-    val b = graft.ann.Similarity
+                     planesPerTable: Int = 4): DataFrame = Pin.scope { pin =>
+    val b = pin(graft.ann.Similarity
       .withTableBuckets(df, vecCol, tables, planesPerTable, dim)
-      .select(col(idCol).as("id"), col("table"), col("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(b)
+      .select(col(idCol).as("id"), col("table"), col("bucket")))
     val cand = b.as("x").join(b.as("y"),
         col("x.table") === col("y.table") && col("x.bucket") === col("y.bucket") &&
           col("x.id") < col("y.id"))
@@ -1265,7 +1236,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(cosine_similarity(col("va"), col("vb")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= minCos)
-    materializeAndRelease(pairs, b)
+    pairs.localCheckpoint()
   }
 
   /** Embedding near-dup dedup: cosine pairs -> connected components ->

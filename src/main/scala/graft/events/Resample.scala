@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Time-series regularization: project a per-key series onto a dense
   * integer grid (every bucket between the key's first and last
   * observation), zero-filling counts and forward-filling carried
@@ -40,24 +42,21 @@ object Resample {
     * last observed value. */
   def regularize(df: DataFrame, key: String, bucket: String,
                  countCol: String, ffillCols: Seq[String],
-                 step: Long = 1L): DataFrame = {
+                 step: Long = 1L): DataFrame = Pin.scope { pin =>
     // The input is typically an aggregate of the fact table and feeds
-    // denseGrid's two consumers — persist it so the upstream aggregation
-    // runs once; the output is grid-bounded (keys × span/step), so the
-    // materialize-and-release pattern applies.
-    val in = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // denseGrid's two consumers — pin it so the upstream aggregation
+    // runs once; the output is grid-bounded (keys × span/step), so it is
+    // materialized before the pin is released.
+    val in = pin(df)
     val dense = denseGrid(in, key, bucket, step)
       .withColumn(countCol, coalesce(col(countCol), lit(0L)))
     val w = Window.partitionBy(key).orderBy(col(bucket))
       .rowsBetween(Window.unboundedPreceding, 0)
     // all fills in one projection -> one Window operator over one sort
-    val out = dense.select(dense.columns.map { c =>
+    dense.select(dense.columns.map { c =>
       if (ffillCols.contains(c))
         last(col(c), ignoreNulls = true).over(w).as(c)
       else col(c)
-    }: _*)
-    val r = out.localCheckpoint()
-    in.unpersist(false)
-    r
+    }: _*).localCheckpoint()
   }
 }

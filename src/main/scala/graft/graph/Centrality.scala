@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.util.DriverOrder
+import graft.util.{DriverOrder, Pin}
 
 /** Graph centrality kernels (G2–G4, `pipeline2.py:747-749`), networkx
   * numeric parity.
@@ -287,8 +287,8 @@ object Centrality {
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
           StructType(Seq(StructField("gene", StringType, nullable = false),
             StructField("eigenvector_centrality", DoubleType, nullable = false))))
-      case None => graft.util.Pin.pinned(nodes, edges) {
-        eigenvectorCentralityDistributed(spark, nodes, edges, maxIter, tol)
+      case None => Pin.scope { pin =>
+        eigenvectorCentralityDistributed(spark, pin(nodes), pin(edges), maxIter, tol)
       }
     }
 
@@ -337,67 +337,64 @@ object Centrality {
     */
   def eigenvectorCentralityDistributed(spark: SparkSession, nodes: DataFrame,
                                        edges: DataFrame, maxIter: Int = 1000,
-                                       tol: Double = 1e-6): DataFrame = {
+                                       tol: Double = 1e-6): DataFrame = Pin.scope { pin =>
     import org.apache.spark.storage.StorageLevel
     val n = nodes.count()
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = pin(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (n == 0) {
-      sym.unpersist(false)
-      return nodes.select(col("gene"),
-        lit(0.0).as("eigenvector_centrality"))
+      .filter(col("src") =!= col("dst")).distinct())
+    if (n == 0) nodes.select(col("gene"),
+      lit(0.0).as("eigenvector_centrality"))
+    else {
+      // Each round references x twice (neighbor sums + the error diff), so
+      // without lineage truncation the logical plan doubles per iteration.
+      // Each round is cut to a persisted + locally-checkpointed typed
+      // RDD (constant-size LogicalRDD plan), and THE PREVIOUS round's RDD
+      // is unpersisted once the new one is materialized — the GraphX
+      // Pregel lifecycle. Dataset.localCheckpoint alone would leave one
+      // cached n-row frame per iteration to ContextCleaner's mercy, which
+      // on hundreds of rounds over a big graph fills the block store.
+      import spark.implicits._
+      var prevRdd: Option[org.apache.spark.rdd.RDD[(String, Double, Double)]] =
+        None
+      def cut(df: DataFrame): DataFrame = {
+        val rdd = df.as[(String, Double, Double)].rdd
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        rdd.localCheckpoint()
+        rdd.count()
+        val round = spark.createDataFrame(rdd).toDF("gene", "__x0", "x")
+        prevRdd.foreach(_.unpersist(false))
+        prevRdd = Some(rdd)
+        round
+      }
+      var x = cut(nodes.select(col("gene"), lit(0.0).as("__x0"),
+        lit(1.0 / n).as("x"))).select("gene", "x")
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val contrib = sym.join(x, sym("src") === x("gene"))
+          .groupBy(sym("dst").as("gene"))
+          .agg(sum(col("x")).as("__nbr"))
+        val xRaw = x.withColumnRenamed("x", "__x0")
+          .join(contrib, Seq("gene"), "left")
+          .select(col("gene"), col("__x0"),
+            (col("__x0") + coalesce(col("__nbr"), lit(0.0))).as("__xr"))
+        val norm = xRaw.agg(sqrt(sum(col("__xr") * col("__xr"))).as("__norm"))
+        val xNew = cut(xRaw.crossJoin(broadcast(norm))
+          .select(col("gene"), col("__x0"),
+            when(col("__norm") === 0.0, col("__xr"))
+              .otherwise(col("__xr") / col("__norm")).as("x")))
+        val err = xNew.agg(sum(abs(col("x") - col("__x0"))).as("e"))
+          .collect()(0).getDouble(0)
+        x = xNew.select("gene", "x")
+        converged = err < n * tol
+        iter += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"eigenvector centrality failed to converge in $maxIter iterations")
+      x.select(col("gene"), col("x").as("eigenvector_centrality"))
     }
-    // Each round references x twice (neighbor sums + the error diff), so
-    // without lineage truncation the logical plan doubles per iteration.
-    // Each round is pinned as a persisted + locally-checkpointed typed
-    // RDD (constant-size LogicalRDD plan), and THE PREVIOUS round's RDD
-    // is unpersisted once the new one is materialized — the GraphX
-    // Pregel lifecycle. Dataset.localCheckpoint alone would leave one
-    // cached n-row frame per iteration to ContextCleaner's mercy, which
-    // on hundreds of rounds over a big graph fills the block store.
-    import spark.implicits._
-    var prevRdd: Option[org.apache.spark.rdd.RDD[(String, Double, Double)]] =
-      None
-    def pin(df: DataFrame): DataFrame = {
-      val rdd = df.as[(String, Double, Double)].rdd
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.localCheckpoint()
-      rdd.count()
-      val pinned = spark.createDataFrame(rdd).toDF("gene", "__x0", "x")
-      prevRdd.foreach(_.unpersist(false))
-      prevRdd = Some(rdd)
-      pinned
-    }
-    var x = pin(nodes.select(col("gene"), lit(0.0).as("__x0"),
-      lit(1.0 / n).as("x"))).select("gene", "x")
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val contrib = sym.join(x, sym("src") === x("gene"))
-        .groupBy(sym("dst").as("gene"))
-        .agg(sum(col("x")).as("__nbr"))
-      val xRaw = x.withColumnRenamed("x", "__x0")
-        .join(contrib, Seq("gene"), "left")
-        .select(col("gene"), col("__x0"),
-          (col("__x0") + coalesce(col("__nbr"), lit(0.0))).as("__xr"))
-      val norm = xRaw.agg(sqrt(sum(col("__xr") * col("__xr"))).as("__norm"))
-      val xNew = pin(xRaw.crossJoin(broadcast(norm))
-        .select(col("gene"), col("__x0"),
-          when(col("__norm") === 0.0, col("__xr"))
-            .otherwise(col("__xr") / col("__norm")).as("x")))
-      val err = xNew.agg(sum(abs(col("x") - col("__x0"))).as("e"))
-        .collect()(0).getDouble(0)
-      x = xNew.select("gene", "x")
-      converged = err < n * tol
-      iter += 1
-    }
-    sym.unpersist(false)
-    if (!converged)
-      throw new IllegalStateException(
-        s"eigenvector centrality failed to converge in $maxIter iterations")
-    x.select(col("gene"), col("x").as("eigenvector_centrality"))
   }
 
   /** PageRank (undirected form: edges symmetrized, contributions split
@@ -428,8 +425,8 @@ object Centrality {
     collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
       case Some((nodeRows, edgeRows)) =>
         pageRankDriverImpl(spark, nodes, nodeRows, edgeRows, damping, iters)
-      case None => graft.util.Pin.pinned(nodes, edges) {
-        pageRankDistributed(spark, nodes, edges, damping, iters)
+      case None => Pin.scope { pin =>
+        pageRankDistributed(spark, pin(nodes), pin(edges), damping, iters)
       }
     }
 
@@ -480,8 +477,7 @@ object Centrality {
     * convergence-driven eigenvector loop). */
   def pageRankDistributed(spark: SparkSession, nodes: DataFrame,
                           edges: DataFrame, damping: Double = 0.85,
-                          iters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                          iters: Int = 20): DataFrame = Pin.scope { pin =>
     val n = nodes.count()
     // Edges referencing vertices absent from `nodes` are dropped BEFORE
     // the degree count — the driver path's indexGraph skips them, and
@@ -489,42 +485,38 @@ object Centrality {
     // contributions to a vertex that never joins back (scores would
     // stop summing to 1 and diverge from the driver result).
     val vertexSet = nodes.select(col("gene"))
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = pin(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
       .join(vertexSet.withColumnRenamed("gene", "src"), Seq("src"), "left_semi")
-      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("src").as("gene"))
-      .agg(count(lit(1)).as("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (n == 0) {
-      sym.unpersist(false); deg.unpersist(false)
-      return nodes.select(col("gene"), lit(0.0).as("pagerank"))
-    }
-    var x = nodes.select(col("gene"), lit(1.0 / n).as("x"))
-      .join(deg, Seq("gene"), "left")
-      .select(col("gene"), col("x"), coalesce(col("__deg"), lit(0L)).as("__deg"))
-      .localCheckpoint()
-    var iter = 0
-    while (iter < iters) {
-      val dangling = x.filter(col("__deg") === 0L)
-        .agg(coalesce(sum(col("x")), lit(0.0)).as("__dang"))
-      val contrib = sym.join(x, sym("src") === x("gene"))
-        .groupBy(sym("dst").as("gene"))
-        .agg(sum(col("x") / col("__deg")).as("__nbr"))
-      x = x.drop("x")
-        .join(contrib, Seq("gene"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("gene"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__nbr"), lit(0.0)) + col("__dang") / n)).as("x"),
-          col("__deg"))
+      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi"))
+    val deg = pin(sym.groupBy(col("src").as("gene"))
+      .agg(count(lit(1)).as("__deg")))
+    if (n == 0) nodes.select(col("gene"), lit(0.0).as("pagerank"))
+    else {
+      var x = nodes.select(col("gene"), lit(1.0 / n).as("x"))
+        .join(deg, Seq("gene"), "left")
+        .select(col("gene"), col("x"), coalesce(col("__deg"), lit(0L)).as("__deg"))
         .localCheckpoint()
-      iter += 1
+      var iter = 0
+      while (iter < iters) {
+        val dangling = x.filter(col("__deg") === 0L)
+          .agg(coalesce(sum(col("x")), lit(0.0)).as("__dang"))
+        val contrib = sym.join(x, sym("src") === x("gene"))
+          .groupBy(sym("dst").as("gene"))
+          .agg(sum(col("x") / col("__deg")).as("__nbr"))
+        x = x.drop("x")
+          .join(contrib, Seq("gene"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("gene"),
+            (lit((1.0 - damping) / n) + lit(damping) *
+              (coalesce(col("__nbr"), lit(0.0)) + col("__dang") / n)).as("x"),
+            col("__deg"))
+          .localCheckpoint()
+        iter += 1
+      }
+      x.select(col("gene"), col("x").as("pagerank"))
     }
-    sym.unpersist(false); deg.unpersist(false)
-    x.select(col("gene"), col("x").as("pagerank"))
   }
 
   /** Weighted directed PageRank: mass flows along arcs in proportion to
@@ -592,46 +584,41 @@ object Centrality {
     * [[pageRankWeighted]] for semantics. */
   def pageRankWeightedDistributed(spark: SparkSession, nodes: DataFrame,
                                   edges: DataFrame, damping: Double = 0.85,
-                                  iters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val vertexSet = nodes.select(col("gene"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = edges.select(col("src"), col("dst"), col("w"))
+                                  iters: Int = 20): DataFrame = Pin.scope { pin =>
+    val vertexSet = pin(nodes.select(col("gene")))
+    val e = pin(edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src") =!= col("dst") && col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .join(vertexSet.withColumnRenamed("gene", "src"), Seq("src"), "left_semi")
-      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi"))
     val n = vertexSet.count()
-    if (n == 0) {
-      e.unpersist(false); vertexSet.unpersist(false)
-      return nodes.select(col("gene"), lit(0.0).as("pagerank"))
-    }
-    val outW = e.groupBy(col("src").as("gene"))
-      .agg(sum(col("w")).as("__ow"))
-    var x = vertexSet.join(outW, Seq("gene"), "left")
-      .select(col("gene"), lit(1.0 / n).as("x"),
-        coalesce(col("__ow"), lit(0.0)).as("__ow"))
-      .localCheckpoint()
-    var iter = 0
-    while (iter < iters) {
-      val dangling = x.filter(col("__ow") === 0.0)
-        .agg(coalesce(sum(col("x")), lit(0.0)).as("__dang"))
-      val contrib = e.join(x, e("src") === x("gene"))
-        .groupBy(e("dst").as("gene"))
-        .agg(sum(col("x") * col("w") / col("__ow")).as("__nbr"))
-      x = x.drop("x")
-        .join(contrib, Seq("gene"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("gene"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__nbr"), lit(0.0)) + col("__dang") / n)).as("x"),
-          col("__ow"))
+    if (n == 0) nodes.select(col("gene"), lit(0.0).as("pagerank"))
+    else {
+      val outW = e.groupBy(col("src").as("gene"))
+        .agg(sum(col("w")).as("__ow"))
+      var x = vertexSet.join(outW, Seq("gene"), "left")
+        .select(col("gene"), lit(1.0 / n).as("x"),
+          coalesce(col("__ow"), lit(0.0)).as("__ow"))
         .localCheckpoint()
-      iter += 1
+      var iter = 0
+      while (iter < iters) {
+        val dangling = x.filter(col("__ow") === 0.0)
+          .agg(coalesce(sum(col("x")), lit(0.0)).as("__dang"))
+        val contrib = e.join(x, e("src") === x("gene"))
+          .groupBy(e("dst").as("gene"))
+          .agg(sum(col("x") * col("w") / col("__ow")).as("__nbr"))
+        x = x.drop("x")
+          .join(contrib, Seq("gene"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("gene"),
+            (lit((1.0 - damping) / n) + lit(damping) *
+              (coalesce(col("__nbr"), lit(0.0)) + col("__dang") / n)).as("x"),
+            col("__ow"))
+          .localCheckpoint()
+        iter += 1
+      }
+      x.select(col("gene"), col("x").as("pagerank"))
     }
-    e.unpersist(false); vertexSet.unpersist(false)
-    x.select(col("gene"), col("x").as("pagerank"))
   }
 
   /** HITS hubs & authorities on a DIRECTED graph — fixed-iteration
@@ -659,8 +646,8 @@ object Centrality {
     collectGraph(nodes, edges, distributedThreshold, edgeThreshold) match {
       case Some((nodeRows, edgeRows)) =>
         hitsDriverImpl(spark, nodes, nodeRows, edgeRows, iters)
-      case None => graft.util.Pin.pinned(nodes) {
-        hitsDistributed(spark, nodes, edges, iters)
+      case None => Pin.scope { pin =>
+        hitsDistributed(spark, pin(nodes), edges, iters)
       }
     }
 
@@ -710,55 +697,49 @@ object Centrality {
 
   /** The unbounded-scale HITS path — see [[hits]] for semantics. */
   def hitsDistributed(spark: SparkSession, nodes: DataFrame,
-                      edges: DataFrame, iters: Int = 10): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                      edges: DataFrame, iters: Int = 10): DataFrame = Pin.scope { pin =>
     // the vertex set is re-joined TWICE PER ITERATION (zero-fill of both
     // score vectors) — unpersisted, a nodes frame derived from a fact
     // join would be recomputed ~2·iters times (observed: q132 at 12.9 s
     // from ~22 replays of a 4-table join; 1.9 s persisted)
-    val vertexSet = nodes.select(col("gene"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = edges.select(col("src"), col("dst"))
+    val vertexSet = pin(nodes.select(col("gene")))
+    val e = pin(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .join(vertexSet.withColumnRenamed("gene", "src"), Seq("src"), "left_semi")
-      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi"))
     val n = vertexSet.count()
-    if (n == 0) {
-      e.unpersist(false); vertexSet.unpersist(false)
-      return nodes.select(col("gene"), lit(0.0).as("hub"),
-        lit(0.0).as("authority"))
+    if (n == 0) nodes.select(col("gene"), lit(0.0).as("hub"),
+      lit(0.0).as("authority"))
+    else {
+      def normalized(raw: DataFrame, value: String): DataFrame = {
+        val nrm = raw.agg(sqrt(sum(col(value) * col(value))).as("__nrm"))
+        raw.crossJoin(broadcast(nrm))
+          .select(col("gene"), (col(value) /
+            when(col("__nrm") === 0.0, lit(1.0)).otherwise(col("__nrm")))
+            .as(value))
+          .localCheckpoint()
+      }
+      var h = nodes.select(col("gene"), lit(1.0 / n).as("h")).localCheckpoint()
+      var a = nodes.select(col("gene"), lit(0.0).as("a")).localCheckpoint()
+      var iter = 0
+      while (iter < iters) {
+        a = normalized(vertexSet
+          .join(e.join(h, e("src") === h("gene"))
+            .groupBy(e("dst").as("gene")).agg(sum(col("h")).as("__s")),
+            Seq("gene"), "left")
+          .select(col("gene"), coalesce(col("__s"), lit(0.0)).as("a")), "a")
+        h = normalized(vertexSet
+          .join(e.join(a, e("dst") === a("gene"))
+            .groupBy(e("src").as("gene")).agg(sum(col("a")).as("__s")),
+            Seq("gene"), "left")
+          .select(col("gene"), coalesce(col("__s"), lit(0.0)).as("h")), "h")
+        iter += 1
+      }
+      // h and a are localCheckpointed — the returned plan no longer
+      // references either pinned frame
+      h.join(a, Seq("gene"))
+        .select(col("gene"), col("h").as("hub"), col("a").as("authority"))
     }
-    def normalized(raw: DataFrame, value: String): DataFrame = {
-      val nrm = raw.agg(sqrt(sum(col(value) * col(value))).as("__nrm"))
-      raw.crossJoin(broadcast(nrm))
-        .select(col("gene"), (col(value) /
-          when(col("__nrm") === 0.0, lit(1.0)).otherwise(col("__nrm")))
-          .as(value))
-        .localCheckpoint()
-    }
-    var h = nodes.select(col("gene"), lit(1.0 / n).as("h")).localCheckpoint()
-    var a = nodes.select(col("gene"), lit(0.0).as("a")).localCheckpoint()
-    var iter = 0
-    while (iter < iters) {
-      a = normalized(vertexSet
-        .join(e.join(h, e("src") === h("gene"))
-          .groupBy(e("dst").as("gene")).agg(sum(col("h")).as("__s")),
-          Seq("gene"), "left")
-        .select(col("gene"), coalesce(col("__s"), lit(0.0)).as("a")), "a")
-      h = normalized(vertexSet
-        .join(e.join(a, e("dst") === a("gene"))
-          .groupBy(e("src").as("gene")).agg(sum(col("a")).as("__s")),
-          Seq("gene"), "left")
-        .select(col("gene"), coalesce(col("__s"), lit(0.0)).as("h")), "h")
-      iter += 1
-    }
-    val out = h.join(a, Seq("gene"))
-      .select(col("gene"), col("h").as("hub"), col("a").as("authority"))
-    // h and a are localCheckpointed — the returned plan no longer
-    // references either cached frame
-    e.unpersist(false); vertexSet.unpersist(false)
-    out
   }
 
   /** A14 + A15: min-max normalize the three centralities (sklearn

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Hierarchy flattening — the classic warehouse recursive shape (org
   * charts, bill-of-materials, category trees): given child→parent
@@ -29,10 +30,9 @@ object Hierarchy {
     * root ancestor and hop count to it (roots: depth 0, root = node).
     */
   def flattenToRoot(edges: DataFrame, child: String, parent: String,
-                    maxDepthLog2: Int = 40): DataFrame = {
-    val e = edges.select(col(child).as("node"), col(parent).as("par"))
-      .filter(col("node").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                    maxDepthLog2: Int = 40): DataFrame = Pin.scope { pin =>
+    val e = pin(edges.select(col(child).as("node"), col(parent).as("par"))
+      .filter(col("node").isNotNull))
     val dupCheck = e.groupBy(col("node")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).limit(1).count()
     require(dupCheck == 0, "not a forest: a child has multiple parents")
@@ -71,9 +71,7 @@ object Hierarchy {
     }
     require(done, s"hierarchy did not settle in 2^$maxDepthLog2 hops " +
       "— cycle in the input?")
-    val r = cur.select(col("node").as(child), col("anc").as("root"),
+    cur.select(col("node").as(child), col("anc").as("root"),
       col("depth"))
-    e.unpersist(false)
-    r
   }
 }

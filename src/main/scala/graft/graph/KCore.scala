@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** k-core decomposition by iterative peeling (graph-analytics extension
   * beyond the reference's G1–G7 family; same undirected edge-list data
@@ -54,8 +55,8 @@ object KCore {
     DriverCollect.ifFits(canon, edgeThreshold) match {
       case Some(edgeRows) =>
         kCoreDriver(spark, canon.schema("src").dataType, edgeRows, k)
-      case None => graft.util.Pin.pinned(canon) {
-        kCoreDistributed(spark, canon, k, maxRounds)
+      case None => Pin.scope { pin =>
+        kCoreDistributed(spark, pin(canon), k, maxRounds)
       }
     }
   }
@@ -112,18 +113,17 @@ object KCore {
         s"k-core peel exceeded $maxRounds rounds — raise maxRounds")
       val deg = sym.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("__deg"))
-      val weak = deg.filter(col("__deg") < k).select(col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (weak.count() == 0L) {
-        weak.unpersist(false)
-        done = true
-      } else {
-        sym = sym
-          .join(weak.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
-          .join(weak.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
-          .localCheckpoint()
-        weak.unpersist(false)
-        round += 1
+      // this round's weak set is pinned until the round's cut
+      Pin.scope { pin =>
+        val weak = pin(deg.filter(col("__deg") < k).select(col("node")))
+        if (weak.count() == 0L) done = true
+        else {
+          sym = sym
+            .join(weak.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
+            .join(weak.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
+            .localCheckpoint()
+          round += 1
+        }
       }
     }
     sym.groupBy(col("src").as("node"))

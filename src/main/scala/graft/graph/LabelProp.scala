@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Synchronous label propagation community detection (Raghavan et al.
   * 2007, Phys. Rev. E 76): labels start as node ids; each round every
   * node adopts the most frequent label among its neighbors, ties
@@ -26,14 +28,13 @@ object LabelProp {
     * no neighbors to vote).
     */
   def propagate(edges: DataFrame, src: String, dst: String,
-                iters: Int): DataFrame = {
+                iters: Int): DataFrame = Pin.scope { pin =>
     require(iters >= 0, "iters must be non-negative")
     val e = edges.select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sym = pin(e.union(e.select(col("b").as("a"), col("a").as("b"))))
     val nodes = sym.select(col("a").as("node")).distinct()
     var labels = nodes.withColumn("lbl", col("node")).localCheckpoint()
     var i = 0
@@ -54,7 +55,6 @@ object LabelProp {
         .localCheckpoint()
       i += 1
     }
-    sym.unpersist(false)
     labels.select(col("node"), col("lbl").as("community"))
   }
 }

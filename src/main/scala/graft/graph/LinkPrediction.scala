@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Neighborhood-overlap link prediction: for every vertex pair sharing
   * at least one neighbor, the common-neighbor count and the Jaccard
@@ -30,14 +31,11 @@ object LinkPrediction {
     * shared neighbors. */
   def neighborhoodJaccard(edges: DataFrame, src: String = "src",
                           dst: String = "dst", minCommon: Long = 1L,
-                          maxDegree: Long = 0L): DataFrame = {
-    val canon = Triangles.canonicalize(edges, src, dst)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym = canon.select(col("src").as("v"), col("dst").as("n"))
-      .unionByName(canon.select(col("dst").as("v"), col("src").as("n")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                          maxDegree: Long = 0L): DataFrame = Pin.scope { pin =>
+    val canon = pin(Triangles.canonicalize(edges, src, dst))
+    val sym = pin(canon.select(col("src").as("v"), col("dst").as("n"))
+      .unionByName(canon.select(col("dst").as("v"), col("src").as("n"))))
+    val deg = pin(sym.groupBy(col("v")).agg(count(lit(1)).as("deg")))
     // Optional hub cap on the wedge MIDDLE vertex only (degrees and
     // pair endpoints keep their exact values).
     val mids =
@@ -51,7 +49,7 @@ object LinkPrediction {
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("common"))
       .filter(col("common") >= minCommon)
-    val out = common
+    common
       .join(deg.select(col("v").as("id_a"), col("deg").as("deg_a")),
         Seq("id_a"))
       .join(deg.select(col("v").as("id_b"), col("deg").as("deg_b")),
@@ -64,8 +62,6 @@ object LinkPrediction {
         round(col("common").cast("double") /
           (col("deg_a") + col("deg_b") - col("common")), 6).as("jaccard"),
         coalesce(col("__e"), lit(false)).as("is_edge"))
-    val r = out.localCheckpoint()
-    Seq(canon, sym, deg).foreach(_.unpersist(false))
-    r
+      .localCheckpoint()
   }
 }

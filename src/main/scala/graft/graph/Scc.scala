@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Strongly connected components of a DIRECTED graph — the missing
   * directed sibling of [[graft.dedup.Dedup.connectedComponents]]
@@ -122,10 +123,9 @@ object Scc {
   /** Orzan forward-color / backward-collect rounds, fully distributed. */
   private def coloringDistributed(spark: SparkSession, nodes: DataFrame,
                                   edges: DataFrame,
-                                  maxRounds: Int): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                                  maxRounds: Int): DataFrame = Pin.scope { pin =>
+    val e0 = pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst")).distinct())
     var active = nodes.select(col("node").cast("long")).distinct()
       .localCheckpoint()
     var result: DataFrame = null
@@ -181,7 +181,6 @@ object Scc {
         "left_anti").localCheckpoint()
       round += 1
     }
-    e0.unpersist(false)
     val out = if (result == null)
       nodes.sparkSession.emptyDataFrame
         .select(lit(0L).as("node"), lit(0L).as("component")).limit(0)

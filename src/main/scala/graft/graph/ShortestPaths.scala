@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.util.Pin
+
 /** Single-source shortest paths by distributed Bellman–Ford relaxation —
   * the reachability/distance kernel under dependency-depth analysis,
   * influence radius, and "how many hops from a trusted seed" scoring.
@@ -81,15 +83,12 @@ object ShortestPaths {
 
   /** The unbounded-scale relaxation loop — see [[fromSource]]. */
   def fromSourceDistributed(spark: SparkSession, nodes: DataFrame,
-                            edges: DataFrame, source: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val vertexSet = nodes.select(col("gene"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = edges.select(col("src"), col("dst"), col("w"))
+                            edges: DataFrame, source: String): DataFrame = Pin.scope { pin =>
+    val vertexSet = pin(nodes.select(col("gene")))
+    val e = pin(edges.select(col("src"), col("dst"), col("w"))
       .filter(col("w") >= 0)
       .join(vertexSet.withColumnRenamed("gene", "src"), Seq("src"), "left_semi")
-      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(vertexSet.withColumnRenamed("gene", "dst"), Seq("dst"), "left_semi"))
     val n = vertexSet.count()
     var dist = vertexSet
       .select(col("gene"),
@@ -113,7 +112,6 @@ object ShortestPaths {
       dist = next
       round += 1
     }
-    e.unpersist(false); vertexSet.unpersist(false)
     dist
   }
 
@@ -173,16 +171,13 @@ object ShortestPaths {
     * advances in the same round, so the round count is the graph
     * DIAMETER, not |V|·sources. */
   def allPairsDistributed(spark: SparkSession, nodes: DataFrame,
-                          edges: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val vertexSet = nodes.select(col("gene"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = edges.select(col("src").as("eu"), col("dst").as("ev"),
+                          edges: DataFrame): DataFrame = Pin.scope { pin =>
+    val vertexSet = pin(nodes.select(col("gene")))
+    val e = pin(edges.select(col("src").as("eu"), col("dst").as("ev"),
         col("w"))
       .filter(col("w") >= 0)
       .join(vertexSet.withColumnRenamed("gene", "eu"), Seq("eu"), "left_semi")
-      .join(vertexSet.withColumnRenamed("gene", "ev"), Seq("ev"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(vertexSet.withColumnRenamed("gene", "ev"), Seq("ev"), "left_semi"))
     val n = vertexSet.count()
     var dist = vertexSet.select(col("gene").as("src"))
       .crossJoin(vertexSet)
@@ -208,7 +203,6 @@ object ShortestPaths {
       dist = next
       round += 1
     }
-    e.unpersist(false); vertexSet.unpersist(false)
     dist
   }
 

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Triangle counting over an undirected edge list (graph-analytics
   * extension beyond the reference's G1–G7 family; same edge-list data
   * model as [[Centrality]]).
@@ -56,11 +58,9 @@ object Triangles {
     * for orientation, so the graph is materialized exactly once.
     * Output: (node, degree BIGINT, triangles BIGINT, clustering). */
   def clusteringCoefficient(edges: DataFrame, src: String = "src",
-                            dst: String = "dst"): DataFrame = {
-    val canon = canonicalize(edges, src, dst)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val oriented = orient(canon)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                            dst: String = "dst"): DataFrame = Pin.scope { pin =>
+    val canon = pin(canonicalize(edges, src, dst))
+    val oriented = pin(orient(canon))
     val wedges = oriented.select(col("u"), col("v"))
       .join(oriented.select(col("u").as("v"), col("v").as("w")), Seq("v"))
     val tris = wedges
@@ -72,33 +72,24 @@ object Triangles {
     val deg = canon.select(col("src").as("node"))
       .unionAll(canon.select(col("dst").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-    val out = deg.filter(col("degree") >= 2)
+    deg.filter(col("degree") >= 2)
       .join(per, Seq("node"), "left")
       .select(col("node"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"),
         round(coalesce(col("triangles"), lit(0L)).cast("double") * 2.0 /
           (col("degree") * (col("degree") - lit(1L))), 4).as("clustering"))
-    val r = out.localCheckpoint()
-    oriented.unpersist(false)
-    canon.unpersist(false)
-    r
+      .localCheckpoint()
   }
 
   /** The canonical and oriented edge frames each feed 3 plan consumers
     * (degree union ×2 + orientation join; both wedge sides + closing
     * join) — unpersisted, the source would be re-scanned and
     * re-deduplicated ~9× (observed: 30 parquet scans in q104's plan).
-    * Persist both, materialize the bounded result, release. */
+    * Pin both, and materialize the bounded result before release. */
   private def withOriented(edges: DataFrame, src: String, dst: String)
-                          (body: DataFrame => DataFrame): DataFrame = {
-    val canon = canonicalize(edges, src, dst)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val oriented = orient(canon)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r = body(oriented).localCheckpoint()
-    oriented.unpersist(false)
-    canon.unpersist(false)
-    r
+                          (body: DataFrame => DataFrame): DataFrame = Pin.scope { pin =>
+    val canon = pin(canonicalize(edges, src, dst))
+    body(pin(orient(canon))).localCheckpoint()
   }
 
   /** Orient canonical edges low→high by (degree, id): output (u, v) with

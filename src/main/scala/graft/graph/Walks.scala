@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Seeded/attenuated spectral walks: personalized PageRank (random
   * walk with restart) and Katz centrality. Both size-dispatch (the
@@ -45,18 +46,13 @@ object Walks {
 
   private def pprDistributedImpl(spark: SparkSession, nodes: DataFrame,
                                  edges: DataFrame, seed: Long,
-                                 damping: Double, iters: Int): DataFrame = {
-    val v = nodes.select(col("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seeded = !v.filter(col("node") === seed).isEmpty
-    if (!seeded) v.unpersist(false)
-    requireSeed(seeded, seed)
-    val e = edges.select(col("src"), col("dst"))
+                                 damping: Double, iters: Int): DataFrame = Pin.scope { pin =>
+    val v = pin(nodes.select(col("node")).distinct())
+    requireSeed(!v.filter(col("node") === seed).isEmpty, seed)
+    val e = pin(edges.select(col("src"), col("dst"))
       .join(v.select(col("node").as("src")), Seq("src"))
-      .join(v.select(col("node").as("dst")), Seq("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(v.select(col("node").as("dst")), Seq("dst")))
+    val deg = pin(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")))
     var x = v.withColumn("x",
       when(col("node") === seed, 1.0).otherwise(0.0)).localCheckpoint()
     var i = 0
@@ -79,10 +75,8 @@ object Walks {
         .localCheckpoint()
       i += 1
     }
-    val out = x.select(col("node"), round(col("x"), 6).as("ppr"))
+    x.select(col("node"), round(col("x"), 6).as("ppr"))
       .localCheckpoint()
-    v.unpersist(false); e.unpersist(false); deg.unpersist(false)
-    out
   }
 
   /** Katz centrality by fixed-point iteration:
@@ -106,13 +100,11 @@ object Walks {
 
   private def katzDistributedImpl(spark: SparkSession, nodes: DataFrame,
                                   edges: DataFrame, alpha: Double,
-                                  beta: Double, iters: Int): DataFrame = {
-    val v = nodes.select(col("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = edges.select(col("src"), col("dst"))
+                                  beta: Double, iters: Int): DataFrame = Pin.scope { pin =>
+    val v = pin(nodes.select(col("node")).distinct())
+    val e = pin(edges.select(col("src"), col("dst"))
       .join(v.select(col("node").as("src")), Seq("src"))
-      .join(v.select(col("node").as("dst")), Seq("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(v.select(col("node").as("dst")), Seq("dst")))
     var x = v.withColumn("x", lit(beta)).localCheckpoint()
     var i = 0
     while (i < iters) {
@@ -127,10 +119,8 @@ object Walks {
         .localCheckpoint()
       i += 1
     }
-    val out = x.select(col("node"), round(col("x"), 6).as("katz"))
+    x.select(col("node"), round(col("x"), 6).as("katz"))
       .localCheckpoint()
-    v.unpersist(false); e.unpersist(false)
-    out
   }
 
   /** Collected graph as (sorted node array, in-adjacency by node index,

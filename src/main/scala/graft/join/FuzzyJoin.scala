@@ -3,94 +3,24 @@ package graft.join
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Blocked edit-distance (fuzzy) join — entity-resolution extension of
-  * the join family ([[AsOfJoin]], [[RangeJoin]]).
+/** Edit-distance (fuzzy) self-join — entity-resolution extension of
+  * the join family ([[AsOfJoin]], [[RangeJoin]]) — by deletion
+  * neighborhoods (FastSS): each string emits every variant reachable by
+  * deleting up to `maxDist` characters, and two strings within edit
+  * distance d ALWAYS share a key in their ≤d-deletion neighborhoods.
+  * Candidates sharing a key pass a length band (|len(a) − len(b)| ≤
+  * maxDist — a true lower bound on edit distance) and are verified with
+  * `levenshtein` (codegen'd built-in, no UDF).
   *
-  * Candidate pairs must share a blocking key (character prefix of the
-  * match column) and pass a length band (|len(a) − len(b)| ≤ maxDist —
-  * a true lower bound on edit distance); survivors are verified with
-  * `levenshtein` (codegen'd built-in, no UDF). Blocking is the standard
-  * recall/cost trade of entity resolution: pairs that differ inside the
-  * prefix are missed, and recall is recovered in practice by unioning
-  * passes over different blocking keys (prefix, reversed prefix,
-  * phonetic key) — each pass is this same operator.
-  *
-  * Scale: one shuffle on the blocking key; per-block work is |block|².
-  * Prefix blocks follow text frequency, so a hot prefix (e.g. a common
-  * brand word) is the skew risk — pass `maxBlockRows` to drop
-  * oversized blocks with a logged count, lengthen the prefix, or salt
-  * hot blocks (see [[SkewJoin]]) rather than accepting one straggler
-  * task. The length band is applied inside the block before
-  * levenshtein so the quadratic verify only pays for plausible pairs.
+  * Unlike prefix blocking, recall is complete and no distribution
+  * degenerates into one block. The q107 lesson: sequential entity
+  * names ("Supplier#000000001"…) share their whole prefix, so ANY
+  * fixed prefix key collapses to a single O(n²) block; deletion keys
+  * differ wherever the strings differ, keeping candidates proportional
+  * to true near-matches.
   */
 object FuzzyJoin {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Opt-in hot-block cap: remove blocking keys whose row count in
-    * `side` exceeds `cap` — quadratic verify on a hot prefix is the
-    * one stage that can straggle a fuzzy join, and a capped block must
-    * be LOGGED, never silently truncated (the MarketBasket/Dedup cap
-    * discipline). Hot keys are few, so finding them is one bounded
-    * aggregate and removing them a broadcast anti-join. Recall for
-    * capped blocks is recovered the same way as for prefix mismatches:
-    * another pass with a different blocking key. */
-  private def dropHotBlocks(side: DataFrame, cap: Option[Int],
-                            op: String): DataFrame = cap match {
-    case Some(c) =>
-      val big = side.groupBy(col("__blk"))
-        .agg(count(lit(1)).as("__bn"))
-        .filter(col("__bn") > c).select(col("__blk"))
-      val nBig = big.count()
-      if (nBig > 0) log.warn(
-        s"$op: dropped $nBig blocks larger than $c rows — fuzzy " +
-          "recall is capped for their members")
-      side.join(broadcast(big), Seq("__blk"), "left_anti")
-    case None => side
-  }
-
-  /** Self-join `df` on fuzzy equality of `text`: pairs (id_a, id_b,
-    * text_a, text_b, dist INT) with id_a < id_b, same `prefixLen`-char
-    * block, and levenshtein ≤ maxDist. `id` must be unique per row.
-    * `maxBlockRows` enables the logged hot-block cap. */
-  def selfBlockedLevenshtein(df: DataFrame, id: String, text: String,
-                             maxDist: Int, prefixLen: Int,
-                             maxBlockRows: Option[Int] = None): DataFrame = {
-    val a = dropHotBlocks(
-      df.select(col(id).as("id_a"), col(text).as("text_a"),
-        substring(col(text), 1, prefixLen).as("__blk"),
-        length(col(text)).as("__len_a")),
-      maxBlockRows, "selfBlockedLevenshtein")
-    val b = a.select(col("id_a").as("id_b"), col("text_a").as("text_b"),
-      col("__blk"), col("__len_a").as("__len_b"))
-    a.join(b, Seq("__blk"))
-      .filter(col("id_a") < col("id_b") &&
-        abs(col("__len_a") - col("__len_b")) <= maxDist)
-      .withColumn("dist", levenshtein(col("text_a"), col("text_b")))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("text_a"), col("text_b"),
-        col("dist"))
-  }
-
-  /** Deletion-neighborhood (FastSS) self-join: exact-recall candidate
-    * generation for edit distance ≤ `maxDist` (1 or 2). Each string
-    * emits every variant reachable by deleting up to `maxDist`
-    * characters (L+1 keys at d=1, ~L²/2 at d=2); two strings within
-    * edit distance d ALWAYS share a key in their ≤d-deletion
-    * neighborhoods, so — unlike prefix blocking — recall is complete
-    * and no distribution degenerates into one block. The q107 lesson:
-    * sequential entity names ("Supplier#000000001"…) share their whole
-    * prefix, so ANY fixed prefix key collapses to a single O(n²)
-    * block; deletion keys differ wherever the strings differ, keeping
-    * candidates proportional to true near-matches. Costs: the key
-    * explode carries n·(L+1) short strings (d=1) through one shuffle —
-    * linear in data; candidate dedup is a groupBy on (id_a, id_b).
-    * Same output contract as [[selfBlockedLevenshtein]].
-    *
-    * 100 TB: explode → hash-join on deletion key → distinct pair
-    * verify, all fine-grained keys; a hot deletion key = many strings
-    * genuinely within 2·d edits of each other (true-positive-dense),
-    * cappable via `maxKeyRows` with the logged-drop discipline. */
   /** ≤`maxDist`-deletion variants of `textCol` as join keys: output
     * (idOut, textOut, lenOut, __key). 0 is the keep-as-is sentinel;
     * i in 1..len deletes char i (1-based); d=2 applies a second
@@ -123,32 +53,21 @@ object FuzzyJoin {
       .distinct()
   }
 
-  /** The logged hot-key cap for deletion-key frames (recall capped for
-    * members of dropped keys — the dropHotBlocks discipline). */
-  private def dropHotKeys(keys: DataFrame, cap: Option[Int],
-                          op: String): DataFrame = cap match {
-    case Some(c) =>
-      val hot = keys.groupBy(col("__key"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > c)
-        .select(col("__key"))
-      val nHot = hot.count()
-      if (nHot > 0) log.warn(
-        s"$op: dropped $nHot deletion keys with more than $c rows — " +
-          "recall capped for their members")
-      keys.join(broadcast(hot), Seq("__key"), "left_anti")
-    case None => keys
-  }
-
+  /** Self-join `df` on fuzzy equality of `text`: pairs (id_a, id_b,
+    * text_a, text_b, dist INT) with id_a < id_b and levenshtein ≤
+    * `maxDist` (1 or 2). `id` must be unique per row.
+    *
+    * Costs: the key explode carries n·(L+1) short strings (d=1, ~L²/2
+    * at d=2) through one shuffle — linear in data; candidate dedup is
+    * a distinct on (id_a, id_b, text_a, text_b). A hot deletion key is
+    * many strings genuinely within 2·d edits of each other
+    * (true-positive-dense). */
   def selfDeletionNeighborhood(df: DataFrame, id: String, text: String,
-                               maxDist: Int,
-                               maxKeyRows: Option[Int] = None): DataFrame = {
+                               maxDist: Int): DataFrame = {
     require(maxDist == 1 || maxDist == 2,
       s"selfDeletionNeighborhood supports maxDist 1 or 2, got $maxDist " +
-        "(the deletion neighborhood grows C(len, d) — use " +
-        "selfBlockedLevenshtein passes for larger distances)")
-    val a = dropHotKeys(
-      deletionKeys(df, id, text, maxDist, "id_a", "text_a", "__len_a"),
-      maxKeyRows, "selfDeletionNeighborhood")
+        "(the deletion neighborhood grows C(len, d) with the distance)")
+    val a = deletionKeys(df, id, text, maxDist, "id_a", "text_a", "__len_a")
     val b = a.select(col("id_a").as("id_b"), col("text_a").as("text_b"),
       col("__len_a").as("__len_b"), col("__key"))
     a.join(b, Seq("__key"))
@@ -159,63 +78,5 @@ object FuzzyJoin {
       .filter(col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("text_a"), col("text_b"),
         col("dist"))
-  }
-
-  /** Two-table deletion-neighborhood join — entity linking against a
-    * canonical dictionary with complete recall at edit distance ≤
-    * `maxDist` (1 or 2): every `left` row paired with the `right`
-    * (dictionary) rows within `maxDist` edits, no blocking miss and no
-    * degenerate shared-prefix block (the [[selfDeletionNeighborhood]]
-    * rationale). Output columns follow [[blockedLevenshtein]]:
-    * (<id>_l, <text>_l, <id>_r, <text>_r, dist). */
-  def deletionNeighborhoodJoin(left: DataFrame, right: DataFrame,
-                               id: String, text: String,
-                               maxDist: Int,
-                               maxKeyRows: Option[Int] = None): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"deletionNeighborhoodJoin supports maxDist 1 or 2, got $maxDist")
-    val a = dropHotKeys(
-      deletionKeys(left, id, text, maxDist, s"${id}_l", s"${text}_l",
-        "__len_l"),
-      maxKeyRows, "deletionNeighborhoodJoin(left)")
-    val b = dropHotKeys(
-      deletionKeys(right, id, text, maxDist, s"${id}_r", s"${text}_r",
-        "__len_r"),
-      maxKeyRows, "deletionNeighborhoodJoin(right)")
-    a.join(b, Seq("__key"))
-      .filter(abs(col("__len_l") - col("__len_r")) <= maxDist)
-      .select(s"${id}_l", s"${text}_l", s"${id}_r", s"${text}_r")
-      .distinct()
-      .withColumn("dist",
-        levenshtein(col(s"${text}_l"), col(s"${text}_r")))
-      .filter(col("dist") <= maxDist)
-  }
-
-  /** Two-table variant: every `left` row paired with the `right` rows in
-    * its block within `maxDist` edits. Column names are taken from the
-    * inputs with `_l`/`_r` suffixes on the id and text columns. */
-  def blockedLevenshtein(left: DataFrame, right: DataFrame,
-                         id: String, text: String,
-                         maxDist: Int, prefixLen: Int,
-                         maxBlockRows: Option[Int] = None): DataFrame = {
-    // per-block join cost is |A_blk|·|B_blk|, so the cap applies to
-    // each side independently (either factor past the cap straggles)
-    val a = dropHotBlocks(
-      left.select(col(id).as(s"${id}_l"), col(text).as(s"${text}_l"),
-        substring(col(text), 1, prefixLen).as("__blk"),
-        length(col(text)).as("__len_l")),
-      maxBlockRows, "blockedLevenshtein(left)")
-    val b = dropHotBlocks(
-      right.select(col(id).as(s"${id}_r"), col(text).as(s"${text}_r"),
-        substring(col(text), 1, prefixLen).as("__blk"),
-        length(col(text)).as("__len_r")),
-      maxBlockRows, "blockedLevenshtein(right)")
-    a.join(b, Seq("__blk"))
-      .filter(abs(col("__len_l") - col("__len_r")) <= maxDist)
-      .withColumn("dist",
-        levenshtein(col(s"${text}_l"), col(s"${text}_r")))
-      .filter(col("dist") <= maxDist)
-      .select(col(s"${id}_l"), col(s"${id}_r"), col(s"${text}_l"),
-        col(s"${text}_r"), col("dist"))
   }
 }

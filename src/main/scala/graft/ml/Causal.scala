@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Doubly-robust average treatment effect (X283; AIPW — Robins,
   * Rotnitzky & Zhao 1994): the estimator that stays consistent if
   * EITHER the propensity model OR the outcome model is right —
@@ -33,16 +35,15 @@ object Causal {
 
   def aipwAte(df: DataFrame, treatCol: String, yCol: String,
               x1: String, x2: String, iters: Int = 8,
-              clip: Double = 0.01): DataFrame = {
+              clip: Double = 0.01): DataFrame = Pin.scope { pin =>
     require(clip > 0 && clip < 0.5, "clip in (0, 0.5)")
     val spark = df.sparkSession
-    val d = df.select(col(treatCol).cast("double").as("__t"),
+    val d = pin(df.select(col(treatCol).cast("double").as("__t"),
         col(yCol).cast("double").as("__yv"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__t").isNotNull && col("__yv").isNotNull &&
-        col("__x1").isNotNull && col("__x2").isNotNull)
-      .persist()
+        col("__x1").isNotNull && col("__x2").isNotNull))
     val counts = d.agg(count(lit(1)).as("n"),
       sum(col("__t")).as("nt")).head()
     val n = if (counts.isNullAt(0)) 0L else counts.getLong(0)
@@ -59,7 +60,7 @@ object Causal {
         .select(col("__yv").as("__y"), col("__x1"), col("__x2")),
       lit(1.0))
     import spark.implicits._
-    val out = (prop, mT, mC) match {
+    (prop, mT, mC) match {
       case (Some(g), Some(bt), Some(bc)) =>
         val e = least(lit(1.0 - clip), greatest(lit(clip),
           lit(1.0) / (lit(1.0) + exp(-(lit(g(0)) +
@@ -92,7 +93,5 @@ object Causal {
             lit(null).cast("double").as("ate_aipw"),
             lit(null).cast("double").as("mean_propensity"))
     }
-    d.unpersist(false)
-    out
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.util.Pin
 
 /** Grid-blocked DBSCAN over integer planar coordinates — the density
   * clustering composition: [[graft.join.SpatialJoin]]'s cell blocking
@@ -37,11 +38,10 @@ object Dbscan {
     * id of the cluster, null for noise). `id` must be a LONG-castable
     * unique key; x/y integer-valued. */
   def cluster(points: DataFrame, id: String, x: String, y: String,
-              eps: Long, minPts: Int): DataFrame = {
+              eps: Long, minPts: Int): DataFrame = Pin.scope { pin =>
     require(eps > 0 && minPts >= 1, "eps and minPts must be positive")
-    val pts = points.select(col(id).cast("long").as("__id"),
-        col(x).cast("long").as("__x"), col(y).cast("long").as("__y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pts = pin(points.select(col(id).cast("long").as("__id"),
+        col(x).cast("long").as("__x"), col(y).cast("long").as("__y")))
     def cell(c: Column): Column = floor(c.cast("double") / eps).cast("long")
     val probes = pts
       .withColumn("__dx", explode(array(lit(-1L), lit(0L), lit(1L))))
@@ -56,16 +56,14 @@ object Dbscan {
     // Directed ε-neighbor pairs (both orientations; self excluded).
     val d2 = (col("__xa") - col("__xb")) * (col("__xa") - col("__xb")) +
       (col("__ya") - col("__yb")) * (col("__ya") - col("__yb"))
-    val pairs = probes.join(cells, Seq("__cx", "__cy"))
+    val pairs = pin(probes.join(cells, Seq("__cx", "__cy"))
       .filter(col("__ia") =!= col("__ib") && d2 <= lit(eps * eps))
-      .select(col("__ia"), col("__ib"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__ia"), col("__ib")))
     val nbrCnt = pairs.groupBy(col("__ia")).agg(count(lit(1)).as("__nn"))
     // core ⇔ 1 (self) + neighbors ≥ minPts
-    val roles = pts.join(nbrCnt, pts("__id") === nbrCnt("__ia"), "left")
+    val roles = pin(pts.join(nbrCnt, pts("__id") === nbrCnt("__ia"), "left")
       .select(col("__id"),
-        (coalesce(col("__nn"), lit(0L)) + 1 >= minPts).as("__core"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (coalesce(col("__nn"), lit(0L)) + 1 >= minPts).as("__core")))
     val coreIds = roles.filter(col("__core")).select(col("__id"))
     val coreEdges = pairs
       .join(coreIds.withColumnRenamed("__id", "__ia"), Seq("__ia"))
@@ -76,12 +74,11 @@ object Dbscan {
     // Min-id relabel + singleton cores (no core neighbor = own cluster).
     val minLabel = comp.groupBy(col("component"))
       .agg(min(col("id")).as("__cl"))
-    val coreClusters = coreIds
+    val coreClusters = pin(coreIds
       .join(comp.join(minLabel, Seq("component"))
           .select(col("id").as("__id"), col("__cl")),
         Seq("__id"), "left")
-      .select(col("__id"), coalesce(col("__cl"), col("__id")).as("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__id"), coalesce(col("__cl"), col("__id")).as("cluster")))
     // Border: non-core adjacent to ≥1 core → min adjacent core cluster.
     val borderClusters = pairs
       .join(roles.filter(!col("__core")).select(col("__id").as("__ia")),
@@ -89,7 +86,7 @@ object Dbscan {
       .join(coreClusters.withColumnRenamed("__id", "__ib"), Seq("__ib"))
       .groupBy(col("__ia"))
       .agg(min(col("cluster")).as("cluster"))
-    val out = roles
+    roles
       .join(coreClusters.withColumnRenamed("cluster", "__ccl"),
         Seq("__id"), "left")
       .join(borderClusters.withColumnRenamed("__ia", "__id")
@@ -101,8 +98,6 @@ object Dbscan {
           .otherwise(lit("noise")).as("role"),
         when(col("__core"), col("__ccl"))
           .otherwise(col("__bcl")).as("cluster"))
-    val r = out.localCheckpoint()
-    Seq(pts, pairs, roles, coreClusters).foreach(_.unpersist(false))
-    r
+      .localCheckpoint()
   }
 }

@@ -2,7 +2,8 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Lloyd's k-means over an embedding column — the clustering step under
   * corpus curation (topic balancing, SemDeDup cell structure, IVF list
@@ -30,11 +31,10 @@ object KMeans {
     * then report the final assignment: (cell BIGINT, n_members BIGINT,
     * inertia = Σd² rounded 2dp), ordered by cell. */
   def lloydStats(vecs: DataFrame, id: String, vec: String,
-                 k: Int, iters: Int): DataFrame = {
+                 k: Int, iters: Int): DataFrame = Pin.scope { pin =>
     require(k > 0 && iters >= 0, "k and iters must be positive")
-    val v = vecs.select(col(id).as("__vid"),
-        col(vec).cast("array<double>").as("__e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = pin(vecs.select(col(id).as("__vid"),
+        col(vec).cast("array<double>").as("__e")))
     val dim = v.select(size(col("__e")).as("d")).head().getInt(0)
 
     def dist(e: Column, ce: Column): Column =
@@ -85,12 +85,10 @@ object KMeans {
       cent = cent.map { case (c, old) => c -> means.getOrElse(c, old) }
       iter += 1
     }
-    val out = assign(centDf).groupBy(col("__cell").as("cell"))
+    assign(centDf).groupBy(col("__cell").as("cell"))
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("__d") * col("__d")), 2).as("inertia"))
       .orderBy(col("cell"))
-    val r = out.localCheckpoint()
-    v.unpersist(false)
-    r
+      .localCheckpoint()
   }
 }

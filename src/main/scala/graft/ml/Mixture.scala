@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Finite mixture modeling by expectation–maximization — the classic
   * "is this one population or two" decomposition (Dempster, Laird &
   * Rubin 1977), reduced to the engine's fixed-iteration discipline:
@@ -42,17 +44,16 @@ object Mixture {
     * parameters — the model-comparison readout vs a single Gaussian).
     */
   def gmm2(df: DataFrame, valueCol: String,
-           iters: Int = 12): DataFrame = {
+           iters: Int = 12): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val d = df.select(col(valueCol).cast("double").as("__x"))
-      .filter(col("__x").isNotNull)
-      .persist()
+    val d = pin(df.select(col(valueCol).cast("double").as("__x"))
+      .filter(col("__x").isNotNull))
     val base = d.agg(count(lit(1)).as("n"), min(col("__x")).as("mn"),
       max(col("__x")).as("mx"), var_pop(col("__x")).as("vp")).head()
     val n = base.getLong(0)
-    val out = if (n == 0 || base.getDouble(1) == base.getDouble(2)) {
+    if (n == 0 || base.getDouble(1) == base.getDouble(2)) {
       Seq((n, Option.empty[Double], Option.empty[Double],
         Option.empty[Double], Option.empty[Double],
         Option.empty[Double], Option.empty[Double]))
@@ -112,7 +113,5 @@ object Mixture {
         math.rint(ll * 1e6) / 1e6))
         .toDF("n", "weight1", "mu1", "sd1", "mu2", "sd2", "avg_loglik")
     }
-    d.unpersist(false)
-    out
   }
 }

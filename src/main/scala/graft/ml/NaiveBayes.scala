@@ -2,7 +2,8 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Multinomial Naive Bayes over whitespace tokens — train and score in
   * one declarative plan. The classifier every corpus pipeline keeps
@@ -29,10 +30,9 @@ object NaiveBayes {
     * (id, pred = argmax class, score = its log-probability rounded
     * 4dp), one row per test document, ordered by id. */
   def trainScore(train: DataFrame, test: DataFrame, id: String,
-                 text: String, label: String): DataFrame = {
-    val trTok = train
-      .select(col(label).as("__cls"), explode(split(col(text), " ")).as("__term"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                 text: String, label: String): DataFrame = Pin.scope { pin =>
+    val trTok = pin(train
+      .select(col(label).as("__cls"), explode(split(col(text), " ")).as("__term")))
     val cls = train.groupBy(col(label).as("__cls"))
       .agg(count(lit(1)).as("__nd"))
     val prior = cls.crossJoin(broadcast(cls.agg(sum(col("__nd")).as("__ndTot"))))
@@ -55,16 +55,14 @@ object NaiveBayes {
       .join(broadcast(prior), Seq("__cls"))
       .select(col(id), col("__cls"),
         (col("__ll") + col("__lp")).as("__score"))
-    val out = scores.groupBy(col(id))
+    scores.groupBy(col(id))
       .agg(min(struct((-col("__score")).as("__ns"), col("__cls").as("__c"),
         col("__score").as("__s"))).as("__m"))
       .select(col(id), col("__m.__c").as("pred"),
         round(col("__m.__s"), 4).as("score"))
       .orderBy(col(id))
-    // one row per test doc — tiny next to the token explode feeding the
-    // three model aggregates; materialize and release the explode
-    val r = out.localCheckpoint()
-    trTok.unpersist(false)
-    r
+      // one row per test doc — tiny next to the token explode feeding the
+      // three model aggregates; materialized before the explode's release
+      .localCheckpoint()
   }
 }

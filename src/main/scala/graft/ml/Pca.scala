@@ -3,7 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** First principal component of an embedding column — the variance
   * screen under whitening, dataset drift checks, and "is this embedding
@@ -30,19 +31,17 @@ import org.apache.spark.storage.StorageLevel
 object Pca {
 
   def topComponent(vecs: DataFrame, id: String, vec: String,
-                   iters: Int = 30): DataFrame = {
+                   iters: Int = 30): DataFrame = Pin.scope { pin =>
     val spark = vecs.sparkSession
-    val v = vecs.select(col(id).as("__vid"),
-        col(vec).cast("array<double>").as("__e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = pin(vecs.select(col(id).as("__vid"),
+        col(vec).cast("array<double>").as("__e")))
     val n = v.count()
     require(n >= 2, "need at least 2 vectors for a covariance")
     // (vid, j, x) exploded once, self-joined on vid for the upper
     // triangle: sums arrive with map-side partials, the join fan-out is
     // dim²/2 per vector — the price of EXACT covariance in one pass
-    val tok = v.select(col("__vid"),
-        posexplode(col("__e")).as(Seq("__j", "__x")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tok = pin(v.select(col("__vid"),
+        posexplode(col("__e")).as(Seq("__j", "__x"))))
     val means = tok.groupBy(col("__j"))
       .agg(sum(col("__x")).as("__s"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1) / n).toMap
@@ -61,7 +60,6 @@ object Pca {
       val c = r6((r.getDouble(2) - n * means(j) * means(k)) / (n - 1))
       cov(j)(k) = c; cov(k)(j) = c
     }
-    tok.unpersist(false); v.unpersist(false)
 
     var x = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
     var it = 0

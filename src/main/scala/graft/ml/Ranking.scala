@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Ranking-quality readouts for scored binary outcomes (X101/X102):
   * the precision–recall curve with average precision, and the decile
   * lift/gains table — the two charts every scoring-model review opens
@@ -26,19 +28,17 @@ object Ranking {
     * avg_precision 4-dp — the same value on every row for easy
     * joining). `label` is 1/0. */
   def prCurve(df0: DataFrame, labelCol: String, scoreCol: String,
-              maxDistinctScores: Long = 2000000L): DataFrame = {
+              maxDistinctScores: Long = 2000000L): DataFrame = Pin.scope { pin =>
     // ranked-axis complete-case (rocAuc's fuzz-24 contract): a null
     // score has no threshold position, a null label is unjudgeable
     val df = df0.filter(col(scoreCol).isNotNull &&
       col(labelCol).isNotNull)
-    val g = df.groupBy(col(scoreCol).as("threshold"))
-      .agg(count(lit(1)).as("n_at"), sum(col(labelCol)).as("np_at"))
-      .persist()
+    val g = pin(df.groupBy(col(scoreCol).as("threshold"))
+      .agg(count(lit(1)).as("n_at"), sum(col(labelCol)).as("np_at")))
     // bounded-score-grain guard (the rocAuc/coxPh pattern): the
     // cumulative windows below single-sort the distinct thresholds
     val nScores = g.count()
-    graft.util.CacheGuard.requireReleasing(
-      nScores <= maxDistinctScores, g)(
+    require(nScores <= maxDistinctScores,
       s"prCurve: $nScores distinct scores exceeds the single-sort " +
         s"guard ($maxDistinctScores) — pre-round or bucket the score " +
         "column before calling")
@@ -61,15 +61,13 @@ object Ranking {
         col("__prec"))
       .withColumn("avg_precision",
         round(sum(col("__apTerm")).over(wAll), 4))
-    val out = ap.select(col("threshold"), col("n_pred"), col("tp"),
+    ap.select(col("threshold"), col("n_pred"), col("tp"),
       round(col("__prec"), 4).as("precision"),
       round(col("__rec"), 4).as("recall"),
       col("avg_precision"))
-      // threshold-grain output, bounded by the guard: materialize so
-      // g's cache entry is released here (leak-free)
+      // threshold-grain output, bounded by the guard: materialized
+      // before g's pin is released
       .localCheckpoint()
-    g.unpersist(false)
-    out
   }
 
   /** Decile gains/lift table: rank all rows by (score desc, tie-break

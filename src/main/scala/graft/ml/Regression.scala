@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Distributed closed-form regression beyond the univariate
   * [[RankStats.groupedOls]]: two-regressor OLS via the normal
   * equations. The whole fit is ONE map-side-combinable aggregate of
@@ -152,72 +154,65 @@ object Regression {
     * and causal operators (Hosmer–Lemeshow, AIPW) consume this; a
     * singular fit yields null p_hat everywhere rather than failing. */
   def logisticScore(df: DataFrame, y: String, x1: String, x2: String,
-                    iters: Int = 8): DataFrame = {
+                    iters: Int = 8): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
-    val d = df.select(col(y).cast("double").as("__y"),
+    val d = pin(df.select(col(y).cast("double").as("__y"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
-        col("__x2").isNotNull)
-      .persist()
+        col("__x2").isNotNull))
     val fit = newtonLogistic(d, iters)
-    val scored = fit match {
+    fit match {
       case Some(b) =>
         df.withColumn("p_hat", lit(1.0) / (lit(1.0) +
           exp(-(lit(b(0)) + lit(b(1)) * col(x1).cast("double") +
             lit(b(2)) * col(x2).cast("double")))))
       case None => df.withColumn("p_hat", lit(null).cast("double"))
     }
-    d.unpersist(false)
-    scored
   }
 
   def logistic2(df: DataFrame, y: String, x1: String, x2: String,
-                iters: Int = 8): DataFrame = {
+                iters: Int = 8): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
     val spark = df.sparkSession
-    val d = df.select(col(y).cast("double").as("__y"),
+    val d = pin(df.select(col(y).cast("double").as("__y"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
-        col("__x2").isNotNull)
-      .persist()
+        col("__x2").isNotNull))
     val fit = newtonLogistic(d, iters)
     val singular = fit.isEmpty
     val beta = fit.getOrElse(Array(0.0, 0.0, 0.0))
-    val out =
-      if (singular)
-        d.agg(count(lit(1)).as("n"))
-          .select(col("n"), lit(null).cast("double").as("b0"),
-            lit(null).cast("double").as("b1"),
-            lit(null).cast("double").as("b2"),
-            lit(null).cast("double").as("deviance"),
-            lit(null).cast("double").as("mcfadden_r2"))
-      else {
-        val eta = lit(beta(0)) + lit(beta(1)) * col("__x1") +
-          lit(beta(2)) * col("__x2")
-        // log-likelihood via the numerically-stable single-log form:
-        // y·η − ln(1+e^η)  (identical algebra to y·lnμ + (1−y)·ln(1−μ))
-        val ll = col("__y") * eta - log(lit(1.0) + exp(eta))
-        val fin = d.agg(count(lit(1)).as("n"), sum(ll).as("__ll"),
-          sum(col("__y")).as("__s")).head()
-        val n = fin.getLong(0); val llv = fin.getDouble(1)
-        val s = fin.getDouble(2)
-        val pbar = s / n
-        val ll0 =
-          if (pbar <= 0.0 || pbar >= 1.0) Double.NaN
-          else s * math.log(pbar) + (n - s) * math.log(1 - pbar)
-        import spark.implicits._
-        Seq((n, math.rint(beta(0) * 1e4) / 1e4,
-          math.rint(beta(1) * 1e4) / 1e4,
-          math.rint(beta(2) * 1e4) / 1e4,
-          math.rint(-2.0 * llv * 1e4) / 1e4,
-          if (ll0.isNaN) None
-          else Some(math.rint((1.0 - llv / ll0) * 1e4) / 1e4)))
-          .toDF("n", "b0", "b1", "b2", "deviance", "mcfadden_r2")
-      }
-    d.unpersist(false)
-    out
+    if (singular)
+      d.agg(count(lit(1)).as("n"))
+        .select(col("n"), lit(null).cast("double").as("b0"),
+          lit(null).cast("double").as("b1"),
+          lit(null).cast("double").as("b2"),
+          lit(null).cast("double").as("deviance"),
+          lit(null).cast("double").as("mcfadden_r2"))
+    else {
+      val eta = lit(beta(0)) + lit(beta(1)) * col("__x1") +
+        lit(beta(2)) * col("__x2")
+      // log-likelihood via the numerically-stable single-log form:
+      // y·η − ln(1+e^η)  (identical algebra to y·lnμ + (1−y)·ln(1−μ))
+      val ll = col("__y") * eta - log(lit(1.0) + exp(eta))
+      val fin = d.agg(count(lit(1)).as("n"), sum(ll).as("__ll"),
+        sum(col("__y")).as("__s")).head()
+      val n = fin.getLong(0); val llv = fin.getDouble(1)
+      val s = fin.getDouble(2)
+      val pbar = s / n
+      val ll0 =
+        if (pbar <= 0.0 || pbar >= 1.0) Double.NaN
+        else s * math.log(pbar) + (n - s) * math.log(1 - pbar)
+      import spark.implicits._
+      Seq((n, math.rint(beta(0) * 1e4) / 1e4,
+        math.rint(beta(1) * 1e4) / 1e4,
+        math.rint(beta(2) * 1e4) / 1e4,
+        math.rint(-2.0 * llv * 1e4) / 1e4,
+        if (ll0.isNaN) None
+        else Some(math.rint((1.0 - llv / ll0) * 1e4) / 1e4)))
+        .toDF("n", "b0", "b1", "b2", "deviance", "mcfadden_r2")
+    }
   }
 
   /** Two-regressor Poisson regression (log link) by fixed-iteration
@@ -233,15 +228,14 @@ object Regression {
     * Output (one row): n, b0, b1, b2 (4dp), deviance 4dp,
     * mean_rate 4dp. */
   def poisson2(df: DataFrame, y: String, x1: String, x2: String,
-               iters: Int = 8): DataFrame = {
+               iters: Int = 8): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
     val spark = df.sparkSession
-    val d = df.select(col(y).cast("double").as("__y"),
+    val d = pin(df.select(col(y).cast("double").as("__y"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
-        col("__x2").isNotNull && col("__y") >= 0)
-      .persist()
+        col("__x2").isNotNull && col("__y") >= 0))
     // start at the intercept-only MLE b0 = ln(ȳ) — the standard GLM
     // init; from β = 0 Newton can overshoot on high-rate data (exp
     // link), from here it contracts quadratically
@@ -282,33 +276,30 @@ object Regression {
       }
       it += 1
     }
-    val out =
-      if (singular)
-        d.agg(count(lit(1)).as("n"))
-          .select(col("n"), lit(null).cast("double").as("b0"),
-            lit(null).cast("double").as("b1"),
-            lit(null).cast("double").as("b2"),
-            lit(null).cast("double").as("deviance"),
-            lit(null).cast("double").as("mean_rate"))
-      else {
-        val mu = exp(lit(beta(0)) + lit(beta(1)) * col("__x1") +
-          lit(beta(2)) * col("__x2"))
-        val dev = lit(2.0) * (
-          when(col("__y") > 0,
-            col("__y") * log(col("__y") / mu)).otherwise(lit(0.0)) -
-            (col("__y") - mu))
-        val fin = d.agg(count(lit(1)).as("n"), sum(dev).as("__dev"),
-          avg(col("__y")).as("__m")).head()
-        import spark.implicits._
-        Seq((fin.getLong(0), math.rint(beta(0) * 1e4) / 1e4,
-          math.rint(beta(1) * 1e4) / 1e4,
-          math.rint(beta(2) * 1e4) / 1e4,
-          math.rint(fin.getDouble(1) * 1e4) / 1e4,
-          math.rint(fin.getDouble(2) * 1e4) / 1e4))
-          .toDF("n", "b0", "b1", "b2", "deviance", "mean_rate")
-      }
-    d.unpersist(false)
-    out
+    if (singular)
+      d.agg(count(lit(1)).as("n"))
+        .select(col("n"), lit(null).cast("double").as("b0"),
+          lit(null).cast("double").as("b1"),
+          lit(null).cast("double").as("b2"),
+          lit(null).cast("double").as("deviance"),
+          lit(null).cast("double").as("mean_rate"))
+    else {
+      val mu = exp(lit(beta(0)) + lit(beta(1)) * col("__x1") +
+        lit(beta(2)) * col("__x2"))
+      val dev = lit(2.0) * (
+        when(col("__y") > 0,
+          col("__y") * log(col("__y") / mu)).otherwise(lit(0.0)) -
+          (col("__y") - mu))
+      val fin = d.agg(count(lit(1)).as("n"), sum(dev).as("__dev"),
+        avg(col("__y")).as("__m")).head()
+      import spark.implicits._
+      Seq((fin.getLong(0), math.rint(beta(0) * 1e4) / 1e4,
+        math.rint(beta(1) * 1e4) / 1e4,
+        math.rint(beta(2) * 1e4) / 1e4,
+        math.rint(fin.getDouble(1) * 1e4) / 1e4,
+        math.rint(fin.getDouble(2) * 1e4) / 1e4))
+        .toDF("n", "b0", "b1", "b2", "deviance", "mean_rate")
+    }
   }
 
   /** Two-regressor Huber robust regression (X278) — OLS that outliers
@@ -328,16 +319,15 @@ object Regression {
     * share_downweighted 4dp (rows with w < 1 at the final fit). */
   def huber2(df: DataFrame, y: String, x1: String, x2: String,
              iters: Int = 6,
-             exactScale: Option[Boolean] = None): DataFrame = {
+             exactScale: Option[Boolean] = None): DataFrame = Pin.scope { pin =>
     require(iters >= 1, "iters must be >= 1")
     val spark = df.sparkSession
     val K = 1.345
-    val d = df.select(col(y).cast("double").as("__y"),
+    val d = pin(df.select(col(y).cast("double").as("__y"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
-        col("__x2").isNotNull)
-      .persist()
+        col("__x2").isNotNull))
     // per-step coefficients via util.Param (see newtonLogistic): the
     // residual reads codegen-cache-friendly parameter constants, so
     // the IRLS steps, the two median probes and the final readout
@@ -347,7 +337,7 @@ object Regression {
       col("__y") - graft.util.Param.scalar(beta(0)) -
         graft.util.Param.scalar(beta(1)) * col("__x1") -
         graft.util.Param.scalar(beta(2)) * col("__x2")
-    val out = olsBeta(d, lit(1.0)) match {
+    olsBeta(d, lit(1.0)) match {
       case None =>
         d.agg(count(lit(1)).as("n"))
           .select(col("n"), lit(null).cast("double").as("b0"),
@@ -405,8 +395,6 @@ object Regression {
           math.rint(fin.getDouble(1) * 1e4) / 1e4))
           .toDF("n", "b0", "b1", "b2", "scale", "share_downweighted")
     }
-    d.unpersist(false)
-    out
   }
 
   /** Two-regressor quantile regression (X308): the conditional
@@ -450,17 +438,16 @@ object Regression {
     * cannot flip the count on cross-engine float noise). */
   def quantile2(df: DataFrame, y: String, x1: String, x2: String,
                 tau: Double, iters: Int = 16,
-                eps: Double = 0.01): DataFrame = {
+                eps: Double = 0.01): DataFrame = Pin.scope { pin =>
     require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
     require(iters >= 1, "iters must be >= 1")
     require(eps > 0, s"eps must be > 0, got $eps")
     val spark = df.sparkSession
-    val d = df.select(col(y).cast("double").as("__y"),
+    val d = pin(df.select(col(y).cast("double").as("__y"),
         col(x1).cast("double").as("__x1"),
         col(x2).cast("double").as("__x2"))
       .filter(col("__y").isNotNull && col("__x1").isNotNull &&
-        col("__x2").isNotNull)
-      .persist()
+        col("__x2").isNotNull))
     // per-step coefficients via util.Param (see newtonLogistic); tau
     // and eps are per-CALL constants, so they stay literals — only the
     // step-varying β would bust the codegen cache
@@ -468,7 +455,7 @@ object Regression {
       col("__y") - graft.util.Param.scalar(beta(0)) -
         graft.util.Param.scalar(beta(1)) * col("__x1") -
         graft.util.Param.scalar(beta(2)) * col("__x2")
-    val out = olsBeta(d, lit(1.0)) match {
+    olsBeta(d, lit(1.0)) match {
       case None =>
         d.agg(count(lit(1)).as("n"))
           .select(col("n"), lit(null).cast("double").as("b0"),
@@ -527,8 +514,6 @@ object Regression {
             .toDF("n", "b0", "b1", "b2", "pinball", "share_below")
         }
     }
-    d.unpersist(false)
-    out
   }
 
   /** Segmented (broken-stick) regression with a KNOWN knot (X268):

@@ -6,7 +6,6 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.de.DifferentialExpression
 import graft.enrich.TargetValidation
@@ -16,6 +15,7 @@ import graft.mapping.ProbeMapping
 import graft.net.CoExpressionNetwork
 import graft.prep.Preprocess
 import graft.report.{Figures, Sinks}
+import graft.util.Pin
 
 /** Configuration for one pipeline run (mirrors the reference ctor +
   * hard-coded constants, `pipeline2.py:140-153,661,944`).
@@ -133,15 +133,18 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
   private def writeCollected(table: DataFrame, path: String): Seq[Row] =
     writeRows(table.collect().toSeq, table.schema, path)
 
-  def run(): PipelineResult = {
+  /** Runs every stage. The probe rows and the gene rows are pinned for
+    * the run and released when it returns or throws; the result frames
+    * are local relations, so they outlive the release. */
+  def run(): PipelineResult = Pin.scope { pin =>
     val out = config.outputDir
 
     // Stage 1: parse (hard abort on failure, py:1158-1159). The parsed
-    // probe rows are persisted: preprocessing (its log2 scalar and its row
-    // map) AND the summary's probe count read them — without the persist
+    // probe rows are pinned: preprocessing (its log2 scalar and its row
+    // map) AND the summary's probe count read them — without the pin
     // the summary stage would re-scan and re-parse the raw matrix text.
     val geo = GeoMatrixReader.read(spark, config.matrixPath)
-    geo.expression.persist(StorageLevel.MEMORY_AND_DISK)
+    pin(geo.expression)
     // the sample metadata is a local relation: its rows reach the driver
     // with no job, and feed the sink, the sample groups and the summary
     val metaTable = geo.metadata.drop("characteristics")
@@ -156,8 +159,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
     val genes = stage("preprocess_and_map") {
       val prepped = Preprocess.run(geo.expression, geo.sampleIds.length)
       val mapping = ProbeMapping.loadMappingCsv(spark, config.mappingCsvPath)
-      val g = ProbeMapping.collapseToGenes(prepped, mapping)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val g = pin(ProbeMapping.collapseToGenes(prepped, mapping))
       Sinks.writeCsv(
         Sinks.pivotWide(g, "gene", "sample_id", "value", geo.sampleIds),
         s"$out/data/gene_mapped")

@@ -3,7 +3,8 @@ package graft.reco
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Item–item collaborative filtering neighbors — the cosine companion
   * to [[MarketBasket.liftPairs]]: over binary basket–item incidence,
@@ -27,12 +28,10 @@ object ItemSim {
     * and j's list each contain the other). */
   def topNeighbors(df: DataFrame, basket: String, item: String,
                    minSupport: Long, minPairCount: Long,
-                   k: Int): DataFrame = {
+                   k: Int): DataFrame = Pin.scope { pin =>
     require(k >= 1, "k must be >= 1")
-    val b = df.select(col(basket).as("__bk"), col(item).as("__it"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(b)
+    val b = pin(df.select(col(basket).as("__bk"), col(item).as("__it"))
+      .distinct())
     val freq = b.groupBy(col("__it")).agg(count(lit(1)).as("__sup"))
       .filter(col("__sup") >= minSupport)
     val pruned = b.join(broadcast(freq), Seq("__it"))
@@ -52,13 +51,11 @@ object ItemSim {
         sqrt((col("__sa") * col("__sb")).cast("double")), 6))
     val wTop = Window.partitionBy(col("item"))
       .orderBy(col("cosine").desc, col("neighbor").asc)
-    val out = both
+    both
       .withColumn("rk", row_number().over(wTop))
       .filter(col("rk") <= k)
       .select(col("item"), col("neighbor"), col("pair_count"),
         col("cosine"), col("rk"))
-    val r = out.localCheckpoint()
-    b.unpersist(false)
-    r
+      .localCheckpoint()
   }
 }

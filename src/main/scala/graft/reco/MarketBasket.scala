@@ -2,7 +2,8 @@ package graft.reco
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Market-basket co-occurrence (bipartite projection) with confidence
   * and lift — the association-rule primitive behind co-purchase
@@ -69,13 +70,11 @@ object MarketBasket {
     */
   def liftPairs(df: DataFrame, basket: String, item: String,
                 minSupport: Long, minPairCount: Long,
-                maxBasketItems: Option[Int] = None): DataFrame = {
+                maxBasketItems: Option[Int] = None): DataFrame = Pin.scope { pin =>
     // incidence feeds three consumers (basket count, item support, the
-    // two self-join sides) — persist so the distinct shuffle runs once.
-    val b = df.select(col(basket).as("__bk"), col(item).as("__it"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(b)
+    // two self-join sides) — pin it so the distinct shuffle runs once.
+    val b = pin(df.select(col(basket).as("__bk"), col(item).as("__it"))
+      .distinct())
     val nBaskets = b.agg(countDistinct(col("__bk")).as("__nb"))
     val freq = b.groupBy(col("__it")).agg(count(lit(1)).as("__sup"))
       .filter(col("__sup") >= minSupport)
@@ -88,15 +87,13 @@ object MarketBasket {
         col("a.__sup").as("__sup_a"), col("b.__sup").as("__sup_b"))
       .agg(count(lit(1)).as("pair_count"))
       .filter(col("pair_count") >= minPairCount)
-    val out = pairs.crossJoin(broadcast(nBaskets))
+    pairs.crossJoin(broadcast(nBaskets))
       .select(col("item_a"), col("item_b"), col("pair_count"),
         round(col("pair_count").cast("double") / col("__sup_a"), 4)
           .as("confidence"),
         round(col("pair_count").cast("double") * col("__nb") /
           (col("__sup_a").cast("double") * col("__sup_b")), 4).as("lift"))
-    val r = out.localCheckpoint()
-    b.unpersist(false)
-    r
+      .localCheckpoint()
   }
 
   /** Frequent ordered 3-itemsets with the {a,b}→c rule confidence.
@@ -111,11 +108,9 @@ object MarketBasket {
     */
   def tripleRules(df: DataFrame, basket: String, item: String,
                   minItemSupport: Long, minTripleCount: Long,
-                  maxBasketItems: Option[Int] = None): DataFrame = {
-    val b = df.select(col(basket).as("__bk"), col(item).as("__it"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.util.Pin.primeShared(b)
+                  maxBasketItems: Option[Int] = None): DataFrame = Pin.scope { pin =>
+    val b = pin(df.select(col(basket).as("__bk"), col(item).as("__it"))
+      .distinct())
     val freq = b.groupBy(col("__it")).agg(count(lit(1)).as("__sup"))
       .filter(col("__sup") >= minItemSupport)
     val pruned = capBaskets(
@@ -135,13 +130,11 @@ object MarketBasket {
         col("c.__it").as("item_c"))
       .agg(count(lit(1)).as("triple_count"))
       .filter(col("triple_count") >= minTripleCount)
-    val out = triples.join(pairCounts, Seq("item_a", "item_b"))
+    triples.join(pairCounts, Seq("item_a", "item_b"))
       .select(col("item_a"), col("item_b"), col("item_c"),
         col("triple_count"), col("pair_ab_count"),
         round(col("triple_count").cast("double") / col("pair_ab_count"), 4)
           .as("confidence"))
-    val r = out.localCheckpoint()
-    b.unpersist(false)
-    r
+      .localCheckpoint()
   }
 }

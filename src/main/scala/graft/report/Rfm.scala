@@ -3,7 +3,7 @@ package graft.report
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Ranks
+import graft.util.{Pin, Ranks}
 
 /** RFM (recency / frequency / monetary) customer scoring — the
   * classical segmentation: each customer is ranked on how recently they
@@ -42,13 +42,12 @@ object Rfm {
     * nulls last on both engines. */
   def scores(orders: DataFrame, key: String, ts: String,
              amount: String,
-             distributedThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = {
-    val perEntity = orders.groupBy(col(key))
+             distributedThreshold: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = Pin.scope { pin =>
+    val perEntity = pin(orders.groupBy(col(key))
       .agg(max(to_date(col(ts))).as("__last"),
         count(lit(1)).as("frequency"),
         round(sum(col(amount)), 2).as("monetary"))
-      .filter(col("__last").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("__last").isNotNull))
     val n = perEntity.count()
     val anchor = perEntity.agg(max(col("__last")).as("__asof"))
     val base = perEntity.crossJoin(broadcast(anchor))
@@ -58,7 +57,7 @@ object Rfm {
     def quint(rankCol: String): org.apache.spark.sql.Column =
       (lit(5) - floor((col(rankCol) - 1) * lit(5.0) / lit(n.toDouble)))
         .cast("int")
-    val ranked = Seq(
+    Seq(
       ("__rr", Seq(col("recency_days").asc, col(key).asc), "r_score"),
       ("__rf", Seq(col("frequency").desc, col(key).asc), "f_score"),
       ("__rm", Seq(col("monetary").desc, col(key).asc), "m_score"))
@@ -66,8 +65,6 @@ object Rfm {
         Ranks.globalRowNumber(df, sort, rk, n, distributedThreshold)
           .withColumn(score, quint(rk)).drop(rk)
       }
-    perEntity.unpersist(false)
-    ranked
   }
 
   /** Segment rollup of [[scores]]: per (r_score, f_score, m_score)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.gfunctions.md5_long
+import graft.util.Pin
 
 /** Deterministic percentile-bootstrap confidence interval for a group
   * mean — uncertainty quantification without distributional assumptions,
@@ -35,23 +36,22 @@ object Bootstrap {
     * units are broadcast into the draw join (see dispatch comment). */
   def meanCi(df: DataFrame, groupCol: String, valueCol: String,
              bReps: Int = 200, alpha: Double = 0.05,
-             broadcastUnitRows: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = {
+             broadcastUnitRows: Long = graft.util.Dispatch.threshold(2000000L)): DataFrame = Pin.scope { pin =>
     require(bReps >= 2 && alpha > 0 && alpha < 1)
     // Index rank ties on value alone: equal values are interchangeable
     // under resampling, so the drawn MULTISET (hence every replicate
     // mean) is deterministic even where the per-row index is not.
-    // Persisted: the indexed frame feeds the size probe, the draw join
-    // and the point estimate — an unpersisted plan would re-run the
+    // Pinned: the indexed frame feeds the size probe, the draw join
+    // and the point estimate — an unpinned plan would re-run the
     // rank window three times.
     // complete-case on value (fuzz-19: a null value sorts FIRST here
     // and LAST in a SQL replayer, silently permuting every drawn
     // index; a null is no observation to resample anyway)
-    val indexed = df
+    val indexed = pin(df
       .select(col(groupCol).as("__g"), col(valueCol).as("__v"))
       .filter(col("__v").isNotNull)
       .withColumn("__idx", row_number().over(
-        Window.partitionBy(col("__g")).orderBy(col("__v").asc)) - 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Window.partitionBy(col("__g")).orderBy(col("__v").asc)) - 1))
     val sizes = indexed.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
     // (group, b, j) -> drawn index = md5("b:j") & Mask47 mod n.
     val draws = sizes
@@ -94,5 +94,7 @@ object Bootstrap {
       .select(col("__g").as(groupCol), col("n_units"),
         lit(bReps.toLong).as("b_reps"), col("mean"), col("ci_lo"),
         col("ci_hi"))
+      // group-grain output: materialized before indexed's pin is released
+      .localCheckpoint()
   }
 }

@@ -3,9 +3,9 @@ package graft.sketch
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.gfunctions.md5_long
+import graft.util.Pin
 
 /** Deterministic, oracle-checkable sketches (X61/X62).
   *
@@ -42,17 +42,16 @@ object Sketches {
     */
   def cmsTokenReport(docs: DataFrame, textCol: String,
                      depth: Int = 4, width: Int = 256,
-                     probeTopK: Int = 20): DataFrame = {
+                     probeTopK: Int = 20): DataFrame = Pin.scope { pin =>
     require(width > 0 && (width & (width - 1)) == 0,
       s"width must be a power of two, got $width")
     import docs.sparkSession.implicits._
     import graft.functions.gfunctions.word_shingles
 
-    val freq = docs
+    val freq = pin(docs
       .select(explode(word_shingles(col(textCol), 1)).as("token"))
       .groupBy($"token")
-      .agg(count(lit(1)).as("exact_n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("exact_n")))
 
     val rows = explode(array((0 until depth).map(lit): _*)).as("i")
     def bucket(tok: Column, i: Column): Column =
@@ -69,17 +68,15 @@ object Sketches {
       .orderBy($"exact_n".desc, $"token")
       .limit(probeTopK)
 
-    val out = probes.select($"token", $"exact_n", rows)
+    probes.select($"token", $"exact_n", rows)
       .select($"token", $"exact_n", $"i", bucket($"token", $"i").as("b"))
       .join(sketch, Seq("i", "b"))
       .groupBy($"token")
       .agg(max($"exact_n").as("exact_n"), min($"cell").as("cms_n"))
       .orderBy($"token")
-    // probeTopK-row output: materialize-and-release (the Dedup pattern)
-    // so the cached vocabulary table isn't pinned in a long session
-    val r = out.localCheckpoint()
-    freq.unpersist(false)
-    r
+      // probeTopK-row output: materialized before the vocabulary
+      // table's pin is released
+      .localCheckpoint()
   }
 
   /** KMV (k-minimum-values) distinct-count sketch per group (Bar-Yossef
@@ -148,15 +145,14 @@ object Sketches {
   }
 
   def kmvDistinct(df: DataFrame, groupCol: String, valueCol: String,
-                  k: Int = 256): DataFrame = {
+                  k: Int = 256): DataFrame = Pin.scope { pin =>
     require(k >= 2, s"k must be >= 2, got $k")
     import df.sparkSession.implicits._
 
-    val hashed = df
+    val hashed = pin(df
       .select(col(groupCol).as("grp"),
         md5_long(col(valueCol).cast("string")).as("h"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
     val exact = hashed.groupBy($"grp")
       .agg(count(lit(1)).as("exact_distinct"))
@@ -172,16 +168,14 @@ object Sketches {
         ($"h".cast("double") + when($"h" < 0, lit(two64)).otherwise(lit(0.0)))
           .as("uk"))
 
-    val out = exact.join(kth, Seq("grp"), "left")
+    exact.join(kth, Seq("grp"), "left")
       .select($"grp",
         $"exact_distinct",
         round(coalesce(lit(k - 1) * lit(two64) / $"uk",
           $"exact_distinct".cast("double")), 4).as("kmv_est"))
       .orderBy($"grp")
-    // group-count-sized output: materialize-and-release
-    val r = out.localCheckpoint()
-    hashed.unpersist(false)
-    r
+      // group-count-sized output: materialized before release
+      .localCheckpoint()
   }
 
   /** KMV set operations (Beyer et al. 2007): distinct-count estimates
@@ -197,18 +191,17 @@ object Sketches {
     * scan. Output (one row): k_used BIGINT, est_a, est_b, est_union
     * (4dp), rho BIGINT, jaccard_est 4dp, est_intersection 4dp. */
   def kmvSetOps(left: DataFrame, right: DataFrame, valueCol: String,
-                k: Int = 256): DataFrame = {
+                k: Int = 256): DataFrame = Pin.scope { pin =>
     require(k >= 2, s"k must be >= 2, got $k")
     import left.sparkSession.implicits._
     val two64 = 18446744073709551616.0
-    val hashes = left.select(md5_long(col(valueCol).cast("string"))
+    val hashes = pin(left.select(md5_long(col(valueCol).cast("string"))
         .as("h"), lit(1).as("__a"), lit(0).as("__b"))
       .unionAll(right.select(
         md5_long(col(valueCol).cast("string")).as("h"),
         lit(0).as("__a"), lit(1).as("__b")))
       .groupBy($"h")
-      .agg(max($"__a").as("in_a"), max($"__b").as("in_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(max($"__a").as("in_a"), max($"__b").as("in_b")))
     // Bottom-k via orderBy(unsigned).limit(k) — planned as
     // TakeOrderedAndProject (per-partition top-k, then a k-row merge on
     // the driver), NEVER an unpartitioned window ranking the full
@@ -236,7 +229,6 @@ object Sketches {
     val kUsed = topU.length.toLong
     val rho = topU.count(r => r.getInt(1) == 1 && r.getInt(2) == 1).toLong
     val estU = kthEst(topU.map(_.getLong(0)), exactU)
-    hashes.unpersist(false)
     val jac = if (kUsed == 0) 0.0 else rho.toDouble / kUsed
     Seq((kUsed, rnd4(estA), rnd4(estB), rnd4(estU), rho, rnd4(jac),
       rnd4(jac * estU)))

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Corpus-composition diagnostics for training-data pipelines: when
   * mixing scraped sources, the question "how different is source s from
   * the blend?" decides mixture weights and flags collapsed/degenerate
@@ -186,15 +188,14 @@ object CorpusStats {
     * Output: top-k (term_a, term_b, n_pair_docs, pmi), pmi 4 dp. */
   def pmiPairs(docs: DataFrame, idCol: String, textCol: String,
                minTermDocs: Long = 10, maxTermDocs: Long = 1000000L,
-               minPairDocs: Long = 5, k: Int = 50): DataFrame = {
+               minPairDocs: Long = 5, k: Int = 50): DataFrame = Pin.scope { pin =>
     // the presence rows feed the term counts, the doc count, and BOTH
-    // sides of the pair self-join — without a persist the corpus is
+    // sides of the pair self-join — without a pin the corpus is
     // re-scanned and re-tokenized once per consumer (self-joined
     // DataFrames don't share subplans)
-    val dt = docs.select(col(idCol).as("id"),
+    val dt = pin(docs.select(col(idCol).as("id"),
       explode(array_distinct(TextAnalysis.tokens(col(textCol))))
-        .as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("term")))
     val tc = dt.groupBy("term").agg(count(lit(1)).as("c"))
       .filter(col("c") >= minTermDocs && col("c") <= maxTermDocs)
     val nDocs = dt.agg(countDistinct(col("id")).as("n_docs"))
@@ -207,19 +208,17 @@ object CorpusStats {
       .agg(count(lit(1)).as("n_pair_docs"),
         max(col("a.c")).as("c_a"), max(col("b.c")).as("c_b"))
       .filter(col("n_pair_docs") >= minPairDocs)
-    val out = pairs.crossJoin(broadcast(nDocs))
+    pairs.crossJoin(broadcast(nDocs))
       .select(col("term_a"), col("term_b"), col("n_pair_docs"),
         round(log(col("n_pair_docs").cast("double") *
             col("n_docs").cast("double") /
             (col("c_a") * col("c_b")).cast("double")), 4).as("pmi"))
       .orderBy(col("pmi").desc, col("term_a"), col("term_b"))
       .limit(k)
-    // k-row output: eager materialization is cheap and releases the
-    // cached presence rows instead of leaving them pinned in a
-    // long-lived session (the Dedup materialize-and-release pattern)
-    val r = out.localCheckpoint()
-    dt.unpersist(false)
-    r
+      // k-row output: eager materialization is cheap, and the cached
+      // presence rows are released instead of staying pinned in a
+      // long-lived session
+      .localCheckpoint()
   }
 
   /** Pairwise cosine similarity between per-stratum unigram frequency
@@ -231,11 +230,10 @@ object CorpusStats {
     * never strata × strata × vocab materialized). Output: one row per
     * unordered stratum pair, cosine 4-dp. */
   def strataSimilarityMatrix(docs: DataFrame, strataCol: String,
-                             textCol: String): DataFrame = {
-    val tf = docs.select(col(strataCol).as("stratum"),
+                             textCol: String): DataFrame = Pin.scope { pin =>
+    val tf = pin(docs.select(col(strataCol).as("stratum"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy("stratum", "term").agg(count(lit(1)).cast("double").as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("stratum", "term").agg(count(lit(1)).cast("double").as("n")))
     val norms = tf.groupBy("stratum")
       .agg(sqrt(sum(col("n") * col("n"))).as("norm"))
     val dots = tf.select(col("stratum").as("s_a"), col("term"),
@@ -244,7 +242,7 @@ object CorpusStats {
         col("n").as("n_b")), Seq("term"))
       .filter(col("s_a") < col("s_b"))
       .groupBy("s_a", "s_b").agg(sum(col("n_a") * col("n_b")).as("dot"))
-    val out = dots
+    dots
       .join(broadcast(norms.withColumnRenamed("stratum", "s_a")
         .withColumnRenamed("norm", "norm_a")), Seq("s_a"))
       .join(broadcast(norms.withColumnRenamed("stratum", "s_b")
@@ -252,9 +250,7 @@ object CorpusStats {
       .select(col("s_a"), col("s_b"),
         round(col("dot") / (col("norm_a") * col("norm_b")), 4)
           .as("cosine"))
-    val r = out.localCheckpoint()
-    tf.unpersist(false)
-    r
+      .localCheckpoint()
   }
 
   /** Per-stratum Shannon entropy of the unigram distribution (nats,
@@ -292,11 +288,11 @@ object CorpusStats {
     * jsd_normalized 6-dp = jsd/ln2). */
   def pairwiseJsd(docs: DataFrame, strataCol: String,
                   textCol: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+    // not cached: the returned plan is the one action that reads tf,
+    // and its three reads share tf's exchange (exchange reuse)
     val tf = docs.select(col(strataCol).as("stratum"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy("stratum", "term").agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val tot = tf.groupBy("stratum").agg(sum(col("c")).as("n"))
     val a = tf.select(col("stratum").as("s_a"), col("term"),
       col("c").as("c_a"))

@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.Pin
 
 /** Exact phrase search over a tokenized corpus via positional postings
   * intersection — the inverted-index primitive under every "find the
@@ -34,12 +35,11 @@ object PhraseSearch {
     * (single-space tokenization). Output: one column `id` (the input id
     * column name), distinct. */
   def containing(docs: DataFrame, id: String, text: String,
-                 phrase: Seq[String]): DataFrame = {
+                 phrase: Seq[String]): DataFrame = Pin.scope { pin =>
     require(phrase.nonEmpty, "phrase must have at least one word")
-    val toks = docs
+    val toks = pin(docs
       .select(col(id), posexplode(split(col(text), " ")).as(Seq("__pos", "__tok")))
-      .filter(col("__tok").isin(phrase.distinct: _*))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("__tok").isin(phrase.distinct: _*)))
     // ≤ |phrase| rows: the bounded rarity probe
     val freq = toks.groupBy(col("__tok")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -50,9 +50,7 @@ object PhraseSearch {
     val matched = order.tail.foldLeft(postings(toks, id, order.head)) {
       case (acc, wk) => acc.join(postings(toks, id, wk), Seq(id, "__start"))
     }
-    val r = matched.select(col(id)).distinct().localCheckpoint()
-    toks.unpersist(false)
-    r
+    matched.select(col(id)).distinct().localCheckpoint()
   }
 
   /** Postings of phrase word k, aligned to the phrase start. */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Corpus relevance scoring: TF-IDF term weighting and BM25 ranking —
   * the retrieval-side operators of a training-data pipeline (topical
   * filtering, query-based subset selection, nearest-benchmark scoring).
@@ -26,27 +28,24 @@ object Relevance {
   /** Top-k TF-IDF terms per document: tfidf = tf * ln(N / df), ties broken
     * by term. Output (id, term, tf, tfidf, rank), rank <= k. */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
-                    k: Int): DataFrame = {
+                    k: Int): DataFrame = Pin.scope { pin =>
     val n = df.count().toDouble
     // posts feeds the doc-frequency aggregate AND the scoring join —
-    // persist so the corpus is tokenized/exploded/aggregated once
-    val posts = postings(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pin it so the corpus is tokenized/exploded/aggregated once
+    val posts = pin(postings(df, idCol, textCol))
     val dfreq = posts.groupBy("term").agg(count(lit(1)).as("df"))
     // rank on the ROUNDED score (q35/q49 pattern): distinct (tf, df)
     // pairs can yield mathematically equal scores (2*ln 2 vs ln 4) that
     // JVM and DuckDB libm order differently at the rank-k boundary
     val w = Window.partitionBy("id")
       .orderBy(round(col("__tfidf"), 4).desc, col("term").asc)
-    val out = posts.join(broadcast(dfreq), Seq("term"))
+    posts.join(broadcast(dfreq), Seq("term"))
       .withColumn("__tfidf", col("tf") * log(lit(n) / col("df")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("id"), col("term"), col("tf"),
         round(col("__tfidf"), 4).as("tfidf"), col("rank"))
       .localCheckpoint()
-    posts.unpersist(false)
-    out
   }
 
   /** Okapi BM25 scores of every document against a bag of query terms;
@@ -57,45 +56,42 @@ object Relevance {
     */
   def bm25TopDocs(df: DataFrame, idCol: String, textCol: String,
                   queryTerms: Seq[String], k: Int,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                  k1: Double = 1.2, b: Double = 0.75): DataFrame = Pin.scope { pin =>
     val spark = df.sparkSession
     import spark.implicits._
-    val posts = postings(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val posts = pin(postings(df, idCol, textCol))
     val dl = posts.groupBy("id").agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).first()
-    if (stats.getLong(0) == 0L) {
-      // empty corpus (or all-whitespace docs): no postings, avgdl null —
-      // return an empty scored frame instead of NPEing on the null avg
-      posts.unpersist(false)
-      return df.sparkSession.createDataFrame(
+    // empty corpus (or all-whitespace docs): no postings, avgdl null —
+    // return an empty scored frame instead of NPEing on the null avg
+    if (stats.getLong(0) == 0L)
+      df.sparkSession.createDataFrame(
         df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
             df.schema(idCol).dataType),
           org.apache.spark.sql.types.StructField("bm25",
             org.apache.spark.sql.types.DoubleType))))
+    else {
+      val n = stats.getLong(0).toDouble
+      val avgdl = stats.getDouble(1)
+      // distinct: a duplicated query term would multiply its posting rows
+      // through the join below, doubling df (wrong idf for every doc)
+      val q = queryTerms.distinct.toDF("term")
+      val dfreq = posts.join(broadcast(q), Seq("term"))
+        .groupBy("term").agg(count(lit(1)).as("df"))
+      val idf = log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5))
+      posts
+        .join(broadcast(dfreq), Seq("term"))
+        .join(dl, Seq("id"))
+        .withColumn("__s", idf * col("tf") * (lit(k1) + 1.0) /
+          (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl)))
+        .groupBy("id")
+        .agg(round(sum(col("__s")), 4).as("bm25"))
+        .orderBy(col("bm25").desc, col("id").asc)
+        .limit(k)
+        .localCheckpoint()
     }
-    val n = stats.getLong(0).toDouble
-    val avgdl = stats.getDouble(1)
-    // distinct: a duplicated query term would multiply its posting rows
-    // through the join below, doubling df (wrong idf for every doc)
-    val q = queryTerms.distinct.toDF("term")
-    val dfreq = posts.join(broadcast(q), Seq("term"))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5))
-    val scored = posts
-      .join(broadcast(dfreq), Seq("term"))
-      .join(dl, Seq("id"))
-      .withColumn("__s", idf * col("tf") * (lit(k1) + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl)))
-      .groupBy("id")
-      .agg(round(sum(col("__s")), 4).as("bm25"))
-      .orderBy(col("bm25").desc, col("id").asc)
-      .limit(k)
-    val out = scored.localCheckpoint()
-    posts.unpersist(false)
-    out
   }
 
   /** ROUGE-L per (candidate, reference) pair (X281; Lin 2004) — the

@@ -71,7 +71,7 @@ object EagerJobs {
     "q161_kmv_distinct" -> 9,
     "q168_kaplan_meier" -> 10,
     "q169_closeness" -> 11,
-    "q172_bootstrap_ci" -> 4,
+    "q172_bootstrap_ci" -> 7,
     "q181_log_rank" -> 10,
     "q196_by_fdr" -> 7,
     "q211_pr_curve" -> 6,
@@ -101,10 +101,10 @@ object EagerJobs {
     "q308_c_index" -> 2,
     "q310_std_rates" -> 3,
     "q312_kmv_set_ops" -> 7,
-    "q323_theil_sen" -> 5,
+    "q323_theil_sen" -> 10,
     "q330_friedman" -> 3,
     "q331_cochran_q" -> 3,
-    "q344_hodges_lehmann" -> 5,
+    "q344_hodges_lehmann" -> 7,
     "q354_kendalls_w" -> 3,
     "q372_bayes_ab" -> 3,
     "q376_articulation" -> 5,

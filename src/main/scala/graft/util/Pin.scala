@@ -3,61 +3,62 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Multi-action input pinning (optimization guide §1.2/§5).
+/** The one owner of operator-internal caching.
   *
-  * An unpersisted input DataFrame is re-executed from source on EVERY
-  * action — for catalog queries whose node/edge frames derive from a
+  * An unpersisted DataFrame is re-executed from source on EVERY action
+  * that reads it — for catalog queries whose frames derive from a
   * 4-table fact join, a count-then-collect sequence replayed that join
-  * up to 4× (measured on q80_pagerank: ~31 stages, 4 identical ~0.25 s
-  * pipeline executions). The graph operators' driver branches read
-  * each input once (`graft.graph.DriverCollect`); the distributed
-  * loops that read an input more than once (eigenvector, pageRank,
-  * hits, k-core) pin it here.
+  * up to 4× (measured on q80_pagerank). An operator that reads a frame
+  * more than once pins it, inside one scope:
   *
-  * `pinned(dfs){body}` persists the given frames for the duration of
-  * `body` and unpersists them after. Frames the CALLER already
-  * persisted are left untouched (their lifecycle is the caller's).
+  * {{{
+  * Pin.scope { pin =>
+  *   val b = pin(baskets(df))          // persisted, MEMORY_AND_DISK
+  *   val n = b.count()                 // fills the cache
+  *   pairs(b, n).localCheckpoint()     // materialized before release
+  * }
+  * }}}
+  *
+  * The rule: `pin(df)` persists `df` unless the caller already cached
+  * it (that lifecycle stays the caller's), and the scope unpersists,
+  * non-blocking and newest first, every frame it pinned — in a
+  * `finally`, so a `require` that trips after the persist, or any other
+  * exception, releases too. A result that must outlive the scope is
+  * materialized inside it (`localCheckpoint`, a collect) or never read
+  * the pinned frames lazily. No other src/main code calls `persist`,
+  * `cache` or `unpersist`, except the per-round lineage cuts of the
+  * distributed iterative loops (`SessionHygieneSpec` lists them).
+  *
   * Correctness-neutral by construction: unpersist only drops cached
-  * blocks — any consumer evaluated later recomputes from source.
-  * Callers whose returned frame must outlive the pin materialize it
-  * first (every distributed graph loop localCheckpoints its rounds;
-  * driver paths return collected-array results).
+  * blocks, and any consumer evaluated later recomputes from source.
   */
 object Pin {
-  def pinned[T](dfs: DataFrame*)(body: => T): T = {
-    val mine = dfs.filter(_.storageLevel == StorageLevel.NONE)
-    mine.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    try body
-    finally mine.foreach(_.unpersist(false))
+
+  /** The frames one [[scope]] pinned, in pin order. */
+  final class Scope private[Pin] {
+    private var mine = List.empty[DataFrame]
+
+    /** `df`, persisted at MEMORY_AND_DISK until the scope ends — or
+      * untouched when it is already cached. */
+    def apply(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) {
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        mine ::= df
+      }
+      df
+    }
+
+    private[Pin] def release(): Unit = {
+      mine.foreach(_.unpersist(false))
+      mine = Nil
+    }
   }
 
-  /** Conf key for [[primeShared]] — the utilization dispatch for the
-    * duplicate-materialization race (round-15 VERDICT item 6). */
-  val PrimeSharedKey = "spark.graft.primeSharedFrames"
-
-  /** Optionally materialize a freshly-persisted MULTI-CONSUMER frame
-    * once (a count() action) before its consumer branches race to
-    * populate it; dispatched on `spark.graft.primeSharedFrames`
-    * (default false = race).
-    *
-    * Both modes are measured. At bench grain (idle 32-core host, tiny
-    * data) the duplicated builds OVERLAP on idle cores and cost ~no
-    * wall clock, while a priming count SERIALIZES a full build ahead
-    * of every consumer — priming regressed q24 1.64x / q153 1.37x
-    * (r14, `artifacts/r14opt/ab_batch1.log`); that is why the default
-    * races. At saturated cluster utilization the trade inverts: with
-    * no idle cores to hide them, every concurrent consumer pays its
-    * own full build of the SAME frame (the cache-population race:
-    * each branch computes all partitions before any are published),
-    * so one serialized build is strictly cheaper — set the conf true
-    * there. An automatic signal (executor busy fraction at plan time)
-    * is not observable from an operator library without a scheduler
-    * listener; the conf keeps the dispatch explicit, testable, and
-    * scale-parameterised rather than tuned to local[32]. SCALE.md
-    * records the saturated-mode reasoning. */
-  def primeShared(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.getOption(PrimeSharedKey)
-        .exists(_.toBoolean)) df.count()
-    df
+  /** Runs `body` with a fresh [[Scope]] and releases what it pinned
+    * when `body` returns or throws. */
+  def scope[T](body: Scope => T): T = {
+    val pin = new Scope
+    try body(pin)
+    finally pin.release()
   }
 }

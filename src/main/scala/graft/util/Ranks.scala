@@ -27,13 +27,12 @@ object Ranks {
     if (n <= distributedThreshold)
       df.withColumn(out,
         row_number().over(Window.orderBy(sortCols: _*)).cast("long"))
-    else {
+    else Pin.scope { pin =>
       val spark = df.sparkSession
       val nPart = math.max(spark.sparkContext.defaultParallelism,
         (n / 500000L).toInt + 1)
-      val sorted = df.repartitionByRange(nPart, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sorted = pin(df.repartitionByRange(nPart, sortCols: _*)
+        .sortWithinPartitions(sortCols: _*))
       val counts = sorted.rdd
         .mapPartitionsWithIndex((i, it) => Iterator((i, it.size)))
         .collect().sortBy(_._1).map(_._2.toLong)
@@ -43,9 +42,7 @@ object Ranks {
         var r = offsets(pi)
         it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
       }
-      val result = spark.createDataFrame(ranked, schema).localCheckpoint()
-      sorted.unpersist(false)
-      result
+      spark.createDataFrame(ranked, schema).localCheckpoint()
     }
 
   /** Append `outRank` = 1-based global row number AND `outCum` = the
@@ -75,14 +72,13 @@ object Ranks {
       val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       df.withColumn(outRank, row_number().over(w).cast("long"))
         .withColumn(outCum, sum(col(sumCol)).over(wc))
-    } else {
+    } else Pin.scope { pin =>
       val spark = df.sparkSession
       val sumIdx = df.schema.fieldIndex(sumCol)
       val nPart = math.max(spark.sparkContext.defaultParallelism,
         (n / 500000L).toInt + 1)
-      val sorted = df.repartitionByRange(nPart, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sorted = pin(df.repartitionByRange(nPart, sortCols: _*)
+        .sortWithinPartitions(sortCols: _*))
       val stats = sorted.rdd
         .mapPartitionsWithIndex { (i, it) =>
           var c = 0L; var s = 0L; var nn = 0L
@@ -109,9 +105,7 @@ object Ranks {
           Row.fromSeq(row.toSeq :+ r :+ cum)
         }
       }
-      val result = spark.createDataFrame(swept, schema).localCheckpoint()
-      sorted.unpersist(false)
-      result
+      spark.createDataFrame(swept, schema).localCheckpoint()
     }
   }
 }

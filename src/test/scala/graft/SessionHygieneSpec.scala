@@ -24,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    projection out of whole-stage codegen. A stateless function is a
   *    `KernelCall` (expressions.scala), whose `StaticInvoke` has both
   *    paths;
+  *  - no `.persist(`, `.cache()` or `.unpersist(` outside
+  *    `graft/util/Pin.scala`: an operator pins a frame it reads more
+  *    than once with `Pin.scope`, which releases it when the scope
+  *    returns or throws. The per-round lineage cuts of the distributed
+  *    iterative loops are the named exceptions ([[perRoundCaching]]);
   *  - every file is reachable from an entry point: the mains, the
   *    catalog, the pipeline, the session and extension classes, the
   *    Catalyst package and the types the benchmark names. A file is
@@ -54,6 +59,28 @@ class SessionHygieneSpec extends AnyFunSuite {
     """case\s+[\w$]+\s*:\s*(java\.lang\.)?Throwable\b""".r
   private val completionOrderMerge = """\.\s*tree(Reduce|Aggregate)\b""".r
   private val codegenFallback = """\bCodegenFallback\b""".r
+  private val cacheCall =
+    """\.\s*(?:persist|unpersist)\s*\(|\.\s*cache\s*\(\s*\)""".r
+
+  /** The caching calls allowed outside Pin.scala: (file, trimmed line)
+    * -> why. */
+  private val perRoundCaching: Map[(String, String), String] = Map(
+    ("graft/graph/Centrality.scala",
+      ".persist(StorageLevel.MEMORY_AND_DISK)") ->
+      ("eigenvector's distributed loop caches each round's RDD before " +
+        "its localCheckpoint (an RDD, not a DataFrame: Pin cannot own it)"),
+    ("graft/graph/Centrality.scala",
+      "prevRdd.foreach(_.unpersist(false))") ->
+      ("and releases the previous round's RDD once the new round is " +
+        "materialized (the GraphX Pregel lifecycle)"))
+
+  /** Caching calls in `src` outside Pin.scala and the allowed sites. */
+  private def unpinnedCaching(src: Seq[(String, String)]): Seq[String] =
+    sites(src.filterNot(_._1 == "graft/util/Pin.scala"), cacheCall)
+      .filterNot { site =>
+        val Array(file, _, text) = site.split(":", 3)
+        perRoundCaching.contains(file -> text.trim)
+      }
 
   private val topLevelType = ("""(?m)^(?:(?:final|sealed|abstract|""" +
     """implicit|case|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*""" +
@@ -186,6 +213,21 @@ class SessionHygieneSpec extends AnyFunSuite {
         found.mkString("\n"))
   }
 
+  test("every persist, cache and unpersist goes through Pin") {
+    val found = unpinnedCaching(sources)
+    assert(found.isEmpty,
+      "pin the frame inside Pin.scope { pin => ... } instead:\n" +
+        found.mkString("\n"))
+    // every allowed site still exists, so a stale entry cannot hide
+    // a new call on the same line text
+    val allowed = sites(sources, cacheCall).map { site =>
+      val Array(file, _, text) = site.split(":", 3)
+      file -> text.trim
+    }.toSet
+    assert(perRoundCaching.keySet.diff(allowed).isEmpty,
+      s"stale per-round entries: ${perRoundCaching.keySet.diff(allowed)}")
+  }
+
   test("every src/main file is reachable from an entry point") {
     val names = benchmarkNames
     assert(names.contains("DrugTargetPipeline"),
@@ -217,7 +259,15 @@ class SessionHygieneSpec extends AnyFunSuite {
       "import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback",
       "    extends UnaryExpression with CodegenFallback {",
       "  // NoCodegenFallbackHere, codegenFallback: other identifiers",
-      "    with ImplicitCastInputTypes with CodegenFallback").mkString("\n"))
+      "    with ImplicitCastInputTypes with CodegenFallback",
+      "    val b = df.select(col(\"id\")).persist()",
+      "      .persist(StorageLevel.MEMORY_AND_DISK)",
+      "    val c = df.cache()",
+      "    b.unpersist(false); c",
+      "      .unpersist(blocking = true)",
+      "    val ok4 = Pin.scope { pin => pin(df).count() }",
+      "    val ok5 = df.localCheckpoint() // not persisted: cacheTable(x)",
+      "    val ok6 = df.cached ; val ok7 = persistent(df)").mkString("\n"))
     assert(sites(planted, builderCall).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:1:", "graft/tools/Planted.scala:2:",
         "graft/tools/Planted.scala:3:"))
@@ -228,6 +278,16 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(sites(planted, codegenFallback).map(_.takeWhile(_ != ' ')) ===
       Seq("graft/tools/Planted.scala:16:", "graft/tools/Planted.scala:17:",
         "graft/tools/Planted.scala:19:"))
+    assert(unpinnedCaching(planted).map(_.takeWhile(_ != ' ')) ===
+      Seq("graft/tools/Planted.scala:20:", "graft/tools/Planted.scala:21:",
+        "graft/tools/Planted.scala:22:", "graft/tools/Planted.scala:23:",
+        "graft/tools/Planted.scala:24:"))
+    // Pin.scala itself, and an allowed per-round line in its file, pass
+    assert(unpinnedCaching(Seq(
+      "graft/util/Pin.scala" -> "df.persist(StorageLevel.MEMORY_AND_DISK)",
+      "graft/graph/Centrality.scala" ->
+        "      prevRdd.foreach(_.unpersist(false))\n      x.persist()")) ===
+      Seq("graft/graph/Centrality.scala:2: x.persist()"))
 
     // reachability: Entry is a root (a main) and Timed one by the
     // benchmark's names. Orphan is named by nothing, PingA and PingB

@@ -10,36 +10,6 @@ class FuzzyJoinSpec extends SparkSuite {
     (4L, "zenith ltd"), (5L, "zenith ltd"), (6L, "acne corp")
   ).toDF("id", "nm")
 
-  test("selfBlockedLevenshtein: verified pairs within the block") {
-    // prefix 4: block "acme" = {1,2,3}, "zeni" = {4,5}, "acne" = {6}.
-    // Within maxDist 2: (1,2) dist 1, (4,5) dist 0; (1,3) dist 4 fails
-    // the verify; (1,6) is blocked apart despite dist 1 — the declared
-    // recall trade.
-    val got = FuzzyJoin.selfBlockedLevenshtein(names, "id", "nm",
-        maxDist = 2, prefixLen = 4)
-      .select("id_a", "id_b", "dist").as[(Long, Long, Int)]
-      .collect().toSet
-    assert(got == Set((1L, 2L, 1), (4L, 5L, 0)))
-  }
-
-  test("selfBlockedLevenshtein: length band prunes before verify") {
-    val df = Seq((1L, "aaaa"), (2L, "aaaaaaaaaa")).toDF("id", "nm")
-    val got = FuzzyJoin.selfBlockedLevenshtein(df, "id", "nm",
-      maxDist = 2, prefixLen = 2)
-    assert(got.count() == 0)
-  }
-
-  test("blockedLevenshtein: two-table variant keeps all matches") {
-    // (1,10) exact; (2,10) one deletion; (1,11) two deletions;
-    // (2,11) length band 3 prunes; (3,10)/(3,11) exceed maxDist.
-    val right = Seq((10L, "acme corp"), (11L, "acme co")).toDF("id", "nm")
-    val got = FuzzyJoin.blockedLevenshtein(names, right, "id", "nm",
-        maxDist = 2, prefixLen = 4)
-      .select("id_l", "id_r", "dist").as[(Long, Long, Int)]
-      .collect().toSet
-    assert(got == Set((1L, 10L, 0), (2L, 10L, 1), (1L, 11L, 2)))
-  }
-
   test("selfDeletionNeighborhood d=1: complete recall across prefix " +
     "boundaries, exact parity with a brute-force verify") {
     // (1,6) "acme corp"/"acne corp" is dist 1 but differs INSIDE any
@@ -76,33 +46,5 @@ class FuzzyJoinSpec extends SparkSuite {
       dd = lev(sa, sb) if dd <= 2
     } yield (ia, ib, dd)).toSet
     assert(got == expect, s"got $got expected $expect")
-  }
-
-  test("deletionNeighborhoodJoin: dictionary linking with complete " +
-    "recall (pairs differing inside any prefix still match)") {
-    val dict = Seq((10L, "acme corp"), (11L, "zenith ltd"),
-      (12L, "apex gmbh")).toDF("id", "nm")
-    val got = FuzzyJoin.deletionNeighborhoodJoin(names, dict, "id", "nm",
-        maxDist = 1)
-      .select("id_l", "id_r", "dist").as[(Long, Long, Int)]
-      .collect().toSet
-    // 1→10 exact; 2→10 one deletion; 6 "acne corp"→10 substitution
-    // INSIDE the prefix (the case prefix blocking misses); 4,5→11 exact
-    assert(got == Set((1L, 10L, 0), (2L, 10L, 1), (6L, 10L, 1),
-      (4L, 11L, 0), (5L, 11L, 0)))
-  }
-
-  test("maxBlockRows: generous cap is a no-op; tight cap drops the " +
-    "hot block with a logged count") {
-    val names = Seq((1L, "acme corp"), (2L, "acme corp."),
-      (3L, "acme  corp"), (4L, "zeta inc"), (5L, "zeta inc.")).toDF("id", "nm")
-    def run(cap: Option[Int]) =
-      FuzzyJoin.selfBlockedLevenshtein(names, "id", "nm",
-          maxDist = 2, prefixLen = 4, maxBlockRows = cap)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val uncapped = run(None)
-    assert(run(Some(10)) == uncapped)
-    // "acme" block has 3 rows; cap 2 drops it, leaving only the zeta pair
-    assert(run(Some(2)) == Set((4L, 5L)))
   }
 }

@@ -1,66 +1,69 @@
 package graft.util
 
-import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Pin.primeShared — the utilization dispatch for multi-consumer
-  * persisted frames (prime when the cluster is saturated, race when
-  * idle; round-15 VERDICT item 6). Both dispatch branches are pinned
-  * here: default/false runs NO job and leaves the cache cold; true
-  * materializes every cached partition before returning. */
+import graft.SparkSuite
+
+/** The contract of [[Pin.scope]], the one owner of operator-internal
+  * caching: a pinned frame is cached at MEMORY_AND_DISK inside the
+  * scope and released when the scope returns or throws; a frame the
+  * caller cached stays the caller's; a result materialized inside the
+  * scope stays readable after it. Suites run one after another in the
+  * forked test JVM, so the session's cache manager is this suite's
+  * alone while a test runs. */
 class PinSpec extends SparkSuite {
-  import spark.implicits._
 
-  // the dispatch gate is proven with a frame that THROWS on
-  // evaluation: the default (race) path must return WITHOUT touching
-  // it, the primed path must evaluate it. Evaluation-observable and
-  // immune to the shared session's parallel-suite cache traffic.
-  // spark.range, not a LocalRelation: ConvertToLocalRelation would
-  // pre-evaluate a projection over local rows AT PLAN TIME (inside
-  // persist's cacheQuery) and detonate the bomb before the call under
-  // test
-  private def bomb() = spark.range(10)
-    .select(expr("assert_true(id > 100)").as("b"))
-    .persist(StorageLevel.MEMORY_AND_DISK)
+  private def cached = spark
+    .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    .sharedState.cacheManager
 
-  test("default (race): primeShared is a no-op — no evaluation runs") {
-    spark.conf.unset(Pin.PrimeSharedKey)
-    val d = bomb()
-    val r = Pin.primeShared(d) // must NOT evaluate (would throw)
-    assert(r eq d)
-    d.unpersist(true)
+  private def frame() = spark.range(100).select((col("id") % 7).as("k"))
+
+  test("a pinned frame is cached inside the scope and released after it") {
+    spark.catalog.clearCache()
+    val d = frame()
+    val n = Pin.scope { pin =>
+      assert(pin(d) eq d)
+      assert(d.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      d.count()
+    }
+    assert(n == 100L)
+    assert(d.storageLevel == StorageLevel.NONE)
+    assert(cached.isEmpty)
   }
 
-  test("primed (saturated mode): primeShared materializes the frame") {
-    spark.conf.set(Pin.PrimeSharedKey, "true")
+  test("a frame the caller already cached stays cached") {
+    spark.catalog.clearCache()
+    val d = frame().persist(StorageLevel.MEMORY_ONLY)
     try {
-      val d = bomb()
-      val e = intercept[Exception](Pin.primeShared(d))
-      // the bomb's own failure, not just any exception on the way
-      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      assert(chain.exists(t => Option(t.getMessage).exists(
-        _.contains("'(id > 100)' is not true!"))), e)
-      d.unpersist(true)
-    } finally spark.conf.unset(Pin.PrimeSharedKey)
+      Pin.scope { pin => pin(d).count() }
+      assert(d.storageLevel == StorageLevel.MEMORY_ONLY)
+    } finally d.unpersist(true)
+    assert(cached.isEmpty)
   }
 
-  test("pair listers produce identical results in both dispatch modes") {
-    val docs = (1 to 60).map { i =>
-      (i.toLong, if (i % 3 == 0) s"alpha beta gamma delta epsilon zeta doc$i"
-                 else s"alpha beta gamma delta epsilon zeta shared tail")
-    }.toDF("id", "text")
-    def run(): Array[org.apache.spark.sql.Row] =
-      graft.dedup.Dedup.ngramJaccardPairs(docs, "id", "text",
-          shingleSize = 3, minJaccard = 0.5)
-        .orderBy("id_a", "id_b").collect()
-    spark.conf.unset(Pin.PrimeSharedKey)
-    val raced = run()
-    spark.conf.set(Pin.PrimeSharedKey, "true")
-    try {
-      val primed = run()
-      assert(primed.toSeq === raced.toSeq)
-      assert(raced.nonEmpty)
-    } finally spark.conf.unset(Pin.PrimeSharedKey)
+  test("an exception in the body still releases every pin") {
+    spark.catalog.clearCache()
+    val e = intercept[IllegalStateException] {
+      Pin.scope { pin =>
+        pin(frame()).count()
+        pin(frame().filter(col("k") > 2)).count()
+        throw new IllegalStateException("body failed after two pins")
+      }
+    }
+    assert(e.getMessage == "body failed after two pins")
+    assert(cached.isEmpty)
+  }
+
+  test("a result localCheckpointed inside the scope is readable after it") {
+    spark.catalog.clearCache()
+    val r = Pin.scope { pin =>
+      val d = pin(frame())
+      d.groupBy("k").count().localCheckpoint()
+    }
+    assert(cached.isEmpty)
+    assert(r.orderBy("k").collect().map(_.getLong(1)).toSeq ==
+      Seq(15L, 15L, 14L, 14L, 14L, 14L, 14L))
   }
 }
